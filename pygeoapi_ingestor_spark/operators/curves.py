@@ -5,33 +5,14 @@ Reference: rer_river_discharge_arpae_process.py:325-457
 bracketing curve points (h1,q1),(h2,q2) and linearly interpolate the
 discharge; outside the curve range the reference yields no value.
 
-Spark-first: the curve is a tiny dimension — turn its points into
-segments with a ``lead`` window, then broadcast range-join the fact rows
-into their segment. The fact side never shuffles; the join is a
-BroadcastNestedLoopJoin over a handful of segments.
+Spark-first: a rating table is a handful of literal points, so the
+piecewise-linear map compiles into one chained CASE expression — a pure
+projection evaluated in the scan stage, with no join and no shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def curve_segments(curve: DataFrame, key_cols: list[str], x_col: str, y_col: str) -> DataFrame:
-    """(key, x, y) points → (key, x_lo, x_hi, y_lo, y_hi) segments."""
-    w = Window.partitionBy(*key_cols).orderBy(x_col)
-    return (
-        curve.withColumn("_x_hi", F.lead(x_col).over(w))
-        .withColumn("_y_hi", F.lead(y_col).over(w))
-        .filter(F.col("_x_hi").isNotNull())
-        .select(
-            *key_cols,
-            F.col(x_col).alias("x_lo"),
-            F.col("_x_hi").alias("x_hi"),
-            F.col(y_col).alias("y_lo"),
-            F.col("_y_hi").alias("y_hi"),
-        )
-    )
 
 
 def interpolate_points_expr(
@@ -68,50 +49,3 @@ def interpolate_points_expr(
         x_max = pts[-1][0]
         expr = expr.when(v == F.lit(x_max), F.lit(pts[-1][1]))
     return expr.otherwise(F.lit(None).cast("double"))
-
-
-def interpolate_on_curve(
-    fact: DataFrame,
-    curve: DataFrame,
-    key_cols: list[str],
-    x_col: str,
-    y_col: str,
-    value_col: str,
-    out_col: str = "interp_value",
-) -> DataFrame:
-    """Linear interpolation of ``fact[value_col]`` on the per-key curve.
-
-    Rows outside the curve's x-range get NULL (reference behavior for
-    levels off the rating table). Half-open segments [x_lo, x_hi) with the
-    final segment closed so the curve max is included.
-    """
-    segs = curve_segments(curve, key_cols, x_col, y_col)
-    maxes = curve.groupBy(*key_cols).agg(F.max(x_col).alias("_x_max"))
-    segs = (
-        segs.join(F.broadcast(maxes), key_cols)
-        .select(
-            *[F.col(k).alias(f"_seg_{k}") for k in key_cols],
-            "x_lo",
-            "x_hi",
-            "y_lo",
-            "y_hi",
-            "_x_max",
-        )
-    )
-
-    v = F.col(value_col)
-    in_segment = (v >= F.col("x_lo")) & (
-        (v < F.col("x_hi"))
-        | ((F.col("x_hi") == F.col("_x_max")) & (v <= F.col("x_hi")))
-    )
-    key_eq = [F.col(k) == F.col(f"_seg_{k}") for k in key_cols]
-    cond = in_segment
-    for ke in key_eq:
-        cond = cond & ke
-    # left join keeps out-of-range rows with NULL interp (reference: no
-    # discharge for levels off the rating table)
-    joined = fact.join(F.broadcast(segs), on=cond, how="left")
-    frac = (v - F.col("x_lo")) / (F.col("x_hi") - F.col("x_lo"))
-    return joined.withColumn(
-        out_col, F.col("y_lo") + (F.col("y_hi") - F.col("y_lo")) * frac
-    ).drop(*[f"_seg_{k}" for k in key_cols], "x_lo", "x_hi", "y_lo", "y_hi", "_x_max")

@@ -690,10 +690,13 @@ def embedding_cosine_pairs_bucketed(
     import numpy as np
 
     from pygeoapi_ingestor_spark.operators.similarity import (
+        cosine_scores,
+        empty_batch,
         md5_plane_weights,
         seq_dot_row,
         seq_norm,
-        vec_ok_mask,
+        sign_bits,
+        stack_vectors,
     )
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
@@ -712,39 +715,33 @@ def embedding_cosine_pairs_bucketed(
     # (np.asarray(..., float64)) and accumulates sequentially
     # (seq_dot_row / seq_norm), matching both the fold and DuckDB's
     # list_dot_product over DOUBLE[] bit-for-bit. Null / wrong-length
-    # vectors drop via vec_ok_mask (the fold produced a NULL cosine and
-    # the row dropped at the threshold gate; np.stack would raise).
+    # vectors drop via stack_vectors (the fold produced a NULL cosine and
+    # the row dropped at the threshold gate); a NaN projection sets its
+    # bit, as the oracle's ``proj > 0`` does.
+    id_t = dict(embeddings.dtypes)[id_col]
+    sig_schema = f"doc {id_t}, " + ", ".join(
+        f"k{b} bigint" for b in range(bands)
+    )
+
     def sig_batches(batches):
         import numpy as np
         import pandas as pd
 
         w_ = bc_w.value
-        cols = ["doc"] + [f"k{b}" for b in range(bands)]
         for pdf in batches:
-            if len(pdf):
-                pdf = pdf[vec_ok_mask(pdf["vec"], dim)]
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
+            ok, vm = stack_vectors(pdf["vec"], dim)
+            if not len(vm):
+                yield empty_batch(sig_schema)
                 continue
-            vm = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["vec"]]
-            )
-            out = {"doc": pdf["doc"].to_numpy()}
-            bits = [
-                (seq_dot_row(vm, w_[p]) > 0).astype(np.int64)
-                for p in range(n_planes)
-            ]
+            out = {"doc": pdf["doc"].to_numpy()[ok]}
+            bits = [sign_bits(seq_dot_row(vm, w_[p])) for p in range(n_planes)]
             for b in range(bands):
                 key = np.zeros(len(vm), dtype=np.int64)
                 for r in range(rows_per_band):
                     key += bits[b * rows_per_band + r] << r
                 out[f"k{b}"] = key
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(out)
 
-    id_t = dict(embeddings.dtypes)[id_col]
-    sig_schema = f"doc {id_t}, " + ", ".join(
-        f"k{b} bigint" for b in range(bands)
-    )
     # r13: the signature kernel emits ONLY (id, band keys) — the vector
     # and its norm never ride through the band explode or the pair join
     # (the norm is recomputed inside the cosine kernel with the same
@@ -812,45 +809,40 @@ def embedding_cosine_pairs_bucketed(
     # fold multiplied doubles — widen to float64 first, then accumulate
     # sequentially (ADVICE r8 fix: float32 products diverged up to
     # 1.5e-8 from the oracle and flipped ~0.3% of round(cos, 6) values).
-    # Zero-norm pairs yield NaN and drop at the threshold gate exactly
-    # like the fold's NULL cosine did.
+    # Zero-norm pairs have no cosine and drop; a NaN cosine passes the
+    # threshold gate (NaN orders above every number) — the Arrow
+    # boundary masks it as NULL, restored below.
+    cos_schema = f"doc_a {id_t}, doc_b {id_t}, cosine double"
+
     def cos_batches(batches):
-        import numpy as np
         import pandas as pd
 
-        cols = ["doc_a", "doc_b", "cosine"]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
+            oka, am = stack_vectors(pdf["vec_a"], dim)
+            okb, bm = stack_vectors(pdf["vec_b"], dim)
+            ok = oka & okb  # all rows: both sides passed the sig kernel
+            am, bm = am[ok[oka]], bm[ok[okb]]
+            if not len(am):
+                yield empty_batch(cos_schema)
                 continue
-            am = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["vec_a"]]
-            )
-            bm = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["vec_b"]]
-            )
             acc = am[:, 0] * bm[:, 0]
             for d in range(1, am.shape[1]):
                 acc = acc + am[:, d] * bm[:, d]
             # norms recomputed here with the SAME seq_norm accumulation
             # the signature kernel used when it carried them (r13: the
             # attach joins ship only (id, vec), one fewer column each)
-            denom = seq_norm(am) * seq_norm(bm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0.0, acc / denom, np.nan)
+            cos, keep = cosine_scores(acc, seq_norm(am) * seq_norm(bm))
             yield pd.DataFrame(
-                {"doc_a": pdf["doc_a"].to_numpy(),
-                 "doc_b": pdf["doc_b"].to_numpy(), "cosine": cos},
-                columns=cols,
+                {"doc_a": pdf["doc_a"].to_numpy()[ok][keep],
+                 "doc_b": pdf["doc_b"].to_numpy()[ok][keep], "cosine": cos[keep]}
             )
 
     pairs_cos = scored.select(
         "doc_a", "doc_b", "vec_a", "vec_b"
-    ).mapInPandas(cos_batches, schema=f"doc_a {id_t}, doc_b {id_t}, cosine double")
-    return (
-        pairs_cos
-        .filter(F.col("cosine") >= threshold)
-        .select("doc_a", "doc_b", "cosine")
+    ).mapInPandas(cos_batches, schema=cos_schema)
+    cos = F.coalesce("cosine", F.lit(float("nan")))
+    return pairs_cos.filter(cos >= threshold).select(
+        "doc_a", "doc_b", cos.alias("cosine")
     )
 
 

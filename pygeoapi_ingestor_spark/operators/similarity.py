@@ -51,21 +51,127 @@ def collect_query_rows(queries: DataFrame, *cols: str) -> list:
     return rows
 
 
-def vec_ok_mask(vecs, dim):
-    """Boolean mask of rows whose vector is non-null and exactly ``dim``
-    long — the Arrow kernels' twin of the HOF fold's NULL propagation.
-    A malformed vector made the replaced fold expressions emit a NULL
-    projection/cosine and the row silently dropped at the gate;
-    ``np.stack`` over the same input would instead raise in the executor
-    and kill the job. Every Arrow kernel that stacks vectors applies
-    this mask first so the two paths degrade identically."""
+def stack_vectors(vecs, dim, dtype=None):
+    """The one masking/stacking path of every Arrow vector kernel:
+    ``(ok, matrix)`` for an array column (a pandas Series or a list of
+    collected values). ``ok`` is False for NULL, empty and
+    wrong-length rows; ``matrix`` is the (ok.sum(), dim) stack of the ok
+    rows in ``dtype`` (float64 by default — float32 widens exactly).
+
+    A malformed vector is a NULL vector, as in the HOF fold each kernel
+    twins: ``zip_with`` pads a short array with NULLs, so every score it
+    touches is NULL and the row drops at the gate. A bare ``np.stack``
+    would instead raise in the executor and kill the job. Every edge
+    input is pinned against the kernels' twins and oracles in
+    tests/test_vector_kernel_matrix.py."""
     import numpy as np
 
-    return np.fromiter(
-        (v is not None and len(v) == dim for v in vecs),
+    dtype = np.float64 if dtype is None else dtype
+    ok = np.fromiter(
+        (v is not None and len(v) == dim > 0 for v in vecs),
         dtype=bool,
         count=len(vecs),
     )
+    rows = [np.asarray(v, dtype=dtype) for v, o in zip(vecs, ok) if o]
+    vm = np.stack(rows) if rows else np.zeros((0, max(dim, 0)), dtype=dtype)
+    return ok, vm
+
+
+def fill_ok(ok, vals):
+    """Output column for a per-row kernel: ``vals`` (one per ok row) at
+    the ``ok`` rows of ``stack_vectors`` and NULL at the malformed
+    ones, as the JVM expression answers a NULL vector."""
+    import pandas as pd
+
+    if ok.all():
+        return vals
+    col = pd.array([None] * len(ok), dtype="Int64")
+    col[ok] = vals
+    return col
+
+
+def as_vector(vec_col: str, dim: int) -> Column:
+    """``vec_col`` as ``_v``, NULL unless exactly ``dim`` long — the JVM
+    form of ``stack_vectors``' mask, for expression paths that index
+    the vector (``_q[d]`` raises on a short array under ANSI)."""
+    v = F.col(vec_col)
+    return F.when(F.size(v) == dim, v).alias("_v")
+
+
+_PANDAS_DTYPES = {
+    "bigint": "int64", "int": "int32", "double": "float64",
+    "boolean": "bool",
+}
+
+
+def empty_batch(schema: str):
+    """Zero-row pandas frame typed by a kernel's DDL output ``schema``
+    (the string it passes to mapInPandas / applyInPandas), so an
+    empty-batch answer can never drift from the declared columns."""
+    import pandas as pd
+
+    fields, depth, cur = [], 0, ""
+    for ch in schema + ",":
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and not depth:
+            name, typ = cur.strip().split(None, 1)
+            fields.append((name.strip("`"), typ.strip().lower()))
+            cur = ""
+        else:
+            cur += ch
+    return pd.DataFrame(
+        {n: pd.Series([], dtype=_PANDAS_DTYPES.get(t, object)) for n, t in fields}
+    )
+
+
+def cosine_scores(dots, denom):
+    """(cos, keep): cosine per row and the rows that have one. A
+    zero-norm side has no cosine — the fold's ``_safe_denom`` makes it
+    NULL and it drops from rankings — while a NaN element keeps a NaN
+    cosine, which Spark (and DuckDB) order above every number."""
+    import numpy as np
+
+    keep = denom != 0.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / np.where(keep, denom, 1.0), keep
+
+
+def topk_order(ids, score, k, desc=True):
+    """Positions of the ``k`` best rows by (score, id asc) — the
+    batch-local half of the per-query top-k: selection is a monoid, so
+    a window over per-batch winners equals the full ranking. NaN
+    scores order above every number (Spark's ordering), so they lead a
+    descending ranking and trail an ascending one."""
+    import numpy as np
+
+    key = -score if desc else score
+    key = np.where(np.isnan(score), -np.inf if desc else np.inf, key)
+    return np.lexsort((ids, key))[:k]
+
+
+def rank_topk(pairs: DataFrame, score: str, k: int, desc: bool = True,
+              part: str = "query_id", nid: str = "neighbor_id") -> DataFrame:
+    """Global top-k over a kernel's per-batch winners:
+    row_number over (score, id asc) per ``part``. The Arrow boundary
+    serializes NaN as NULL and the kernels emit no NULL scores, so a
+    NULL here is a NaN score and is restored before ranking."""
+    sc = F.coalesce(F.col(score), F.lit(float("nan")))
+    w = Window.partitionBy(part).orderBy(
+        sc.desc() if desc else sc.asc(), F.col(nid).asc()
+    )
+    return (
+        pairs.withColumn(score, sc)
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def sign_bits(proj):
+    """int64 sign bit ``proj > 0`` as Spark and DuckDB evaluate it: NaN
+    orders above every number, so a NaN projection sets the bit."""
+    import numpy as np
+
+    return ((proj > 0) | np.isnan(proj)).astype(np.int64)
 
 
 def seq_dot_row(vm, q):
@@ -118,102 +224,106 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def _cosine_topk_arrow(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
-    k: int,
-    dim: int,
-) -> DataFrame:
-    """Arrow-batched exact top-k: the query matrix (small by contract)
-    collects to the driver and broadcasts into ONE mapInPandas stage
-    that scores each Arrow batch against all queries with numpy and
-    emits only the batch-local top-k per query — selection is a monoid,
-    so the global window top-k over per-batch winners equals the full
-    ranking while the shuffle carries K·k rows per batch instead of
-    K·n_batch_rows. No giant codegen unit (a 64-term scalar chain costs
-    more to JIT than it saves at any SF — measured), no interpreted
-    HOF fold (the previous per-pair cost).
+def collect_query_vectors(queries: DataFrame, id_col: str, vec_col: str, dim: int):
+    """Driver side of the broadcast kernels: bounded collect of
+    (id, vector) rows, stacked through ``stack_vectors``. Returns
+    ``(ids, matrix)`` for the well-formed rows only — a malformed query
+    vector scores NULL against everything under the fold and matches
+    nothing."""
+    rows = collect_query_rows(queries, id_col, vec_col)
+    ok, qm = stack_vectors([r[1] for r in rows], dim)
+    return [r[0] for r, o in zip(rows, ok) if o], qm
+
+
+def cosine_topk_scan(src: DataFrame, dim: int, k: int, qids, qm, qid_type: str,
+                     candidates=None, distance=False) -> DataFrame:
+    """The cosine top-k family's one Arrow stage (exact, IVF, LSH and
+    trained-IVF search): the query matrix (small by contract) broadcasts
+    into ONE mapInPandas pass over ``src`` (columns ``neighbor_id``,
+    ``_vec`` plus whatever ``candidates`` reads) that scores each batch
+    and emits only its batch-local top-k per query; ``rank_topk`` merges
+    the winners. The shuffle carries K·k rows per batch instead of
+    K·n_batch_rows — the per-batch top-k + merge shape of REPOSE and
+    incremental top-k.
+
+    ``candidates(pdf, vm)`` (optional) returns ``j -> bool mask``
+    restricting query j to a subset of the batch (probed inverted
+    lists, a matching LSH bucket).
+    ``distance=True`` ranks the k smallest cosine distances (``dist`` =
+    1 - cosine) instead of the k largest cosines.
 
     Bit-parity with the SQL twin (CAST(... AS DOUBLE[]) +
     list_dot_product): float32 components widen exactly to float64 and
-    dots/norms accumulate SEQUENTIALLY (seq_dot_row/seq_norm) — the same
-    left-to-right double rounding as DuckDB's list fold, so rankings
-    cannot diverge at the last ulp. Zero-norm / null / wrong-length
-    vectors drop from rankings, matching the HOF path's NULL-cosine
-    semantics."""
-    import numpy as np
-
+    dots/norms accumulate SEQUENTIALLY (seq_dot_row/seq_norm), so
+    rankings cannot diverge at the last ulp. Self-matches (equal ids)
+    are excluded; edge rows follow ``stack_vectors`` / ``cosine_scores``."""
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
-    spark = embeddings.sparkSession
+    spark = src.sparkSession
     ensure_package_on_executors(spark)
-    qrows = collect_query_rows(queries, query_id_col, query_vec_col)
-    qids = [r[0] for r in qrows]
-    qm = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in qrows]
-    ).reshape(len(qrows), dim)
-    qn = seq_norm(qm) if len(qrows) else None
+    qn = seq_norm(qm) if len(qids) else None
     bc = spark.sparkContext.broadcast((qids, qm, qn))
-
-    id_t = dict(embeddings.dtypes)[id_col]
-    qid_t = dict(queries.dtypes)[query_id_col]
-    out_schema = f"query_id {qid_t}, neighbor_id {id_t}, cosine double"
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vec")
-    )
+    id_t = dict(src.dtypes)["neighbor_id"]
+    col = "dist" if distance else "cosine"
+    schema = f"query_id {qid_type}, neighbor_id {id_t}, {col} double"
 
     def score(batches):
         import numpy as np
         import pandas as pd
 
         qids_, qm_, qn_ = bc.value
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cosine": []}
-        )
         for pdf in batches:
-            if not len(qids_) or not len(pdf):
-                yield empty
+            ok, vm = stack_vectors(pdf["_vec"], dim)
+            if not len(qids_) or not len(vm):
+                yield empty_batch(schema)
                 continue
-            vecs = pdf["_vec"]
-            ok = vec_ok_mask(vecs, dim)
-            if not ok.any():
-                yield empty
-                continue
-            ids = pdf["neighbor_id"].to_numpy()[ok]
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
-            )
+            pdf = pdf[ok]
+            ids = pdf["neighbor_id"].to_numpy()
             nrm = seq_norm(vm)
+            cand = candidates(pdf, vm) if candidates else None
             out_q, out_n, out_c = [], [], []
             for j, qid in enumerate(qids_):
-                dots = seq_dot_row(vm, qm_[j])
-                denom = nrm * qn_[j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0.0, dots / denom, np.nan)
-                valid = ~np.isnan(cos) & (ids != qid)
-                vidx = np.nonzero(valid)[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[vidx], -cos[vidx]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids[order])
-                out_c.extend(cos[order])
+                if cand is None:
+                    cidx = np.nonzero(ids != qid)[0]
+                    dots = seq_dot_row(vm, qm_[j])[cidx]
+                else:
+                    cidx = np.nonzero(cand(j) & (ids != qid))[0]
+                    dots = seq_dot_row(vm[cidx], qm_[j])
+                cos, keep = cosine_scores(dots, nrm[cidx] * qn_[j])
+                cidx, sc = cidx[keep], cos[keep]
+                if distance:
+                    sc = 1.0 - sc
+                pos = topk_order(ids[cidx], sc, k, desc=not distance)
+                out_q.extend([qid] * len(pos))
+                out_n.extend(ids[cidx][pos])
+                out_c.extend(sc[pos])
             yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
+                {"query_id": out_q, "neighbor_id": out_n, col: out_c}
             )
 
-    pairs = e.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    pairs = src.mapInPandas(score, schema=schema)
+    return rank_topk(pairs, col, k, desc=not distance).select(
+        "query_id", "neighbor_id", col, "rank"
     )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+
+
+def knn_mean(knn: DataFrame, part: str = "ia") -> DataFrame:
+    """(part, knn_dist, _n_cand) from ranked kNN rows (``dist``,
+    ``rank``): the mean distance summed in ascending rank order, so an
+    external oracle reproduces the float mean to the last ulp."""
+    return knn.groupBy(part).agg(
+        (
+            F.aggregate(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct("rank", "dist"))),
+                    lambda s: s.getField("dist"),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            / F.count(F.lit(1))
+        ).alias("knn_dist"),
+        F.count(F.lit(1)).alias("_n_cand"),
     )
 
 
@@ -233,7 +343,7 @@ def cosine_topk(
     window top-k. Excludes self-matches on equal ids.
 
     With ``dim`` given, scoring runs through the Arrow-batched numpy
-    path (``_cosine_topk_arrow``): per-batch top-k pruning shrinks the
+    path (``cosine_topk_scan``): per-batch top-k pruning shrinks the
     rank shuffle from K·n to K·k·n_batches, and sequential double
     accumulation (seq_dot_row/seq_norm) is bit-identical to a SQL oracle's
     CAST(... AS DOUBLE[]) + list_dot_product — faster AND closer
@@ -241,9 +351,12 @@ def cosine_topk(
     numeric ids; prefer it wherever the oracle computes in double.
     """
     if dim is not None:
-        return _cosine_topk_arrow(
-            embeddings, queries, id_col, vec_col,
-            query_id_col, query_vec_col, k, dim,
+        qids, qm = collect_query_vectors(queries, query_id_col, query_vec_col, dim)
+        src = embeddings.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vec")
+        )
+        return cosine_topk_scan(
+            src, dim, k, qids, qm, dict(queries.dtypes)[query_id_col]
         )
     q = F.broadcast(
         queries.select(
@@ -281,10 +394,16 @@ def quantize_int8_np(vm):
     is exact: |y| <= 127-ish keeps y's exponent small enough that
     |y| + 0.5 is computed without rounding error (both operands fit one
     53-bit significand), so no near-tie can be pushed across an integer
-    boundary. Returns (q int64 (n, dim), scale float64 (n,))."""
+    boundary. Returns (q int64 (n, dim), scale float64 (n,)).
+
+    A NaN element has no int8 code: the JVM expression (and a SQL
+    twin's integer cast) fails with a cast overflow, so this raises
+    too instead of emitting an undefined integer."""
     import numpy as np
 
     mx = np.abs(vm).max(axis=1)
+    if np.isnan(mx).any():
+        raise OverflowError("cannot quantize a NaN vector element to int8")
     scale = np.where(mx > 0.0, mx, 1.0)
     y = vm * 127.0 / scale[:, None]
     q = (np.floor(np.abs(y) + 0.5) * np.sign(y)).astype(np.int64)
@@ -344,7 +463,8 @@ def with_md5_sig_arrow(
     exactly-widened float64, so the sign bits (and therefore every
     bucket) are identical. Passes every input column through. A
     null / wrong-length vector gets signature 0 — the fold's behavior
-    too (every per-bit ``when(NULL > 0)`` falls to ``otherwise(0)``)."""
+    too (every per-bit ``when(NULL > 0)`` falls to ``otherwise(0)``); a
+    NaN projection sets its bit (``sign_bits``)."""
     import numpy as np
 
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
@@ -360,24 +480,13 @@ def with_md5_sig_arrow(
 
     def add_sig(batches):
         import numpy as np
-        import pandas as pd
 
         w_ = bc.value
         for pdf in batches:
-            if not len(pdf):
-                pdf[out_col] = pd.Series([], dtype="int64")
-                yield pdf
-                continue
-            ok = vec_ok_mask(pdf[vec_col], dim)
+            ok, vm = stack_vectors(pdf[vec_col], dim)
             sig = np.zeros(len(pdf), dtype=np.int64)
-            if ok.any():
-                vm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col][ok]]
-                )
-                sig_ok = np.zeros(len(vm), dtype=np.int64)
-                for p in range(w_.shape[0]):
-                    sig_ok |= (seq_dot_row(vm, w_[p]) > 0).astype(np.int64) << p
-                sig[ok] = sig_ok
+            for p in range(w_.shape[0]):
+                sig[ok] |= sign_bits(seq_dot_row(vm, w_[p])) << p
             pdf = pdf.copy()
             pdf[out_col] = sig
             yield pdf
@@ -441,7 +550,9 @@ def _seq_sq_dists(vm, cm):
     accumulated SEQUENTIALLY over the dimension axis — the exact
     left-associated double rounding of the ``_sq_dist`` HOF fold (and of
     an oracle's list_distance ordering), so argmin/probe sets cannot
-    flip at the last ulp against either."""
+    flip at the last ulp against either. A NaN distance becomes +inf:
+    Spark and DuckDB order NaN after every number, so it never wins an
+    argmin or a probe slot over a real distance."""
     import numpy as np
 
     d = np.empty((vm.shape[0], cm.shape[0]))
@@ -451,7 +562,26 @@ def _seq_sq_dists(vm, cm):
         for dd in range(1, diff.shape[1]):
             acc = acc + diff[:, dd] * diff[:, dd]
         d[:, j] = acc
-    return d
+    return np.where(np.isnan(d), np.inf, d)
+
+
+def lowest_id_centroids(df: DataFrame, id_col: str, vec_col: str, n: int, dim=None):
+    """The deterministic IVF/SemDeDup centroid build: the ``n``
+    lowest-id vectors, collected (n x dim doubles). Returns ``(ids,
+    matrix, dim)``; a malformed centroid is dropped (its distances are
+    NULL and never win), ``dim`` defaults to the first well-formed
+    length."""
+    import numpy as np
+
+    rows = (
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .orderBy("_id").limit(n).collect()
+    )
+    vecs = [r["_v"] for r in rows]
+    if dim is None:
+        dim = next((len(v) for v in vecs if v), 0)
+    ok, cm = stack_vectors(vecs, dim)
+    return np.asarray([r["_id"] for r in rows])[ok], cm, dim
 
 
 def ivf_topk(
@@ -490,40 +620,29 @@ def ivf_topk(
     """
     import numpy as np
 
-    cent_rows = (
-        embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(n_clusters)
-        .collect()
-    )
-    if not cent_rows:
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
-    dim = len(cent_rows[0]["_v"])
-    c_ids = np.asarray([r["_id"] for r in cent_rows])
-    c_mat = np.array(
-        [np.asarray(r["_v"], dtype=np.float64) for r in cent_rows]
-    ).reshape(len(cent_rows), dim)
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    qrows = collect_query_rows(queries, query_id_col, query_vec_col)
-    qid_t = dict(queries.dtypes)[query_id_col]
-    # malformed query vectors got NULL probe keys under the fold path
-    # and matched nothing — dropping them here degrades identically
-    qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
-    if not qrows:
+    c_ids, c_mat, dim = lowest_id_centroids(embeddings, id_col, vec_col, n_clusters)
+    qids, qm = collect_query_vectors(queries, query_id_col, query_vec_col, dim)
+    if not len(c_ids) or not qids:
         return _empty_topk(embeddings, queries, id_col, query_id_col)
-    qids = [r[0] for r in qrows]
-    qm = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in qrows]
-    ).reshape(len(qrows), dim)
-    qn = seq_norm(qm)
-    # per-query probe sets, driver-side: stable argsort over the
+    # per-query probe lists, driver-side: stable argsort over the
     # cid-ordered distance row = (dist asc, cid asc) struct ordering
-    qd = _seq_sq_dists(qm, c_mat)
-    probe_idx = np.argsort(qd, axis=1, kind="stable")[:, :n_probe]
-    probe_sets = [set(c_ids[probe_idx[i]].tolist()) for i in range(len(qids))]
-    return _ivf_scored(
-        embeddings, id_col, vec_col, dim, k,
-        qids, qm, qn, probe_sets, qid_t, c_ids, c_mat,
+    probe = np.argsort(_seq_sq_dists(qm, c_mat), axis=1, kind="stable")
+    probe_lists = [c_ids[probe[i, :n_probe]] for i in range(len(qids))]
+
+    def probed(pdf, vm):
+        # home list: first-occurrence argmin over cid-ordered columns =
+        # ties to the lowest cid, the array_min(struct(d, cid)) tie-break
+        home = c_ids[np.argmin(_seq_sq_dists(vm, c_mat), axis=1)]
+        return lambda j: np.isin(home, probe_lists[j])
+
+    src = spread_if_narrow(embeddings).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vec")
+    )
+    return cosine_topk_scan(
+        src, dim, k, qids, qm, dict(queries.dtypes)[query_id_col],
+        candidates=probed,
     )
 
 
@@ -533,95 +652,6 @@ def _empty_topk(embeddings, queries, id_col, query_id_col):
     id_t = dict(embeddings.dtypes)[id_col]
     return spark.createDataFrame(
         [], f"query_id {qid_t}, neighbor_id {id_t}, cosine double, rank int"
-    )
-
-
-def _ivf_scored(
-    embeddings, id_col, vec_col, dim, k, qids, qm, qn, probe_sets,
-    qid_type, c_ids, c_mat,
-):
-    """IVF search stage: one Arrow pass that assigns each batch row's
-    home list (vectorized seq sq-dist argmin vs the broadcast centroid
-    matrix) and scores it against every query probing that list; emits
-    batch-local top-k per query. See ivf_topk for parity notes."""
-    import numpy as np
-
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
-
-    spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
-    bc = spark.sparkContext.broadcast(
-        (qids, qm, qn, probe_sets, c_ids, c_mat)
-    )
-    id_t = dict(embeddings.dtypes)[id_col]
-    out_schema = f"query_id {qid_type}, neighbor_id {id_t}, cosine double"
-    e = spread_if_narrow(embeddings).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vec")
-    )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        qids_, qm_, qn_, psets_, cids_, cm_ = bc.value
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        for pdf in batches:
-            if not len(qids_) or not len(pdf):
-                yield empty
-                continue
-            ok = vec_ok_mask(pdf["_vec"], dim)
-            if not ok.any():
-                # a malformed vector gets a NULL home key under the fold
-                # path and vanished at the cluster join — dropping here
-                # degrades identically
-                yield empty
-                continue
-            pdf = pdf[ok]
-            ids = pdf["neighbor_id"].to_numpy()
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_vec"]]
-            )
-            nrm = seq_norm(vm)
-            d = _seq_sq_dists(vm, cm_)
-            # first-occurrence argmin over cid-ordered columns = ties to
-            # the lowest cid, the array_min(struct(d, cid)) tie-break
-            home = cids_[np.argmin(d, axis=1)]
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(qids_):
-                pset = psets_[j]
-                cand = np.fromiter(
-                    (h in pset for h in home), dtype=bool, count=len(home)
-                )
-                cand &= ids != qid
-                cidx = np.nonzero(cand)[0]
-                if not len(cidx):
-                    continue
-                dots = seq_dot_row(vm[cidx], qm_[j])
-                denom = nrm[cidx] * qn_[j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0.0, dots / denom, np.nan)
-                vidx = np.nonzero(~np.isnan(cos))[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[cidx][vidx], -cos[vidx]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids[cidx][order])
-                out_c.extend(cos[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
-
-    pairs = e.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
     )
 
 
@@ -674,8 +704,6 @@ def ivf_knn_outliers(
     stay full, so a sampled acceptance run pays sample x n/√n instead
     of n^1.5. ``top_n`` then ranks within the scored subset.
     """
-    import numpy as np
-
     from pygeoapi_ingestor_spark.session import (
         ensure_package_on_executors,
         spread_if_narrow,
@@ -683,19 +711,16 @@ def ivf_knn_outliers(
 
     spark = embeddings.sparkSession
     ensure_package_on_executors(spark)
-    cent_rows = (
-        embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(n_clusters)
-        .collect()
-    )
     # centroid matrix broadcast to the Arrow stages; float32 widens
     # exactly to float64, same values the literal-array variant carried
-    c_ids = [r["_id"] for r in cent_rows]
-    c_mat = np.array(
-        [np.asarray(r["_v"], dtype=np.float64) for r in cent_rows]
-    ).reshape(len(cent_rows), dim)
+    c_ids, c_mat, _ = lowest_id_centroids(embeddings, id_col, vec_col, n_clusters, dim)
     bc_cent = spark.sparkContext.broadcast((c_ids, c_mat))
+    id_t = dict(embeddings.dtypes)[id_col]
+    vec_t = dict(embeddings.dtypes)[vec_col]
+    assign_schema = (
+        f"_vid {id_t}, _vec {vec_t}, _nrm double, "
+        f"_home {id_t}, _probes array<{id_t}>"
+    )
 
     # Stage 1 — assignment, ONE Arrow pass (r8 lesson: at any SF both
     # the HOF argmin fold (interpreted per element) and its
@@ -704,44 +729,28 @@ def ivf_knn_outliers(
     # squared distances accumulate sequentially (seq kernels) — the same
     # left-associated double rounding as the fold — and ties keep the
     # ascending-cid order via a stable argsort over cid-ordered columns.
+    # Malformed vectors drop here: the fold path's NULL distances made a
+    # NULL home key that never matched the cluster join.
     def assign(batches):
         import numpy as np
         import pandas as pd
 
         cids_, cm_ = bc_cent.value
-        cols = ["_vid", "_vec", "_nrm", "_home", "_probes"]
         for pdf in batches:
-            # null / wrong-length vectors drop here — the fold path's
-            # NULL distances made a NULL home key that never matched
-            # the cluster join, so the row vanished there too
-            if len(pdf):
-                ok = vec_ok_mask(pdf["_vec"], dim)
-                pdf = pdf[ok]
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
+            ok, vm = stack_vectors(pdf["_vec"], dim)
+            if not len(vm) or not len(cids_):
+                yield empty_batch(assign_schema)
                 continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_vec"]]
-            )
-            nrm = seq_norm(vm)
-            d = np.empty((len(vm), len(cids_)))
-            for j in range(len(cids_)):
-                diff = vm - cm_[j]
-                # sequential sum of squared diffs (seq_norm without the
-                # sqrt) — matches the _sq_dist fold's rounding exactly
-                acc = diff[:, 0] * diff[:, 0]
-                for dd in range(1, diff.shape[1]):
-                    acc = acc + diff[:, dd] * diff[:, dd]
-                d[:, j] = acc
-            idx = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-            cid_arr = np.asarray(cids_)
+            pdf = pdf[ok]
+            idx = np.argsort(_seq_sq_dists(vm, cm_), axis=1, kind="stable")
+            idx = idx[:, :n_probe]
             yield pd.DataFrame(
                 {
                     "_vid": pdf["_vid"].to_numpy(),
                     "_vec": pdf["_vec"],
-                    "_nrm": nrm,
-                    "_home": cid_arr[idx[:, 0]],
-                    "_probes": list(cid_arr[idx]),
+                    "_nrm": seq_norm(vm),
+                    "_home": cids_[idx[:, 0]],
+                    "_probes": list(cids_[idx]),
                 }
             )
 
@@ -750,13 +759,7 @@ def ivf_knn_outliers(
     assigned = (
         spread_if_narrow(embeddings)
         .select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec"))
-        .mapInPandas(
-            assign,
-            schema=(
-                f"_vid {id_t}, _vec {vec_t}, _nrm double, "
-                f"_home {id_t}, _probes array<{id_t}>"
-            ),
-        )
+        .mapInPandas(assign, schema=assign_schema)
         .persist()
     )
     lists = assigned.select(
@@ -782,75 +785,43 @@ def ivf_knn_outliers(
     # sum_i min(k, c_i) >= k iff sum_i c_i >= k). Probe rows process in
     # blocks so the (block x members x dim) product tensor stays
     # bounded regardless of list size.
+    pair_schema = f"ia {id_t}, ib {id_t}, dist double"
+
     def pair_scores(lpdf, ppdf):
         import numpy as np
         import pandas as pd
 
-        # both sides already passed assign()'s vec_ok_mask, but keep the
-        # kernels uniformly guarded (ADVICE r8): a malformed vector must
-        # degrade to a dropped row, never an executor-killing raise
-        if len(lpdf):
-            lpdf = lpdf[vec_ok_mask(lpdf["_bv"], dim)]
-        if len(ppdf):
-            ppdf = ppdf[vec_ok_mask(ppdf["_av"], dim)]
-        if not len(lpdf) or not len(ppdf):
-            return pd.DataFrame({"ia": [], "ib": [], "dist": []})
-        ids_b = lpdf["ib"].to_numpy()
-        vm = np.stack([np.asarray(v, dtype=np.float64) for v in lpdf["_bv"]])
-        nb = lpdf["nb"].to_numpy()
+        okb, vm = stack_vectors(lpdf["_bv"], dim)
+        oka, am = stack_vectors(ppdf["_av"], dim)
+        if not len(vm) or not len(am):
+            return empty_batch(pair_schema)
+        ids_b, nb = lpdf["ib"].to_numpy()[okb], lpdf["nb"].to_numpy()[okb]
+        ids_a, na = ppdf["ia"].to_numpy()[oka], ppdf["na"].to_numpy()[oka]
         out_a, out_b, out_d = [], [], []
         block = max(1, 8_388_608 // (len(ids_b) * dim))  # ~64 MiB tensor
-        for s in range(0, len(ppdf), block):
-            blk = ppdf.iloc[s : s + block]
-            am = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in blk["_av"]]
+        for s in range(0, len(ids_a), block):
+            cos, keep = cosine_scores(
+                seq_dot_pair(am[s : s + block], vm),
+                na[s : s + block, None] * nb[None, :],
             )
-            na = blk["na"].to_numpy()
-            ids_a = blk["ia"].to_numpy()
-            dots = seq_dot_pair(am, vm)
-            denom = na[:, None] * nb[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dist = np.where(denom > 0.0, 1.0 - dots / denom, np.nan)
-            for i in range(len(blk)):
-                valid = ~np.isnan(dist[i]) & (ids_b != ids_a[i])
-                vidx = np.nonzero(valid)[0]
-                if not len(vidx):
-                    continue
-                order = vidx[
-                    np.lexsort((ids_b[vidx], dist[i][vidx]))
-                ][:k]
-                out_a.extend([ids_a[i]] * len(order))
-                out_b.extend(ids_b[order])
-                out_d.extend(dist[i][order])
+            for i in range(len(cos)):
+                cand = np.nonzero(keep[i] & (ids_b != ids_a[s + i]))[0]
+                dist = 1.0 - cos[i][cand]
+                pos = topk_order(ids_b[cand], dist, k, desc=False)
+                out_a.extend([ids_a[s + i]] * len(pos))
+                out_b.extend(ids_b[cand][pos])
+                out_d.extend(dist[pos])
         return pd.DataFrame({"ia": out_a, "ib": out_b, "dist": out_d})
 
     pairs = (
         lists.groupBy("_cluster")
         .cogroup(probes.groupBy("_cluster"))
-        .applyInPandas(pair_scores, schema=f"ia {id_t}, ib {id_t}, dist double")
+        .applyInPandas(pair_scores, schema=pair_schema)
     )
-    w = Window.partitionBy("ia").orderBy(F.col("dist").asc(), F.col("ib").asc())
-    knn = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= k
-    )
-    # rank-ascending ordered sum, so an external oracle reproduces the
-    # float mean to the last ulp (the exact pass's convention); the
-    # count gate drops under-probed vectors (< k candidates), keeping
-    # the one-sided-bias guarantee above
-    agg = knn.groupBy("ia").agg(
-        (
-            F.aggregate(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("rn", "dist"))),
-                    lambda s: s.getField("dist"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.count(F.lit(1))
-        ).alias("knn_dist"),
-        F.count(F.lit(1)).alias("_n_cand"),
-    ).filter(F.col("_n_cand") >= k)
+    knn = rank_topk(pairs, "dist", k, desc=False, part="ia", nid="ib")
+    # the count gate drops under-probed vectors (< k candidates),
+    # keeping the one-sided-bias guarantee above
+    agg = knn_mean(knn).filter(F.col("_n_cand") >= k)
     return (
         agg.select(F.col("ia").alias(id_col), "knn_dist")
         .orderBy(F.col("knn_dist").desc(), F.col(id_col).asc())
@@ -920,80 +891,25 @@ def lsh_topk(
             ).alias("_sig"),
         )
 
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
-    qid_t = dict(queries.dtypes)[query_id_col]
+    # the query side is small by contract: its (id, vec, sig) rows
+    # collect once and ride the scan's broadcast
     qrows = q.collect()
-    qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
+    ok, qm = stack_vectors([r["_qvec"] for r in qrows], dim)
+    qrows = [r for r, o in zip(qrows, ok) if o]
     if not qrows:
         return _empty_topk(embeddings, queries, id_col, query_id_col)
-    qids = [r["query_id"] for r in qrows]
-    qm = np.array(
-        [np.asarray(r["_qvec"], dtype=np.float64) for r in qrows]
-    ).reshape(len(qrows), dim)
-    qn = seq_norm(qm)
     qsigs = np.asarray([r["_sig"] for r in qrows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((qids, qm, qn, qsigs))
 
-    id_t = dict(embeddings.dtypes)[id_col]
-    out_schema = f"query_id {qid_t}, neighbor_id {id_t}, cosine double"
-    src = spread_if_narrow(e)
+    def same_bucket(pdf, vm):
+        sigs = pdf["_sig"].to_numpy()
+        return lambda j: sigs == qsigs[j]
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        qids_, qm_, qn_, qsigs_ = bc.value
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            ok = vec_ok_mask(pdf["_vec"], dim)
-            if not ok.any():
-                yield empty
-                continue
-            pdf = pdf[ok]
-            ids = pdf["neighbor_id"].to_numpy()
-            sigs = pdf["_sig"].to_numpy()
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_vec"]]
-            )
-            nrm = seq_norm(vm)
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(qids_):
-                cand = (sigs == qsigs_[j]) & (ids != qid)
-                cidx = np.nonzero(cand)[0]
-                if not len(cidx):
-                    continue
-                dots = seq_dot_row(vm[cidx], qm_[j])
-                denom = nrm[cidx] * qn_[j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0.0, dots / denom, np.nan)
-                vidx = np.nonzero(~np.isnan(cos))[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[cidx][vidx], -cos[vidx]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids[cidx][order])
-                out_c.extend(cos[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
-
-    pairs = src.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+    return cosine_topk_scan(
+        spread_if_narrow(e), dim, k, [r["query_id"] for r in qrows], qm,
+        dict(queries.dtypes)[query_id_col],
+        candidates=same_bucket,
     )
 
 
@@ -1014,7 +930,7 @@ def cosine_topk_int8(
     arithmetic (|dot| <= dim * 127^2), bit-identical across engines.
 
     With ``dim`` given, quantization AND scoring run in one Arrow
-    kernel (the ``_cosine_topk_arrow`` shape): the query side quantizes
+    kernel (the ``cosine_topk_scan`` shape): the query side quantizes
     on the driver (small by contract) and broadcasts; each corpus batch
     quantizes with ``quantize_int8_np`` (bit-parity with the JVM
     expression — pinned by test), scores with exact int64 matmul
@@ -1059,16 +975,9 @@ def cosine_topk_int8(
 
     spark = embeddings.sparkSession
     ensure_package_on_executors(spark)
-    qrows = collect_query_rows(queries, query_id_col, query_vec_col)
-    qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
-    qids = [r[0] for r in qrows]
-    if qrows:
-        qm, _ = quantize_int8_np(
-            np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        )
-        qn = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))
-    else:  # pragma: no cover - degenerate empty query set
-        qm, qn = None, None
+    qids, qm = collect_query_vectors(queries, query_id_col, query_vec_col, dim)
+    qm, _ = quantize_int8_np(qm)
+    qn = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))
     bc = spark.sparkContext.broadcast((qids, qm, qn))
 
     id_t = dict(embeddings.dtypes)[id_col]
@@ -1083,50 +992,30 @@ def cosine_topk_int8(
         import pandas as pd
 
         qids_, qm_, qn_ = bc.value
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cosine_q": []}
-        )
         for pdf in batches:
-            if not len(qids_) or not len(pdf):
-                yield empty
-                continue
-            vecs = pdf["_vec"]
-            ok = vec_ok_mask(vecs, dim)
-            if not ok.any():
-                yield empty
+            ok, vm = stack_vectors(pdf["_vec"], dim)
+            if not len(qids_) or not len(vm):
+                yield empty_batch(out_schema)
                 continue
             ids = pdf["neighbor_id"].to_numpy()[ok]
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
-            )
             qb, _ = quantize_int8_np(vm)
             dots = (qb @ qm_.T).astype(np.float64)
             nrm = np.sqrt((qb * qb).sum(axis=1).astype(np.float64))
             out_q, out_n, out_c = [], [], []
             for j, qid in enumerate(qids_):
-                denom = nrm * qn_[j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0.0, dots[:, j] / denom, np.nan)
-                valid = ~np.isnan(cos) & (ids != qid)
-                vidx = np.nonzero(valid)[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[vidx], -cos[vidx]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids[order])
-                out_c.extend(cos[order])
+                cand = np.nonzero(ids != qid)[0]
+                cos, keep = cosine_scores(dots[cand, j], nrm[cand] * qn_[j])
+                cand, cos = cand[keep], cos[keep]
+                pos = topk_order(ids[cand], cos, k)
+                out_q.extend([qid] * len(pos))
+                out_n.extend(ids[cand][pos])
+                out_c.extend(cos[pos])
             yield pd.DataFrame(
                 {"query_id": out_q, "neighbor_id": out_n, "cosine_q": out_c}
             )
 
-    pairs = e.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_q", F.col("rank").cast("int"))
+    return rank_topk(e.mapInPandas(score, schema=out_schema), "cosine_q", k).select(
+        "query_id", "neighbor_id", "cosine_q", "rank"
     )
 
 
@@ -1267,7 +1156,7 @@ def kmeans_fit_int8(
     integer ``sq_dist`` of each vector to its centroid.
     """
     q = quantize_int8(
-        embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")), "_v"
+        embeddings.select(F.col(id_col).alias("_id"), as_vector(vec_col, dim)), "_v"
     ).select("_id", F.col("q_vec").alias("_q"))
     # the iterative loop re-scans q once per iteration (init + iters +
     # final assign): persist the quantized projection so every pass after
@@ -1288,6 +1177,12 @@ def kmeans_fit_int8(
             .collect()
         )
     ]
+
+    if not cents:  # empty corpus: nothing to train or assign
+        return cents, q.select(
+            "*", F.lit(None).cast("int").alias("cluster"),
+            F.lit(None).cast("bigint").alias("sq_dist"),
+        )
 
     def _assign(cur):
         # small k: one F.expr over a generated SQL string instead of
@@ -1387,11 +1282,11 @@ def ivf_topk_trained(
         cents, _ = kmeans_fit_int8(
             embeddings, id_col, vec_col, k=n_clusters, iters=iters, dim=dim
         )
+    if not cents:
+        return _empty_topk(embeddings, queries, id_col, query_id_col)
 
     eq = quantize_int8(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-        ),
+        embeddings.select(F.col(id_col).alias("neighbor_id"), as_vector(vec_col, dim)),
         "_v",
     ).select("neighbor_id", "_v", F.col("q_vec").alias("_q"))
     # materialize the quantized corpus before the argmin: without the
@@ -1410,9 +1305,7 @@ def ivf_topk_trained(
     )
 
     qq = quantize_int8(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_v")
-        ),
+        queries.select(F.col(query_id_col).alias("query_id"), as_vector(query_vec_col, dim)),
         "_v",
     ).select("query_id", F.col("_v").alias("_qv"), F.col("q_vec").alias("_qq"))
     probes = (
@@ -1432,93 +1325,28 @@ def ivf_topk_trained(
     # cosines bit-identical to the fold and the SQL twin.
     import numpy as np
 
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
-    prows = probes.collect()
-    qid_t = dict(queries.dtypes)[query_id_col]
-    if not prows:
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
     by_q: dict = {}
-    for r in prows:
-        if r["_qv"] is None or len(r["_qv"]) != dim:
-            continue
-        ent = by_q.setdefault(r["query_id"], (r["_qv"], set()))
-        ent[1].add(r["cluster"])
-    if not by_q:
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
+    for r in probes.collect():
+        by_q.setdefault(r["query_id"], (r["_qv"], set()))[1].add(r["cluster"])
     qids = sorted(by_q)
-    qm = np.array(
-        [np.asarray(by_q[qid][0], dtype=np.float64) for qid in qids]
-    ).reshape(len(qids), dim)
-    qn = seq_norm(qm)
-    probe_sets = [by_q[qid][1] for qid in qids]
-    bc = spark.sparkContext.broadcast((qids, qm, qn, probe_sets))
+    ok, qm = stack_vectors([by_q[qid][0] for qid in qids], dim)
+    qids = [qid for qid, o in zip(qids, ok) if o]
+    if not qids:
+        return _empty_topk(embeddings, queries, id_col, query_id_col)
+    probe_lists = [np.asarray(sorted(by_q[qid][1])) for qid in qids]
 
-    id_t = dict(embeddings.dtypes)[id_col]
-    out_schema = f"query_id {qid_t}, neighbor_id {id_t}, cosine double"
+    def probed(pdf, vm):
+        home = pdf["cluster"].to_numpy()
+        return lambda j: np.isin(home, probe_lists[j])
+
     src = spread_if_narrow(
         assigned.select("neighbor_id", F.col("_v").alias("_vec"), "cluster")
     )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        qids_, qm_, qn_, psets_ = bc.value
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cosine": []})
-        for pdf in batches:
-            if not len(pdf):
-                yield empty
-                continue
-            ok = vec_ok_mask(pdf["_vec"], dim)
-            if not ok.any():
-                yield empty
-                continue
-            pdf = pdf[ok]
-            ids = pdf["neighbor_id"].to_numpy()
-            home = pdf["cluster"].to_numpy()
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_vec"]]
-            )
-            nrm = seq_norm(vm)
-            out_q, out_n, out_c = [], [], []
-            for j, qid in enumerate(qids_):
-                pset = psets_[j]
-                cand = np.fromiter(
-                    (h in pset for h in home), dtype=bool, count=len(home)
-                )
-                cand &= ids != qid
-                cidx = np.nonzero(cand)[0]
-                if not len(cidx):
-                    continue
-                dots = seq_dot_row(vm[cidx], qm_[j])
-                denom = nrm[cidx] * qn_[j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0.0, dots / denom, np.nan)
-                vidx = np.nonzero(~np.isnan(cos))[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[cidx][vidx], -cos[vidx]))][:k]
-                out_q.extend([qid] * len(order))
-                out_n.extend(ids[cidx][order])
-                out_c.extend(cos[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine": out_c}
-            )
-
-    pairs = src.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int"))
+    return cosine_topk_scan(
+        src, dim, k, qids, qm, dict(queries.dtypes)[query_id_col],
+        candidates=probed,
     )
 
 
@@ -1573,11 +1401,6 @@ def pq_adc_topk(
         .orderBy("neighbor_id")
         .collect()
     )
-    # codebook[m][j] = j-th code's subvector for subspace m
-    codebook = [
-        [[int(x) for x in r["_q"][m * sub_dim : (m + 1) * sub_dim]] for r in seeds]
-        for m in range(m_subs)
-    ]
 
     qq = quantize_int8(
         queries.select(
@@ -1595,90 +1418,70 @@ def pq_adc_topk(
     # <= 8*254^2, nowhere near wrap), and numpy argmin ties break on the
     # FIRST (lowest) index — the same winner as array_min over
     # struct(d, j). The codebook is a closure constant (m_subs x n_codes
-    # x sub_dim ints). Null / wrong-length vectors produce NULL codes /
-    # NULL tables, exactly like the folds' NULL propagation.
+    # x sub_dim ints). A malformed vector's distances are all NULL, which
+    # order last: a malformed seed never wins a code, a malformed vector
+    # encodes to code 0 everywhere (the oracle's (d, j) tie rule) and a
+    # malformed query gets NULL tables, so its NULL ADC rows drop.
     import numpy as np
 
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(eq.sparkSession)
-    cb = np.array(codebook, dtype=np.int64)  # (m_subs, n_codes, sub_dim)
+    seed_ok, seed_mat = stack_vectors([r["_q"] for r in seeds], dim, np.int64)
+    # cb[m][j] = j-th code's subvector for subspace m (a malformed seed's
+    # row stays zero and its distances are masked to the maximum)
+    cb = np.zeros((m_subs, len(seeds), sub_dim), dtype=np.int64)
+    cb[:, seed_ok, :] = seed_mat.reshape(-1, m_subs, sub_dim).transpose(1, 0, 2)
+    never = np.iinfo(np.int64).max
     nid_t = dict(eq.dtypes)["neighbor_id"]
     qid_t = dict(qq.dtypes)["query_id"]
     _ms, _sd = m_subs, sub_dim
 
-    def _valid_mask(col, _dim=dim):
-        return col.map(lambda v: v is not None and len(v) == _dim)
+    code_schema = f"neighbor_id {nid_t}, " + ", ".join(
+        f"c{m} int" for m in range(_ms)
+    )
+    table_schema = f"query_id {qid_t}, " + ", ".join(
+        f"t{m} array<bigint>" for m in range(_ms)
+    )
+
+    def _sub_dists(vm, m):
+        sub = vm[:, m * _sd : (m + 1) * _sd]
+        d = ((sub[:, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
+        d[:, ~seed_ok] = never
+        return d
 
     def _encode_batches(batches):
         import numpy as np
         import pandas as pd
 
-        cols = ["neighbor_id"] + [f"c{m}" for m in range(_ms)]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
-            ok = _valid_mask(pdf["_q"]).to_numpy(dtype=bool)
+            ok, qm = stack_vectors(pdf["_q"], dim, np.int64)
             out = {"neighbor_id": pdf["neighbor_id"].to_numpy()}
-            n = len(pdf)
-            qm = (
-                np.stack(
-                    [np.asarray(x, dtype=np.int64) for x in pdf["_q"][ok]]
-                )
-                if ok.any()
-                else np.zeros((0, _ms * _sd), dtype=np.int64)
-            )
             for m in range(_ms):
-                sub = qm[:, m * _sd : (m + 1) * _sd]
-                d = ((sub[:, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
-                codes_ok = np.argmin(d, axis=1).astype(np.int64)
-                col = np.full(n, np.nan)
-                col[ok] = codes_ok
-                out[f"c{m}"] = pd.array(
-                    [None if np.isnan(x) else int(x) for x in col],
-                    dtype="Int32",
-                )
-            yield pd.DataFrame(out, columns=cols)
+                codes = np.zeros(len(pdf), dtype=np.int64)
+                codes[ok] = np.argmin(_sub_dists(qm, m), axis=1)
+                out[f"c{m}"] = codes
+            yield pd.DataFrame(out)
 
-    codes = eq.mapInPandas(
-        _encode_batches,
-        schema=f"neighbor_id {nid_t}, "
-        + ", ".join(f"c{m} int" for m in range(_ms)),
-    )
+    codes = eq.mapInPandas(_encode_batches, schema=code_schema)
 
     def _table_batches(batches):
         import numpy as np
         import pandas as pd
 
-        cols = ["query_id"] + [f"t{m}" for m in range(_ms)]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
-            ok = _valid_mask(pdf["_qq"]).to_numpy(dtype=bool)
+            ok, qm = stack_vectors(pdf["_qq"], dim, np.int64)
             out = {"query_id": pdf["query_id"].to_numpy()}
-            qm = (
-                np.stack(
-                    [np.asarray(x, dtype=np.int64) for x in pdf["_qq"][ok]]
-                )
-                if ok.any()
-                else np.zeros((0, _ms * _sd), dtype=np.int64)
-            )
             for m in range(_ms):
-                sub = qm[:, m * _sd : (m + 1) * _sd]
-                d = ((sub[:, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
-                tables = iter(d.tolist())
+                tables = iter(_sub_dists(qm, m).tolist())
                 out[f"t{m}"] = [
-                    [int(x) for x in next(tables)] if o else None for o in ok
+                    [x if s else None for x, s in zip(next(tables), seed_ok)]
+                    if o else None
+                    for o in ok
                 ]
-            yield pd.DataFrame(out, columns=cols)
+            yield pd.DataFrame(out)
 
-    qtab = qq.mapInPandas(
-        _table_batches,
-        schema=f"query_id {qid_t}, "
-        + ", ".join(f"t{m} array<bigint>" for m in range(_ms)),
-    )
+    qtab = qq.mapInPandas(_table_batches, schema=table_schema)
     # the encoded index: m_subs small codes per vector. Persisted — at
     # rest this IS the PQ index file; recomputing it per probe would
     # re-quantize per code (the CollapseProject-inlining trap).
@@ -1691,7 +1494,9 @@ def pq_adc_topk(
     for m in range(m_subs):
         term = F.element_at(F.col(f"t{m}"), F.col(f"c{m}") + 1)
         adc = term if adc is None else adc + term
-    scored = paired.withColumn("adc_dist", adc.cast("long"))
+    scored = paired.withColumn("adc_dist", adc.cast("long")).filter(
+        F.col("adc_dist").isNotNull()
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc()
     )

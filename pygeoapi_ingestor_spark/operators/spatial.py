@@ -49,20 +49,6 @@ def bbox_agg_exprs(lon_col: str = "lon", lat_col: str = "lat") -> list[Column]:
     ]
 
 
-def bbox_aggregate(
-    df: DataFrame,
-    group_cols: list[str] | None = None,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Spatial extent (bbox) per group — one aggregate pass, map-side
-    combinable, output bounded by group cardinality."""
-    exprs = bbox_agg_exprs(lon_col, lat_col)
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*exprs)
-    return df.agg(*exprs)
-
-
 def _interleave_bits(v: Column, n_bits: int, offset: int) -> Column:
     out = F.lit(0).cast("long")
     for i in range(n_bits):

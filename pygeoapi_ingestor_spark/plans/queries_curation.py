@@ -50,6 +50,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pygeoapi_ingestor_spark.operators import similarity, text
+from pygeoapi_ingestor_spark.sources.readers import (
+    read_documents as _docs,
+    read_embeddings as _emb,
+    read_events as _events,
+)
 
 SEG_WORDS = 8  # segment width (words) for the cross-doc segment census
 DSIR_BUCKETS = 4096  # hashed-bigram feature space (DSIR paper uses 10k)
@@ -57,21 +62,6 @@ DSIR_TARGET_SOURCE = "src0"  # the "high-quality target" corpus slice
 CMS_DEPTH = 4  # count-min rows (independent hash functions)
 CMS_WIDTH = 1024  # count-min buckets per row
 CMS_TOPN = 100  # exact heavy hitters to score the sketch against
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return e.withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,7 +752,13 @@ def q_quality_dup_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: quality scoring is one projection; decile assignment
     is the ranks.bucketed_row_number machinery; dup membership is a
-    broadcast-sized distinct-node join against the shared artifact."""
+    broadcast-sized distinct-node join against the shared artifact.
+
+    Caller contract: the returned plan reads a persisted narrow
+    (doc_id, quality_score) projection that this function does not
+    release. The caller owns it: ``streaming.scheduler.finalize_job``
+    (or ``spark.catalog.clearCache()``) frees it once the result is
+    collected."""
     from pygeoapi_ingestor_spark.functions import ranks
     from pygeoapi_ingestor_spark.operators import text as text_ops
     from pygeoapi_ingestor_spark.plans.queries_llm import (

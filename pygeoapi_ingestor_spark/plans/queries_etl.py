@@ -17,6 +17,7 @@ from pygeoapi_ingestor_spark.operators import (
     thresholds,
     zonal,
 )
+from pygeoapi_ingestor_spark.sources.readers import read_events as _events, read_table
 
 # stage -> discharge rating-curve points (public-shape lookup table, spans
 # the events value range 0..500)
@@ -51,12 +52,6 @@ CORRECTION_CURVES = [
     for h in range(24)
     for x in (0.0, 50.0, 150.0, 300.0, 500.0)
 ]
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    return read_events(spark, sf_dir)
 
 
 # events.value is exactly 2-decimal; aggregating it as DECIMAL makes
@@ -332,8 +327,8 @@ def q_spi_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    cust = read_table(spark, sf_dir, "customer")
+    nat = read_table(spark, sf_dir, "nation")
     zones = cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey).select(
         F.col("c_custkey").alias("user_id"), F.col("n_name").alias("zone")
     )
@@ -627,7 +622,7 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir)
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_nationkey").alias("nationkey"),

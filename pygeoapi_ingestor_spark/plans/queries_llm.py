@@ -13,21 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pygeoapi_ingestor_spark.operators import dedup, multimodal, similarity, text
+from pygeoapi_ingestor_spark.sources.readers import (
+    read_documents as _docs,
+    read_embeddings as _emb,
+)
 
 JACCARD_THRESHOLD = 0.1
 TOPK = 5
 N_QUERY_VECS = 5
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return e.withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -592,13 +585,17 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``transform`` FOUR times per row (digest / sum / max / min — HOF
     expressions get no common-subexpression elimination) plus a 64-step
     interpreted sum fold; measured ~4 s noop at bench SF for a 10k-row
-    projection. NULL embeddings keep the JVM-expression semantics
-    (scale 1.0, digest md5 of the empty string, NULL stats)."""
+    projection. NULL and empty embeddings keep the JVM-expression
+    semantics (scale 1.0, digest md5 of the empty string, NULL max/min;
+    the sum is NULL for a NULL vector and 0 for an empty one)."""
     import hashlib
 
     import numpy as np
 
-    from pygeoapi_ingestor_spark.operators.similarity import quantize_int8_np
+    from pygeoapi_ingestor_spark.operators.similarity import (
+        quantize_int8_np,
+        stack_vectors,
+    )
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
@@ -623,14 +620,15 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    schema = (
+        "vec_id bigint, q_scale double, q_digest string, "
+        "q_sum bigint, q_max int, q_min int"
+    )
+
     def quant(batches):
         import pandas as pd
 
-        cols = ["vec_id", "q_scale", "q_digest", "q_sum", "q_max", "q_min"]
         for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
             n = len(pdf)
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(),
@@ -641,47 +639,29 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q_min": np.full(n, np.nan),
             }
             vecs = pdf["embedding"]
-            ok = np.fromiter(
-                (v is not None for v in vecs), dtype=bool, count=n
+            lens = np.fromiter(
+                (-1 if v is None else len(v) for v in vecs), dtype=np.int64, count=n
             )
-            if ok.any():
-                # vectors may be ragged in general; the homogeneous
-                # case (every corpus) stacks once
-                lens = {len(v) for v in vecs[ok]}
-                groups = (
-                    [np.nonzero(ok)[0]]
-                    if len(lens) == 1
-                    else [
-                        np.array([i], dtype=np.int64)
-                        for i in np.nonzero(ok)[0]
-                    ]
-                )
-                for idx in groups:
-                    vm = np.stack(
-                        [np.asarray(vecs.iloc[i], dtype=np.float64) for i in idx]
-                    )
-                    q, scale = quantize_int8_np(vm)
-                    out["q_scale"][idx] = [_round6_half_up(s) for s in scale]
-                    out["q_sum"][idx] = q.sum(axis=1)
-                    out["q_max"][idx] = q.max(axis=1)
-                    out["q_min"][idx] = q.min(axis=1)
-                    digs = [
-                        hashlib.md5(
-                            ",".join(map(str, row)).encode()
-                        ).hexdigest()
-                        for row in q
-                    ]
-                    for j, i in enumerate(idx):
-                        out["q_digest"][i] = digs[j]
-            yield pd.DataFrame(out, columns=cols)
+            # an empty vector quantizes to the empty array: its sum is 0,
+            # its max/min NULL, the scale and digest the defaults
+            out["q_sum"][lens == 0] = 0
+            # vectors may be ragged in general: one stack per length
+            # (every corpus has a single one)
+            for dim in np.unique(lens[lens > 0]):
+                ok, vm = stack_vectors(vecs, dim)
+                idx = np.nonzero(ok)[0]
+                q, scale = quantize_int8_np(vm)
+                out["q_scale"][idx] = [_round6_half_up(s) for s in scale]
+                out["q_sum"][idx] = q.sum(axis=1)
+                out["q_max"][idx] = q.max(axis=1)
+                out["q_min"][idx] = q.min(axis=1)
+                out["q_digest"][idx] = [
+                    hashlib.md5(",".join(map(str, row)).encode()).hexdigest()
+                    for row in q
+                ]
+            yield pd.DataFrame(out)
 
-    return e.mapInPandas(
-        quant,
-        schema=(
-            "vec_id bigint, q_scale double, q_digest string, "
-            "q_sum bigint, q_max int, q_min int"
-        ),
-    )
+    return e.mapInPandas(quant, schema=schema)
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2671,9 +2651,10 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pygeoapi_ingestor_spark.operators.similarity import (
         _seq_sq_dists,
+        cosine_scores,
         seq_dot_pair,
         seq_norm,
-        vec_ok_mask,
+        stack_vectors,
     )
     from pygeoapi_ingestor_spark.session import (
         ensure_package_on_executors,
@@ -2685,11 +2666,11 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_rows = (
         e.select("vec_id", "embedding").orderBy("vec_id").limit(SEMDEDUP_K).collect()
     )
-    c_ids = np.asarray([int(r["vec_id"]) for r in cent_rows])
-    c_mat = np.array(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows]
-    ).reshape(len(cent_rows), EMB_DIM)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat))
+    ok, c_mat = stack_vectors([r["embedding"] for r in cent_rows], EMB_DIM)
+    c_ids = np.asarray([int(r["vec_id"]) for r in cent_rows], dtype=np.int64)
+    bc = spark.sparkContext.broadcast((c_ids[ok], c_mat, c_ids[:1]))
+    id_t = dict(e.dtypes)["vec_id"]
+    schema = f"vec_id {id_t}, embedding array<double>, cluster {id_t}"
 
     # Stage 1 — assignment, ONE Arrow pass (nearest centroid by
     # sequential-accumulation squared distance, first-occurrence argmin
@@ -2700,33 +2681,26 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection for constraint propagation to choke on — the Arrow
     # stages are leaves to Catalyst, so the plan analyzes instantly on
     # VANILLA sessions with no persist barrier, and nothing is rebuilt
-    # per invocation.
+    # per invocation. A malformed vector's (or malformed centroid's)
+    # distances are all NULL, which order last: the vector joins the
+    # lowest-id centroid's cluster, as in the oracle.
     def assign(batches):
         import numpy as np
-        import pandas as pd
 
-        cids_, cm_ = bc.value
+        cids_, cm_, first_ = bc.value
         for pdf in batches:
-            if len(pdf):
-                pdf = pdf[vec_ok_mask(pdf["embedding"], EMB_DIM)]
-            if not len(pdf):
-                yield pd.DataFrame(columns=["vec_id", "embedding", "cluster"])
-                continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            d = _seq_sq_dists(vm, cm_)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "embedding": pdf["embedding"],
-                    "cluster": cids_[np.argmin(d, axis=1)],
-                }
-            )
+            ok, vm = stack_vectors(pdf["embedding"], EMB_DIM)
+            if not len(cids_):
+                ok[:] = False
+            cluster = np.full(len(pdf), first_[0] if len(first_) else 0)
+            if ok.any():
+                cluster[ok] = cids_[np.argmin(_seq_sq_dists(vm, cm_), axis=1)]
+            pdf = pdf.copy()
+            pdf["cluster"] = cluster
+            yield pdf
 
-    id_t = dict(e.dtypes)["vec_id"]
     assigned = spread_if_narrow(e.select("vec_id", "embedding")).mapInPandas(
-        assign, schema=f"vec_id {id_t}, embedding array<double>, cluster {id_t}"
+        assign, schema=schema
     )
 
     # Stage 2 — the within-cluster drop rule as ONE grouped Arrow kernel
@@ -2735,38 +2709,36 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sequential seq_* accumulation — bit-identical to the scalar chain
     # and list_dot_product), and kept flags emit directly — no pair
     # materialization, no distinct, no final left join. A vector is
-    # dropped iff SOME lower-id member of its cluster has cosine >= tau
-    # (NaN cosines from zero-norm vectors never compare true, matching
-    # the SQL NULL semantics).
+    # dropped iff SOME lower-id member of its cluster has cosine >= tau:
+    # a NaN cosine compares true (NaN orders above every number), a
+    # zero-norm or malformed vector's NULL cosine never does.
     def drop_rule(pdf):
         import numpy as np
         import pandas as pd
 
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        vm = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["embedding"].iloc[order]]
-        )
+        pdf = pdf.sort_values("vec_id")
+        ok, vm = stack_vectors(pdf["embedding"], EMB_DIM)
         nrm = seq_norm(vm)
-        kept = np.ones(len(ids), dtype=bool)
+        kept_ok = np.ones(len(vm), dtype=bool)
         # block the probe axis so the (block x members) matrix stays
         # bounded however large one cluster gets
-        block = max(1, 4_194_304 // max(1, len(ids)))
-        denom_col = nrm
-        for s in range(0, len(ids), block):
-            dots = seq_dot_pair(vm[s : s + block], vm)
-            denom = nrm[s : s + block, None] * denom_col[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0.0, dots / denom, np.nan)
-            hit = cos >= SEMDEDUP_TAU
-            # rows are ids[s:s+block] (potential lower-id u), columns all
+        block = max(1, 4_194_304 // max(1, len(vm)))
+        for s in range(0, len(vm), block):
+            cos, keep = cosine_scores(
+                seq_dot_pair(vm[s : s + block], vm),
+                nrm[s : s + block, None] * nrm[None, :],
+            )
+            hit = keep & ((cos >= SEMDEDUP_TAU) | np.isnan(cos))
+            # rows are the block (potential lower-id u), columns all
             # members v: u drops v iff u < v and cos >= tau
             for i in range(hit.shape[0]):
                 gi = s + i
-                kept[gi + 1 :] &= ~hit[i, gi + 1 :]
+                kept_ok[gi + 1 :] &= ~hit[i, gi + 1 :]
+        kept = np.ones(len(pdf), dtype=bool)
+        kept[ok] = kept_ok
         return pd.DataFrame(
-            {"vec_id": ids, "cluster": pdf["cluster"].iloc[0], "kept": kept}
+            {"vec_id": pdf["vec_id"].to_numpy(), "cluster": pdf["cluster"].to_numpy(),
+             "kept": kept}
         )
 
     return (
@@ -3182,17 +3154,15 @@ def _rp_proj_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 interpreted zip_with/aggregate folds + 1 transform fold per row
     (r13: the last interpreted-HOF family in the catalog's warm set).
 
-    Output contract (ADVICE r13): null / wrong-length vectors are
-    EXCLUDED (vec_ok_mask) — the replaced fold expressions emitted such
-    rows with NULL projections and a NULL jl ratio; this frame's
-    consumers (q_embedding_rp_reduce, rrf fusion) treat malformed
-    vectors as absent instead. Row parity vs the oracle holds on any
-    well-formed corpus (the gate corpora contain none)."""
+    A null / wrong-length vector is a NULL vector (``stack_vectors``):
+    its row keeps the JVM expressions' answer — scale 1.0, NULL
+    projections and NULL q2 — which the rrf fusion's norm gate drops."""
     import numpy as np
 
     from pygeoapi_ingestor_spark.operators.similarity import (
+        fill_ok,
         quantize_int8_np,
-        vec_ok_mask,
+        stack_vectors,
     )
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
@@ -3203,7 +3173,6 @@ def _rp_proj_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc_w = spark.sparkContext.broadcast(w_np)
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    cols = ["vec_id", "q_scale"] + [f"p{p}" for p in range(RP_PLANES)] + ["q2"]
 
     def proj(batches):
         import numpy as np
@@ -3211,21 +3180,18 @@ def _rp_proj_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         w_ = bc_w.value
         for pdf in batches:
-            if len(pdf):
-                pdf = pdf[vec_ok_mask(pdf["embedding"], EMB_DIM)]
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
-                continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            ok, vm = stack_vectors(pdf["embedding"], EMB_DIM)
             q, scale = quantize_int8_np(vm)
             pm = q @ w_.T
-            out = {"vec_id": pdf["vec_id"].to_numpy(), "q_scale": scale}
+            out = {
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "q_scale": np.ones(len(pdf)),
+            }
+            out["q_scale"][ok] = scale
             for p in range(RP_PLANES):
-                out[f"p{p}"] = pm[:, p]
-            out["q2"] = (q * q).sum(axis=1)
-            yield pd.DataFrame(out, columns=cols)
+                out[f"p{p}"] = fill_ok(ok, pm[:, p])
+            out["q2"] = fill_ok(ok, (q * q).sum(axis=1))
+            yield pd.DataFrame(out)
 
     schema = "vec_id bigint, q_scale double, " + ", ".join(
         f"p{p} bigint" for p in range(RP_PLANES)
@@ -3734,23 +3700,6 @@ FROM agg ORDER BY score DESC, doc_id ASC LIMIT {BM25_TOPK}
 RRF_K, RRF_LIST, RRF_OUT = 60, 20, 10
 
 
-def _rp_proj_cols():
-    """The 8 integer RP projections as Spark columns (shared by
-    embedding_rp_reduce and the fusion retriever)."""
-    weights = similarity.md5_plane_weights(EMB_DIM, RP_PLANES, seed=11)
-    cols = []
-    for p in range(RP_PLANES):
-        w_arr = F.lit([int(x) for x in weights[p]])
-        cols.append(
-            F.aggregate(
-                F.zip_with(F.col("q_vec"), w_arr, lambda x, w: (x * w).cast("bigint")),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias(f"p{p}")
-        )
-    return cols
-
-
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrievers over the same query set:
     the exact-cosine ranking and the 8-d random-projection (compressed)
@@ -3785,7 +3734,10 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the folds it replaces, in any order).
     import numpy as np
 
-    from pygeoapi_ingestor_spark.operators.similarity import quantize_int8_np
+    from pygeoapi_ingestor_spark.operators.similarity import (
+        quantize_int8_np,
+        stack_vectors,
+    )
 
     pa = _rp_proj_frame(spark, sf_dir).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -3796,23 +3748,15 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     )
-    qrows = [r for r in qrows if r[1] is not None and len(r[1]) == EMB_DIM]
+    ok, qv = stack_vectors([r[1] for r in qrows], EMB_DIM)
     w_np = np.array(
         similarity.md5_plane_weights(EMB_DIM, RP_PLANES, seed=11),
         dtype=np.int64,
     )
-    if qrows:
-        qq, _ = quantize_int8_np(
-            np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        )
-        qp = qq @ w_np.T
-    else:  # pragma: no cover - degenerate empty query set
-        qp = np.zeros((0, RP_PLANES), dtype=np.int64)
+    qp = quantize_int8_np(qv)[0] @ w_np.T
+    qids = [int(r[0]) for r, o in zip(qrows, ok) if o]
     pq = spark.createDataFrame(
-        [
-            (int(r[0]), *[int(qp[i, p]) for p in range(RP_PLANES)])
-            for i, r in enumerate(qrows)
-        ],
+        [(qid, *[int(x) for x in qp[i]]) for i, qid in enumerate(qids)],
         "query_id bigint, " + ", ".join(
             f"q{p} bigint" for p in range(RP_PLANES)
         ),
@@ -4042,30 +3986,28 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a labeling-QA signal (negative margins = label noise).
 
     Anchors collect to the driver (bounded sample, the
-    `_cosine_topk_arrow` precedent) and ONE Arrow kernel scores each
+    `cosine_topk_scan` precedent) and ONE Arrow kernel scores each
     corpus batch against the anchor matrix with the same sequential
     left-fold accumulation the zip_with/aggregate expressions used
     (`seq_dot_row`/`seq_norm` — bit-identical cosines), emitting one
     batch-local extreme pair per anchor; the JVM combines partials with
     the same max/min STRUCT aggregates as before (extremes are a
     monoid, so partial-then-final equals the old all-rows aggregate
-    exactly). Null / wrong-length corpus vectors drop from rankings
-    (the fold path's NULL-cosine convention — same as every Arrow
-    kernel in this family). NaN cosines (zero-norm candidate or anchor)
-    ALSO drop from rankings (ADVICE r13: pandas→Arrow serialization
-    masks NaN doubles as NULL, so a NaN could not survive the boundary
-    anyway — the same drop-invalid convention as the cosine_topk_int8
-    Arrow path); and NULL labels are excluded from both the negative
+    exactly). Edge rows follow the kernel harness
+    (``similarity.stack_vectors``): malformed vectors and zero-norm
+    pairs drop from rankings, a NaN cosine ranks above every number as
+    in the oracle; and NULL labels are excluded from both the negative
     and positive candidate sets, matching the three-valued logic of the
     replaced ``F.when(c_label != a_label)`` / ``(c_label == a_label)``
     JVM expressions (a NULL-label anchor emits nothing).
     """
-    import numpy as np
-
     from pygeoapi_ingestor_spark.operators.similarity import (
+        cosine_scores,
+        empty_batch,
         seq_dot_row,
         seq_norm,
-        vec_ok_mask,
+        stack_vectors,
+        topk_order,
     )
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
@@ -4076,87 +4018,70 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "label")
         .collect()
     )
-    arows = [r for r in arows if r[1] is not None and len(r[1]) == EMB_DIM]
+    ok, am = stack_vectors([r[1] for r in arows], EMB_DIM)
+    arows = [r for r, o in zip(arows, ok) if o]
     aids = [int(r[0]) for r in arows]
     albl = [r[2] for r in arows]
-    if arows:
-        am = np.stack([np.asarray(r[1], dtype=np.float64) for r in arows])
-        an = seq_norm(am)
-    else:  # pragma: no cover - degenerate empty anchor set
-        am, an = None, None
-    bc = spark.sparkContext.broadcast((aids, albl, am, an))
+    bc = spark.sparkContext.broadcast((aids, albl, am, seq_norm(am)))
+    lbl_t = dict(e.dtypes)["label"]
+    schema = (
+        f"anchor_id bigint, a_label {lbl_t}, hn_cos double, "
+        "hn_nid bigint, ep_cos double, ep_pid bigint"
+    )
 
     def extremes(batches):
         import numpy as np
         import pandas as pd
 
         aids_, albl_, am_, an_ = bc.value
-        cols = ["anchor_id", "a_label", "hn_cos", "hn_nid", "ep_cos", "ep_pid"]
-        empty = pd.DataFrame(columns=cols)
         for pdf in batches:
-            if not len(aids_) or not len(pdf):
-                yield empty
-                continue
-            ok = vec_ok_mask(pdf["c_vec"], EMB_DIM)
-            if not ok.any():
-                yield empty
+            ok, vm = stack_vectors(pdf["c_vec"], EMB_DIM)
+            if not len(aids_) or not len(vm):
+                yield empty_batch(schema)
                 continue
             ids = pdf["cand_id"].to_numpy()[ok]
             lbl = pdf["c_label"].to_numpy()[ok]
             # NULL-label candidates never match either side of the old
             # three-valued F.when comparisons — mask them up front
             lbl_ok = ~pd.isnull(lbl)
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["c_vec"][ok]]
-            )
             nrm = seq_norm(vm)
-            out = {c: [] for c in cols}
+            out = {c: [] for c in ("anchor_id", "a_label", "hn_cos",
+                                   "hn_nid", "ep_cos", "ep_pid")}
             for j, aid in enumerate(aids_):
                 if pd.isnull(albl_[j]):
                     # NULL-label anchor: both label comparisons are
                     # NULL under 3VL — no candidates on either side
                     continue
-                dots = seq_dot_row(vm, am_[j])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dots / (nrm * an_[j])
-                # NaN cosines (zero-norm vectors) drop from rankings:
-                # they could not survive the Arrow boundary (pandas NaN
-                # serializes as NULL) — same convention as the
-                # cosine_topk_int8 kernel
-                sel = (ids != aid) & lbl_ok & ~np.isnan(cos)
+                cos, keep = cosine_scores(seq_dot_row(vm, am_[j]), nrm * an_[j])
+                sel = (ids != aid) & lbl_ok & keep
                 neg = np.nonzero(sel & (lbl != albl_[j]))[0]
                 pos = np.nonzero(sel & (lbl == albl_[j]))[0]
                 if not len(neg) and not len(pos):
                     continue
                 hn_c = hn_i = ep_c = ep_i = None
                 if len(neg):
-                    # lexmax (cos, -cid): max cosine, lowest id on ties
-                    w = neg[np.lexsort((ids[neg], -cos[neg]))][0]
+                    # max cosine, lowest id on ties
+                    w = neg[topk_order(ids[neg], cos[neg], 1)[0]]
                     hn_c, hn_i = cos[w], int(ids[w])
                 if len(pos):
-                    # lexmin (cos, cid): min cosine, lowest id on ties
-                    w = pos[np.lexsort((ids[pos], cos[pos]))][0]
+                    # min cosine, lowest id on ties
+                    w = pos[topk_order(ids[pos], cos[pos], 1, desc=False)[0]]
                     ep_c, ep_i = cos[w], int(ids[w])
-                out["anchor_id"].append(aid)
-                out["a_label"].append(albl_[j])
-                out["hn_cos"].append(hn_c)
-                out["hn_nid"].append(hn_i)
-                out["ep_cos"].append(ep_c)
-                out["ep_pid"].append(ep_i)
-            yield pd.DataFrame(out, columns=cols)
+                for c, v in zip(out, (aid, albl_[j], hn_c, hn_i, ep_c, ep_i)):
+                    out[c].append(v)
+            yield pd.DataFrame(out)
 
-    lbl_t = dict(e.dtypes)["label"]
     partials = e.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_vec"),
         F.col("label").alias("c_label"),
-    ).mapInPandas(
-        extremes,
-        schema=(
-            f"anchor_id bigint, a_label {lbl_t}, hn_cos double, "
-            "hn_nid bigint, ep_cos double, ep_pid bigint"
-        ),
-    )
+    ).mapInPandas(extremes, schema=schema)
+    # the Arrow boundary turns a NaN cosine into NULL: restore it where
+    # the pair exists, so NaN orders above every cosine as in the oracle
+    for c, i in (("hn_cos", "hn_nid"), ("ep_cos", "ep_pid")):
+        partials = partials.withColumn(
+            c, F.when(F.col(i).isNotNull(), F.coalesce(c, F.lit(float("nan"))))
+        )
     agg = partials.groupBy("anchor_id", "a_label").agg(
         F.max(
             F.when(
@@ -4467,9 +4392,12 @@ def q_embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from pygeoapi_ingestor_spark.operators.similarity import (
+        cosine_scores,
+        empty_batch,
         seq_dot_pair,
         seq_norm,
-        vec_ok_mask,
+        stack_vectors,
+        topk_order,
     )
     from pygeoapi_ingestor_spark.session import (
         ensure_package_on_executors,
@@ -4479,17 +4407,13 @@ def q_embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_on_executors(spark)
     e = _emb(spark, sf_dir)
     rows = e.select("vec_id", "embedding").collect()
-    rows = [r for r in rows if r[1] is not None and len(r[1]) == EMB_DIM]
-    if not rows:
-        return spark.createDataFrame([], "vec_id bigint, knn_dist double")
-    all_ids = np.asarray([r["vec_id"] for r in rows])
+    ok, all_vm = stack_vectors([r[1] for r in rows], EMB_DIM)
+    all_ids = np.asarray([r[0] for r, o in zip(rows, ok) if o], dtype=np.int64)
     order = np.argsort(all_ids)
-    all_ids = all_ids[order]
-    all_vm = np.array(
-        [np.asarray(rows[i]["embedding"], dtype=np.float64) for i in order]
-    ).reshape(len(rows), EMB_DIM)
-    all_nrm = seq_norm(all_vm)
-    bc = spark.sparkContext.broadcast((all_ids, all_vm, all_nrm))
+    all_ids, all_vm = all_ids[order], all_vm[order]
+    bc = spark.sparkContext.broadcast((all_ids, all_vm, seq_norm(all_vm)))
+    id_t = dict(e.dtypes)["vec_id"]
+    schema = f"vec_id {id_t}, knn_dist double"
 
     def knn_mean(batches):
         import numpy as np
@@ -4497,52 +4421,46 @@ def q_embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         ids_, vm_, nrm_ = bc.value
         for pdf in batches:
-            if len(pdf):
-                pdf = pdf[vec_ok_mask(pdf["embedding"], EMB_DIM)]
-            if not len(pdf):
-                yield pd.DataFrame({"vec_id": [], "knn_dist": []})
+            ok, am = stack_vectors(pdf["embedding"], EMB_DIM)
+            if not len(am) or not len(ids_):
+                yield empty_batch(schema)
                 continue
-            a_ids = pdf["vec_id"].to_numpy()
-            am = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            a_ids = pdf["vec_id"].to_numpy()[ok]
             an = seq_norm(am)
             out_i, out_d = [], []
-            block = max(1, 4_194_304 // max(1, len(ids_)))
+            block = max(1, 4_194_304 // len(ids_))
             for s in range(0, len(am), block):
-                dots = seq_dot_pair(am[s : s + block], vm_)
-                denom = an[s : s + block, None] * nrm_[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dist = np.where(denom > 0.0, 1.0 - dots / denom, np.nan)
-                for i in range(dist.shape[0]):
+                cos, keep = cosine_scores(
+                    seq_dot_pair(am[s : s + block], vm_),
+                    an[s : s + block, None] * nrm_[None, :],
+                )
+                for i in range(len(cos)):
                     row_id = a_ids[s + i]
-                    valid = ~np.isnan(dist[i]) & (ids_ != row_id)
-                    vidx = np.nonzero(valid)[0]
-                    if len(vidx) == 0:
+                    cand = np.nonzero(keep[i] & (ids_ != row_id))[0]
+                    if not len(cand):
                         continue
-                    # neighbor rank = (dist asc, ib asc); ids_ is sorted
-                    # ascending so the stable lexsort reproduces the
-                    # window's tie-break exactly
-                    knn = vidx[np.lexsort((ids_[vidx], dist[i][vidx]))][
-                        :KNN_OUT_K
-                    ]
-                    # ascending-rank-ordered sequential sum from 0.0 —
-                    # the oracle's ordered-list aggregate to the last ulp
+                    # neighbor rank = (dist asc, ib asc), the window's
+                    # tie-break; then the ascending-rank sequential sum
+                    # from 0.0 — the oracle's ordered-list aggregate
+                    dist = 1.0 - cos[i][cand]
+                    knn = dist[topk_order(ids_[cand], dist, KNN_OUT_K, desc=False)]
                     acc = 0.0
-                    for d in dist[i][knn]:
+                    for d in knn:
                         acc = acc + d
                     out_i.append(row_id)
                     out_d.append(acc / len(knn))
             yield pd.DataFrame({"vec_id": out_i, "knn_dist": out_d})
 
-    id_t = dict(e.dtypes)["vec_id"]
     scored = spread_if_narrow(e.select("vec_id", "embedding")).mapInPandas(
-        knn_mean, schema=f"vec_id {id_t}, knn_dist double"
+        knn_mean, schema=schema
     )
+    # the kernel emits no NULL distance: a NULL is a NaN the Arrow
+    # boundary masked, restored so it orders first as in the oracle
+    knn_dist = F.coalesce("knn_dist", F.lit(float("nan")))
     return (
-        scored.orderBy(F.col("knn_dist").desc(), F.col("vec_id").asc())
+        scored.orderBy(knn_dist.desc(), F.col("vec_id").asc())
         .limit(KNN_OUT_TOP)
-        .select("vec_id", F.round("knn_dist", 6).alias("knn_dist"))
+        .select("vec_id", F.round(knn_dist, 6).alias("knn_dist"))
     )
 
 
@@ -4750,86 +4668,19 @@ def _exact_knn_scores_sampled(
     replaces and as q_embedding_knn_outliers, so the two still agree
     bit-for-bit on shared vectors (property-pinned), and the ordered-sum
     mean convention is unchanged."""
-    import numpy as np
-
-    from pyspark.sql import Window
-
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     e = _emb(spark, sf_dir)
-    qrows = (
-        e.filter(F.col("vec_id").isin(sample_ids))
-        .select("vec_id", "embedding")
-        .collect()
+    qids, qm = similarity.collect_query_vectors(
+        e.filter(F.col("vec_id").isin(sample_ids)), "vec_id", "embedding", EMB_DIM
     )
-    qids = [int(r[0]) for r in qrows]
-    qm = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in qrows]
-    ).reshape(len(qrows), EMB_DIM)
-    qn = similarity.seq_norm(qm) if qrows else None
-    bc = spark.sparkContext.broadcast((qids, qm, qn))
-    kk = KNN_OUT_K
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        qids_, qm_, qn_ = bc.value
-        empty = pd.DataFrame({"ia": [], "ib": [], "dist": []})
-        for pdf in batches:
-            if not len(qids_) or not len(pdf):
-                yield empty
-                continue
-            vecs = pdf["_vec"]
-            ok = np.fromiter(
-                (v is not None and len(v) == EMB_DIM for v in vecs),
-                dtype=bool,
-                count=len(vecs),
-            )
-            if not ok.any():
-                yield empty
-                continue
-            ids = pdf["ib"].to_numpy()[ok]
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
-            )
-            nrm = similarity.seq_norm(vm)
-            out_a, out_b, out_d = [], [], []
-            for j, qid in enumerate(qids_):
-                dots = similarity.seq_dot_row(vm, qm_[j])
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dist = 1.0 - dots / (nrm * qn_[j])
-                valid = (ids != qid) & ~np.isnan(dist)
-                vidx = np.nonzero(valid)[0]
-                if not len(vidx):
-                    continue
-                order = vidx[np.lexsort((ids[vidx], dist[vidx]))][:kk]
-                out_a.extend([qid] * len(order))
-                out_b.extend(ids[order])
-                out_d.extend(dist[order])
-            yield pd.DataFrame({"ia": out_a, "ib": out_b, "dist": out_d})
-
-    pairs = e.select(
-        F.col("vec_id").alias("ib"), F.col("embedding").alias("_vec")
-    ).mapInPandas(score, schema="ia bigint, ib bigint, dist double")
-    w = Window.partitionBy("ia").orderBy(F.col("dist").asc(), F.col("ib").asc())
-    knn = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= KNN_OUT_K
+    src = e.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_vec")
     )
-    return knn.groupBy("ia").agg(
-        (
-            F.aggregate(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("rn", "dist"))),
-                    lambda s: s.getField("dist"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.count(F.lit(1))
-        ).alias("knn_dist")
-    ).select(F.col("ia").alias("vec_id"), "knn_dist")
+    knn = similarity.cosine_topk_scan(
+        src, EMB_DIM, KNN_OUT_K, qids, qm, "bigint", distance=True
+    )
+    return similarity.knn_mean(knn, "query_id").select(
+        F.col("query_id").alias("vec_id"), "knn_dist"
+    )
 
 
 def q_knn_outliers_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4842,14 +4693,13 @@ def q_knn_outliers_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sample rides in the output row."""
     e = _emb(spark, sf_dir)
     sample_ids = _knn_sample_ids(spark, sf_dir)
-    # every sampled vector gets an exact score (kNN over the full
-    # corpus always has >= k candidates), so n_sample = |exact scores|
-    # — no separate sample scan. Persist the tiny score/top frames:
-    # each feeds two of the final aggregate branches, and without the
-    # barrier Catalyst re-runs the whole sampled FMA pass per branch.
-    exact_scores = _exact_knn_scores_sampled(spark, sf_dir, sample_ids).persist()
+    # n_sample is the drawn id list itself (a sampled vector with a
+    # malformed or zero-norm embedding has no score but is sampled).
+    # Persist the tiny top frame: it feeds two of the final aggregate
+    # branches, and without the barrier Catalyst re-runs the whole
+    # sampled FMA pass per branch.
     exact_top = (
-        exact_scores.orderBy(F.col("knn_dist").desc(), F.col("vec_id").asc())
+        _exact_knn_scores_sampled(spark, sf_dir, sample_ids).orderBy(F.col("knn_dist").desc(), F.col("vec_id").asc())
         .limit(KNN_OUT_TOP)
         .select("vec_id")
         .persist()
@@ -4862,14 +4712,14 @@ def q_knn_outliers_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id")
     hit = exact_top.join(approx_top, "vec_id")
     return (
-        exact_scores.agg(F.count(F.lit(1)).cast("bigint").alias("n_sample"))
-        .crossJoin(exact_top.agg(F.count(F.lit(1)).cast("bigint").alias("n_top")))
+        exact_top.agg(F.count(F.lit(1)).cast("bigint").alias("n_top"))
         .crossJoin(hit.agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap")))
         .select(
-            "n_sample",
+            F.lit(len(sample_ids)).cast("bigint").alias("n_sample"),
             "n_top",
             "n_overlap",
-            F.round(F.col("n_overlap") / F.col("n_top"), 6).alias("recall"),
+            # an empty sample has no recall (the oracle's x / 0 is NULL)
+            F.round(F.try_divide("n_overlap", "n_top"), 6).alias("recall"),
         )
     )
 

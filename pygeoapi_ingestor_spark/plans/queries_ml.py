@@ -25,27 +25,17 @@ from pygeoapi_ingestor_spark.operators import (
     temporal,
     text,
 )
+from pygeoapi_ingestor_spark.sources.readers import (
+    read_documents as _docs,
+    read_embeddings as _emb,
+    read_events as _events,
+)
 
 PCA_ITERS = 3
 PCA_DIM = 64
 ZIPF_TOPN = 200
 CHI2_TOP_TOKENS = 20
 KS_BINS = 1000
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return e.withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -185,15 +185,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the standard table set from a scale-factor directory.
-
-    Returns ``{name: DataFrame}``. Reads are lazy; column pruning and
-    predicate pushdown reach the parquet scans because we never cache or
-    materialize here.
-    """
-    from pygeoapi_ingestor_spark.sources.readers import read_table
-
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}

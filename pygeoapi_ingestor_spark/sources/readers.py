@@ -69,6 +69,21 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "events")
 
 
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return read_table(spark, sf_dir, "documents")
+
+
+def as_double_vec(df: DataFrame, col: str = "embedding") -> DataFrame:
+    """Widen an array<float> vector column to array<double> (exact) — the
+    element type every embedding kernel and its SQL twin
+    (``CAST(v AS DOUBLE[])``) compute in."""
+    return df.withColumn(col, F.transform(col, lambda x: x.cast("double")))
+
+
+def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return as_double_vec(read_table(spark, sf_dir, "embeddings"))
+
+
 def read_geojsonl(spark: SparkSession, path: str) -> DataFrame:
     """Read newline-delimited GeoJSON Point features (the shape
     ``sinks.export_geojsonl`` writes and the reference's vector

@@ -22,3 +22,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say what the default run skipped: the marker expression in force
+    (pytest.ini's ``-m "not slow"`` unless overridden), how many tests it
+    deselected, and the command that runs them."""
+    markexpr = config.getoption("markexpr")
+    if not markexpr:
+        return
+    deselected = terminalreporter.stats.get("deselected", [])
+    n = sum(1 for item in deselected if item.get_closest_marker("slow"))
+    terminalreporter.write_sep("-", "marker selection")
+    terminalreporter.write_line(
+        f"marker expression in force: -m {markexpr!r}; "
+        f"it deselected {n} slow tests"
+    )
+    if n:
+        terminalreporter.write_line("run them with: pytest -m slow")

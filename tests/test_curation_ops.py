@@ -146,6 +146,27 @@ def test_quality_dup_interaction_partition(spark, sf_dir):
         assert 0.0 <= r["dup_rate"] <= 1.0
 
 
+def test_quality_dup_interaction_persist_released_by_finalize(spark, sf_dir):
+    """The key persists its (doc_id, quality_score) projection and leaves
+    the release to its caller: after collect, finalize_job must free
+    every RDD the key persisted."""
+    from pygeoapi_ingestor_spark.plans.queries_curation import (
+        q_quality_dup_interaction,
+    )
+    from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    finalize_job(spark)  # an earlier run of the key may hold the cache
+    before = persisted()
+    q_quality_dup_interaction(spark, sf_dir).collect()
+    ours = persisted() - before
+    assert ours, "the key no longer persists its projection"
+    finalize_job(spark)
+    assert not ours & persisted()
+
+
 def test_cluster_balanced_sample_cap_and_determinism(spark, sf_dir):
     from pygeoapi_ingestor_spark.plans.queries_curation import (
         BALANCED_CAP,

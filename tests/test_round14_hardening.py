@@ -39,10 +39,8 @@ def _crafted_corpus(spark, tmp_path):
         # candidates
         (30, [0.0] * EMB_DIM, 1),     # zero-norm: never hn/ep
         (31, vec(8.0), None),         # NULL label: excluded both sides
-        # (a NULL-vector row is NOT included: the DuckDB oracle's
-        # list_dot_product errors on NULL lists, so the oracle defines
-        # no semantics for it; the kernel's vec_ok_mask drop is pinned
-        # by the r13 vec_ok_mask tests instead)
+        # (NULL / malformed vectors are pinned by the edge matrix in
+        # test_vector_kernel_matrix.py)
         (40, vec(9.0), 1),
         (41, vec(10.5), 2),
         (42, vec(11.25), 1),
@@ -185,9 +183,11 @@ def test_embedding_quantize_kernel_matches_expression_twin(spark, tmp_path):
     """r14 moved q_embedding_quantize from a 4x-evaluated interpreted
     HOF projection to one Arrow kernel. Twin-pin the kernel against the
     replaced expression formulation on a corpus that includes a NULL
-    embedding and a ragged (wrong-length) vector — scale rounding
-    (HALF_UP via the Decimal twin), md5 digests, and the NULL contract
-    (scale 1.0, md5("") digest, NULL stats) must all match."""
+    embedding, a ragged (wrong-length) and a zero-length vector — scale
+    rounding (HALF_UP via the Decimal twin), md5 digests, the NULL
+    contract (scale 1.0, md5("") digest, NULL stats) and the empty-array
+    contract (scale 1.0, md5("") digest, sum 0, NULL max/min) must all
+    match."""
     import os
 
     from pygeoapi_ingestor_spark.operators import similarity
@@ -202,6 +202,7 @@ def test_embedding_quantize_kernel_matches_expression_twin(spark, tmp_path):
         (2, None),                        # NULL embedding
         (3, [1.5, -2.25, 0.75]),          # ragged length
         (4, [-0.1234565 - 0.0625 * i for i in range(EMB_DIM)]),
+        (5, []),                          # zero-length: scale 1.0, sum 0
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     path = str(tmp_path / "qcorpus")

@@ -114,56 +114,3 @@ def test_md5_sig_arrow_equals_expression(spark):
     want = {r["vec_id"]: r["_sig"] for r in expr.collect()}
     got = {r["vec_id"]: r["_sig"] for r in arrow.collect()}
     assert got == want
-
-
-def test_malformed_vectors_degrade_not_raise(spark):
-    """ADVICE r8: every Arrow kernel that stacks vectors must treat a
-    null / wrong-length vector the way the fold expressions it replaced
-    did — the row degrades (drops, or signature 0), never an
-    executor-killing np.stack raise."""
-    rng = np.random.RandomState(17)
-    rows = [
-        (i, [float(x) for x in rng.randn(DIM).astype(np.float32)])
-        for i in range(40)
-    ]
-    rows.append((100, None))              # null vector
-    rows.append((101, [1.0, 2.0]))        # wrong length
-    e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-
-    # brute-force Arrow path: malformed ids never appear as neighbors
-    q = e.filter(F.col("vec_id") < 2)
-    out = similarity.cosine_topk(
-        e, q, "vec_id", "embedding", "vec_id", "embedding", k=5, dim=DIM
-    ).collect()
-    assert len(out) == 10
-    assert not {r["neighbor_id"] for r in out} & {100, 101}
-
-    # signature kernel: malformed rows keep flowing with sig 0 — the
-    # same value the md5_signature expression produces for them
-    arrow = similarity.with_md5_sig_arrow(e, "embedding", DIM, 6)
-    expr = e.select(
-        "vec_id",
-        similarity.md5_signature(F.col("embedding"), DIM, 6)
-        .cast("bigint").alias("_sig"),
-    )
-    got = {r["vec_id"]: r["_sig"] for r in arrow.collect()}
-    want = {r["vec_id"]: r["_sig"] for r in expr.collect()}
-    assert got == want and got[100] == 0 and got[101] == 0
-
-    # IVF cogroup path: malformed rows drop at assignment
-    ivf = similarity.ivf_knn_outliers(
-        e, "vec_id", "embedding", dim=DIM, k=3, n_clusters=4, top_n=50
-    ).collect()
-    assert len(ivf) > 0
-    assert not {r["vec_id"] for r in ivf} & {100, 101}
-
-    # bucketed near-dup pairs: malformed rows emit no pairs
-    from pygeoapi_ingestor_spark.operators import dedup
-
-    pairs = dedup.embedding_cosine_pairs_bucketed(
-        e, "vec_id", "embedding", threshold=-1.0, dim=DIM,
-        n_planes=8, bands=4,
-    ).collect()
-    assert len(pairs) > 0
-    ids = {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs}
-    assert not ids & {100, 101}
