@@ -16,11 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pygeoapi_ingestor_spark.plans import (  # noqa: E402
-    _PREPARED_KEYS,
-    ORACLES,
-    QUERIES,
-)
+from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES  # noqa: E402
 from pygeoapi_ingestor_spark.session import TABLES, get_spark  # noqa: E402
 
 # every catalog query participates; order: cheap scans first
@@ -586,22 +582,19 @@ def main() -> None:
     # in catalog order that cold is artifact-READ for every verify-once
     # consumer after the first (cluster_keep_best pays the build), so
     # min(main_cold, rerun) would silently ratchet on the artifact
-    # path. The verify-once artifacts survive clearCache by design
-    # (plans/queries_llm localCheckpoints) — release them around every
-    # run so each stable cell is genuinely cold.
-    from pygeoapi_ingestor_spark.plans import prepared
-    from pygeoapi_ingestor_spark.plans.queries_llm import (
-        release_shared_artifacts,
+    # path. The corpus artifacts survive clearCache by design
+    # (functions/storage localCheckpoints) — release them around every
+    # run so each stable cell is genuinely cold. The release also drops
+    # every prepared plan (plans/prepared.py): the stable series is the
+    # catalog's cold ratchet, and a memoized plan would silently turn a
+    # key's "cold" cell into an execute-only cell, breaking
+    # round-over-round comparability. The warm series above keeps the
+    # prepared path — both shapes stay visible in the artifact.
+    from pygeoapi_ingestor_spark.functions.storage import (
+        release_corpus_artifacts,
     )
 
-    # prepared plans (plans/prepared.py) are ALSO cleared around every
-    # rep: the stable series is the catalog's cold ratchet, and a
-    # memoized plan would silently turn a prepared key's "cold" cell
-    # into an execute-only cell, breaking round-over-round
-    # comparability. The warm series above keeps the prepared path —
-    # both shapes stay visible in the artifact.
-    release_shared_artifacts()
-    prepared.clear()
+    release_corpus_artifacts()
     for i, key in enumerate(HEADLINE_KEYS):
         if key not in timings:
             continue
@@ -614,8 +607,7 @@ def main() -> None:
             except Exception as exc:  # noqa: BLE001 — artifact survival
                 _note_err(key, "headline_stable", exc)
             spark.catalog.clearCache()
-            release_shared_artifacts()
-            prepared.clear()
+            release_corpus_artifacts()
         if reps:
             headline_stable[key] = min(reps)
         _periodic_gc(i)
@@ -663,11 +655,10 @@ def main() -> None:
         "concurrent_wall_warm": concurrent_warm,
         "streaming": streaming,
         "errors": errors,
-        # warm cells for these keys are execute-only (prepared plans,
-        # plans/__init__._PREPARED_KEYS) while everyone else pays
-        # plan-build+execute — make the split machine-readable so
-        # round-over-round warm comparisons are self-describing
-        "prepared_keys": sorted(_PREPARED_KEYS),
+        # every key's warm cell is execute-only (prepared plans,
+        # plans/prepared.py) — kept machine-readable so round-over-round
+        # warm comparisons against older artifacts are self-describing
+        "prepared_keys": sorted(QUERIES),
         "sf": sf,
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"), "w") as f:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt
 from pygeoapi_ingestor_spark.operators.text import fingerprint
 
 
@@ -584,21 +585,11 @@ def connected_components(
 
     Returns (node, component) with component = min node id reachable.
     """
-    def _free_ckpt(df: DataFrame) -> None:
-        """Release the storage behind a SUPERSEDED localCheckpoint()ed
-        DataFrame. catalog.clearCache() does not cover RDD-level
-        checkpoint blocks, so without this every invocation leaks one
-        generation of blocks for the session lifetime (observed: one
-        surviving MapPartitionsRDD per run, immune to clearCache).
-        Non-blocking: the next iteration's materialization is the
-        natural barrier. Routed through the repo-wide leaf-walking
-        helper — each freed frame here is a single superseded
-        checkpoint generation, never a plan sharing leaves with the
-        survivor (stepped/edges have fresh LogicalRDD roots)."""
-        from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt
-
-        free_local_ckpt(df, blocking=False)
-
+    # Every superseded checkpoint generation is released through
+    # free_local_ckpt (clearCache does not reach RDD-level blocks), non-
+    # blocking: the next iteration's materialization is the natural
+    # barrier. The returned labels read only the final generation, which
+    # the caller owns (a corpus artifact, or a plan it frees itself).
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     edges = (
         edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -639,22 +630,22 @@ def connected_components(
         # stepped is materialized (eager checkpoint + the count above):
         # the previous generation's blocks are now unreachable via any
         # returned lineage — free them instead of leaking per iteration
-        _free_ckpt(prev_gen)
+        free_local_ckpt(prev_gen, blocking=False)
         prev_gen = stepped
         if changed == 0:
             break
     else:
         # exhausted max_iter without a fixpoint: labels would be silently
         # wrong for any component whose min-label path exceeds max_iter hops
-        _free_ckpt(prev_gen)
-        _free_ckpt(edges)
+        free_local_ckpt(prev_gen, blocking=False)
+        free_local_ckpt(edges, blocking=False)
         raise RuntimeError(
             f"connected_components did not converge within {max_iter} "
             "iterations; raise max_iter (component diameter exceeds it)"
         )
     # the returned labels read only the FINAL checkpoint; the edge table
     # is no longer reachable from it
-    _free_ckpt(edges)
+    free_local_ckpt(edges, blocking=False)
     return labels
 
 

@@ -304,61 +304,31 @@ _STAMP_ORDER = [
 # bench/service call, warm or not. Measured on r13 HEAD at sf0.1: 98.6 s
 # of build time across one sweep of the 243-key catalog (top keys
 # 1.5-3.5 s each), repeated by every warm/noop/concurrent pass. The
-# catalog therefore serves every ELIGIBLE key as a PREPARED STATEMENT —
-# the DataFrame is built once per (session, corpus) and re-executed;
-# nothing is cached by the registry, every execution rescans the
-# parquet inputs (prepared.py module docstring).
-#
-# Eligibility is the EXCLUSION list below: keys whose plan embeds a
-# released-on-finalize localCheckpoint artifact (the verify-once dedup
-# graph/fixpoint, the shared ANN ground truth, the isoband CCL pass)
-# must re-fetch through their registry accessors per call — a memoized
-# plan over a freed checkpoint dangles (no lineage to recompute). The
-# list was generated by walking every catalog key's ANALYZED plan for
-# checkpoint-backed LogicalRDD leaves at BOTH gate SFs (the exact walk
-# prepared.py's runtime guard enforces), and the guard still rejects
-# any future mis-listing at registration — _as_prepared then falls back
-# to per-call builds, loudly, instead of serving a dangling plan.
-_ARTIFACT_KEYS = {
-    "ann_recall_eval",
-    "cluster_keep_best",
-    "curation_pipeline_e2e",
-    "dedup_components",
-    "dedup_lsh_verified",
-    "doc_graph_pagerank",
-    "dsir_importance_weights",
-    "dup_cluster_quality",
-    "dup_cluster_size_hist",
-    "isoband_regions",
-    "ivf_probe_sweep",
-    "ivf_recall_eval",
-    "matryoshka_recall_eval",
-    "pq_recall_eval",
-    "quality_dup_interaction",
-    "segment_dedup",
-}
-
-_PREPARED_KEYS = [k for k in _ALL if k not in _ARTIFACT_KEYS]
+# catalog therefore serves every key as a PREPARED STATEMENT — the
+# DataFrame is built once per (session, corpus) and re-executed; nothing
+# is cached by the registry, every execution rescans the parquet inputs.
+# Keys over corpus artifacts (the verify-once dedup graph, the shared ANN
+# ground truth, the isoband raster, the words checkpoint) are prepared
+# too: their checkpoints are registry-owned (functions/storage), and
+# every artifact release drops the plans.
 
 
-def _as_prepared(name, fn, artifact_bound=False):
+def _as_prepared(name, fn):
     from pygeoapi_ingestor_spark.plans.prepared import prepared_plan
 
-    def wrapper(spark, sf_dir, _n=name, _f=fn, _ab=artifact_bound):
+    def wrapper(spark, sf_dir, _n=name, _f=fn):
         try:
-            return prepared_plan(
-                _n, spark, sf_dir, lambda: _f(spark, sf_dir),
-                artifact_bound=_ab,
-            )
+            return prepared_plan(_n, spark, sf_dir, lambda: _f(spark, sf_dir))
         except ValueError:
-            # runtime guard: the plan embeds a checkpoint-backed leaf
-            # (an artifact key missing from _ARTIFACT_KEYS). Serve the
-            # per-call build — correct, just unmemoized — and say so.
+            # runtime guard: the plan embeds a checkpoint the artifact
+            # registry does not own. Serve the per-call build — correct,
+            # just unmemoized — and say so.
             import warnings
 
             warnings.warn(
-                f"prepared-plan guard rejected {name!r}; add it to "
-                "plans._ARTIFACT_KEYS (serving per-call builds)",
+                f"prepared-plan guard rejected {name!r}; build its "
+                "checkpoint through functions.storage.corpus_artifact "
+                "(serving per-call builds)",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -369,19 +339,8 @@ def _as_prepared(name, fn, artifact_bound=False):
     return wrapper
 
 
-for _k in _PREPARED_KEYS:
+for _k in _ALL:
     _ALL[_k] = _as_prepared(_k, _ALL[_k])
-
-# The artifact keys are prepared too, but EPOCH-BOUND: their memo key
-# includes the artifact epoch (prepared.py), so any checkpoint free —
-# finalize_job, release_shared_artifacts, corpus-switch eviction —
-# invalidates the memo and the next call rebuilds through the artifact
-# accessors. Same per-call semantics as before whenever artifacts
-# change; the repeated py4j/Catalyst build cost (0.6-2.3 s/key measured
-# at sf0.1) is only paid when the artifact generation actually turns
-# over.
-for _k in _ARTIFACT_KEYS:
-    _ALL[_k] = _as_prepared(_k, _ALL[_k], artifact_bound=True)
 
 # any key not in the generated list (added after generation) stamps first
 _rest = [k for k in _ALL if k not in set(_STAMP_ORDER)]

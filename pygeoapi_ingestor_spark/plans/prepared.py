@@ -13,24 +13,26 @@ their own build (rfm_segments' per-customer table) keep exactly the
 semantics they had: ``catalog.clearCache()`` drops the blocks and the
 next execution re-materializes them.
 
-ELIGIBILITY — a query may register here ONLY if its plan:
-- embeds NO released-on-finalize artifact (shared_verified_pairs /
-  shared_dup_components / the words checkpoint): a memoized plan over a
-  freed localCheckpoint would dangle after ``finalize_job`` (those keys
-  re-fetch through their registry accessors per call instead);
-- tolerates a frozen file listing: the InMemoryFileIndex snapshot is
-  taken at build time, which is correct for the immutable per-corpus
-  test/bench datasets and for production tables addressed by new paths
-  per snapshot. Mutating files under an already-prepared path is out of
-  contract (same rule as any cached Spark table).
+ELIGIBILITY — one rule: every checkpoint-backed leaf of a registered
+plan must be owned by the corpus-artifact registry
+(functions/storage.owned_rdd_ids), and a release of that registry drops
+every prepared plan. Only a registry release frees an owned
+checkpoint, so a memoized plan never reads freed storage; a plan over
+any other checkpoint is rejected at registration, because a
+localCheckpoint has no lineage to recompute from once its owner frees
+it. Driver-local ``createDataFrame`` leaves (trained literals,
+interpolation tables) are not checkpoints and stay eligible. The file
+listing is frozen at build time (InMemoryFileIndex snapshot): correct
+for immutable per-corpus datasets and tables addressed by new paths per
+snapshot; mutating files under an already-prepared path is out of
+contract (same rule as any cached Spark table).
 
-Eviction: one corpus per registry entry name — switching sf_dir drops
-the superseded plan. The registry object itself is driver-side, but a
-build may have persisted intermediates (rfm_segments' per-customer
-table, corpus_token_stats' gram table): those CacheManager entries
-outlive the plan object, so eviction also clears the session cache —
-correct at a corpus switch, where every cached block belongs to the
-superseded corpus anyway (ADVICE r11).
+Eviction: the registry holds one (session, corpus) generation. A build
+may have persisted intermediates (rfm_segments' per-customer table,
+corpus_token_stats' gram table) whose CacheManager entries outlive the
+plan object, so a switch also clears the session cache — correct at a
+corpus switch, where every cached block belongs to the superseded
+corpus anyway (ADVICE r11).
 """
 
 from __future__ import annotations
@@ -39,27 +41,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pygeoapi_ingestor_spark.functions.storage import logical_rdds, owned_rdd_ids
+
 _PLANS: dict = {}
-
-# Artifact epoch (r13): a monotone counter bumped by EVERY localCheckpoint
-# release in the repo (functions/storage.free_local_ckpt — the single
-# choke point all artifact eviction routes through). Plans registered
-# with ``artifact_bound=True`` embed checkpoint-backed leaves on
-# purpose (the verify-once dedup graph, the shared ANN ground truth);
-# their memo key includes the epoch observed at registration, so the
-# moment ANY checkpoint is freed the memo misses and the next call
-# re-builds through the artifact accessors — a memoized plan can never
-# outlive the storage it reads. Over-invalidation (a free of an
-# unrelated checkpoint) costs one rebuild, never correctness.
-_EPOCH = 0
-
-
-def bump_artifact_epoch() -> int:
-    """Called by functions.storage.free_local_ckpt after releasing
-    checkpoint blocks; invalidates every artifact-bound prepared plan."""
-    global _EPOCH
-    _EPOCH += 1
-    return _EPOCH
 
 
 def prepared_plan(
@@ -67,90 +51,42 @@ def prepared_plan(
     spark: SparkSession,
     sf_dir: str,
     build: Callable[[], DataFrame],
-    artifact_bound: bool = False,
 ) -> DataFrame:
     """Return the memoized DataFrame for (name, session, corpus),
-    building it via ``build()`` on first use. See module docstring for
-    the eligibility rules. ``artifact_bound=True`` admits plans over
-    released-on-finalize checkpoint artifacts: the memo is additionally
-    keyed on the artifact epoch (invalidated by every checkpoint free),
-    and the checkpoint-leaf guard is skipped — for these plans the
-    embedded checkpoint is the POINT, and the epoch key guarantees the
-    memo never survives its storage."""
+    building it via ``build()`` on first use. Raises ValueError for a
+    plan over a checkpoint the artifact registry does not own (see the
+    module docstring)."""
     app = spark.sparkContext.applicationId
-    key = (name, app, sf_dir, _EPOCH if artifact_bound else None)
+    key = (name, app, sf_dir)
     hit = _PLANS.get(key)
     if hit is not None:
         return hit
     # Corpus/session switch: a NEW (session, corpus) generation evicts
     # EVERY entry of any other generation at once and clears the session
-    # cache ONCE (ADVICE r12: the previous per-name eviction called
-    # clearCache per switched name, so each later eviction dropped the
-    # CacheManager registrations of plans rebuilt moments earlier —
-    # leaving those memoized plans executing UNCACHED for the registry's
-    # lifetime, since an unpersisted InMemoryRelation recomputes without
-    # re-storing). Batch eviction means plans rebuilt after the switch
-    # keep their internal persists until the next switch. Stale-EPOCH
-    # entries of the same (session, corpus) are dropped without a
-    # clearCache — their checkpoint storage is already gone and the
-    # session cache still belongs to this corpus.
-    dead_epoch = [
-        k for k in _PLANS
-        if (k[1], k[2]) == (app, sf_dir)
-        and k[3] is not None
-        and k[3] != _EPOCH
-    ]
-    for k in dead_epoch:
+    # cache ONCE (ADVICE r12: per-name eviction called clearCache per
+    # switched name, so later evictions dropped the CacheManager
+    # registrations of plans rebuilt moments earlier — leaving them
+    # executing UNCACHED, since an unpersisted InMemoryRelation
+    # recomputes without re-storing).
+    stale = [k for k in _PLANS if k[1:] != (app, sf_dir)]
+    for k in stale:
         _PLANS.pop(k)
-    stale = [k for k in _PLANS if (k[1], k[2]) != (app, sf_dir)]
-    if stale:
-        for k in stale:
-            _PLANS.pop(k)
-        if any(k[1] == app for k in stale):
-            # only this session's cache holds the superseded blocks; a
-            # fresh session has nothing of ours to free
-            try:
-                spark.catalog.clearCache()
-            except Exception:  # session already stopped — nothing to free
-                pass
+    if any(k[1] == app for k in stale):
+        # only this session's cache holds the superseded blocks; a
+        # fresh session has nothing of ours to free
+        spark.catalog.clearCache()
     df = build()
-    if artifact_bound:
-        # epoch may have advanced DURING the build (artifact accessors
-        # free superseded corpora's checkpoints while building): key the
-        # memo on the epoch the finished plan actually reads, so the
-        # frees the build itself performed don't dangle-invalidate it
-        key = (name, app, sf_dir, _EPOCH)
-        _PLANS[key] = df
-        return df
-    # Runtime enforcement of the no-checkpoint eligibility rule (ADVICE
-    # r11): a memoized plan over a (local)checkpoint would dangle the
-    # moment finalize_job releases those blocks — and a localCheckpoint
-    # has no lineage to recompute from, so the failure is silent
-    # wrong-results/IOException later, not here. Reject at registration
-    # instead of trusting the review-time allowlist comment. LogicalRDD
-    # leaves from driver-local ``createDataFrame`` (trained literals,
-    # interpolation tables) are fine: their data is serialized closure
-    # state, not releasable storage — only CHECKPOINT-backed leaves are
-    # the hazard, so the walk tests the leaf RDD, not the node class.
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.length()):
-            leaf = leaves.apply(i)
-            if "LogicalRDD" not in leaf.getClass().getSimpleName():
-                continue
-            r = leaf.rdd()
-            if r.isLocallyCheckpointed() or r.isCheckpointed():
-                raise ValueError(
-                    f"prepared_plan({name!r}): analyzed plan embeds a "
-                    "checkpoint-backed LogicalRDD leaf — ineligible for "
-                    "the prepared registry (would dangle after "
-                    "finalize_job); serve it through its artifact "
-                    "accessor instead (see module docstring)"
-                )
-    except ValueError:
-        raise
-    except Exception:
-        pass  # Spark Connect: no JVM handle; allowlist governs
+    for r in logical_rdds(df):
+        if (
+            r.isLocallyCheckpointed() or r.isCheckpointed()
+        ) and r.id() not in owned_rdd_ids():
+            raise ValueError(
+                f"prepared_plan({name!r}): analyzed plan embeds a "
+                "checkpoint-backed LogicalRDD leaf the artifact registry "
+                "does not own — ineligible (it would dangle once its "
+                "owner frees it); build the checkpoint through "
+                "functions.storage.corpus_artifact"
+            )
     _PLANS[key] = df
     return df
 

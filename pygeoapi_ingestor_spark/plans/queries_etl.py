@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.functions.storage import corpus_artifact, free_local_ckpt
 from pygeoapi_ingestor_spark.operators import (
     correction,
     curves,
@@ -1634,49 +1635,43 @@ def q_zonal_stats_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated the key's 17.6x-DuckDB constant factor (VERDICT r10 item
     1a). Facts pay only a broadcast join on the derived cell.
 
-    Prepared-plan (plans/prepared.py): ~90% of the r10 warm cost was
-    Catalyst re-planning of an identical plan; the memoized plan
-    rescans the parquet on every execution (no data cached) and embeds
-    no released-on-finalize artifact."""
+    ~90% of the r10 warm cost was Catalyst re-planning of an identical
+    plan; the catalog serves this key as a prepared plan
+    (plans/prepared.py), which rescans the parquet on every execution
+    (no data cached)."""
+    from pygeoapi_ingestor_spark.operators import spatial
 
-    def _build() -> DataFrame:
-        from pygeoapi_ingestor_spark.operators import spatial
-
-        ev = _events(spark, sf_dir)
-        cells = spark.range(100).select(
-            F.col("id").cast("int").alias("_cell"),
-            (F.lit(-10.0) + (F.col("id") % 10) * F.lit(2.5)).alias("lon"),
-            (F.lit(35.0) + (F.col("id") / 10).cast("int") * F.lit(1.5)).alias("lat"),
-        )
-        edges = spark.createDataFrame(
-            spatial.polygon_edges_rows(ZONAL_POLYGONS),
-            "zone string, x1 double, y1 double, x2 double, y2 double",
-        )
-        memb = spatial.polygon_membership(cells, edges, key_cols=["_cell"])
-        # values are 2-decimal-quantized sensor readings -> the one-pass
-        # value-compressed histogram replaces the 3-scan drill-down
-        out = zonal.zonal_stats_hist(
-            ev.withColumn("_cell", (F.col("user_id") % 100).cast("int")),
-            memb.select("_cell", "zone"),
-            join_key="_cell",
-            zone_col="zone",
-            bucket_col=temporal.wall_trunc("week", F.col("ts")).alias("bucket"),
-            value_col="value",
-            percentiles=(0.05, 0.5, 0.95),
-        )
-        return out.select(
-            "zone",
-            "bucket",
-            F.round("v_min", 6).alias("v_min"),
-            F.round("v_max", 6).alias("v_max"),
-            F.round("p05", 6).alias("p05"),
-            F.round("p50", 6).alias("p50"),
-            F.round("p95", 6).alias("p95"),
-        )
-
-    from pygeoapi_ingestor_spark.plans.prepared import prepared_plan
-
-    return prepared_plan("zonal_stats_polygon", spark, sf_dir, _build)
+    ev = _events(spark, sf_dir)
+    cells = spark.range(100).select(
+        F.col("id").cast("int").alias("_cell"),
+        (F.lit(-10.0) + (F.col("id") % 10) * F.lit(2.5)).alias("lon"),
+        (F.lit(35.0) + (F.col("id") / 10).cast("int") * F.lit(1.5)).alias("lat"),
+    )
+    edges = spark.createDataFrame(
+        spatial.polygon_edges_rows(ZONAL_POLYGONS),
+        "zone string, x1 double, y1 double, x2 double, y2 double",
+    )
+    memb = spatial.polygon_membership(cells, edges, key_cols=["_cell"])
+    # values are 2-decimal-quantized sensor readings -> the one-pass
+    # value-compressed histogram replaces the 3-scan drill-down
+    out = zonal.zonal_stats_hist(
+        ev.withColumn("_cell", (F.col("user_id") % 100).cast("int")),
+        memb.select("_cell", "zone"),
+        join_key="_cell",
+        zone_col="zone",
+        bucket_col=temporal.wall_trunc("week", F.col("ts")).alias("bucket"),
+        value_col="value",
+        percentiles=(0.05, 0.5, 0.95),
+    )
+    return out.select(
+        "zone",
+        "bucket",
+        F.round("v_min", 6).alias("v_min"),
+        F.round("v_max", 6).alias("v_max"),
+        F.round("p05", 6).alias("p05"),
+        F.round("p50", 6).alias("p50"),
+        F.round("p95", 6).alias("p95"),
+    )
 
 
 ETL_QUERIES["zonal_stats_polygon"] = q_zonal_stats_polygon
@@ -4711,33 +4706,16 @@ ISO_BITS = 6  # 64x64 grid
 
 def _iso_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Region-labeled isoband raster (x, y, band, n_pts, region) as a
-    verify-once shared artifact: quantize+aggregate the facts into the
-    cell raster, classify bands, dissolve via the two-pass CCL, and
-    ``localCheckpoint`` the labeled result once per (session, corpus).
-    Lives in the queries_llm artifact registry (same eviction/release
-    contract as shared_dup_components / the words checkpoint: re-fetch
-    per use, corpus switch evicts, finalize_job releases). The
-    dissolve's interior fixpoint checkpoints are freed as soon as this
-    artifact materializes — only the labeled raster's blocks stay."""
-    from pygeoapi_ingestor_spark.operators import spatial
-    from pygeoapi_ingestor_spark.plans import queries_llm as qllm
-
-    key = ("iso", spark.sparkContext.applicationId, sf_dir)
-    hit = qllm._VP_ARTIFACTS.get(key)
-    if hit is not None:
-        return hit
-    with qllm._ART_LOCK:  # double-checked (ADVICE r12): one build ever
-        hit = qllm._VP_ARTIFACTS.get(key)
-        if hit is not None:
-            return hit
-        return _build_iso_labeled(spark, sf_dir, key, qllm)
+    corpus artifact (functions/storage): quantize+aggregate the facts
+    into the cell raster, classify bands, dissolve via the two-pass CCL,
+    and ``localCheckpoint`` the labeled result once per (session,
+    corpus)."""
+    return corpus_artifact("iso", spark, sf_dir, _build_iso_labeled)
 
 
-def _build_iso_labeled(spark, sf_dir, key, qllm) -> DataFrame:
+def _build_iso_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygeoapi_ingestor_spark.operators import spatial
 
-    for k in [k for k in qllm._VP_ARTIFACTS if k[1:] != key[1:]]:
-        qllm._free_local_ckpt(qllm._VP_ARTIFACTS.pop(k))
     scale = (1 << ISO_BITS) - 1
     ev = _events(spark, sf_dir)
     pts = ev.select(
@@ -4766,8 +4744,7 @@ def _build_iso_labeled(spark, sf_dir, key, qllm) -> DataFrame:
     ckpt = regions.localCheckpoint()  # eager: fixpoint runs once here
     # the dissolve's comp checkpoints are now dead weight — free them
     # (leaf-walk of the superseded lazy plan), keep only the artifact
-    qllm._free_local_ckpt(regions)
-    qllm._VP_ARTIFACTS[key] = ckpt
+    free_local_ckpt(regions)
     return ckpt
 
 

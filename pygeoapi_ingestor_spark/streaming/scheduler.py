@@ -15,7 +15,10 @@ The process registry maps process names to callables
 from __future__ import annotations
 
 import datetime
+import time
 from dataclasses import dataclass, field
+
+from pygeoapi_ingestor_spark.functions.storage import release_corpus_artifacts
 
 
 @dataclass
@@ -124,11 +127,6 @@ def run_process(spark, registry: dict, job: ScheduledProcess):
     return fn(spark, **job.inputs)
 
 
-# per-application ids diagnosed as caller-retained by a prior
-# finalize_job drain — see the drain loop below
-_FOREIGN_RETAINED: dict = {}
-
-
 def finalize_job(spark) -> None:
     """Release per-job engine state after a scheduled process finishes —
     the SERVICE-PATH half of the repo's cache contract.
@@ -139,97 +137,32 @@ def finalize_job(spark) -> None:
     unpersists them because the operator cannot know when its caller is
     done. bench.py clears between keys; a long-lived scheduler MUST do
     the same between jobs or MEMORY_AND_DISK blocks accumulate for the
-    session lifetime. Also nudges a driver GC: Spark's ContextCleaner
+    session lifetime. The corpus artifacts (functions/storage) survive
+    ``clearCache`` by design and are released here too, together with
+    every prepared plan. Also nudges a driver GC: Spark's ContextCleaner
     frees broadcast/shuffle state on driver GC, and the default
     periodicGC interval outlives many scheduler ticks (the session
     factory lowers it, but an externally-built session may not).
+
+    "Storage is free when finalize returns" is the scheduler contract,
+    so the released blocks are drained with a bounded wait instead of
+    racing the asynchronous unpersist and the cleaner. The wait covers
+    only blocks that are still stored but no longer persistent: an RDD a
+    caller still holds stays in ``getPersistentRDDs`` and is not ours to
+    free, so it never stalls a tick.
     """
-    # snapshot the job's storage footprint BEFORE releasing anything:
-    # the drain below waits only for ids that were present at entry (or
-    # that our own artifact release just freed) — NOT for globally-empty
-    # storage, and it bails after a no-progress beat, so a caller's own
-    # deliberately-retained RDD persist on the shared session no longer
-    # stalls every finalize_job for the full timeout (ADVICE r10)
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        before = {info.id() for info in jsc.getRDDStorageInfo()}
-    except Exception:
-        jsc, before = None, set()
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    before = {info.id() for info in jsc.getRDDStorageInfo()}
     spark.catalog.clearCache()
-    # prepared plans (plans/prepared.py) rebuild on demand, and their
-    # internal persists were just dropped by clearCache — clearing the
-    # registry here makes the no-dangling-plan property structural
-    # instead of allowlist-enforced (ADVICE r11): even a mis-allowlisted
-    # checkpoint-bearing plan cannot be served across a finalize
-    try:
-        from pygeoapi_ingestor_spark.plans import prepared
-
-        prepared.clear()
-    except Exception:
-        pass
-    # the verify-once dedup artifacts are RDD-level localCheckpoints and
-    # deliberately survive clearCache (plans/queries_llm) — a finished
-    # job must free them explicitly or they pin storage across ticks
-    released: set = set()
-    try:
-        from pygeoapi_ingestor_spark.plans.queries_llm import (
-            release_shared_artifacts,
-        )
-
-        released = set(release_shared_artifacts())
-    except Exception:
-        pass
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
-    # ContextCleaner frees ABANDONED rdd/broadcast blocks asynchronously
-    # after the driver GC above; "storage is free when finalize returns"
-    # is the scheduler contract, so drain with a bounded wait instead of
-    # racing the cleaner. Targets = entry footprint + just-released ids;
-    # a target that stops shrinking for ~3s is foreign retained storage
-    # (not ours to free) — log it and return instead of burning the
-    # remaining budget on every tick
-    if jsc is not None:
-        try:
-            import logging as _logging
-            import time as _time
-
-            # ids a PRIOR finalize already diagnosed as caller-retained
-            # never drain (the caller owns them) — excluding them keeps
-            # steady-state ticks from re-paying the 3 s no-progress wait
-            # per finalize (ADVICE r11). Keyed by application: RDD ids
-            # are monotonic within a context, never reused after free.
-            app = spark.sparkContext.applicationId
-            foreign = _FOREIGN_RETAINED.setdefault(app, set())
-            if len(_FOREIGN_RETAINED) > 4:  # dead sessions' entries
-                for stale in [k for k in _FOREIGN_RETAINED if k != app]:
-                    _FOREIGN_RETAINED.pop(stale)
-            targets = (before | released) - foreign
-            deadline = _time.monotonic() + 15.0
-            last_n, last_change = None, _time.monotonic()
-            while _time.monotonic() < deadline:
-                pending = {
-                    info.id() for info in jsc.getRDDStorageInfo()
-                } & targets
-                if not pending:
-                    break
-                n = len(pending)
-                if last_n is None or n < last_n:
-                    last_n, last_change = n, _time.monotonic()
-                elif _time.monotonic() - last_change > 3.0:
-                    foreign |= pending
-                    _logging.getLogger(__name__).warning(
-                        "finalize_job: %d storage block(s) from the job "
-                        "window remain after release and stopped "
-                        "draining (rdd ids %s) — retained by the "
-                        "caller, not freed here; skipped on future "
-                        "ticks", n, sorted(pending),
-                    )
-                    break
-                _time.sleep(0.2)
-        except Exception:
-            pass
+    targets = before | set(release_corpus_artifacts())
+    sc._jvm.System.gc()
+    deadline = time.monotonic() + 15.0
+    while time.monotonic() < deadline:
+        stored = {info.id() for info in jsc.getRDDStorageInfo()} & targets
+        if not stored - {int(k) for k in sc._jsc.getPersistentRDDs()}:
+            break
+        time.sleep(0.2)
 
 
 def backfill(

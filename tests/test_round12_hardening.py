@@ -1,14 +1,14 @@
 """Round-12 hardening contracts.
 
 1. The prepared-plan registry's runtime guard (plans/prepared.py):
-   checkpoint-backed plans are REJECTED at registration (a memoized
-   plan over a localCheckpoint dangles once those blocks are freed —
-   the ADVICE r11 failure mode), while driver-local createDataFrame
-   LogicalRDD leaves (trained literals, interpolation tables) stay
-   eligible.
+   plans over checkpoints the artifact registry does not own are
+   REJECTED at registration (a memoized plan over a localCheckpoint
+   dangles once those blocks are freed — the ADVICE r11 failure mode),
+   while driver-local createDataFrame LogicalRDD leaves (trained
+   literals, interpolation tables) stay eligible.
 2. finalize_job clears the prepared registry (structural no-dangling
-   instead of allowlist-by-comment) and skips caller-retained foreign
-   storage it already diagnosed on a prior tick.
+   instead of allowlist-by-comment) and never waits on storage a
+   caller still holds.
 3. Corpus-switch eviction clears the session cache so a superseded
    build's INTERNAL persists (rfm's per-customer table) don't outlive
    the plan object.
@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pytest
 
-from pygeoapi_ingestor_spark.plans import _PREPARED_KEYS, prepared
+from pygeoapi_ingestor_spark.plans import prepared
 
 
 def test_guard_rejects_checkpoint_backed_plan(spark, sf_dir):
@@ -48,11 +48,23 @@ def test_guard_allows_driver_local_logicalrdd(spark, sf_dir):
     prepared.clear()
 
 
-def test_isoband_not_prepared():
-    """isoband_regions embeds a checkpoint-backed CCL fixpoint — the
-    r12 guard makes it ineligible; pin the allowlist exclusion so a
-    future re-add trips this test instead of the runtime guard."""
-    assert "isoband_regions" not in _PREPARED_KEYS
+def test_isoband_prepared_plan_dropped_by_release(spark, sf_dir):
+    """isoband_regions embeds the checkpoint-backed CCL raster. Its
+    prepared plan is admitted only because the artifact registry owns
+    that checkpoint, and a release must drop the plan with the blocks
+    so the next call rebuilds over a fresh artifact."""
+    from pygeoapi_ingestor_spark.functions.storage import (
+        release_corpus_artifacts,
+    )
+    from pygeoapi_ingestor_spark.plans import QUERIES
+
+    key = ("isoband_regions", spark.sparkContext.applicationId, sf_dir)
+    want = sorted(QUERIES["isoband_regions"](spark, sf_dir).collect())
+    assert key in prepared._PLANS
+    release_corpus_artifacts()
+    assert key not in prepared._PLANS, "a release must drop the plan"
+    assert sorted(QUERIES["isoband_regions"](spark, sf_dir).collect()) == want
+    release_corpus_artifacts()
 
 
 def test_finalize_clears_prepared_registry(spark, sf_dir):
@@ -102,34 +114,27 @@ def test_corpus_switch_eviction_clears_cache(spark, sf_dir, tmp_path):
 
 
 def test_finalize_skips_previously_diagnosed_foreign_storage(spark, sf_dir):
-    """Once a tick diagnoses caller-retained blocks, later ticks must
-    not re-pay the ~3 s no-progress wait for the same ids (ADVICE
-    r11)."""
+    """A checkpoint the caller still holds stays persistent, so
+    finalize_job skips it by construction: even the FIRST tick after
+    the caller retains it returns promptly (the old no-progress
+    heuristic paid ~3 s on that tick, ADVICE r11), and the checkpoint
+    stays usable."""
     import time
 
+    from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt
     from pygeoapi_ingestor_spark.streaming import scheduler
 
     foreign = (
         spark.read.parquet(f"{sf_dir}/region.parquet")
         .localCheckpoint(eager=True)
     )
-    app = spark.sparkContext.applicationId
-    scheduler._FOREIGN_RETAINED.pop(app, None)
-    scheduler.finalize_job(spark)  # first tick: diagnoses + remembers
-    assert scheduler._FOREIGN_RETAINED.get(app), (
-        "first tick must record the caller-retained ids"
-    )
+    n = foreign.count()
     t0 = time.monotonic()
-    scheduler.finalize_job(spark)  # steady-state tick
+    scheduler.finalize_job(spark)
     elapsed = time.monotonic() - t0
-    assert elapsed < 2.5, (
-        f"steady-state finalize re-paid the drain wait: {elapsed:.1f}s"
-    )
-    assert foreign.count() > 0  # still usable
-    from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt
-
+    assert elapsed < 2.5, f"first finalize waited on caller storage: {elapsed:.1f}s"
+    assert n > 0 and foreign.count() == n  # still usable
     free_local_ckpt(foreign, blocking=True)
-    scheduler._FOREIGN_RETAINED.pop(app, None)
 
 
 def test_session_pins_thread_stack(spark):

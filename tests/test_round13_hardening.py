@@ -21,7 +21,10 @@
 
 from __future__ import annotations
 
+import sys
 import threading
+
+import pytest
 
 from pygeoapi_ingestor_spark.plans import prepared
 
@@ -58,41 +61,67 @@ def test_prepared_no_clear_without_stale_entries(spark, sf_dir, monkeypatch):
     prepared.clear()
 
 
-def test_shared_artifact_concurrent_build_runs_once(spark, sf_dir, monkeypatch):
+def _accessor(kind):
+    from pygeoapi_ingestor_spark.plans import queries_curation as qcur
+    from pygeoapi_ingestor_spark.plans import queries_etl as qetl
     from pygeoapi_ingestor_spark.plans import queries_llm as qllm
 
-    qllm.release_shared_artifacts()
-    builds: list[int] = []
-    orig = qllm._build_ann_gt
+    return {
+        "vp": qllm.shared_verified_pairs,
+        "cc": qllm.shared_dup_components,
+        "km": qllm.shared_kmeans_cents,
+        "rc": qllm.shared_rocchio_cents,
+        "anngt": qllm.shared_ann_gt,
+        "iso": qetl._iso_labeled,
+        "words": qcur._words_df,
+    }[kind]
 
-    def counting(spark_, sf, key):
-        builds.append(1)
-        return orig(spark_, sf, key)
 
-    monkeypatch.setattr(qllm, "_build_ann_gt", counting)
+@pytest.mark.parametrize("kind", ["vp", "cc", "km", "rc", "anngt", "iso", "words"])
+def test_shared_artifact_concurrent_build_runs_once(spark, sf_dir, kind):
+    """Concurrent first calls run ONE build: every caller gets the same
+    artifact object, and after one release no checkpoint the build made
+    stays persisted (a second, racing build would leak its blocks)."""
+    from pygeoapi_ingestor_spark.functions.storage import release_corpus_artifacts
+
+    def checkpoints():
+        return {
+            int(i) for i, r in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if r.rdd().isLocallyCheckpointed()
+        }
+
+    release_corpus_artifacts()
+    before = checkpoints()
+    fetch = _accessor(kind)
     results: list = []
     threads = [
-        threading.Thread(
-            target=lambda: results.append(qllm.shared_ann_gt(spark, sf_dir))
-        )
-        for _ in range(6)
+        threading.Thread(target=lambda: results.append(fetch(spark, sf_dir)))
+        for _ in range(4)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(builds) == 1, "concurrent first calls must build ONCE"
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the check-then-build
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    release_corpus_artifacts()
+    assert not any(t.is_alive() for t in threads)
+    assert len(results) == 4
     assert len({id(r) for r in results}) == 1, (
         "every caller must receive the same artifact object"
     )
-    qllm.release_shared_artifacts()
+    assert not checkpoints() - before, "a build's checkpoint outlived the release"
 
 
 def test_kmeans_cents_concurrent_build_runs_once(spark, sf_dir, monkeypatch):
+    from pygeoapi_ingestor_spark.functions.storage import release_corpus_artifacts
     from pygeoapi_ingestor_spark.operators import similarity
     from pygeoapi_ingestor_spark.plans import queries_llm as qllm
 
-    qllm.release_shared_artifacts()
+    release_corpus_artifacts()
     fits: list[int] = []
     orig = similarity.kmeans_fit_int8
 
@@ -114,7 +143,7 @@ def test_kmeans_cents_concurrent_build_runs_once(spark, sf_dir, monkeypatch):
         t.join()
     assert len(fits) == 1
     assert all(r == results[0] for r in results)
-    qllm.release_shared_artifacts()
+    release_corpus_artifacts()
 
 
 def test_extra_java_options_merge_keeps_xss_pin():
@@ -263,66 +292,70 @@ def test_power_iteration_gram_matches_per_iteration_twin(spark):
 
 
 # ---------------------------------------------------------------------------
-# r13 optimization round: catalog-wide prepared statements + the
-# artifact-epoch contract for the checkpoint-embedding keys.
+# Catalog-wide prepared statements over registry-owned corpus artifacts.
 # ---------------------------------------------------------------------------
 
 
-def test_artifact_keys_excluded_from_plain_prepared_list():
-    """Every checkpoint-embedding key must be in _ARTIFACT_KEYS (epoch-
-    bound memoization), never in the plain allowlist: a plain memoized
-    plan over a freed localCheckpoint dangles with no lineage to
-    recompute from."""
-    from pygeoapi_ingestor_spark.plans import _ARTIFACT_KEYS, _PREPARED_KEYS
+def test_owned_artifact_plan_dropped_by_release(spark, sf_dir):
+    """A plan over a registry-owned checkpoint memo-hits until the
+    registry releases it; the release drops the plan with the blocks,
+    so it can never outlive the storage it reads. A checkpoint free
+    outside the registry (a sink write, a connected_components round)
+    no longer evicts it."""
+    from pygeoapi_ingestor_spark.functions.storage import (
+        corpus_artifact,
+        free_local_ckpt,
+        release_corpus_artifacts,
+    )
 
-    assert not (_ARTIFACT_KEYS & set(_PREPARED_KEYS))
-    # the full catalog is covered one way or the other
-    from pygeoapi_ingestor_spark.plans import QUERIES
-
-    assert _ARTIFACT_KEYS <= set(QUERIES)
-
-
-def test_artifact_bound_plan_invalidated_by_checkpoint_free(spark, sf_dir):
-    """artifact_bound memo key includes the artifact epoch: a memo hit
-    before any free, a rebuild after free_local_ckpt bumps the epoch —
-    the memoized plan can never outlive the storage it reads."""
-    from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt
-
-    prepared.clear()
+    release_corpus_artifacts()
     builds: list[int] = []
 
     def build():
         builds.append(1)
-        return spark.range(4).localCheckpoint()
+        art = corpus_artifact(
+            "t_ab1", spark, sf_dir, lambda s, _: s.range(4).localCheckpoint()
+        )
+        return art.select("id")
 
-    df1 = prepared.prepared_plan("ab1", spark, sf_dir, build, artifact_bound=True)
-    df2 = prepared.prepared_plan("ab1", spark, sf_dir, build, artifact_bound=True)
-    assert df1 is df2 and builds == [1], "same epoch must memo-hit"
-    free_local_ckpt(df1)  # bumps the artifact epoch
-    prepared.prepared_plan("ab1", spark, sf_dir, build, artifact_bound=True)
-    assert builds == [1, 1], "a checkpoint free must force a rebuild"
-    # the stale-epoch entry is purged, not leaked
-    assert len([k for k in prepared._PLANS if k[0] == "ab1"]) == 1
-    prepared.clear()
+    df1 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    free_local_ckpt(spark.range(2).localCheckpoint())  # unrelated free
+    df2 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    assert df1 is df2 and builds == [1], "an unrelated free must not evict"
+    release_corpus_artifacts()
+    assert not prepared._PLANS, "a release must drop every prepared plan"
+    df3 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    assert builds == [1, 1] and df3.count() == 4
+    release_corpus_artifacts()
 
 
-def test_artifact_bound_skips_checkpoint_guard(spark, sf_dir):
-    """The guard rejects checkpoint leaves for PLAIN registrations only;
-    artifact_bound admits them (the checkpoint is the point — the epoch
-    key is what guarantees safety)."""
-    import pytest
+def test_guard_admits_only_registry_owned_checkpoints(spark, sf_dir):
+    """The guard admits a checkpoint leaf only while the artifact
+    registry owns it — a plan over any other checkpoint is rejected
+    (the removed artifact_bound flag used to admit it unchecked), and
+    so is a plan over an artifact the registry has already released."""
+    from pygeoapi_ingestor_spark.functions.storage import (
+        corpus_artifact,
+        release_corpus_artifacts,
+    )
 
-    prepared.clear()
+    release_corpus_artifacts()
     with pytest.raises(ValueError, match="checkpoint-backed"):
         prepared.prepared_plan(
             "plain_ck", spark, sf_dir, lambda: spark.range(3).localCheckpoint()
         )
-    got = prepared.prepared_plan(
-        "bound_ck", spark, sf_dir,
-        lambda: spark.range(3).localCheckpoint(), artifact_bound=True,
-    )
-    assert got.count() == 3
-    prepared.clear()
+
+    def owned():
+        return corpus_artifact(
+            "t_ck", spark, sf_dir, lambda s, _: s.range(3).localCheckpoint()
+        )
+
+    assert prepared.prepared_plan("owned_ck", spark, sf_dir, owned).count() == 3
+    stale = owned()
+    release_corpus_artifacts()
+    with pytest.raises(ValueError, match="checkpoint-backed"):
+        prepared.prepared_plan("stale_ck", spark, sf_dir, lambda: stale)
+    assert not prepared._PLANS
 
 
 def test_simhash_arrow_kernel_matches_python_twin(spark):

@@ -1,12 +1,22 @@
-"""Verify-once shared artifacts (queries_llm.shared_verified_pairs /
-shared_dup_components): same-corpus calls return the SAME materialized
-DataFrame (no re-verify), results survive catalog.clearCache() (the
-between-keys clear), and switching corpora evicts the superseded
-artifact instead of accumulating blocks for the session lifetime."""
+"""Corpus artifacts (functions/storage.corpus_artifact, served by
+queries_llm.shared_verified_pairs / shared_dup_components and friends):
+same-corpus calls return the SAME materialized DataFrame (no re-verify),
+results survive catalog.clearCache() (the between-keys clear), and
+switching corpora evicts the superseded artifact instead of accumulating
+blocks for the session lifetime."""
 
 from __future__ import annotations
 
+from pygeoapi_ingestor_spark.functions.storage import (
+    logical_rdds,
+    owned_rdd_ids,
+    release_corpus_artifacts,
+)
 from pygeoapi_ingestor_spark.plans import queries_llm as qllm
+
+
+def _persistent_ids(spark):
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs()}
 
 
 def test_same_corpus_returns_same_artifact(spark, sf_dir):
@@ -31,8 +41,8 @@ def test_corpus_switch_evicts_superseded(spark, sf_dir, tmp_path):
     a = qllm.shared_verified_pairs(spark, sf_dir)
     n_a = a.count()  # captured BEFORE eviction: a freed localCheckpoint
     # has no lineage to recompute from, so `a` is unusable afterwards
-    key_a = [k for k, v in qllm._VP_ARTIFACTS.items() if v is a]
-    assert key_a, "artifact must be registered"
+    ids_a = {r.id() for r in logical_rdds(a)}
+    assert ids_a and ids_a <= owned_rdd_ids(), "artifact must be registered"
     # derive a second corpus (a filtered copy) and switch to it
     alt = tmp_path / "alt_sf"
     alt.mkdir()
@@ -41,7 +51,7 @@ def test_corpus_switch_evicts_superseded(spark, sf_dir, tmp_path):
     ).write.parquet(str(alt / "documents.parquet"))
     b = qllm.shared_verified_pairs(spark, str(alt))
     assert b is not a
-    assert key_a[0] not in qllm._VP_ARTIFACTS, (
+    assert not (ids_a & (owned_rdd_ids() | _persistent_ids(spark))), (
         "switching corpora must evict the superseded artifact"
     )
     # switching back rebuilds (values equal, object fresh)
@@ -72,13 +82,9 @@ def test_components_match_direct_operator(spark, sf_dir):
 def test_kmeans_cents_memoized_and_match_training(spark, sf_dir):
     """The train-once centroid artifact is a pure memoization of the
     deterministic kmeans_fit_int8 run, reused per (session, corpus) and
-    dropped by release_shared_artifacts."""
+    dropped by release_corpus_artifacts."""
     from pygeoapi_ingestor_spark.operators import similarity
-    from pygeoapi_ingestor_spark.plans.queries_llm import (
-        KMEANS_PARAMS,
-        _emb,
-        release_shared_artifacts,
-    )
+    from pygeoapi_ingestor_spark.plans.queries_llm import KMEANS_PARAMS, _emb
 
     a = qllm.shared_kmeans_cents(spark, sf_dir)
     assert qllm.shared_kmeans_cents(spark, sf_dir) is a  # memo hit
@@ -86,7 +92,7 @@ def test_kmeans_cents_memoized_and_match_training(spark, sf_dir):
         _emb(spark, sf_dir), "vec_id", "embedding", **KMEANS_PARAMS
     )
     assert a == direct
-    release_shared_artifacts()
+    release_corpus_artifacts()
     b = qllm.shared_kmeans_cents(spark, sf_dir)
     assert b is not a and b == a  # rebuilt, identical values
 
@@ -145,11 +151,11 @@ def test_free_local_ckpt_releases_projection_rooted_plan(spark, sf_dir):
 
 
 def test_free_local_ckpt_returns_ids_for_targeted_drain(spark, sf_dir):
-    """release_shared_artifacts returns the freed RDD ids so
+    """release_corpus_artifacts returns the freed RDD ids so
     finalize_job drains exactly those (ADVICE r10: never require
     globally-empty storage)."""
     qllm.shared_verified_pairs(spark, sf_dir)
-    ids = qllm.release_shared_artifacts()
+    ids = release_corpus_artifacts()
     assert ids, "release must report what it freed"
     assert not (set(ids) & _storage_ids(spark))
 
@@ -160,7 +166,8 @@ def test_finalize_job_does_not_stall_on_foreign_retained_storage(
     """A caller's own RDD-level persist on the shared session is not
     finalize_job's to free — finalize must release the job's artifacts
     and return promptly (no-progress bail), not burn the full 15s drain
-    budget per tick (ADVICE r10)."""
+    budget per tick (ADVICE r10). The first-tick timing is pinned by
+    test_round12_hardening's foreign-storage test."""
     import time
 
     from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
@@ -180,7 +187,7 @@ def test_finalize_job_does_not_stall_on_foreign_retained_storage(
     finalize_job(spark)
     elapsed = time.monotonic() - t0
     # job-owned artifacts gone, foreign persist untouched, bail < budget
-    assert not qllm._VP_ARTIFACTS
+    assert not owned_rdd_ids()
     assert foreign_ids & _storage_ids(spark), "foreign block must survive"
     assert elapsed < 12.0, f"finalize stalled {elapsed:.1f}s on foreign storage"
     assert foreign.count() == 10  # still usable
@@ -196,10 +203,7 @@ def test_rocchio_cents_memoized_and_match_training(spark, sf_dir):
     pure memoization of the deterministic rocchio_fit_int8 run, and the
     one-projection classify over it is bit-equal to fitting in place."""
     from pygeoapi_ingestor_spark.operators import similarity
-    from pygeoapi_ingestor_spark.plans.queries_llm import (
-        _emb,
-        release_shared_artifacts,
-    )
+    from pygeoapi_ingestor_spark.plans.queries_llm import _emb
 
     a = qllm.shared_rocchio_cents(spark, sf_dir)
     assert qllm.shared_rocchio_cents(spark, sf_dir) is a  # memo hit
@@ -221,7 +225,7 @@ def test_rocchio_cents_memoized_and_match_training(spark, sf_dir):
         ).collect()
     }
     assert via_artifact == in_place
-    release_shared_artifacts()
+    release_corpus_artifacts()
     b = qllm.shared_rocchio_cents(spark, sf_dir)
     assert b is not a and b == a  # rebuilt, identical values
 

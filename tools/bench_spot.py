@@ -56,8 +56,8 @@ def _duck(sf_dir, sql):
 
 
 def main() -> None:
+    from pygeoapi_ingestor_spark.functions.storage import release_corpus_artifacts
     from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES, prepared
-    from pygeoapi_ingestor_spark.plans import queries_llm as qllm
     from pygeoapi_ingestor_spark.session import get_spark
 
     spark = get_spark(app_name="bench_spot")
@@ -83,14 +83,14 @@ def main() -> None:
 
     # --- words-artifact pair @ sf1, both carrier orders ---
     pair: dict = {}
-    qllm.release_shared_artifacts()
+    release_corpus_artifacts()
     spark.catalog.clearCache()
     pair["segment_first_cold"] = run("segment_dedup", SF1_DIR)
     spark.catalog.clearCache()
     pair["dsir_after_carrier_cold"] = run("dsir_importance_weights", SF1_DIR)
     pair["dsir_warm"] = run("dsir_importance_weights", SF1_DIR)
     pair["segment_warm"] = run("segment_dedup", SF1_DIR)
-    qllm.release_shared_artifacts()
+    release_corpus_artifacts()
     spark.catalog.clearCache()
     pair["dsir_first_cold"] = run("dsir_importance_weights", SF1_DIR)
     spark.catalog.clearCache()
