@@ -1,21 +1,31 @@
 #!/usr/bin/env python3
-"""Headline benchmark: run the catalog's representative queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print ONE JSON line with per-query wall times.
+"""Catalog benchmark on the corpus at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test corpus), on local[$SPARK_GRAFT_CPUS].
 
-Each query is fully materialized via count() on the final result (no
-driver-side collect of large outputs).
+    python3 bench.py                             # full catalog
+    python3 bench.py KEY [KEY ...] [--reps N]    # spot mode, N defaults to 3
+
+The full run times every catalog key, writes BENCH_FULL.json and prints
+ONE JSON line with per-query wall times. Each query is fully
+materialized via count() on the final result (no driver-side collect of
+large outputs).
+
+Spot mode measures the named keys only (see ``spot``) and prints one
+JSON line; it writes no file.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.tracing import Tracer  # noqa: E402
 from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES  # noqa: E402
 from pygeoapi_ingestor_spark.session import TABLES, get_spark  # noqa: E402
 
@@ -317,17 +327,8 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     return out
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # a full pass is ~1500 SQL executions in ONE JVM (local mode shares
-    # driver+executor heap); 16g sat right at the OOM cliff in the r11
-    # driver window. The bench box has 128 GiB — give the run headroom;
-    # callers can still override via the env var.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
+def _warm_up(spark, sf_dir: str) -> None:
+    """Untimed session warm-up shared by the full and spot modes."""
     # warm the JVM + parquet footers with a trivial action
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     # ALSO boot the Python/Arrow worker pool and the shuffle/codegen
@@ -371,6 +372,156 @@ def main() -> None:
             q_simhash_accuracy_eval(spark, _tiny).count()
     except Exception:
         pass  # warmup is best-effort; timing proceeds regardless
+
+
+def _duckdb(sf_dir: str):
+    """A DuckDB connection with one view per catalog table over the
+    parquet files at ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * "
+            f"FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+# Spot-mode layer fields, each summed over a cell's build and action
+# jobs (perfbench.tracing.Tracer.group_stats)
+SPOT_LAYERS = ("jobs", "stages", "task_cpu_s", "task_wall_s",
+               "shuffle_bytes", "spill_bytes", "task_gc_ms")
+
+
+def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dict:
+    """Time the build of catalog query ``key`` and ``action`` on its
+    DataFrame separately, the build's Spark jobs under job group
+    ``<group>|build`` and the action's under ``group``; read the cell's
+    layers after both timers have stopped."""
+    with tracer.harvesting():
+        gc0, _ = tracer.driver_gc()
+    try:
+        tracer.set_group(f"{group}|build")
+        t0 = time.perf_counter()
+        df = QUERIES[key](tracer.spark, sf_dir)
+        t1 = time.perf_counter()
+        tracer.set_group(group)
+        t2 = time.perf_counter()
+        action(df)
+        t3 = time.perf_counter()
+    finally:
+        tracer.set_group(None)
+    with tracer.harvesting():
+        # the status store is fed asynchronously by the listener bus
+        tracer.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        gc1, _ = tracer.driver_gc()
+        b = tracer.group_stats(f"{group}|build")
+        a = tracer.group_stats(group)
+    return {
+        "wall_s": round(t1 - t0 + t3 - t2, 3),
+        "build_s": round(t1 - t0, 3),
+        "build_jobs": b["jobs"],
+        **{f: round(b[f] + a[f], 3) for f in SPOT_LAYERS},
+        "driver_gc_ms": gc1 - gc0,
+    }
+
+
+def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
+    """Measure ``keys`` in ``reps`` reps of three cells each:
+
+    - cold: after clearCache and release_corpus_artifacts, so the build
+      is a prepared-plan registry miss and every artifact is rebuilt;
+    - warm: the prepared-plan hit, artifacts held;
+    - noop: the prepared plan fully evaluated through the noop sink.
+
+    Keys with an oracle also get a DuckDB cold and warm time per rep on
+    a fresh connection over the same files. Returns, per key and cell,
+    the min and median wall time and every rep's record. Leaves no
+    cache or artifact behind."""
+    from pygeoapi_ingestor_spark.functions.storage import (
+        release_corpus_artifacts,
+    )
+
+    tracer = Tracer(spark, enabled=True)
+
+    def count(df):
+        df.count()
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    out: dict[str, dict] = {}
+    t_all = time.perf_counter()
+    for key in keys:
+        cells: dict[str, list] = {"cold": [], "warm": [], "noop": []}
+        for rep in range(reps):
+            spark.catalog.clearCache()
+            release_corpus_artifacts()
+            for cell, action in (("cold", count), ("warm", count), ("noop", noop)):
+                group = f"spot:{key}:{cell}:{rep}"
+                cells[cell].append(_spot_cell(tracer, group, key, sf_dir, action))
+            if key in ORACLES:
+                with _duckdb(sf_dir) as con:
+                    for cell in ("duckdb_cold", "duckdb_warm"):
+                        t0 = time.perf_counter()
+                        con.execute(ORACLES[key]).fetchall()
+                        wall = round(time.perf_counter() - t0, 3)
+                        cells.setdefault(cell, []).append({"wall_s": wall})
+        out[key] = {}
+        for cell, recs in cells.items():
+            walls = [r["wall_s"] for r in recs]
+            out[key][cell] = {
+                "min": min(walls),
+                "median": round(statistics.median(walls), 3),
+                "all": recs,
+            }
+    spark.catalog.clearCache()
+    release_corpus_artifacts()
+    return {
+        "reps": reps,
+        "wall_s": round(time.perf_counter() - t_all, 3),
+        "harvest_s": round(tracer.harvest_s, 3),
+        "keys": out,
+    }
+
+
+def _parse_args(argv: list[str] | None) -> argparse.Namespace:
+    """Parse the command line; unknown keys exit with status 2 before
+    any Spark session starts."""
+    p = argparse.ArgumentParser(prog="bench.py")
+    p.add_argument("keys", nargs="*", metavar="KEY",
+                   help="spot-measure these catalog keys (default: the full run)")
+    p.add_argument("--reps", type=int, help="spot reps per key (default 3)")
+    args = p.parse_args(argv)
+    unknown = [k for k in args.keys if k not in QUERIES]
+    if unknown:
+        p.error(f"unknown keys: {' '.join(unknown)}")
+    if args.reps is not None and not args.keys:
+        p.error("--reps needs at least one KEY")
+    if args.reps is not None and args.reps < 1:
+        p.error("--reps must be at least 1")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = _parse_args(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    # a full pass is ~1500 SQL executions in ONE JVM (local mode shares
+    # driver+executor heap); 16g sat right at the OOM cliff in the r11
+    # driver window. The bench box has 128 GiB — give the run headroom;
+    # callers can still override via the env var.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    _warm_up(spark, sf_dir)
+    if args.keys:
+        res = spot(spark, sf_dir, args.keys, args.reps or 3)
+        print(json.dumps({"mode": "spot", "sf": sf, **res}))
+        spark.stop()
+        return
 
     # DUAL SERIES per query (round-4 verdict item 7): cold = first run
     # after clearCache (parquet scan + any index build); warm = an
@@ -472,14 +623,7 @@ def main() -> None:
     # spark/duckdb ratio instead of an un-anchored "no baseline". DuckDB
     # is multi-threaded over the same cores; this is the single-node
     # columnar-engine reference number for each SQL-expressible key.
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * "
-            f"FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = _duckdb(sf_dir)
     oracle_timings: dict[str, float] = {}
     # oracles that error at THIS SF are recorded, not swallowed, so the
     # published spark/duckdb ratio's coverage is auditable (an oracle

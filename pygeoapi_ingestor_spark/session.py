@@ -67,7 +67,7 @@ def get_spark(
         # which the 2-min interval above fires on purpose — calls
         # System.gc(), and under Java 17's default G1 an explicit GC is
         # a FULL stop-the-world collection. On this driver's 48 GiB
-        # heap those pauses measured up to 33.8 s (tools/bench_probe.py,
+        # heap those pauses measured up to 33.8 s (OPTIMIZATION_r14.md,
         # G1 Old Generation MXBean: 1 collection = 33771 ms inside a
         # 117 s query cell), landing on random timed cells; pause cost
         # scales with allocation churn, i.e. with task count, so
