@@ -729,7 +729,7 @@ def main(argv: list[str] | None = None) -> None:
     # path. The corpus artifacts survive clearCache by design
     # (functions/storage localCheckpoints) — release them around every
     # run so each stable cell is genuinely cold. The release also drops
-    # every prepared plan (plans/prepared.py): the stable series is the
+    # every prepared plan (functions/storage): the stable series is the
     # catalog's cold ratchet, and a memoized plan would silently turn a
     # key's "cold" cell into an execute-only cell, breaking
     # round-over-round comparability. The warm series above keeps the
@@ -800,7 +800,7 @@ def main(argv: list[str] | None = None) -> None:
         "streaming": streaming,
         "errors": errors,
         # every key's warm cell is execute-only (prepared plans,
-        # plans/prepared.py) — kept machine-readable so round-over-round
+        # functions/storage) — kept machine-readable so round-over-round
         # warm comparisons against older artifacts are self-describing
         "prepared_keys": sorted(QUERIES),
         "sf": sf,

@@ -16,13 +16,16 @@ Two process families are exposed:
 
 from __future__ import annotations
 
+import logging
 from typing import Any
 
 from pyspark.sql import SparkSession
 
+from pygeoapi_ingestor_spark.functions.storage import finalize_job, in_flight
 from pygeoapi_ingestor_spark.plans import QUERIES
 from pygeoapi_ingestor_spark.processes import IngestProcess, ProcessorExecuteError
-from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
+
+log = logging.getLogger(__name__)
 
 MAX_SAMPLE_ROWS = 100
 
@@ -202,73 +205,76 @@ class ProcessAPI:
     def execute(
         self, spark: SparkSession, process_id: str,
         inputs: dict[str, Any] | None = None,
-        finalize: bool = True,
     ) -> dict[str, Any]:
         """Execute one process; dict response mirrors the reference's
-        ``{"id", "status", "value"}`` output shape.
+        ``{"id", "status", "value"}`` output shape. Never raises.
 
-        ``finalize`` releases per-job engine state after the response is
-        materialized — the same between-jobs contract the scheduler's
-        ``finalize_job`` applies: operators deliberately persist index
-        artifacts (LSH signatures, PPJoin tokens, PQ codes) for their
-        own downstream actions and cannot know when the caller is done;
-        a long-lived API service that skips this accumulates
-        MEMORY_AND_DISK blocks for the session lifetime. NOTE the
-        release is session-GLOBAL (clearCache): correct for the
-        sequential service loop, but concurrent callers sharing one
-        session must pass False and coordinate a single finalize when
-        the session goes idle — exactly what JobManager does for its
-        thread pool.
+        The work runs ``in_flight()`` and is followed by ``finalize_job``
+        — the scheduler's between-jobs release: operators deliberately
+        persist index artifacts (LSH signatures, PPJoin tokens, PQ
+        codes) for their own downstream actions and cannot know when
+        the caller is done. The release waits for the last in-flight
+        execute, so concurrent callers sharing one session never lose
+        each other's state (functions/storage).
         """
         inputs = dict(inputs or {})
         if process_id in self._ingestors:
-            try:
-                res = self._ingestors[process_id].execute(
-                    spark, inputs, force=bool(inputs.pop("force", False))
-                )
-            except ProcessorExecuteError as e:
-                return {"id": process_id, "status": "failed", "message": str(e)}
-            finally:
-                if finalize:
-                    finalize_job(spark)
+            run = self._execute_ingestor
+        elif process_id in QUERIES:
+            run = self._execute_query
+        else:
             return {
                 "id": process_id,
-                "status": res.status.lower(),
-                "message": res.message,
-                "value": res.extents,
+                "status": "failed",
+                "message": f"unknown process {process_id!r}",
             }
-        if process_id in QUERIES:
+        try:
+            with in_flight():
+                return run(spark, process_id, inputs)
+        finally:
             try:
-                sf_dir = inputs.get("sf_dir", self.default_sf_dir)
-                limit = int(inputs.get("limit", MAX_SAMPLE_ROWS))
-                # MAX_SAMPLE_ROWS is a hard cap, not just a default — the
-                # sample must stay driver-safe regardless of inputs
-                limit = max(0, min(limit, MAX_SAMPLE_ROWS))
-                df = QUERIES[process_id](spark, sf_dir)
-                rows = [
-                    _json_safe(r.asDict(recursive=True))
-                    for r in df.limit(limit).collect()
-                ]
-            except Exception as e:  # dict-in/dict-out: never raise
-                return {
-                    "id": process_id,
-                    "status": "failed",
-                    "message": str(e)[:500],
-                }
-            finally:
-                # the response is fully materialized (collected) by now,
-                # so the query's persisted index artifacts are releasable
-                if finalize:
-                    finalize_job(spark)
+                finalize_job(spark)
+            except Exception:
+                # a failed release must not turn a finished request
+                # into a failure
+                log.exception("finalize_job failed after %r", process_id)
+
+    def _execute_ingestor(self, spark, process_id, inputs):
+        try:
+            res = self._ingestors[process_id].execute(
+                spark, inputs, force=bool(inputs.pop("force", False))
+            )
+        except ProcessorExecuteError as e:
+            return {"id": process_id, "status": "failed", "message": str(e)}
+        return {
+            "id": process_id,
+            "status": res.status.lower(),
+            "message": res.message,
+            "value": res.extents,
+        }
+
+    def _execute_query(self, spark, process_id, inputs):
+        try:
+            sf_dir = inputs.get("sf_dir", self.default_sf_dir)
+            limit = int(inputs.get("limit", MAX_SAMPLE_ROWS))
+            # MAX_SAMPLE_ROWS is a hard cap, not just a default — the
+            # sample must stay driver-safe regardless of inputs
+            limit = max(0, min(limit, MAX_SAMPLE_ROWS))
+            df = QUERIES[process_id](spark, sf_dir)
+            rows = [
+                _json_safe(r.asDict(recursive=True))
+                for r in df.limit(limit).collect()
+            ]
+        except Exception as e:  # dict-in/dict-out: never raise
             return {
                 "id": process_id,
-                "status": "successful",
-                "value": {"n_rows_sampled": len(rows), "rows": rows},
+                "status": "failed",
+                "message": str(e)[:500],
             }
         return {
             "id": process_id,
-            "status": "failed",
-            "message": f"unknown process {process_id!r}",
+            "status": "successful",
+            "value": {"n_rows_sampled": len(rows), "rows": rows},
         }
 
 
@@ -293,7 +299,6 @@ class JobManager:
         self._jobs: dict[str, dict[str, Any]] = {}
         self._lock = threading.Lock()
         self._n = 0
-        self._active = 0
 
     def submit(
         self, spark: SparkSession, process_id: str,
@@ -310,44 +315,17 @@ class JobManager:
                 if self._jobs[job_id]["status"] == "dismissed":
                     return
                 self._jobs[job_id]["status"] = "running"
-                self._active += 1
             try:
+                spark.sparkContext.setJobGroup(job_id, f"api job {job_id}",
+                                               interruptOnCancel=True)
                 try:
-                    spark.sparkContext.setJobGroup(job_id, f"api job {job_id}",
-                                                   interruptOnCancel=True)
-                    try:
-                        # finalize=False: execute's finalize is a GLOBAL
-                        # clearCache — under a concurrent pool it would wipe
-                        # other in-flight jobs' persisted index artifacts
-                        # mid-query (cache thrash scaling with concurrency).
-                        # The manager finalizes once, below, when the LAST
-                        # active job drains.
-                        res = self.api.execute(
-                            spark, process_id, inputs, finalize=False
-                        )
-                    finally:
-                        # Spark 4 dropped SparkContext.clearJobGroup; reset
-                        # the thread-local property directly
-                        spark.sparkContext.setLocalProperty(
-                            "spark.jobGroup.id", None
-                        )
+                    res = self.api.execute(spark, process_id, inputs)
                 finally:
-                    # decrement in an OUTER finally (even setJobGroup
-                    # failing must not leak _active — a leaked count
-                    # disables pool finalize for the session lifetime),
-                    # and finalize UNDER the lock: a job that was
-                    # submitted but not yet running increments _active
-                    # under this same lock, so it cannot start building
-                    # cache state while clearCache is in flight
-                    with self._lock:
-                        self._active -= 1
-                        if self._active == 0:
-                            try:
-                                finalize_job(spark)
-                            except Exception:
-                                # a failed cache release must not turn a
-                                # finished job's result into a failure
-                                pass
+                    # Spark 4 dropped SparkContext.clearJobGroup; reset
+                    # the thread-local property directly
+                    spark.sparkContext.setLocalProperty(
+                        "spark.jobGroup.id", None
+                    )
             except BaseException as e:  # noqa: BLE001 — a crashed worker
                 # must surface as a failed job, never a silent 'running'
                 res = {"id": process_id, "status": "failed",

@@ -537,20 +537,13 @@ def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16, seed: in
     return sig
 
 
-def _sq_dist(vec: Column, centroid: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(vec, centroid, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _seq_sq_dists(vm, cm):
     """(n, dim) x (k, dim) -> (n, k) squared distances, each column
     accumulated SEQUENTIALLY over the dimension axis — the exact
-    left-associated double rounding of the ``_sq_dist`` HOF fold (and of
-    an oracle's list_distance ordering), so argmin/probe sets cannot
-    flip at the last ulp against either. A NaN distance becomes +inf:
+    left-associated double rounding of a ``zip_with``/``aggregate``
+    squared-difference fold (and of an oracle's list_distance
+    ordering), so argmin/probe sets cannot flip at the last ulp against
+    either. A NaN distance becomes +inf:
     Spark and DuckDB order NaN after every number, so it never wins an
     argmin or a probe slot over a real distance."""
     import numpy as np

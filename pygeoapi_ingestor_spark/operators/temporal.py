@@ -219,25 +219,6 @@ def rolling_agg_range(
     return df.withColumn(out_col, getattr(F, fn)(value_col).over(w))
 
 
-def forward_fill(
-    df: DataFrame,
-    series_cols: list[str],
-    order_cols: list[str],
-    value_col: str,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Carry the last non-null observation forward per series (the gap
-    treatment for missing sensor readings before resampling)."""
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(
-        out_col or value_col, F.last(value_col, ignorenulls=True).over(w)
-    )
-
-
 def linear_interp_gaps(
     df: DataFrame,
     series_cols: list[str],
@@ -331,11 +312,12 @@ def chunked_forward_fill(
     chunk_col,
     out_col: str | None = None,
 ) -> DataFrame:
-    """``forward_fill`` re-keyed to (series, chunk) with boundary
-    exchange: rows before a chunk's first valid value take the carry-in
-    (the last valid value of any earlier chunk, computed on the tiny
-    summary). Identical output to the single-partition-per-series
-    variant."""
+    """Carry the last non-null observation forward per series (the gap
+    treatment for missing sensor readings before resampling), keyed to
+    (series, chunk) with boundary exchange: rows before a chunk's first
+    valid value take the carry-in (the last valid value of any earlier
+    chunk, computed on the tiny summary). Identical output to a
+    ``last(ignorenulls)`` window over the whole series."""
     chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
     d = df.withColumn("_chunk", chunk)
     v = F.col(value_col)

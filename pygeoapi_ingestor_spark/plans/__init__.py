@@ -298,7 +298,7 @@ _STAMP_ORDER = [
 
 # ---------------------------------------------------------------------------
 # Prepared-plan coverage (r11 allowlist -> r13 catalog-wide; see
-# plans/prepared.py): a key's per-invocation DRIVER cost — py4j
+# functions/storage.prepared_plan): a key's per-invocation DRIVER cost — py4j
 # expression-tree construction, Catalyst analysis/optimization, codegen,
 # and any eager trained-literal fit inside the build — is paid on EVERY
 # bench/service call, warm or not. Measured on r13 HEAD at sf0.1: 98.6 s
@@ -314,7 +314,7 @@ _STAMP_ORDER = [
 
 
 def _as_prepared(name, fn):
-    from pygeoapi_ingestor_spark.plans.prepared import prepared_plan
+    from pygeoapi_ingestor_spark.functions.storage import prepared_plan
 
     def wrapper(spark, sf_dir, _n=name, _f=fn):
         try:

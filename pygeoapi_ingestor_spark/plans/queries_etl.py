@@ -1637,8 +1637,8 @@ def q_zonal_stats_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ~90% of the r10 warm cost was Catalyst re-planning of an identical
     plan; the catalog serves this key as a prepared plan
-    (plans/prepared.py), which rescans the parquet on every execution
-    (no data cached)."""
+    (functions/storage.prepared_plan), which rescans the parquet on
+    every execution (no data cached)."""
     from pygeoapi_ingestor_spark.operators import spatial
 
     ev = _events(spark, sf_dir)

@@ -15,10 +15,10 @@ The process registry maps process names to callables
 from __future__ import annotations
 
 import datetime
-import time
 from dataclasses import dataclass, field
 
-from pygeoapi_ingestor_spark.functions.storage import release_corpus_artifacts
+# the between-jobs release lives with the state it releases
+from pygeoapi_ingestor_spark.functions.storage import finalize_job
 
 
 @dataclass
@@ -125,44 +125,6 @@ def run_process(spark, registry: dict, job: ScheduledProcess):
     """Execute one scheduled process and return its result DataFrame."""
     fn = registry[job.process]
     return fn(spark, **job.inputs)
-
-
-def finalize_job(spark) -> None:
-    """Release per-job engine state after a scheduled process finishes —
-    the SERVICE-PATH half of the repo's cache contract.
-
-    Operators deliberately persist index artifacts (LSH signatures,
-    PPJoin token tables, quantized vectors, gram tables) and leave them
-    cached so a job's own downstream actions reuse them; nothing
-    unpersists them because the operator cannot know when its caller is
-    done. bench.py clears between keys; a long-lived scheduler MUST do
-    the same between jobs or MEMORY_AND_DISK blocks accumulate for the
-    session lifetime. The corpus artifacts (functions/storage) survive
-    ``clearCache`` by design and are released here too, together with
-    every prepared plan. Also nudges a driver GC: Spark's ContextCleaner
-    frees broadcast/shuffle state on driver GC, and the default
-    periodicGC interval outlives many scheduler ticks (the session
-    factory lowers it, but an externally-built session may not).
-
-    "Storage is free when finalize returns" is the scheduler contract,
-    so the released blocks are drained with a bounded wait instead of
-    racing the asynchronous unpersist and the cleaner. The wait covers
-    only blocks that are still stored but no longer persistent: an RDD a
-    caller still holds stays in ``getPersistentRDDs`` and is not ours to
-    free, so it never stalls a tick.
-    """
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    before = {info.id() for info in jsc.getRDDStorageInfo()}
-    spark.catalog.clearCache()
-    targets = before | set(release_corpus_artifacts())
-    sc._jvm.System.gc()
-    deadline = time.monotonic() + 15.0
-    while time.monotonic() < deadline:
-        stored = {info.id() for info in jsc.getRDDStorageInfo()} & targets
-        if not stored - {int(k) for k in sc._jsc.getPersistentRDDs()}:
-            break
-        time.sleep(0.2)
 
 
 def backfill(

@@ -177,11 +177,6 @@ def test_execute_releases_index_artifacts_between_jobs(spark, sf_dir):
         res = api.execute(spark, key)
         assert res["status"] == "successful"
         assert len(jsc.getRDDStorageInfo()) == baseline, key
-    # opting out leaves the artifacts for the caller to manage
-    res = api.execute(spark, "dedup_ppjoin", finalize=False)
-    assert res["status"] == "successful"
-    assert len(jsc.getRDDStorageInfo()) > baseline
-    spark.catalog.clearCache()
 
 
 def test_items_keyset_paging_matches_offset_and_pushes_down(spark, sf_dir, tmp_path):
@@ -262,9 +257,8 @@ def test_items_cursor_is_json_safe_and_lossless(spark, tmp_path):
 
 def test_jobmanager_finalizes_when_pool_drains(spark, sf_dir):
     """Concurrent jobs must NOT trigger mid-flight global cache clears
-    (execute runs with finalize=False under the pool); the manager
-    finalizes once when the last active job drains, returning storage
-    to baseline."""
+    (finalize_job defers while another execute is in flight); the last
+    job out releases, returning storage to baseline."""
     import time
 
     from pygeoapi_ingestor_spark.api import JobManager, ProcessAPI

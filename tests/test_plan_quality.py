@@ -18,13 +18,13 @@ def _fresh_plans():
     produces. With the r13 catalog-wide prepared registry, an earlier
     test's collect() leaves the memoized DataFrame holding its
     AQE-FINAL executed plan (extra ResultQueryStage/AQEShuffleRead
-    nodes, reused exchanges) — clear the memo so every assertion reads
-    a fresh, un-executed plan."""
-    from pygeoapi_ingestor_spark.plans import prepared
+    nodes, reused exchanges) — release the registry so every assertion
+    reads a fresh, un-executed plan."""
+    from pygeoapi_ingestor_spark.functions import storage
 
-    prepared.clear()
+    storage.release_corpus_artifacts()
     yield
-    prepared.clear()
+    storage.release_corpus_artifacts()
 
 
 def _formatted(df) -> str:

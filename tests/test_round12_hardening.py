@@ -1,6 +1,6 @@
 """Round-12 hardening contracts.
 
-1. The prepared-plan registry's runtime guard (plans/prepared.py):
+1. The prepared-plan registry's runtime guard (functions/storage):
    plans over checkpoints the artifact registry does not own are
    REJECTED at registration (a memoized plan over a localCheckpoint
    dangles once those blocks are freed — the ADVICE r11 failure mode),
@@ -22,30 +22,30 @@ from __future__ import annotations
 
 import pytest
 
-from pygeoapi_ingestor_spark.plans import prepared
+from pygeoapi_ingestor_spark.functions import storage
 
 
 def test_guard_rejects_checkpoint_backed_plan(spark, sf_dir):
-    prepared.clear()
+    storage.release_corpus_artifacts()
     with pytest.raises(ValueError, match="checkpoint-backed"):
-        prepared.prepared_plan(
+        storage.prepared_plan(
             "bad_ckpt", spark, sf_dir,
             lambda: spark.range(5).localCheckpoint(),
         )
-    assert not prepared._PLANS, "rejected plan must not be registered"
+    assert not storage._PLANS, "rejected plan must not be registered"
 
 
 def test_guard_allows_driver_local_logicalrdd(spark, sf_dir):
     """createDataFrame-from-driver-rows plans carry LogicalRDD leaves
     whose data is serialized closure state, not releasable storage —
     they must stay eligible (rfm_segments' ntile tables are this)."""
-    prepared.clear()
+    storage.release_corpus_artifacts()
     rows_df = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, "a"), (2, "b")]), "k int, v string"
     )
-    got = prepared.prepared_plan("ok_local", spark, sf_dir, lambda: rows_df)
+    got = storage.prepared_plan("ok_local", spark, sf_dir, lambda: rows_df)
     assert got.count() == 2
-    prepared.clear()
+    storage.release_corpus_artifacts()
 
 
 def test_isoband_prepared_plan_dropped_by_release(spark, sf_dir):
@@ -60,9 +60,9 @@ def test_isoband_prepared_plan_dropped_by_release(spark, sf_dir):
 
     key = ("isoband_regions", spark.sparkContext.applicationId, sf_dir)
     want = sorted(QUERIES["isoband_regions"](spark, sf_dir).collect())
-    assert key in prepared._PLANS
+    assert key in storage._PLANS
     release_corpus_artifacts()
-    assert key not in prepared._PLANS, "a release must drop the plan"
+    assert key not in storage._PLANS, "a release must drop the plan"
     assert sorted(QUERIES["isoband_regions"](spark, sf_dir).collect()) == want
     release_corpus_artifacts()
 
@@ -70,21 +70,21 @@ def test_isoband_prepared_plan_dropped_by_release(spark, sf_dir):
 def test_finalize_clears_prepared_registry(spark, sf_dir):
     from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
 
-    prepared.clear()
-    prepared.prepared_plan(
+    storage.release_corpus_artifacts()
+    storage.prepared_plan(
         "tiny", spark, sf_dir,
         lambda: spark.read.parquet(f"{sf_dir}/region.parquet"),
     )
-    assert prepared._PLANS
+    assert storage._PLANS
     finalize_job(spark)
-    assert not prepared._PLANS, "finalize_job must drop prepared plans"
+    assert not storage._PLANS, "finalize_job must drop prepared plans"
 
 
 def test_corpus_switch_eviction_clears_cache(spark, sf_dir, tmp_path):
     """Superseded-corpus eviction must drop the old build's internal
     persists (CacheManager entries), not just the driver-side plan
     object (ADVICE r11)."""
-    prepared.clear()
+    storage.release_corpus_artifacts()
     jsc = spark.sparkContext._jsc.sc()
     before_ids = {i.id() for i in jsc.getRDDStorageInfo()}
 
@@ -93,7 +93,7 @@ def test_corpus_switch_eviction_clears_cache(spark, sf_dir, tmp_path):
         df.count()  # materialize the internal persist
         return df
 
-    prepared.prepared_plan(
+    storage.prepared_plan(
         "evict_me", spark, str(tmp_path / "corpusA"),
         build_with_internal_persist,
     )
@@ -102,7 +102,7 @@ def test_corpus_switch_eviction_clears_cache(spark, sf_dir, tmp_path):
     # corpus switch for the same name -> eviction path -> clearCache
     # (other suites' verify-once CHECKPOINT artifacts survive by design
     # — assert on the build's own cache entries, not global emptiness)
-    prepared.prepared_plan(
+    storage.prepared_plan(
         "evict_me", spark, str(tmp_path / "corpusB"),
         lambda: spark.read.parquet(f"{sf_dir}/region.parquet"),
     )
@@ -110,7 +110,7 @@ def test_corpus_switch_eviction_clears_cache(spark, sf_dir, tmp_path):
     assert not (new_ids & after_ids), (
         "eviction must clear the superseded build's cached blocks"
     )
-    prepared.clear()
+    storage.release_corpus_artifacts()
 
 
 def test_finalize_skips_previously_diagnosed_foreign_storage(spark, sf_dir):

@@ -26,39 +26,39 @@ import threading
 
 import pytest
 
-from pygeoapi_ingestor_spark.plans import prepared
+from pygeoapi_ingestor_spark.functions import storage
 
 
 def test_corpus_switch_batch_eviction_single_clear(spark, sf_dir, tmp_path, monkeypatch):
-    prepared.clear()
+    storage.release_corpus_artifacts()
     a, b = str(tmp_path / "corpusA"), str(tmp_path / "corpusB")
     for n in ("n1", "n2", "n3"):
-        prepared.prepared_plan(n, spark, a, lambda: spark.range(3))
+        storage.prepared_plan(n, spark, a, lambda: spark.range(3))
     calls: list[int] = []
     monkeypatch.setattr(
         spark.catalog, "clearCache", lambda: calls.append(1)
     )
     for n in ("n1", "n2", "n3"):
-        prepared.prepared_plan(n, spark, b, lambda: spark.range(3))
+        storage.prepared_plan(n, spark, b, lambda: spark.range(3))
     assert sum(calls) == 1, (
         "a corpus switch must clear the session cache exactly ONCE — "
         "per-name clears drop the persists of plans rebuilt after the "
         "first eviction"
     )
     # all three names now live under corpus B
-    assert {k[0] for k in prepared._PLANS} == {"n1", "n2", "n3"}
-    assert {k[2] for k in prepared._PLANS} == {b}
-    prepared.clear()
+    assert {k[0] for k in storage._PLANS} == {"n1", "n2", "n3"}
+    assert {k[2] for k in storage._PLANS} == {b}
+    storage.release_corpus_artifacts()
 
 
 def test_prepared_no_clear_without_stale_entries(spark, sf_dir, monkeypatch):
-    prepared.clear()
+    storage.release_corpus_artifacts()
     calls: list[int] = []
     monkeypatch.setattr(spark.catalog, "clearCache", lambda: calls.append(1))
-    prepared.prepared_plan("fresh1", spark, sf_dir, lambda: spark.range(2))
-    prepared.prepared_plan("fresh2", spark, sf_dir, lambda: spark.range(2))
+    storage.prepared_plan("fresh1", spark, sf_dir, lambda: spark.range(2))
+    storage.prepared_plan("fresh2", spark, sf_dir, lambda: spark.range(2))
     assert not calls, "same-corpus registrations must not clear the cache"
-    prepared.clear()
+    storage.release_corpus_artifacts()
 
 
 def _accessor(kind):
@@ -318,13 +318,13 @@ def test_owned_artifact_plan_dropped_by_release(spark, sf_dir):
         )
         return art.select("id")
 
-    df1 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    df1 = storage.prepared_plan("ab1", spark, sf_dir, build)
     free_local_ckpt(spark.range(2).localCheckpoint())  # unrelated free
-    df2 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    df2 = storage.prepared_plan("ab1", spark, sf_dir, build)
     assert df1 is df2 and builds == [1], "an unrelated free must not evict"
     release_corpus_artifacts()
-    assert not prepared._PLANS, "a release must drop every prepared plan"
-    df3 = prepared.prepared_plan("ab1", spark, sf_dir, build)
+    assert not storage._PLANS, "a release must drop every prepared plan"
+    df3 = storage.prepared_plan("ab1", spark, sf_dir, build)
     assert builds == [1, 1] and df3.count() == 4
     release_corpus_artifacts()
 
@@ -341,7 +341,7 @@ def test_guard_admits_only_registry_owned_checkpoints(spark, sf_dir):
 
     release_corpus_artifacts()
     with pytest.raises(ValueError, match="checkpoint-backed"):
-        prepared.prepared_plan(
+        storage.prepared_plan(
             "plain_ck", spark, sf_dir, lambda: spark.range(3).localCheckpoint()
         )
 
@@ -350,12 +350,12 @@ def test_guard_admits_only_registry_owned_checkpoints(spark, sf_dir):
             "t_ck", spark, sf_dir, lambda s, _: s.range(3).localCheckpoint()
         )
 
-    assert prepared.prepared_plan("owned_ck", spark, sf_dir, owned).count() == 3
+    assert storage.prepared_plan("owned_ck", spark, sf_dir, owned).count() == 3
     stale = owned()
     release_corpus_artifacts()
     with pytest.raises(ValueError, match="checkpoint-backed"):
-        prepared.prepared_plan("stale_ck", spark, sf_dir, lambda: stale)
-    assert not prepared._PLANS
+        storage.prepared_plan("stale_ck", spark, sf_dir, lambda: stale)
+    assert not storage._PLANS
 
 
 def test_simhash_arrow_kernel_matches_python_twin(spark):
