@@ -17,6 +17,7 @@ JSON line; it writes no file.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import statistics
@@ -394,18 +395,39 @@ SPOT_LAYERS = ("jobs", "stages", "task_cpu_s", "task_wall_s",
                "shuffle_bytes", "spill_bytes", "task_gc_ms")
 
 
+@contextlib.contextmanager
+def _py4j_calls(spark):
+    """Count the py4j ``send_command`` calls made while the block runs,
+    in a one-element list (every thread's calls: spot mode runs one)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+
+
 def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dict:
     """Time the build of catalog query ``key`` and ``action`` on its
     DataFrame separately, the build's Spark jobs under job group
-    ``<group>|build`` and the action's under ``group``; read the cell's
-    layers after both timers have stopped."""
+    ``<group>|build`` and the action's under ``group``, counting the
+    build's py4j calls; read the cell's layers after both timers have
+    stopped."""
     with tracer.harvesting():
         gc0, _ = tracer.driver_gc()
     try:
         tracer.set_group(f"{group}|build")
-        t0 = time.perf_counter()
-        df = QUERIES[key](tracer.spark, sf_dir)
-        t1 = time.perf_counter()
+        with _py4j_calls(tracer.spark) as calls:
+            t0 = time.perf_counter()
+            df = QUERIES[key](tracer.spark, sf_dir)
+            t1 = time.perf_counter()
         tracer.set_group(group)
         t2 = time.perf_counter()
         action(df)
@@ -422,6 +444,7 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
         "wall_s": round(t1 - t0 + t3 - t2, 3),
         "build_s": round(t1 - t0, 3),
         "build_jobs": b["jobs"],
+        "build_py4j": calls[0],
         **{f: round(b[f] + a[f], 3) for f in SPOT_LAYERS},
         "driver_gc_ms": gc1 - gc0,
     }
@@ -431,7 +454,8 @@ def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
     """Measure ``keys`` in ``reps`` reps of three cells each:
 
     - cold: after clearCache and release_corpus_artifacts, so the build
-      is a prepared-plan registry miss and every artifact is rebuilt;
+      is a prepared-plan registry miss and every artifact is rebuilt
+      (read schemas are kept: they live as long as the corpus);
     - warm: the prepared-plan hit, artifacts held;
     - noop: the prepared plan fully evaluated through the noop sink.
 

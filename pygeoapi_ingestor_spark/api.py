@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession
 from pygeoapi_ingestor_spark.functions.storage import finalize_job, in_flight
 from pygeoapi_ingestor_spark.plans import QUERIES
 from pygeoapi_ingestor_spark.processes import IngestProcess, ProcessorExecuteError
+from pygeoapi_ingestor_spark.sinks.collections import published_schema
 
 log = logging.getLogger(__name__)
 
@@ -139,7 +140,9 @@ class ProcessAPI:
 
         Every filter is a plain column predicate, so it reaches the
         parquet scan as a pushed-down filter (plan-asserted in tests) —
-        at 100 TB the page costs a pruned scan, not a full read.
+        at 100 TB the page costs a pruned scan, not a full read. A
+        collection published through ``CollectionCatalog.register`` with
+        its schema is read with it: no schema-inference job per page.
 
         Two paging modes share the ORDER BY sort_col + LIMIT plan
         (TakeOrdered: top-k per partition + merge, no global sort):
@@ -154,7 +157,9 @@ class ProcessAPI:
           offsets degrade linearly; fine for shallow UI paging, wrong
           for crawls.
         """
-        df = spark.read.parquet(collection_path)
+        schema = published_schema(collection_path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(collection_path)
         if datetime_range is not None:
             lo, hi = datetime_range
             from pyspark.sql import functions as F

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.sources.readers import local_table
+
 
 def _with_buckets(
     df: DataFrame, series_cols: list[str], value_col: str, n_buckets: int
@@ -244,8 +246,10 @@ def bucketed_row_numbers_multi(
     spark = df.sparkSession
     out = b
     for m in metrics:
-        om = spark.createDataFrame(
-            [r for r in off_rows if r[len(series_cols)] == m], off_schema
+        om = local_table(
+            spark,
+            [r for r in off_rows if r[len(series_cols)] == m],
+            off_schema,
         ).select(
             *series_cols,
             F.col("_bucket").alias(f"_bucket_{m}"),
@@ -345,7 +349,8 @@ def exact_percentiles(
 
     spark = df.sparkSession
     key_fields = [df.schema[c] for c in series_cols]
-    keep_df = spark.createDataFrame(
+    keep_df = local_table(
+        spark,
         keep_rows,
         T.StructType(
             key_fields
@@ -355,7 +360,8 @@ def exact_percentiles(
             ]
         ),
     )
-    pos_df = spark.createDataFrame(
+    pos_df = local_table(
+        spark,
         pos_rows,
         T.StructType(
             [T.StructField(f"_k_{f.name}", f.dataType) for f in key_fields]

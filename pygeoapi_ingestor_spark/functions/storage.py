@@ -1,6 +1,6 @@
 """Storage ownership: the one owner of per-session state — the
 checkpoint-release path, the per-corpus artifacts, the prepared plans,
-the in-flight request count and ``finalize_job``.
+the read schemas, the in-flight request count and ``finalize_job``.
 
 RELEASE. ``catalog.clearCache()`` does not reach RDD-level
 ``localCheckpoint`` blocks, so every operator/sink that materializes
@@ -47,8 +47,9 @@ must be owned by this registry (``owned_rdd_ids``). Only a release
 frees an owned checkpoint, and every release drops every plan, so a
 memoized plan never reads freed storage; a plan over any other
 checkpoint is rejected, because a freed localCheckpoint has no lineage
-to recompute from. Driver-local ``createDataFrame`` leaves (trained
-literals, interpolation tables) are not checkpoints and stay eligible.
+to recompute from. Literal tables (trained literals, interpolation
+tables) are ``LocalRelation``s (``sources.readers.local_table``), not
+RDD leaves at all.
 
 PERSISTED INTERMEDIATES. Some builds persist a table of their own
 (rfm_segments' per-customer table, corpus_token_stats' gram table). A
@@ -58,11 +59,19 @@ uncached from then on. Release through ``finalize_job`` or
 ``release_corpus_artifacts``, which drop the plans too, so the next
 serve rebuilds and persists again.
 
-LIFETIME. Plans and artifacts share ONE (applicationId, sf_dir)
-generation, checked by ``_enter``: entering a new one drops every plan,
-releases every artifact and clears this session's cache (bench_scale
-walks sf0.01 -> sf0.1 -> sf1 -> sf3 in one session). Between service
-ticks ``finalize_job`` clears the cache and releases everything. A
+READ SCHEMAS. ``table_schema`` keeps each corpus table's inferred
+``(ns_cols, schema)`` so ``sources.readers.read_table`` reads with
+``.schema()``: without it every read runs a schema-inference job, and
+every request's build pays it again. Like the file listing of a
+prepared plan, this assumes the files under a generation's corpus do
+not change.
+
+LIFETIME. Plans, artifacts and read schemas share ONE (applicationId,
+sf_dir) generation, checked by ``_enter``: entering a new one drops
+every plan and schema, releases every artifact and clears this
+session's cache (bench_scale walks sf0.01 -> sf0.1 -> sf1 -> sf3 in one
+session). Between service ticks ``finalize_job`` clears the cache and
+releases everything but the schemas, which hold no Spark state. A
 release frees the checkpoint blocks, drops the centroids and drops
 every plan, so a memoized plan never outlives the artifact it reads.
 
@@ -91,6 +100,7 @@ log = logging.getLogger(__name__)
 
 _ARTIFACTS: dict = {}  # (kind, applicationId, sf_dir) -> DataFrame | value
 _PLANS: dict = {}  # (name, applicationId, sf_dir) -> DataFrame
+_SCHEMAS: dict = {}  # (path, applicationId, sf_dir) -> (ns_cols, StructType)
 _OWNED_IDS: set[int] = set()  # RDD ids behind the checkpoint artifacts
 # Builds are expensive Spark jobs: concurrent first calls must run ONE
 # build, or the loser's checkpoint leaks (ADVICE r12). Re-entrant,
@@ -103,7 +113,8 @@ _FLIGHT = threading.Lock()  # guards _IN_FLIGHT; held by finalize_job's release
 
 def logical_rdds(df: DataFrame) -> list:
     """The JVM RDDs behind the LogicalRDD leaves of ``df``'s analyzed
-    plan — checkpoints and driver-local ``createDataFrame`` data alike."""
+    plan: checkpoints, and any DataFrame built over an RDD. Literal
+    tables are ``LocalRelation`` leaves and are not among them."""
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
     return [
         leaf.rdd()
@@ -147,11 +158,14 @@ def free_local_ckpt(df: DataFrame, blocking: bool = True) -> list[int]:
 
 def _enter(spark: SparkSession, sf_dir: str) -> None:
     """The one generation check (caller holds ``_LOCK``): entering a new
-    (session, corpus) drops every plan, releases every artifact and, if
-    the old generation was this session's, clears its cache ONCE (a
-    clear per switched name dropped the persists of plans rebuilt
-    moments earlier, ADVICE r12)."""
+    (session, corpus) drops every plan and read schema of another
+    generation, releases every artifact and, if the old generation was
+    this session's, clears its cache ONCE (a clear per switched name
+    dropped the persists of plans rebuilt moments earlier, ADVICE r12)."""
     gen = (spark.sparkContext.applicationId, sf_dir)
+    for k in list(_SCHEMAS):  # a snapshot: reads insert without the lock
+        if k[1:] != gen:
+            _SCHEMAS.pop(k, None)
     stale = [k for k in (*_PLANS, *_ARTIFACTS) if k[1:] != gen]
     if stale:
         release_corpus_artifacts()
@@ -185,6 +199,24 @@ def corpus_artifact(
             _OWNED_IDS.update(r.id() for r in logical_rdds(value))
         _ARTIFACTS[key] = value
         return value
+
+
+def table_schema(
+    spark: SparkSession,
+    sf_dir: str,
+    path: str,
+    infer: Callable[[], tuple],
+) -> tuple:
+    """Return the ``(ns_cols, schema)`` of the table at ``path`` under
+    corpus ``sf_dir``, running ``infer()`` on first use. Kept until the
+    generation changes; no release drops it (see the module
+    docstring). Lock-free: concurrent first reads may both infer, and
+    either result is the same."""
+    key = (path, spark.sparkContext.applicationId, sf_dir)
+    hit = _SCHEMAS.get(key)
+    if hit is None:
+        hit = _SCHEMAS[key] = infer()
+    return hit
 
 
 def prepared_plan(

@@ -15,6 +15,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
+def _dbl(x: float) -> str:
+    """A SQL double literal that parses to exactly the double ``x``: a
+    bare ``0.5`` parses as DECIMAL, and a decimal's cast may round
+    twice, while a string's cast parses its shortest repr exactly."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
 def interpolate_points_expr(
     points: list[tuple[float, float]], value_col: str,
     clamp_edges: bool = False,
@@ -25,27 +32,30 @@ def interpolate_points_expr(
     the 100 TB path for fixed rating tables (reference:
     rer_river_discharge_arpae_process.py:325-457).
 
+    The CASE is rendered as one SQL string and parsed by one ``F.expr``
+    call: built as a Column tree, a 56-point curve costs thousands of
+    py4j calls per plan build.
+
     ``clamp_edges=True`` applies the reference's portata_lineare edge
     semantics (input below the curve → first Q, above → last Q);
     the default keeps NULL outside the curve's domain.
     """
     if len(points) < 2:
         raise ValueError("a piecewise-linear curve needs at least 2 points")
-    pts = sorted(points)
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
-    expr = None
+    pts = [(_dbl(x), _dbl(y)) for x, y in sorted(points)]
+    v = "`" + value_col.replace("`", "``") + "`"
+    whens = []
     if clamp_edges:
-        expr = F.when(v <= F.lit(pts[0][0]), F.lit(pts[0][1])).when(
-            v >= F.lit(pts[-1][0]), F.lit(pts[-1][1])
-        )
-    for (x_lo, y_lo), (x_hi, y_hi) in zip(pts, pts[1:]):
-        interp = F.lit(y_lo) + (F.lit(y_hi) - F.lit(y_lo)) * (v - F.lit(x_lo)) / (
-            F.lit(x_hi) - F.lit(x_lo)
-        )
-        cond = (v >= F.lit(x_lo)) & (v < F.lit(x_hi))
-        expr = F.when(cond, interp) if expr is None else expr.when(cond, interp)
+        whens += [
+            f"WHEN {v} <= {pts[0][0]} THEN {pts[0][1]}",
+            f"WHEN {v} >= {pts[-1][0]} THEN {pts[-1][1]}",
+        ]
+    whens += [
+        f"WHEN {v} >= {x_lo} AND {v} < {x_hi} "
+        f"THEN {y_lo} + ({y_hi} - {y_lo}) * ({v} - {x_lo}) / ({x_hi} - {x_lo})"
+        for (x_lo, y_lo), (x_hi, y_hi) in zip(pts, pts[1:])
+    ]
     if not clamp_edges:
         # close the final segment at the curve max
-        x_max = pts[-1][0]
-        expr = expr.when(v == F.lit(x_max), F.lit(pts[-1][1]))
-    return expr.otherwise(F.lit(None).cast("double"))
+        whens.append(f"WHEN {v} = {pts[-1][0]} THEN {pts[-1][1]}")
+    return F.expr(f"CASE {' '.join(whens)} ELSE CAST(NULL AS DOUBLE) END")

@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.sources.readers import local_table
+
 _INTERNAL_COLS = {
     "_tid", "t_time", "t_lat", "t_lon", "c_lat", "c_lon", "corner", "_c", "_gv",
     "_lat_lo", "_lat_hi", "_lon_lo", "_lon_hi", "_vlolo", "_vlohi", "_vhilo", "_vhihi",
@@ -42,8 +44,8 @@ def _interval_table(spark, axis: list[float], lo_name: str, hi_name: str):
     rows = [
         (axis[i], axis[i + 1], i == len(axis) - 2) for i in range(len(axis) - 1)
     ]
-    return spark.createDataFrame(
-        rows, f"{lo_name} double, {hi_name} double, _last boolean"
+    return local_table(
+        spark, rows, f"{lo_name} double, {hi_name} double, _last boolean"
     )
 
 

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from pygeoapi_ingestor_spark.sources.readers import local_table
+
 
 def _safe_denom(x: Column) -> Column:
     """Cosine denominator guard: a zero-norm vector (an empty document's
@@ -643,8 +645,9 @@ def _empty_topk(embeddings, queries, id_col, query_id_col):
     spark = embeddings.sparkSession
     qid_t = dict(queries.dtypes)[query_id_col]
     id_t = dict(embeddings.dtypes)[id_col]
-    return spark.createDataFrame(
-        [], f"query_id {qid_t}, neighbor_id {id_t}, cosine double, rank int"
+    return local_table(
+        spark, [],
+        f"query_id {qid_t}, neighbor_id {id_t}, cosine double, rank int",
     )
 
 
@@ -1050,7 +1053,8 @@ CENTROID_INLINE_MAX = 64
 
 
 def _cents_table(spark, cents) -> DataFrame:
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [([(int(cid), [int(x) for x in cv]) for cid, cv in cents],)],
         "_cents array<struct<cid:int,cvec:array<int>>>",
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.sources.readers import local_table
+
 
 def bbox_filter(
     df: DataFrame,
@@ -85,9 +87,9 @@ def polygon_edges_rows(polygons: dict[str, list[tuple[float, float]]]) -> list[t
 
     The ring closes implicitly (last vertex connects back to the first).
     This row shape is the engine-neutral at-rest form of a basin geometry
-    table: both Spark (``createDataFrame``) and an external SQL oracle
-    (``VALUES``) embed the identical float literals, so the crossing
-    parity below is bit-identical across engines.
+    table: both Spark (``sources.readers.local_table``) and an external
+    SQL oracle (``VALUES``) embed the identical float literals, so the
+    crossing parity below is bit-identical across engines.
     """
     rows: list[tuple] = []
     for zone, ring in polygons.items():
@@ -307,8 +309,8 @@ def dissolve_regions(
         # to (and the label the SQL oracle reproduces)
         seen = {n for e in edges for n in e}
         mapping = [(int(n), int(_find(n))) for n in seen]
-        comp = runs.sparkSession.createDataFrame(
-            mapping, schema="node long, comp long"
+        comp = local_table(
+            runs.sparkSession, mapping, "node long, comp long"
         )
         comp = F.broadcast(comp)
     else:

@@ -19,6 +19,7 @@ from pygeoapi_ingestor_spark.plans.queries_tpch import (
     _revenue_sum,
     _t,
 )
+from pygeoapi_ingestor_spark.sources.readers import local_table
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -414,8 +415,9 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygeoapi_ingestor_spark.sources.readers import read_events
 
     ev = read_events(spark, sf_dir)
-    win = spark.createDataFrame(
-        MAINTENANCE_WINDOWS, "window_id int, w_start string, w_end string"
+    win = local_table(
+        spark, MAINTENANCE_WINDOWS,
+        "window_id int, w_start string, w_end string",
     ).select(
         "window_id",
         F.col("w_start").cast("timestamp").alias("w_start"),

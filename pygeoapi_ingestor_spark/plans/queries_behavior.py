@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from pygeoapi_ingestor_spark.operators import temporal
 from pygeoapi_ingestor_spark.operators.temporal import micros_between
-from pygeoapi_ingestor_spark.sources.readers import read_events
+from pygeoapi_ingestor_spark.sources.readers import local_table, read_events
 
 SESSION_GAP_S = 1800
 MAD_K = 3.0
@@ -162,8 +162,8 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         adev = sorted((abs(v - med), c) for v, c in lst)
         mad = interp_median(adev, n)
         rows.append((et, med, mad))
-    mm = spark.createDataFrame(
-        rows, "event_type string, _med double, _mad double"
+    mm = local_table(
+        spark, rows, "event_type string, _med double, _mad double"
     )
     return (
         ev.join(F.broadcast(mm), "event_type")

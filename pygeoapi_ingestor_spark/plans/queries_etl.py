@@ -18,7 +18,11 @@ from pygeoapi_ingestor_spark.operators import (
     thresholds,
     zonal,
 )
-from pygeoapi_ingestor_spark.sources.readers import read_events as _events, read_table
+from pygeoapi_ingestor_spark.sources.readers import (
+    local_table,
+    read_events as _events,
+    read_table,
+)
 
 # stage -> discharge rating-curve points (public-shape lookup table, spans
 # the events value range 0..500)
@@ -505,8 +509,8 @@ def q_bias_correction_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = ev.filter(F.col("event_type") == "error").select(
         "event_id", "value", F.hour("ts").cast("int").alias("lead_hour")
     )
-    curve = spark.createDataFrame(
-        CORRECTION_CURVES, "lead_hour int, x double, y double"
+    curve = local_table(
+        spark, CORRECTION_CURVES, "lead_hour int, x double, y double"
     )
     out = correction.apply_curve_table(
         model, curve, series_cols=["lead_hour"], x_col="x", y_col="y",
@@ -1380,7 +1384,7 @@ def _spline_params() -> list[tuple]:
     degree k, dmin/dmax per (variable, init, lead)). Clamped cubic over
     [50, 450] (inside the 0..500 value range, so BOTH constant-adjust
     tails are exercised), strictly increasing interior knots. Plain
-    Python floats: Spark's createDataFrame and the oracle's VALUES parse
+    Python floats: Spark's local_table and the oracle's VALUES parse
     the identical doubles."""
     rows = []
     for h in range(24):
@@ -1412,7 +1416,8 @@ def q_bias_correction_spline(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = ev.filter(F.col("event_type") == "error").select(
         "event_id", "value", F.hour("ts").cast("int").alias("lead_hour")
     )
-    params = spark.createDataFrame(
+    params = local_table(
+        spark,
         SPLINE_PARAMS,
         "lead_hour int, t array<double>, c array<double>, dmin double, dmax double",
     )
@@ -1647,7 +1652,8 @@ def q_zonal_stats_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(-10.0) + (F.col("id") % 10) * F.lit(2.5)).alias("lon"),
         (F.lit(35.0) + (F.col("id") / 10).cast("int") * F.lit(1.5)).alias("lat"),
     )
-    edges = spark.createDataFrame(
+    edges = local_table(
+        spark,
         spatial.polygon_edges_rows(ZONAL_POLYGONS),
         "zone string, x1 double, y1 double, x2 double, y2 double",
     )
@@ -3483,8 +3489,11 @@ def q_area_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights join via broadcast.
     """
     ev = _events(spark, sf_dir)
-    bands = spark.createDataFrame(
-        [(li, lat, w) for li, lat, w in AW_LAT_BANDS], "li int, lat double, w string"
+    bands = local_table(
+        spark,
+        # w as the oracle's own 9-place text, cast to the same decimal
+        [(li, lat, f"{w:.9f}") for li, lat, w in AW_LAT_BANDS],
+        "li int, lat double, w string",
     ).select("li", "lat", F.col("w").cast("decimal(10,9)").alias("w"))
     pts = ev.select(
         F.col("ts").cast("date").alias("day"),
@@ -4291,8 +4300,8 @@ def q_pet_hargreaves(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("t_min"),
         F.count(F.lit(1)).cast("bigint").alias("n_obs"),
     )
-    ra = spark.createDataFrame(
-        [(li, v) for li, v in RA_LAT_BANDS], "li int, ra double"
+    ra = local_table(
+        spark, [(li, v) for li, v in RA_LAT_BANDS], "li int, ra double"
     )
     out = daily.join(F.broadcast(ra), "li")
     pet = (
@@ -4569,8 +4578,8 @@ def q_pet_knmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     get_Re/calc_PET; numpy where → WHEN, scalar Re lookup → broadcast
     (month, day) equi-join)."""
     ta = _knmi_daily_ta(spark, sf_dir)
-    re = spark.createDataFrame(
-        KNMI_RE_TABLE, "m int, d int, re double"
+    re = local_table(
+        spark, KNMI_RE_TABLE, "m int, d int, re double"
     )
     out = ta.join(
         F.broadcast(re),
@@ -4622,7 +4631,7 @@ def q_pet_deficit_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ta = _knmi_daily_ta(spark, sf_dir)
-    re = spark.createDataFrame(KNMI_RE_TABLE, "m int, d int, re double")
+    re = local_table(spark, KNMI_RE_TABLE, "m int, d int, re double")
     pet = ta.join(
         F.broadcast(re),
         (F.month("day") == F.col("m")) & (F.dayofmonth("day") == F.col("d")),
@@ -5093,7 +5102,7 @@ def q_bias_correction_parametric(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen projection; hash-oracled end to end."""
     ev = _events(spark, sf_dir)
     fact = _qm_fact(ev, F.col("value") - 273.15, "value_c")
-    params = spark.createDataFrame(QM_NORMAL_PARAMS, _QM_KEY_SCHEMA_N)
+    params = local_table(spark, QM_NORMAL_PARAMS, _QM_KEY_SCHEMA_N)
     out = correction.parametric_normal_map(
         fact, params, ["leadtime", "station"], "value_c"
     )
@@ -5111,7 +5120,7 @@ def q_bias_correction_parametric_gamma(spark: SparkSession, sf_dir: str) -> Data
     incomplete gamma; property-tested like the SPI family)."""
     ev = _events(spark, sf_dir)
     fact = _qm_fact(ev, F.col("value"), "value")
-    params = spark.createDataFrame(QM_GAMMA_PARAMS, _QM_KEY_SCHEMA_G)
+    params = local_table(spark, QM_GAMMA_PARAMS, _QM_KEY_SCHEMA_G)
     out = correction.parametric_gamma_map(
         fact, params, ["leadtime", "station"], "value"
     )
@@ -5139,7 +5148,7 @@ def q_bias_correction_parametric_tp(spark: SparkSession, sf_dir: str) -> DataFra
         .withColumn("daily_mm", (F.col("value") - F.col("_prev")) * 1000.0)
     )
     fact = _qm_fact(daily, F.col("daily_mm"), "daily_mm")
-    params = spark.createDataFrame(QM_TP_PARAMS, _QM_KEY_SCHEMA_G)
+    params = local_table(spark, QM_TP_PARAMS, _QM_KEY_SCHEMA_G)
     out = correction.parametric_gamma_map(
         fact, params, ["leadtime", "station"], "daily_mm"
     )

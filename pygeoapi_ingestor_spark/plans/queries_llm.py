@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pygeoapi_ingestor_spark.functions.storage import corpus_artifact
 from pygeoapi_ingestor_spark.operators import dedup, multimodal, similarity, text
 from pygeoapi_ingestor_spark.sources.readers import (
+    local_table,
     read_documents as _docs,
     read_embeddings as _emb,
 )
@@ -3635,7 +3636,8 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qp = quantize_int8_np(qv)[0] @ w_np.T
     qids = [int(r[0]) for r, o in zip(qrows, ok) if o]
-    pq = spark.createDataFrame(
+    pq = local_table(
+        spark,
         [(qid, *[int(x) for x in qp[i]]) for i, qid in enumerate(qids)],
         "query_id bigint, " + ", ".join(
             f"q{p} bigint" for p in range(RP_PLANES)

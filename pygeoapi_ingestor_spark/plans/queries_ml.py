@@ -26,6 +26,7 @@ from pygeoapi_ingestor_spark.operators import (
     text,
 )
 from pygeoapi_ingestor_spark.sources.readers import (
+    local_table,
     read_documents as _docs,
     read_embeddings as _emb,
     read_events as _events,
@@ -66,7 +67,8 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float(int) is correctly rounded — matches DuckDB CAST(HUGEINT AS
     # DOUBLE); dividing the two doubles is then the identical IEEE op
     num_d, den_d = float(num), float(den or 1)
-    out = spark.createDataFrame(
+    out = local_table(
+        spark,
         [(j + 1, int(v[j])) for j in range(PCA_DIM)],
         "component int, loading long",
     )

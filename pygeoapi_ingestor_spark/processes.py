@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pygeoapi_ingestor_spark.sinks.collections import (
     CollectionCatalog,
     compute_extents,
+    parquet_read_schema,
     write_collection,
 )
 
@@ -114,12 +115,19 @@ class IngestProcess:
             write_collection(result, self.out_path, partition_by=self.partition_by)
             # aggregate the WRITTEN data: avoids re-running the whole
             # fetch+transform lineage and guarantees the registered
-            # extents describe exactly what landed on disk
-            written = spark.read.parquet(self.out_path)
+            # extents describe exactly what landed on disk. Its schema
+            # is known without an inference job, except for partition
+            # columns, whose types a read infers from directory names.
+            reader = spark.read
+            if not self.partition_by:
+                reader = reader.schema(parquet_read_schema(result.schema))
+            written = reader.parquet(self.out_path)
             extents = compute_extents(
                 written, ts_col=self.ts_col, value_cols=self.value_cols
             )
-            self.catalog.register(self.collection_id, self.out_path, extents)
+            self.catalog.register(
+                self.collection_id, self.out_path, extents, schema=written.schema
+            )
             return ProcessResult(OK, self.collection_id, "ingested", extents)
         except ProcessorExecuteError:
             raise

@@ -137,11 +137,66 @@ def spread_if_narrow(df):
     partition and would serialize any all-pairs / heavy-projection
     stage on one thread, while a production input with thousands of
     partitions must keep its partitioning (no gratuitous full-data
-    shuffle, no parallelism collapse)."""
+    shuffle, no parallelism collapse).
+
+    Decides without a Spark job where it can (``_narrow_partitions``):
+    ``df.rdd.getNumPartitions()`` makes AQE execute every broadcast
+    stage of the plan during the build, and the action then runs it
+    again. Only a plan with a shuffle on its streamed path falls back
+    to that count."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    n = _narrow_partitions(df._jdf.queryExecution().sparkPlan())
+    if n is None:
+        n = df.rdd.getNumPartitions()
+    if n < par:
         return df.repartition(par)
     return df
+
+
+# leaves whose ``execute()`` only builds an RDD: no job, no file read
+_RDD_LEAVES = ("LocalTableScanExec", "RDDScanExec", "RangeExec")
+# broadcast joins whose output rows all come from the streamed side's
+# partitions, by (join type, build side)
+_STREAMED_JOINS = {
+    ("Inner", "BuildLeft"), ("Inner", "BuildRight"),
+    ("Cross", "BuildLeft"), ("Cross", "BuildRight"),
+    ("LeftOuter", "BuildRight"), ("LeftSemi", "BuildRight"),
+    ("LeftAnti", "BuildRight"), ("RightOuter", "BuildLeft"),
+}
+
+
+def _narrow_partitions(plan) -> int | None:
+    """The output partition count of a physical plan (the pre-AQE
+    ``sparkPlan``) whose streamed path from root to leaf is narrow: the
+    streamed leaf's count, which a narrow operator and the streamed side
+    of a broadcast join keep. None when an operator on that path
+    repartitions or needs a distribution (a shuffle's post-AQE count is
+    only known by running it) or the leaf is of another kind. A file
+    scan's splits come from the file listing, so no job runs."""
+    while True:
+        name = plan.getClass().getSimpleName()
+        kids = plan.children()
+        if kids.size() == 0:
+            if name == "FileSourceScanExec":
+                return plan.inputRDD().getNumPartitions()
+            if name in _RDD_LEAVES:
+                return plan.execute().getNumPartitions()
+            return None
+        if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
+            side = plan.buildSide().toString()
+            if (plan.joinType().toString(), side) not in _STREAMED_JOINS:
+                return None
+            plan = kids.apply(1 if side == "BuildLeft" else 0)
+            continue
+        if kids.size() != 1 or "Exchange" in name:
+            return None
+        child = kids.apply(0)
+        dist = plan.requiredChildDistribution().apply(0)
+        if dist.getClass().getSimpleName() != "UnspecifiedDistribution$" or not (
+            plan.outputPartitioning().equals(child.outputPartitioning())
+        ):
+            return None
+        plan = child
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:

@@ -11,6 +11,11 @@ predicate-pushdown-friendly — the tabular analog of chunked ZARR), and
 the catalog is a JSON registry whose extents are computed with one
 aggregate over the data. At 100 TB the partition columns (e.g.
 date(ts)) give partition pruning on every time-sliced query.
+
+A catalog entry also stores the schema the collection was written
+with, and readers of a published collection (``ProcessAPI.items``, the
+ingest's own extents read) pass it to ``.schema()``: a parquet read
+without one runs a schema-inference job first.
 """
 
 from __future__ import annotations
@@ -22,6 +27,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+# data path -> the catalog file that last registered it (this process)
+_PUBLISHERS: dict[str, str] = {}
 
 
 def atomic_dir_swap(jvm, fs, path: str, tmp: str, bak: str, label: str) -> None:
@@ -55,6 +64,24 @@ def write_collection(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def parquet_read_schema(dt: DataType) -> DataType:
+    """The schema a parquet read reports for data written as ``dt``:
+    the same types with every field, element and map value nullable
+    (Spark reads any file source ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, parquet_read_schema(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(parquet_read_schema(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            parquet_read_schema(dt.keyType), parquet_read_schema(dt.valueType), True
+        )
+    return dt
 
 
 def write_bucketed(
@@ -302,7 +329,11 @@ class CollectionCatalog:
         extents: dict[str, Any],
         provider: str = "parquet",
         description: str = "",
+        schema: StructType | None = None,
     ) -> dict:
+        """Register (or replace) a collection entry. ``schema`` is the
+        schema a read of ``data_path`` reports; readers of the published
+        collection use it instead of inferring one (``published_schema``)."""
         entry = {
             "type": "collection",
             "title": collection_id,
@@ -310,10 +341,13 @@ class CollectionCatalog:
             "extents": extents,
             "providers": [{"type": "feature", "name": provider, "data": data_path}],
         }
+        if schema is not None:
+            entry["schema"] = schema.jsonValue()
         with self._locked():
             cfg = self._load()
             cfg["resources"][collection_id] = entry
             self._save(cfg)
+        _PUBLISHERS[data_path] = self.catalog_path
         return entry
 
     def exists(self, collection_id: str) -> bool:
@@ -333,6 +367,20 @@ class CollectionCatalog:
             except Exception as e:  # unreadable path -> unhealthy, not fatal
                 report.append({"id": cid, "ok": False, "error": str(e)[:200]})
         return report
+
+
+def published_schema(data_path: str) -> StructType | None:
+    """The schema stored with the catalog entry that last published
+    ``data_path`` in this process, or None: for a path no catalog here
+    registered, and for an entry registered without one (the reader
+    then infers)."""
+    catalog_path = _PUBLISHERS.get(data_path)
+    if catalog_path is None:
+        return None
+    for entry in CollectionCatalog(catalog_path)._load()["resources"].values():
+        if entry["providers"][0]["data"] == data_path and "schema" in entry:
+            return StructType.fromJson(entry["schema"])
+    return None
 
 
 def write_zordered(

@@ -1,4 +1,4 @@
-"""Parquet readers with schema normalization.
+"""Parquet readers with schema normalization, and literal tables.
 
 Some tables (events) are written with nanosecond timestamps, which
 Spark's parquet reader rejects by default. ``read_table`` inspects the
@@ -13,15 +13,34 @@ The footer check is what keeps the session-level ``nanosAsLong`` flag
 safe: every read through this module rebuilds ANY ns column it
 encounters, so a later ns-typed parquet can't silently surface as
 bigint just because an earlier ``read_events`` flipped the flag.
+
+Reads start no Spark job: without a schema, ``spark.read.parquet``
+runs a schema-inference job per call. ``read_table`` runs the footer
+check and the inference once per path and generation and then reads
+with ``.schema()``; the schemas are per-generation state of
+``functions.storage`` (``table_schema``), so a corpus switch drops
+them. The ``nanosAsLong`` conf is still set on every ns read.
+
+``local_table`` builds every literal table of the package (rating
+curves, parameter tables, driver-side summaries): a ``pyarrow.Table``
+handed to ``createDataFrame`` plans a JVM ``LocalRelation``. A Python
+list would plan a ``LogicalRDD`` over a PythonRDD, which pickles the
+rows and runs Python worker tasks on every execution.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
+
+from pygeoapi_ingestor_spark.functions.storage import table_schema
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _ns_timestamp_cols(path: str) -> list[str]:
@@ -47,22 +66,52 @@ def _ns_timestamp_cols(path: str) -> list[str]:
     ]
 
 
+def _infer(spark: SparkSession, path: str) -> tuple[list[str], StructType]:
+    ns_cols = _ns_timestamp_cols(path)
+    if ns_cols:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return ns_cols, spark.read.parquet(path).schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _ns_timestamp_cols(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    # session-level side effect by design: the conf must remain true when
-    # the (lazy) scan executes, so it cannot be restored after this call.
-    # Safe because every reader in this module rebuilds ns columns found
-    # in the footer rather than trusting surfaced dtypes.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    dtypes = dict(df.dtypes)
+    ns_cols, schema = table_schema(spark, sf_dir, path, lambda: _infer(spark, path))
+    if ns_cols:
+        # session-level side effect by design: the conf must remain true
+        # when the (lazy) scan executes, so it cannot be restored after
+        # this call. Safe because every reader in this module rebuilds
+        # ns columns found in the footer rather than trusting surfaced
+        # dtypes.
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
-        if dtypes.get(c) == "bigint":
+        if isinstance(schema[c].dataType, LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples, dicts or Rows) as
+    a ``LocalRelation``: no PythonRDD, no pickling, no Python worker.
+    ``schema`` is a StructType or a DDL string; nullability is kept as
+    declared. Values go through ``schema.toInternal`` first, the
+    conversion ``createDataFrame`` applies to a list, so timestamps and
+    dates land on the same instants and days."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    cols = zip(*internal) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

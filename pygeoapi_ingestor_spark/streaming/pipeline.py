@@ -244,7 +244,8 @@ def run_to_collection(
         # missing/unreadable-plan path should surface, not skip silently)
         return q
     catalog.register(
-        collection_id, out_path, compute_extents(written, ts_col=ts_col)
+        collection_id, out_path, compute_extents(written, ts_col=ts_col),
+        schema=written.schema,
     )
     return q
 
