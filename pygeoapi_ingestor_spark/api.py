@@ -179,6 +179,7 @@ class ProcessAPI:
                 df = df.filter(F.col(k) == F.lit(v))
         matched = df.count() if count_matched else None
         limit = max(0, min(int(limit), MAX_SAMPLE_ROWS))
+        offset = max(0, int(offset))
         page = df
         if after is not None:
             if sort_col is None:
@@ -189,14 +190,14 @@ class ProcessAPI:
         if sort_col is not None:
             page = page.orderBy(sort_col)
         if offset and after is None:
-            page = page.offset(int(offset))
+            page = page.offset(offset)
         collected = page.limit(limit).collect()
         rows = [_json_safe(r.asDict(recursive=True)) for r in collected]
         out = {
             "type": "items",
             "numberReturned": len(rows),
             "features": rows,
-            "offset": int(offset),
+            "offset": offset,
         }
         if sort_col is not None and collected:
             # typed lossless cursor: json.dumps(response) must work even

@@ -2,23 +2,11 @@
 (utils.py:41-46 ``string_to_int_id`` / ``int_id_to_string`` — big-endian
 bytes of the station name as an integer; arpae's GeoJSON features use it
 when no explicit station id exists, rer_river_discharge_arpae_process.py
-:486).
-
-Two forms:
-- the exact Python pair (driver-side, arbitrary length — what the
-  reference runs per feature), and
-- a Spark expression for DISTRIBUTED id assignment, which returns the
-  same value as ``string_to_int_id`` for names up to 7 bytes (bigint
-  range) and NULL beyond — the documented contract: the expression is
-  for wide fact-side stamping where ids must be a fixed-width column;
-  longer names keep the driver-side exact codec (station dimensions are
-  small by definition).
+:486). Plain Python, exact for any length, as the reference runs it
+per feature.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def string_to_int_id(s: str) -> int:
@@ -29,18 +17,3 @@ def string_to_int_id(s: str) -> int:
 def int_id_to_string(i: int) -> str:
     """Exact reference inverse (utils.py:45-46)."""
     return i.to_bytes((i.bit_length() + 7) // 8, "big").decode()
-
-
-def string_id_expr(col: str | Column) -> Column:
-    """Distributed big-endian byte id: identical to ``string_to_int_id``
-    for UTF-8 names of <= 7 bytes, NULL for longer names (a bigint
-    holds 8 big-endian bytes only when the top bit is clear; 7 bytes is
-    the always-safe width). ``conv(hex(name), 16, 10)`` stays JVM-side
-    — a pure projection, usable on the fact path."""
-    c = F.col(col) if isinstance(col, str) else col
-    # conv(hex(''), 16, 10) is NULL in Spark while the reference codec
-    # maps '' -> 0 (int.from_bytes(b'') == 0) — coalesce keeps parity
-    return F.when(
-        F.octet_length(c) <= 7,
-        F.coalesce(F.conv(F.hex(c), 16, 10).cast("long"), F.lit(0).cast("long")),
-    ).otherwise(F.lit(None).cast("long"))

@@ -15,7 +15,7 @@ joins where one side has pathological key concentration.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _ALGEBRAIC = {"sum", "count", "min", "max"}
@@ -94,15 +94,3 @@ def salt_join(
     ).withColumn("_salt", F.col("_salt").cast("int"))
     out = big_s.join(small_s, [*on, "_salt"], how)
     return out.drop("_salt")
-
-
-def key_skew_profile(df: DataFrame, key_cols: list[str], top_n: int = 10) -> DataFrame:
-    """Diagnostic: per-key row counts for the heaviest keys plus their
-    share of the table — what you check before choosing a strategy."""
-    counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_rows"))
-    total = df.count()
-    return (
-        counts.withColumn("share", F.col("n_rows") / F.lit(float(total)))
-        .orderBy(F.col("n_rows").desc())
-        .limit(top_n)
-    )

@@ -1355,60 +1355,3 @@ def ppjoin_pairs(
             F.round("jaccard", 6).alias("jaccard"),
         )
     )
-
-
-def bloom_prescreen(
-    batch: DataFrame,
-    reference: DataFrame,
-    batch_col: str,
-    ref_col: str,
-    expected_items: int = 1_000_000,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Bloom-filter pre-screen for cross-corpus membership, built from
-    first principles on xxhash64 (Spark's ``bloom_filter_agg`` is an
-    optimizer-internal function, not user-callable): the reference keys
-    map to k = m/n·ln2 bit positions in an m-bit space; the SET
-    positions live as a distinct-position table (bounded by m bits /
-    k·|ref|, whichever is smaller), and a batch row "might match" iff
-    ALL k of its positions are set — verified with one explode +
-    left-semi join + count, fully distributed (no driver bitmap).
-
-    No false negatives by construction; the survivor set still needs
-    the exact join to drop false positives. At 100 TB the definite
-    non-members (most of a fresh crawl) never reach the exact
-    anti-join's shuffle. Adds ``_might_match``.
-    """
-    import math
-
-    m = max(64, int(-expected_items * math.log(fpp) / (math.log(2) ** 2)))
-    k = max(1, round(m / expected_items * math.log(2)))
-
-    def positions(col):
-        return F.array(
-            *[
-                F.pmod(F.xxhash64(col, F.lit(i)), F.lit(m)).cast("long")
-                for i in range(k)
-            ]
-        )
-
-    set_bits = (
-        reference.select(F.explode(positions(F.col(ref_col))).alias("_pos"))
-        .distinct()
-    )
-    # probe DISTINCT keys: duplicated batch keys would multiply their
-    # surviving probe rows and could clear the >= k bar with fewer than
-    # k distinct set positions (a needless extra false positive)
-    probes = batch.select(F.col(batch_col).alias("_key")).distinct().select(
-        "_key", F.explode(positions(F.col("_key"))).alias("_pos")
-    )
-    hit_counts = (
-        probes.join(set_bits, "_pos", "left_semi")
-        .groupBy("_key")
-        .agg(F.count(F.lit(1)).alias("_hits"))
-        .filter(F.col("_hits") >= k)
-        .select(F.col("_key"), F.lit(True).alias("_might_match"))
-    )
-    return batch.join(
-        hit_counts, batch[batch_col] == hit_counts["_key"], "left"
-    ).drop("_key").fillna({"_might_match": False})

@@ -8,8 +8,7 @@ stages. Two decode paths coexist:
   library-free runtime can honestly parse: PNM images (P2/P3/P5/P6),
   uncompressed 24/32-bit BMP, PCM WAV audio, and a minimal ``PPMV``
   multi-frame video container (concatenated P6 frames). Includes true
-  pixel access (``decode_image_pixels``) and a nearest-neighbor
-  ``resize_image`` that re-encodes real bytes. Formats needing heavy
+  pixel access (``decode_image_pixels``). Formats needing heavy
   codec libraries (JPEG/PNG/MP4) raise ``ValueError`` — wire PIL/libav
   into the same hook on a cluster that has them.
 - ``decode_stub`` — a deterministic fake (dimensions from the payload
@@ -228,27 +227,10 @@ def decode_image_pixels(payload: bytes) -> tuple[int, int, bytes]:
 
 def encode_ppm(width: int, height: int, rgb: bytes) -> bytes:
     """Pack RGB triples as a binary P6 PPM — the write half of the
-    stdlib codec (what ``resize_image`` re-encodes to)."""
+    stdlib codec."""
     if len(rgb) != width * height * 3:
         raise ValueError("rgb buffer does not match geometry")
     return b"P6\n%d %d\n255\n" % (width, height) + rgb
-
-
-def resize_image(payload: bytes, target: int) -> bytes:
-    """Real nearest-neighbor resize: decode pixels, sample to the
-    aspect-preserving target geometry (same formula as ``resize_stub``,
-    so the two paths always agree on dimensions), re-encode as P6."""
-    w, h, rgb = decode_image_pixels(payload)
-    nw, nh = resize_stub(payload, w, h, target)
-    out = bytearray(nw * nh * 3)
-    for y in range(nh):
-        sy = min(h - 1, (y * h) // nh)
-        for x in range(nw):
-            sx = min(w - 1, (x * w) // nw)
-            si = (sy * w + sx) * 3
-            di = (y * nw + x) * 3
-            out[di : di + 3] = rgb[si : si + 3]
-    return encode_ppm(nw, nh, bytes(out))
 
 
 def image_mean_rgb(payload: bytes) -> tuple[float, float, float]:

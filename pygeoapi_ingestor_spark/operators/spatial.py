@@ -1,5 +1,5 @@
-"""Spatial primitives for gridded/point data: bbox slicing, grid-cell
-ids, and cell-partitioned aggregation.
+"""Spatial primitives for gridded/point data: bbox slicing and grid-cell
+ids.
 
 Reference semantics:
 - bbox selection: utils_spi.py:38-45 + ``sel``/``rio.clip`` slicing of
@@ -8,8 +8,7 @@ Reference semantics:
   (Morton) cell id that keeps spatially-near rows in the same partition
   range — the at-rest layout that makes bbox queries prune at 100 TB.
 
-All pure column expressions; no UDFs, no shuffles beyond the explicit
-cell aggregation.
+No UDFs: column expressions, joins and aggregates only.
 """
 
 from __future__ import annotations
@@ -153,26 +152,6 @@ def polygon_membership(
         .agg(F.sum(crossing_expr(lon, lat)).alias("_crossings"))
         .filter(F.col("_crossings") % 2 == 1)
         .drop("_crossings")
-    )
-
-
-def cell_aggregate(
-    df: DataFrame,
-    value_col: str,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    bits_per_axis: int = 8,
-) -> DataFrame:
-    """Aggregate a point/grid field per Z-order cell (spatial rollup —
-    the tabular analog of coarsening a raster)."""
-    cell = morton_cell(lon_col, lat_col, bits_per_axis).alias("cell_id")
-    return df.groupBy(cell).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.avg(value_col).alias("cell_mean"),
-        F.min(value_col).alias("cell_min"),
-        F.max(value_col).alias("cell_max"),
-        F.avg(lon_col).alias("centroid_lon"),
-        F.avg(lat_col).alias("centroid_lat"),
     )
 
 

@@ -30,7 +30,7 @@ dedup/quality machinery the earlier rounds built:
   the diversity downsample.
 - ``bloom_fp_eval`` — md5-Bloom filter over reference fingerprints
   probed by a fresh slice: observed FP rate, zero-miss invariant,
-  load factor (the oracled twin of dedup.bloom_prescreen).
+  load factor.
 - ``hll_union_eval`` — from-first-principles md5 HyperLogLog per
   event_type plus the register-wise-max merged row: the oracled twin
   of approx_distinct_users, pinning the mergeable-sketch estimate
@@ -933,9 +933,8 @@ def q_bloom_fp_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     against exact membership — observed FP rate, the structurally-zero
     miss count (no false negatives, pinned by test), and the bit-space
     load factor that tells you when m is too small for the corpus.
-    The engine-neutral twin of dedup.bloom_prescreen (which uses
-    xxhash64 and is tests-only): here every bit position is md5-derived
-    so the DuckDB oracle replays the filter bit-for-bit.
+    Every bit position is md5-derived so the DuckDB oracle replays the
+    filter bit-for-bit.
 
     Scale shape: the SET-bit table is bounded by m = {BLOOM_M} rows
     whatever the corpus (broadcast), the probe side is one projection +

@@ -4,8 +4,7 @@ Reference semantics re-expressed (SURVEY.md §2 D1/D2):
 - continuous ingestion of an append-only event stream (the reference's
   repeated cron pulls collapse into one readStream),
 - event-time windowed aggregation with a watermark for late data
-  (the reference's per-period recompute),
-- gap sessionization via ``session_window``.
+  (the reference's per-period recompute).
 
 All transforms are build-once: the same logical plan serves a file
 stream in tests and a Kafka/cloud-files stream in production — only the
@@ -50,16 +49,6 @@ def read_event_stream(
     return reader.load(path)
 
 
-def dedup_stream(
-    stream: DataFrame, key_cols: list[str] = ("event_id",), watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming idempotent-ingest: drop re-delivered records by key
-    within the watermark horizon (state is bounded by keys-per-horizon —
-    the streaming twin of the skip-if-exists checks in every reference
-    process)."""
-    return stream.withWatermark("ts", watermark).dropDuplicates(list(key_cols))
-
-
 def windowed_agg(
     stream: DataFrame,
     window_duration: str = "1 hour",
@@ -95,28 +84,6 @@ def windowed_agg(
             "total_value",
             "n_events",
             "avg_value",
-        )
-    )
-
-
-def session_agg(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap sessionization with ``session_window`` — the streaming twin of
-    operators.temporal.sessionize."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("session_value"),
-        )
-        .select(
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
         )
     )
 
@@ -208,9 +175,8 @@ def run_to_collection(
     restart), so a plain append would duplicate rows. Each batch lands
     under its own ``_batch=<id>`` partition directory via DYNAMIC
     partition overwrite — a replayed batch REPLACES its own directory
-    and nothing else, giving effectively-exactly-once output (the same
-    trick merge_into_partitioned uses for bucket rewrites). Readers see
-    a ``_batch`` partition column; drop it if unwanted.
+    and nothing else, giving effectively-exactly-once output. Readers
+    see a ``_batch`` partition column; drop it if unwanted.
 
     With ``availableNow`` this is one scheduler tick; with a continuous
     trigger the same query keeps the collection live.
@@ -262,53 +228,6 @@ def run_to_memory(result: DataFrame, name: str, mode: str = "append"):
     )
     q.awaitTermination()
     return q
-
-
-DOCUMENT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-
-def read_document_stream(
-    spark: SparkSession, path: str, fmt: str = "json", max_files_per_trigger: int = 10
-) -> DataFrame:
-    """File-source document stream — continuous corpus ingestion (new
-    crawl/dump drops appear as files; swap format for kafka/cloud files
-    in production)."""
-    return (
-        spark.readStream.format(fmt)
-        .schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(path)
-    )
-
-
-def document_quality_stream(
-    stream: DataFrame,
-    min_quality: float = 0.65,
-    scrub_patterns: dict[str, str] | None = None,
-) -> DataFrame:
-    """The LLM-corpus intake pipeline as one continuous query: language
-    ID + quality scoring + quality gate + PII/blocklist scrub, all pure
-    column expressions (operators/text.py), so the SAME transforms serve
-    batch and streaming — no state, no watermark needed (per-document
-    decisions only; cross-document stages like dedup run downstream on
-    the landed collection, see dedup_stream for the exact-key case)."""
-    from pygeoapi_ingestor_spark.operators import text
-
-    scored = text.quality_features(
-        text.lang_id(stream, text_col="text"), text_col="text"
-    )
-    gated = scored.filter(F.col("quality_score") >= min_quality)
-    scrubbed = text.scrub(gated, text_col="text", patterns=scrub_patterns)
-    keep = [c for c in scrubbed.columns if c not in ("text",)]
-    return scrubbed.select(*keep)
 
 
 def psi_baseline(df: DataFrame, value_col: str = "value", bins: int = 10,
@@ -375,6 +294,25 @@ def drift_monitor_stream(
     )
 
 
+def _atomic_dir_swap(jvm, fs, path: str, tmp: str, bak: str) -> None:
+    """Swap a fully-written sibling ``tmp`` directory in as ``path``:
+    rename live -> bak, tmp -> live, drop bak (restoring bak on a failed
+    swap), so a concurrent reader of a CDC snapshot always sees a
+    complete directory."""
+    live_p = jvm.org.apache.hadoop.fs.Path(path)
+    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
+    bak_p = jvm.org.apache.hadoop.fs.Path(bak)
+    if fs.exists(bak_p):
+        fs.delete(bak_p, True)
+    if fs.exists(live_p) and not fs.rename(live_p, bak_p):
+        raise IOError(f"cdc_upsert: could not move {path} aside")
+    if not fs.rename(tmp_p, live_p):
+        if fs.exists(bak_p):
+            fs.rename(bak_p, live_p)
+        raise IOError(f"cdc_upsert: could not swap in {path}")
+    fs.delete(bak_p, True)
+
+
 def cdc_upsert_stream(
     changes: DataFrame,
     snapshot_path: str,
@@ -392,8 +330,8 @@ def cdc_upsert_stream(
 
     Each micro-batch applies onto the CURRENT stored snapshot via
     apply_changes, rewrites to a sibling tmp dir, and atomically swaps
-    it in (rename old -> .bak, tmp -> path, drop .bak — the
-    compact_collection dance), so a concurrent reader always sees a
+    it in (rename old -> .bak, tmp -> path, drop .bak —
+    ``_atomic_dir_swap``), so a concurrent reader always sees a
     complete snapshot. Exactly-once comes from the checkpoint: a
     replayed batch re-applies the same changes, and MERGE is idempotent
     for identical input. Scale: the swap rewrites the snapshot per
@@ -419,9 +357,7 @@ def cdc_upsert_stream(
         tmp = snapshot_path.rstrip("/") + "._merge_tmp"
         bak = snapshot_path.rstrip("/") + "._merge_bak"
         merged.write.mode("overwrite").parquet(tmp)
-        from pygeoapi_ingestor_spark.sinks.collections import atomic_dir_swap
-
-        atomic_dir_swap(jvm, fs, snapshot_path, tmp, bak, "cdc_upsert")
+        _atomic_dir_swap(jvm, fs, snapshot_path, tmp, bak)
 
     q = (
         changes.writeStream.foreachBatch(write_batch)

@@ -84,6 +84,21 @@ def test_items_paging_filters_pushdown(spark, sf_dir, tmp_path):
     assert "IsNotNull(event_type)" in plan or "EqualTo(event_type" in plan
 
 
+def test_items_negative_offset_clamps_to_first_page(spark, sf_dir, tmp_path):
+    """A negative offset is clamped to 0 the way a bad limit is clamped,
+    instead of reaching Spark's OFFSET as an analysis error."""
+    from pygeoapi_ingestor_spark.sources.readers import read_events
+
+    api = ProcessAPI(default_sf_dir=sf_dir)
+    path = str(tmp_path / "coll")
+    read_events(spark, sf_dir).write.mode("overwrite").parquet(path)
+
+    kw = dict(sort_col="event_id", limit=5)
+    first = api.items(spark, path, offset=0, **kw)
+    assert api.items(spark, path, offset=-5, **kw) == first
+    assert first["numberReturned"] == 5
+
+
 def test_async_jobs_lifecycle(spark, sf_dir):
     from pygeoapi_ingestor_spark.api import JobManager, ProcessAPI
 

@@ -44,8 +44,6 @@ SITES = {
     # superseded generations freed per round; the final one is returned
     # to the caller (shared_dup_components, dissolve_regions' owner)
     "operators/dedup.py::connected_components": "FREED",
-    "sinks/collections.py::merge_into_partitioned": "FREED",
-    "sinks/incremental.py::update_rollup": "FREED",
 }
 EXEMPT: dict[str, str] = {}  # site -> one-line reason
 

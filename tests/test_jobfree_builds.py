@@ -19,6 +19,7 @@
 from __future__ import annotations
 
 import ast
+import gc
 import json
 import math
 import os
@@ -271,11 +272,17 @@ def test_rating_curve_expr_is_one_call_and_bit_identical(spark, table, clamp):
     points = getattr(queries_etl, table)
     client = spark.sparkContext._gateway._gateway_client
     send, calls = client.send_command, []
+    # py4j releases a collected JavaObject through send_command too: free
+    # earlier tests' cyclic garbage first and hold the collector off, so
+    # only the build's own calls are counted
+    gc.collect()
+    gc.disable()
     client.send_command = lambda *a, **k: calls.append(1) or send(*a, **k)
     try:
         new = interpolate_points_expr(points, "h", clamp_edges=clamp)
     finally:
         client.send_command = send
+        gc.enable()
     assert len(calls) < 20, len(calls)
 
     inputs = _probe_inputs(points)

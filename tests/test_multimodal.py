@@ -114,8 +114,7 @@ def test_wav_lying_data_size_clamped():
 
 def test_real_decode_pixel_roundtrip():
     """Pixel access is real: BMP(bottom-up, padded rows) and P6 decode
-    to the SAME RGB layout; resize_image samples true pixels and
-    re-decodes to the stub-agreed geometry; mean RGB is exact."""
+    to the SAME RGB layout; mean RGB is exact."""
     rgb = bytes((x * 11) % 256 for x in range(6 * 4 * 3))
     w, h, got = multimodal.decode_image_pixels(_bmp24(6, 4, rgb))
     assert (w, h, got) == (6, 4, rgb)
@@ -123,11 +122,7 @@ def test_real_decode_pixel_roundtrip():
     assert (w, h, got) == (6, 4, rgb)
 
     const = bytes([10, 200, 30]) * (16 * 8)
-    resized = multimodal.resize_image(multimodal.encode_ppm(16, 8, const), 4)
-    rw, rh, rpx = multimodal.decode_image_pixels(resized)
-    assert (rw, rh) == multimodal.resize_stub(b"", 16, 8, 4) == (4, 2)
-    assert rpx == bytes([10, 200, 30]) * (4 * 2)  # constant image stays constant
-    assert multimodal.image_mean_rgb(resized) == (10.0, 200.0, 30.0)
+    assert multimodal.image_mean_rgb(_ppm(16, 8, const)) == (10.0, 200.0, 30.0)
 
 
 def test_real_decode_distributed(spark):

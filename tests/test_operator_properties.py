@@ -407,34 +407,6 @@ def test_chunked_ewma_matches_pandas(spark, data, alpha):
         assert abs(got[rid] - want[rid]) < 1e-9, (rid, got[rid], want[rid])
 
 
-def test_bloom_prescreen_no_false_negatives_and_bounded_fp(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from pygeoapi_ingestor_spark.operators.dedup import bloom_prescreen
-    from pygeoapi_ingestor_spark.operators.text import fingerprint
-
-    docs = fingerprint(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), text_col="text"
-    ).select("doc_id", "fingerprint")
-    reference = docs.filter(F.col("doc_id") % 3 == 0)
-    batch = docs
-    screened = bloom_prescreen(
-        batch, reference, "fingerprint", "fingerprint",
-        expected_items=1000, fpp=0.05,
-    )
-    ref_fps = {r["fingerprint"] for r in reference.collect()}
-    rows = screened.collect()
-    true_members = [r for r in rows if r["fingerprint"] in ref_fps]
-    non_members = [r for r in rows if r["fingerprint"] not in ref_fps]
-    # Bloom guarantee: every true member survives the screen
-    assert all(r["_might_match"] for r in true_members)
-    # false-positive rate on non-members stays near the configured fpp
-    fp = sum(1 for r in non_members if r["_might_match"])
-    assert fp / max(1, len(non_members)) <= 0.15
-    # and the screen is actually selective
-    assert fp < len(non_members)
-
-
 @settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     deficits=st.lists(
@@ -470,37 +442,3 @@ def test_clamped_cumsum_closed_form_property(spark, deficits):
         cum = max(cum + d, 0.0)
         day = _dt.date(2024, 1, 1) + _dt.timedelta(days=i)
         assert abs(got[day] - cum) < 1e-9, (i, d, got[day], cum)
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    coords=st.lists(
-        st.tuples(
-            st.floats(-180.0, 180.0, allow_nan=False),
-            st.floats(-90.0, 90.0, allow_nan=False),
-        ),
-        min_size=1, max_size=20,
-    ),
-    bits=st.sampled_from([2, 3, 4]),
-)
-def test_chunk_quantizer_never_prunes_written_cells(spark, coords, bits):
-    """For ANY coordinate, the chunk written by spatial.morton_cell must
-    appear in the driver-side pruned cell list of a degenerate bbox at
-    that coordinate — the HALF_UP fix as a universal property, not one
-    boundary example."""
-    from pygeoapi_ingestor_spark.operators import spatial
-    from pygeoapi_ingestor_spark.sinks.collections import chunk_keys_for_bbox
-
-    df = spark.createDataFrame(coords, "lon double, lat double")
-    cells = [
-        r["c"]
-        for r in df.select(
-            spatial.morton_cell("lon", "lat", bits_per_axis=bits).alias("c")
-        ).collect()
-    ]
-    for (lon, lat), cell in zip(coords, cells):
-        _, pruned = chunk_keys_for_bbox(
-            (lon, lat, lon, lat), "2024-01-01", "2024-01-02",
-            chunk_days=7, bits_per_axis=bits,
-        )
-        assert cell in pruned, (lon, lat, bits, cell, pruned)

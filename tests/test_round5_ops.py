@@ -499,18 +499,17 @@ def test_axis_seconds_tz_uses_true_epoch(spark):
 
 
 def test_items_bbox_over_zordered_collection(spark, sf_dir, tmp_path):
-    """Close the loop the two components test individually: a bbox items
-    query over a write_zordered collection (a) answers correctly, (b)
-    pushes the lon/lat predicates into the parquet scan, and (c) the
-    Z-order layout makes per-file min/max stats SELECTIVE — only a
-    minority of files intersect a tight bbox, which is exactly what the
-    scan's row-group pruning keys on."""
+    """A bbox items query over a Z-ordered collection (range-partitioned
+    and sorted on the Morton cell id) (a) answers correctly, (b) pushes
+    the lon/lat predicates into the parquet scan, and (c) the layout
+    makes per-file min/max stats SELECTIVE — only a minority of files
+    intersect a tight bbox, which is exactly what the scan's row-group
+    pruning keys on."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from pygeoapi_ingestor_spark.api import ProcessAPI
-    from pygeoapi_ingestor_spark.operators.spatial import bbox_filter
-    from pygeoapi_ingestor_spark.sinks.collections import write_zordered
+    from pygeoapi_ingestor_spark.operators.spatial import bbox_filter, morton_cell
     from pygeoapi_ingestor_spark.sources.readers import read_events
 
     pts = read_events(spark, sf_dir).select(
@@ -522,7 +521,11 @@ def test_items_bbox_over_zordered_collection(spark, sf_dir, tmp_path):
         (((F.col("event_id") * 7) % 360) / F.lit(2.0) - F.lit(90.0)).alias("lat"),
     )
     path = str(tmp_path / "zcoll")
-    write_zordered(pts, path, n_files=8)
+    (
+        pts.repartitionByRange(8, morton_cell("lon", "lat"))
+        .sortWithinPartitions(morton_cell("lon", "lat"))
+        .write.mode("overwrite").parquet(path)
+    )
 
     bbox = (-60.0, -30.0, -30.0, 10.0)  # W, S, E, N — a tight window
     api = ProcessAPI(default_sf_dir=sf_dir)

@@ -181,212 +181,6 @@ def test_geojsonl_reader_roundtrip(spark, sf_dir, tmp_path):
         assert abs(r["value"] - o["value"]) < 1e-9
 
 
-def test_compact_collection_reduces_files(spark, sf_dir, tmp_path):
-    from pygeoapi_ingestor_spark.sinks.collections import compact_collection
-
-    path = str(tmp_path / "frag")
-    ev = spark.read.parquet(f"{sf_dir}/region.parquet")
-    # fragment: one file per row
-    ev.repartition(64).write.mode("overwrite").parquet(path)
-    before = sorted(
-        t for r in spark.read.parquet(path).collect() for t in [tuple(r)]
-    )
-    stats = compact_collection(spark, path, target_bytes=256 * 1024 * 1024)
-    after = sorted(
-        t for r in spark.read.parquet(path).collect() for t in [tuple(r)]
-    )
-    assert after == before
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] == 1
-    # tmp/bak directories cleaned up
-    import os
-    assert not os.path.exists(path + "._compact_tmp")
-    assert not os.path.exists(path + "._compact_bak")
-
-
-def test_write_zordered_clusters_files_disjointly(spark, tmp_path):
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    from pygeoapi_ingestor_spark.operators.spatial import morton_cell
-    from pygeoapi_ingestor_spark.sinks.collections import write_zordered
-
-    n = 2000
-    df = spark.range(n).select(
-        ((F.col("id") * 37 % 720) / 2.0 - 180.0).alias("lon"),
-        ((F.col("id") * 53 % 360) / 2.0 - 90.0).alias("lat"),
-        F.col("id").alias("payload"),
-    )
-    out = str(tmp_path / "zorder")
-    write_zordered(df, out, n_files=4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == n and set(back.columns) == {"lon", "lat", "payload"}
-
-    # per-file morton ranges must be (near-)disjoint: read each part file
-    # and check max(cell) of file i <= min(cell) of file i+1 when files
-    # are ordered by their min cell — the contiguity a bbox scan needs
-    ranges = []
-    for part in _glob.glob(out + "/part-*.parquet"):
-        pf = spark.read.parquet(part).select(
-            morton_cell("lon", "lat", 12).alias("c")
-        )
-        row = pf.agg(F.min("c").alias("lo"), F.max("c").alias("hi")).collect()[0]
-        ranges.append((row["lo"], row["hi"]))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping z-ranges: {(lo1,hi1)} vs {(lo2,hi2)}"
-
-
-def test_chunk_grid_layout_manifest_and_pruning(spark, sf_dir, tmp_path):
-    import json
-
-    from pygeoapi_ingestor_spark.sinks.collections import (
-        read_chunk,
-        write_chunk_grid,
-    )
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).select(
-        "event_id", "ts", "value",
-        ((F.col("event_id") % 5760) / F.lit(16.0) - F.lit(180.0)).alias("lon"),
-        ((F.col("user_id") % 2880) / F.lit(16.0) - F.lit(90.0)).alias("lat"),
-    )
-    out = str(tmp_path / "chunked")
-    manifest = write_chunk_grid(
-        ev, out, ts_col="ts", lon_col="lon", lat_col="lat",
-        chunk_days=7, bits_per_axis=2,
-    )
-    # manifest counts must cover every row exactly once
-    assert sum(manifest["chunks"].values()) == ev.count()
-    on_disk = json.load(open(f"{out}/_chunk_manifest.json"))
-    assert on_disk["chunks"] == {k: v for k, v in manifest["chunks"].items()}
-    # directory layout is partitioned by the chunk key
-    import os
-
-    tdirs = [d for d in os.listdir(out) if d.startswith("time_chunk=")]
-    assert tdirs
-    # chunk addressing prunes the scan to one partition directory
-    key = next(iter(manifest["chunks"]))
-    tc, cc = (int(x) for x in key.split("."))
-    one = read_chunk(spark, out, tc, cc)
-    assert one.count() == manifest["chunks"][key]
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # every row in the chunk belongs there (round-trip the chunk math)
-    row = one.select(F.min("time_chunk"), F.max("time_chunk")).first()
-    assert row[0] == tc and row[1] == tc
-
-
-def test_merge_into_partitioned_rewrites_only_touched_buckets(spark, sf_dir, tmp_path):
-    import os
-
-    from pygeoapi_ingestor_spark.operators.temporal import apply_changes
-    from pygeoapi_ingestor_spark.sinks.collections import merge_into_partitioned
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).limit(500)
-    base_feed = ev.select(
-        "user_id", "event_type", "ts", "event_id", "value", F.lit("U").alias("op")
-    )
-    snap = str(tmp_path / "merge_snap")
-    info = merge_into_partitioned(
-        base_feed, snap, ["user_id", "event_type"], ["ts", "event_id"], n_buckets=8
-    )
-    assert info["rows_written"] > 0
-
-    # record per-bucket file listings before the incremental merge
-    def listing(b):
-        d = f"{snap}/bucket={b}"
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        ) if os.path.isdir(d) else []
-
-    before = {b: listing(b) for b in range(8)}
-
-    # a small change batch: updates + deletes for THREE users' keys — at
-    # 8 buckets these hash into a strict subset, making pruning visible
-    three_users = [r["user_id"] for r in base_feed.select("user_id").distinct().limit(3).collect()]
-    changes = (
-        base_feed.filter(F.col("user_id").isin(three_users))
-        .withColumn("value", F.col("value") + 1000.0)
-        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-        .withColumn(
-            "op", F.when(F.col("user_id") % 5 == 0, "D").otherwise("U")
-        )
-    )
-    info2 = merge_into_partitioned(
-        changes, snap, ["user_id", "event_type"], ["ts", "event_id"], n_buckets=8
-    )
-    touched = set(info2["touched_buckets"])
-    assert touched and touched != set(range(8))  # genuinely partial
-
-    after = {b: listing(b) for b in range(8)}
-    for b in range(8):
-        if b not in touched:
-            assert after[b] == before[b], f"untouched bucket {b} was rewritten"
-
-    # parity with the unpartitioned MERGE over the same inputs
-    base_latest = spark.read.parquet(snap).drop("bucket")
-    expected = apply_changes(
-        merge_base := _rebuild_base(spark, base_feed),
-        changes,
-        ["user_id", "event_type"],
-        ["ts", "event_id"],
-    ).drop("src")
-    got = sorted(
-        (r["user_id"], r["event_type"], r["event_id"], round(r["value"], 3))
-        for r in base_latest.collect()
-    )
-    exp = sorted(
-        (r["user_id"], r["event_type"], r["event_id"], round(r["value"], 3))
-        for r in expected.collect()
-    )
-    assert got == exp
-
-
-def _rebuild_base(spark, base_feed):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        base_feed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "op")
-    )
-
-
-def test_merge_into_partitioned_drops_fully_deleted_bucket(spark, sf_dir, tmp_path):
-    import os
-
-    from pygeoapi_ingestor_spark.sinks.collections import merge_into_partitioned
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).limit(50)
-    feed = ev.select(
-        "user_id", "event_type", "ts", "event_id", "value", F.lit("U").alias("op")
-    )
-    snap = str(tmp_path / "merge_snap2")
-    merge_into_partitioned(
-        feed, snap, ["user_id", "event_type"], ["ts", "event_id"], n_buckets=4
-    )
-    # delete EVERYTHING: every touched bucket must disappear
-    deletes = feed.withColumn("op", F.lit("D")).withColumn(
-        "ts", F.col("ts") + F.expr("INTERVAL 1 HOUR")
-    )
-    merge_into_partitioned(
-        deletes, snap, ["user_id", "event_type"], ["ts", "event_id"], n_buckets=4
-    )
-    remaining = [d for d in os.listdir(snap) if d.startswith("bucket=")]
-    assert remaining == []
-
-
 def test_finalize_job_releases_persisted_artifacts(spark, sf_dir):
     from pygeoapi_ingestor_spark.plans import QUERIES
     from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
@@ -397,72 +191,6 @@ def test_finalize_job_releases_persisted_artifacts(spark, sf_dir):
     assert not jsc.getRDDStorageInfo() == ()  # artifact cached
     finalize_job(spark)
     assert jsc.getRDDStorageInfo() == () or len(jsc.getRDDStorageInfo()) == 0
-
-
-def test_incremental_rollup_matches_full_recompute(spark, sf_dir, tmp_path):
-    from pygeoapi_ingestor_spark.sinks.incremental import (
-        read_rollup,
-        update_rollup,
-    )
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir)
-    state = str(tmp_path / "rollup_state")
-    # three ingest ticks, split by event_id thirds
-    for i in range(3):
-        batch = ev.filter(F.col("event_id") % 3 == i)
-        update_rollup(batch, state, ["event_type"], "value", "user_id")
-
-    got = {r["event_type"]: r for r in read_rollup(spark, state).collect()}
-    exact = {
-        r["event_type"]: r
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(28,2)")).alias("s"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-            F.countDistinct("user_id").alias("u"),
-        )
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for et, e in exact.items():
-        g = got[et]
-        # monoid columns are EXACT regardless of batch split
-        assert g["n"] == e["n"]
-        assert float(g["value_sum"]) == float(e["s"])
-        assert g["value_min"] == e["mn"] and g["value_max"] == e["mx"]
-        assert g["value_mean"] == float(e["s"]) / e["n"]
-        # the sketch column is approximate but error-bounded (lgK=12
-        # -> ~2.6% RSE; allow 5 sigma at small cardinalities)
-        assert abs(g["approx_users"] - e["u"]) <= max(5, 0.13 * e["u"])
-
-
-def test_incremental_rollup_is_order_insensitive(spark, sf_dir, tmp_path):
-    from pygeoapi_ingestor_spark.sinks.incremental import (
-        read_rollup,
-        update_rollup,
-    )
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).limit(600)
-    a, b = str(tmp_path / "s_ab"), str(tmp_path / "s_ba")
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    second = ev.filter(F.col("event_id") % 2 == 1)
-    update_rollup(first, a, ["event_type"], "value", "user_id")
-    update_rollup(second, a, ["event_type"], "value", "user_id")
-    update_rollup(second, b, ["event_type"], "value", "user_id")
-    update_rollup(first, b, ["event_type"], "value", "user_id")
-    ra = sorted(
-        (r["event_type"], r["n"], float(r["value_sum"]), r["approx_users"])
-        for r in read_rollup(spark, a).collect()
-    )
-    rb = sorted(
-        (r["event_type"], r["n"], float(r["value_sum"]), r["approx_users"])
-        for r in read_rollup(spark, b).collect()
-    )
-    assert ra == rb
 
 
 def test_schema_diff_flags_drift(spark, sf_dir, tmp_path):
@@ -490,45 +218,6 @@ def test_schema_diff_flags_drift(spark, sf_dir, tmp_path):
     # additions alone are append-safe
     add_only = ev.withColumn("extra", F.lit(0.0))
     assert schema_diff(spark, path, add_only)["ok"]
-
-
-def test_chunk_grid_bbox_slice_prunes_and_matches_bruteforce(spark, sf_dir, tmp_path):
-    from pygeoapi_ingestor_spark.sinks.collections import (
-        read_chunks_bbox,
-        write_chunk_grid,
-    )
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).select(
-        "event_id", "ts", "value",
-        ((F.col("event_id") % 5760) / F.lit(16.0) - F.lit(180.0)).alias("lon"),
-        ((F.col("user_id") % 2880) / F.lit(16.0) - F.lit(90.0)).alias("lat"),
-    )
-    out = str(tmp_path / "chunked2")
-    write_chunk_grid(
-        ev, out, ts_col="ts", lon_col="lon", lat_col="lat",
-        chunk_days=7, bits_per_axis=2,
-    )
-    # sf0.001 event/user ids only span part of the globe — pick a bbox
-    # inside the materialized coordinate range
-    bbox, t0, t1 = (-170.0, -90.0, -130.0, -89.0), "2024-01-05", "2024-01-20"
-    sliced = read_chunks_bbox(spark, out, bbox, t0, t1)
-    got = sorted(r["event_id"] for r in sliced.collect())
-    exp = sorted(
-        r["event_id"]
-        for r in ev.filter(
-            (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
-            & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
-            & (F.col("ts") >= F.lit(t0).cast("timestamp"))
-            & (F.col("ts") < F.lit(t1).cast("timestamp"))
-        ).collect()
-    )
-    assert got == exp and got
-    # both partition dimensions must appear in the scan's pruning
-    plan = sliced._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "time_chunk" in plan.split("PartitionFilters")[1][:400]
-    assert "cell_chunk" in plan.split("PartitionFilters")[1][:400]
 
 
 def test_apply_retention_drops_expired_partitions(spark, sf_dir, tmp_path):
@@ -610,114 +299,3 @@ def test_backfill_lands_missing_days_idempotently(spark, sf_dir, tmp_path):
         spark, registry, "daily_slice", path, "day", "2024-01-01", "2024-01-06"
     )
     assert res2["planned"] == [] and res2["landed"] == []
-
-
-def test_collection_stats_reports_layout(spark, sf_dir, tmp_path):
-    from pygeoapi_ingestor_spark.sinks.collections import collection_stats
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
-    path = str(tmp_path / "obs")
-    ev.write.partitionBy("day").parquet(path)
-    stats = collection_stats(spark, path)
-    assert stats["n_rows"] == ev.count()
-    assert stats["n_files"] >= len(stats["partitions"])
-    assert stats["total_bytes"] == sum(
-        d["bytes"] for d in stats["partitions"].values()
-    )
-    assert stats["bytes_per_row"] > 0
-    assert all(k.startswith("day=") for k in stats["partitions"])
-
-
-def test_expectations_single_pass_and_verdicts(spark, sf_dir):
-    from pygeoapi_ingestor_spark.quality import check_expectations
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir)
-    report = check_expectations(ev, [
-        {"rule": "not_null", "col": "event_id"},
-        {"rule": "unique", "col": "event_id"},
-        {"rule": "in_range", "col": "value", "min": 0.0, "max": 1000.0},
-        {"rule": "in_set", "col": "event_type",
-         "values": ["click", "view", "purchase", "signup", "error"]},
-        {"rule": "matches", "col": "event_type", "pattern": "[a-z]+"},
-        {"rule": "min_rows", "n": 10},
-    ])
-    assert report["ok"] and report["n_rows"] == ev.count()
-    assert all(r["violations"] == 0 for r in report["results"])
-
-    # violations are counted, not just flagged
-    bad = check_expectations(ev, [
-        {"rule": "in_range", "col": "value", "min": 0.0, "max": 100.0},
-        {"rule": "in_set", "col": "event_type", "values": ["click"]},
-        {"rule": "min_rows", "n": 10**9},
-    ])
-    assert not bad["ok"]
-    exp_range = ev.filter("value > 100.0 or value < 0.0 or value is null").count()
-    assert bad["results"][0]["violations"] == exp_range
-    assert bad["results"][1]["violations"] == ev.filter("event_type <> 'click'").count()
-    assert bad["results"][2]["violations"] == 10**9 - ev.count()
-
-    # duplicate detection via the unique rule
-    doubled = ev.limit(50).unionAll(ev.limit(20))
-    dup = check_expectations(doubled, [{"rule": "unique", "col": "event_id"}])
-    assert dup["results"][0]["violations"] == 20
-
-
-def test_chunk_quantizer_matches_spark_round_at_half_boundary(spark):
-    """ADVICE r5: the driver-side bbox quantizer must round HALF_UP like
-    spatial.morton_cell's F.round — Python round() is half-to-even and
-    at exact .5 boundaries prunes away the cell that holds in-bbox rows.
-    lon=-120 at bits=4 scales to exactly 2.5; lat=-84 to exactly 0.5."""
-    from pygeoapi_ingestor_spark.operators import spatial
-    from pygeoapi_ingestor_spark.sinks.collections import chunk_keys_for_bbox
-
-    df = spark.createDataFrame([(-120.0, -84.0)], "lon double, lat double")
-    cell = df.select(
-        spatial.morton_cell("lon", "lat", bits_per_axis=4).alias("c")
-    ).first()["c"]
-    _, cells = chunk_keys_for_bbox(
-        (-120.0, -84.0, -120.0, -84.0), "2024-01-01", "2024-01-02",
-        chunk_days=7, bits_per_axis=4,
-    )
-    assert cell in cells
-
-
-def test_chunk_grid_custom_column_names_roundtrip(spark, sf_dir, tmp_path):
-    """ADVICE r5: write_chunk_grid accepts arbitrary ts/lon/lat column
-    names — the manifest must record them so read_chunks_bbox works on
-    such collections."""
-    import json
-
-    from pygeoapi_ingestor_spark.sinks.collections import (
-        read_chunks_bbox,
-        write_chunk_grid,
-    )
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = read_events(spark, sf_dir).select(
-        "event_id", F.col("ts").alias("observed_at"), "value",
-        ((F.col("event_id") % 5760) / F.lit(16.0) - F.lit(180.0)).alias("x"),
-        ((F.col("user_id") % 2880) / F.lit(16.0) - F.lit(90.0)).alias("y"),
-    )
-    out = str(tmp_path / "chunked_custom")
-    write_chunk_grid(
-        ev, out, ts_col="observed_at", lon_col="x", lat_col="y",
-        chunk_days=7, bits_per_axis=2,
-    )
-    m = json.load(open(f"{out}/_chunk_manifest.json"))
-    assert (m["ts_col"], m["lon_col"], m["lat_col"]) == ("observed_at", "x", "y")
-    bbox, t0, t1 = (-170.0, -90.0, -130.0, -89.0), "2024-01-05", "2024-01-20"
-    got = sorted(
-        r["event_id"] for r in read_chunks_bbox(spark, out, bbox, t0, t1).collect()
-    )
-    exp = sorted(
-        r["event_id"]
-        for r in ev.filter(
-            (F.col("x") >= bbox[0]) & (F.col("x") <= bbox[2])
-            & (F.col("y") >= bbox[1]) & (F.col("y") <= bbox[3])
-            & (F.col("observed_at") >= F.lit(t0).cast("timestamp"))
-            & (F.col("observed_at") < F.lit(t1).cast("timestamp"))
-        ).collect()
-    )
-    assert got == exp and got

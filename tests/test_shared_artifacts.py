@@ -131,10 +131,9 @@ def _storage_ids(spark):
 
 def test_free_local_ckpt_releases_projection_rooted_plan(spark, sf_dir):
     """The repo-wide release helper (functions/storage.free_local_ckpt
-    — the single code path behind queries_llm, sinks/incremental,
-    sinks/collections and operators/dedup since r11) must free the
-    checkpoint blocks even when the released frame is a PROJECTION over
-    the checkpoint: the old root-only analyzed().rdd() pattern raised on
+    — the single code path behind queries_llm and operators/dedup
+    since r11) must free the checkpoint blocks even when the released
+    frame is a PROJECTION over the checkpoint: the old root-only analyzed().rdd() pattern raised on
     a Project root inside a swallow-all and leaked silently (commit
     a62aa76's failure class)."""
     from pygeoapi_ingestor_spark.functions.storage import free_local_ckpt

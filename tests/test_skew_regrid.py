@@ -43,14 +43,6 @@ def test_salt_join_matches_plain_join(spark, sf_dir):
     assert salted == plain
 
 
-def test_key_skew_profile(spark, sf_dir):
-    ev = read_events(spark, sf_dir)
-    prof = skew.key_skew_profile(ev, ["event_type"], top_n=3).collect()
-    assert len(prof) == 3
-    assert prof[0]["n_rows"] >= prof[-1]["n_rows"]
-    assert 0 < prof[0]["share"] < 1
-
-
 def test_bilinear_regrid_exact_on_nodes_and_midpoints(spark, tmp_path):
     grid = external.ingest(spark, "cds", str(tmp_path / "cds"))
     # target exactly on a grid node reproduces the node value

@@ -32,16 +32,6 @@ def test_morton_cell_locality(spark):
     assert all(v >= 0 for v in cells.values())
 
 
-def test_cell_aggregate(spark, tmp_path):
-    grid = external.ingest(spark, "cds", str(tmp_path / "cds2"))
-    agg = spatial.cell_aggregate(grid, "tp", bits_per_axis=6)
-    rows = agg.collect()
-    assert sum(r["n"] for r in rows) == grid.count()
-    for r in rows:
-        assert r["cell_min"] <= r["cell_mean"] <= r["cell_max"]
-        assert 44.0 <= r["centroid_lon"] <= 47.5
-
-
 def test_dissolve_regions_matches_flood_fill(spark):
     """The run-collapse + min-label dissolve must produce exactly the
     same cell partition as a literal 4-neighbor flood fill, on a

@@ -1,5 +1,5 @@
-"""Structured Streaming pipeline tests: file source -> windowed agg /
-session windows -> sink, compared against the equivalent batch result.
+"""Structured Streaming pipeline tests: file source -> windowed agg ->
+sink, compared against the equivalent batch result.
 """
 
 from __future__ import annotations
@@ -53,84 +53,6 @@ def test_windowed_agg_matches_batch(spark, sf_dir, tmp_path):
     assert len(got_n) > 0
     assert all(got_n.get(k) == v for k, v in closed.items())
     assert all(batch_n.get(k) == v for k, v in got_n.items())
-
-
-def test_dedup_stream_drops_redelivered(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "dup_src")
-    out = str(tmp_path / "dup_out")
-    ckpt = str(tmp_path / "ckpt_dup")
-    ev = read_events(spark, sf_dir)
-    # stage the same records twice (re-delivery simulation)
-    ev.coalesce(1).write.mode("overwrite").json(src)
-    ev.coalesce(1).write.mode("append").json(src)
-
-    stream = pipeline.read_event_stream(spark, src, fmt="json", max_files_per_trigger=100)
-    deduped = pipeline.dedup_stream(stream, key_cols=["event_id"])
-    pipeline.run_to_sink(deduped, out, ckpt)
-
-    got = spark.read.parquet(out)
-    n_unique = ev.count()
-    assert got.count() == n_unique
-    assert got.select("event_id").distinct().count() == n_unique
-
-
-def test_session_window_stream(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "sess_src")
-    out = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "ckpt2")
-    _stage_events_json(spark, sf_dir, src)
-
-    stream = pipeline.read_event_stream(spark, src, fmt="json")
-    result = pipeline.session_agg(stream, gap="30 minutes", watermark="2 hours")
-    pipeline.run_to_sink(result, out, ckpt)
-
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    # sessions are per-user, non-overlapping, end >= start
-    bad = got.filter(F.col("session_end") < F.col("session_start")).count()
-    assert bad == 0
-    assert os.path.isdir(ckpt)
-
-
-def test_document_quality_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming corpus-intake pipeline (lang ID -> quality gate ->
-    scrub) must produce exactly the batch result over the same files."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from pygeoapi_ingestor_spark.operators import text
-    from pygeoapi_ingestor_spark.streaming.pipeline import (
-        document_quality_stream,
-        read_document_stream,
-        run_to_memory,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
-    drop_dir = str(tmp_path / "drops")
-    docs.coalesce(3).write.mode("overwrite").json(drop_dir)
-
-    stream = read_document_stream(spark, drop_dir)
-    result = document_quality_stream(stream, min_quality=0.65)
-    q = run_to_memory(result, "doc_quality")
-    try:
-        q.processAllAvailable()
-        got = {
-            r["doc_id"]: r
-            for r in spark.sql("SELECT * FROM doc_quality").collect()
-        }
-    finally:
-        q.stop()
-
-    batch_docs = spark.read.json(drop_dir)
-    scored = text.quality_features(
-        text.lang_id(batch_docs, text_col="text"), text_col="text"
-    ).filter(F.col("quality_score") >= 0.65)
-    want_ids = {r["doc_id"] for r in scored.select("doc_id").collect()}
-    assert set(got) == want_ids and len(got) > 0
-    sample = next(iter(got.values()))
-    assert "scrubbed" in sample.asDict() and "lang_pred" in sample.asDict()
-    shutil.rmtree(drop_dir, ignore_errors=True)
 
 
 def test_correlate_streams_matches_batch(spark, sf_dir, tmp_path):
