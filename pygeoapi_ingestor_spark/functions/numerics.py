@@ -11,7 +11,9 @@ SPI pipeline needs are implemented from their public textbook forms:
   (utils_spi.py:462-474).
 
 All kernels are vectorized over numpy arrays so pandas-UDF batches stay
-in C loops.
+in C loops. The gamma shape is elementwise too: a scalar broadcasts, an
+array gives each element its own shape, so a batch whose rows carry
+different parameters is one kernel call and is never regrouped.
 """
 
 from __future__ import annotations
@@ -20,18 +22,26 @@ import numpy as np
 from numpy import errstate
 
 
-def gammainc_lower(a: float, x: np.ndarray) -> np.ndarray:
-    """Regularized lower incomplete gamma P(a, x) for scalar a>0, array x>=0."""
-    x = np.asarray(x, dtype=np.float64)
+def gammainc_lower(a, x: np.ndarray) -> np.ndarray:
+    """Regularized lower incomplete gamma P(a, x) for shape a > 0 (a
+    scalar or one per element of x) and array x >= 0."""
+    a, x = _shape_like(a, x)
     out = np.empty_like(x)
     small = x < a + 1.0
-    out[small] = _gser(a, x[small])
-    out[~small] = 1.0 - _gcf(a, x[~small])
+    out[small] = _gser(a[small], x[small])
+    out[~small] = 1.0 - _gcf(a[~small], x[~small])
     out[x <= 0.0] = 0.0
     return out
 
 
-def _gser(a: float, x: np.ndarray) -> np.ndarray:
+def _shape_like(a, x) -> tuple[np.ndarray, np.ndarray]:
+    """x as a float64 array and the shape a as a contiguous float64
+    array of x's shape (a scalar a broadcasts)."""
+    x = np.asarray(x, dtype=np.float64)
+    return np.array(np.broadcast_to(a, x.shape), dtype=np.float64), x
+
+
+def _gser(a: np.ndarray, x: np.ndarray) -> np.ndarray:
     """Series representation: P(a,x) = e^-x x^a / Γ(a) * Σ x^n Γ(a)/Γ(a+1+n).
 
     The term loop runs on a COMPRESSED active set: convergence count is
@@ -42,13 +52,13 @@ def _gser(a: float, x: np.ndarray) -> np.ndarray:
     if x.size == 0:
         return x.copy()
     gln = _lgamma(a)
-    term = np.full_like(x, 1.0 / a)
+    term = 1.0 / a
     total = term.copy()
-    ap = a
+    ap = a.copy()
     idx = np.arange(x.size)
     for _ in range(500):
-        ap += 1.0
-        term[idx] = term[idx] * x[idx] / ap
+        ap[idx] += 1.0
+        term[idx] = term[idx] * x[idx] / ap[idx]
         total[idx] += term[idx]
         idx = idx[np.abs(term[idx]) >= np.abs(total[idx]) * 1e-15]
         if idx.size == 0:
@@ -58,7 +68,7 @@ def _gser(a: float, x: np.ndarray) -> np.ndarray:
     return np.where(x > 0, res, 0.0)
 
 
-def _gcf(a: float, x: np.ndarray) -> np.ndarray:
+def _gcf(a: np.ndarray, x: np.ndarray) -> np.ndarray:
     """Continued-fraction representation of Q(a,x) (modified Lentz).
 
     Like ``_gser``, the Lentz recurrence runs on a COMPRESSED active
@@ -76,7 +86,7 @@ def _gcf(a: float, x: np.ndarray) -> np.ndarray:
     h = d.copy()
     idx = np.arange(x.size)
     for i in range(1, 500):
-        an = -i * (i - a)
+        an = -i * (i - a[idx])
         b[idx] += 2.0
         d[idx] = an * d[idx] + b[idx]
         d[idx] = np.where(np.abs(d[idx]) < tiny, tiny, d[idx])
@@ -91,28 +101,34 @@ def _gcf(a: float, x: np.ndarray) -> np.ndarray:
     return np.exp(-x + a * np.log(x) - gln) * h
 
 
-def _lgamma(a: float) -> float:
-    """log Γ(a) via the Lanczos approximation (g=7, n=9 public coefficients)."""
-    coefs = np.array(
-        [
-            0.99999999999980993,
-            676.5203681218851,
-            -1259.1392167224028,
-            771.32342877765313,
-            -176.61502916214059,
-            12.507343278686905,
-            -0.13857109526572012,
-            9.9843695780195716e-6,
-            1.5056327351493116e-7,
-        ]
-    )
-    if a < 0.5:
-        # reflection formula
-        return np.log(np.pi / np.sin(np.pi * a)) - _lgamma(1.0 - a)
-    a = a - 1.0
-    x = coefs[0] + np.sum(coefs[1:] / (a + np.arange(1, 9)))
-    t = a + 7.5
-    return 0.5 * np.log(2.0 * np.pi) + (a + 0.5) * np.log(t) - t + np.log(x)
+_LANCZOS = np.array(
+    [
+        0.99999999999980993,
+        676.5203681218851,
+        -1259.1392167224028,
+        771.32342877765313,
+        -176.61502916214059,
+        12.507343278686905,
+        -0.13857109526572012,
+        9.9843695780195716e-6,
+        1.5056327351493116e-7,
+    ]
+)
+
+
+def _lgamma(a):
+    """log Γ(a), elementwise, via the Lanczos approximation (g=7, n=9
+    public coefficients); a < 0.5 takes the reflection formula."""
+    a = np.asarray(a, dtype=np.float64)
+    refl = a < 0.5
+    z = np.where(refl, 1.0 - a, a) - 1.0
+    t = [_LANCZOS[k] / (z + k) for k in range(1, 9)]
+    # numpy's pairwise order for an 8-term sum, written out
+    x = _LANCZOS[0] + (((t[0] + t[1]) + (t[2] + t[3])) + ((t[4] + t[5]) + (t[6] + t[7])))
+    w = z + 7.5
+    lg = 0.5 * np.log(2.0 * np.pi) + (z + 0.5) * np.log(w) - w + np.log(x)
+    with errstate(divide="ignore", invalid="ignore"):
+        return np.where(refl, np.log(np.pi / np.sin(np.pi * a)) - lg, lg)
 
 
 def normal_ppf_as(p: np.ndarray) -> np.ndarray:
@@ -133,9 +149,10 @@ def normal_ppf_as(p: np.ndarray) -> np.ndarray:
     return np.where(lower, -z, z)
 
 
-def gammainc_ppf(a: float, p: np.ndarray) -> np.ndarray:
+def gammainc_ppf(a, p: np.ndarray) -> np.ndarray:
     """Inverse of the regularized lower incomplete gamma: solve
-    P(a, t) = p for t >= 0 (scalar shape a > 0, array p).
+    P(a, t) = p for t >= 0 (shape a > 0, a scalar or one per element of
+    p; array p).
 
     Newton iteration in LOG space on the ``gammainc_lower`` kernel above
     (log space keeps every iterate strictly positive without ad-hoc
@@ -149,7 +166,7 @@ def gammainc_ppf(a: float, p: np.ndarray) -> np.ndarray:
     so the inverse is built on the same public incomplete-gamma kernel
     the SPI family already uses.
     """
-    p = np.asarray(p, dtype=np.float64)
+    a, p = _shape_like(a, p)
     out = np.full_like(p, np.nan)
     out[p <= 0.0] = 0.0
     out[p >= 1.0] = np.inf
@@ -157,6 +174,7 @@ def gammainc_ppf(a: float, p: np.ndarray) -> np.ndarray:
     if not m.any():
         return out
     pm = p[m]
+    a = a[m]
     gln = _lgamma(a)
     # Wilson-Hilferty seed: t0 = a * (1 - 1/(9a) + z/(3*sqrt(a)))^3
     z = normal_ppf_as(pm)
@@ -169,10 +187,10 @@ def gammainc_ppf(a: float, p: np.ndarray) -> np.ndarray:
     # every iteration made the pandas-UDF batch path ~3x slower
     idx = np.arange(t.size)
     for _ in range(100):
-        f = gammainc_lower(a, t[idx]) - pm[idx]
+        f = gammainc_lower(a[idx], t[idx]) - pm[idx]
         with errstate(over="ignore", under="ignore", divide="ignore"):
             # dP/dt = t^(a-1) e^-t / Γ(a);   d/d(log t) = t * dP/dt
-            dlog = np.exp(-t[idx] + a * np.log(t[idx]) - gln)
+            dlog = np.exp(-t[idx] + a[idx] * np.log(t[idx]) - gln[idx])
         du = f / np.clip(dlog, 1e-300, None)
         du = np.clip(du, -2.0, 2.0)  # damp far-from-root steps
         t[idx] = t[idx] * np.exp(-du)
@@ -187,7 +205,7 @@ def gammainc_ppf(a: float, p: np.ndarray) -> np.ndarray:
     # a saturated oscillator has a large residual and must surface as
     # NaN like the other edge cases, not masquerade as converged.
     if idx.size:
-        resid = np.abs(gammainc_lower(a, t[idx]) - pm[idx])
+        resid = np.abs(gammainc_lower(a[idx], t[idx]) - pm[idx])
         tol = 1e-9 * np.maximum(pm[idx], 1.0 - pm[idx])
         t[idx[resid > tol]] = np.nan
     out[m] = t
@@ -214,41 +232,36 @@ def thom_gamma_fit(x: np.ndarray) -> tuple[float, float]:
     return float(shape), float(scale)
 
 
-def spi_from_series(monthly: np.ndarray, spi_ts: int = 1) -> np.ndarray:
-    """SPI values for a monthly series (reference: utils_spi.py:428-478).
+def spi_from_series(monthly: np.ndarray, ref: np.ndarray, spi_ts: int = 1) -> np.ndarray:
+    """SPI of a monthly series fit on its reference positions (reference:
+    utils_spi.py:428-478; the fit-on-climate / apply-to-forecast split of
+    ingestor_cds_spi_forecast_process.py:240-270).
 
-    1. optional rolling ``spi_ts``-month totals
-    2. Thom gamma fit on the positive totals
-    3. zero-inflated CDF H(x) = q + (1-q)·G(x)
-    4. normal-quantile transform (A&S approximation)
+    1. trailing ``spi_ts``-month totals (xarray ``rolling(spi_ts).sum()``):
+       NaN where the window is not full or holds a NaN month
+    2. Thom gamma fit on the finite totals at the ``ref`` positions
+       (a boolean mask aligned with ``monthly``)
+    3. zero-inflated CDF H(x) = q + (1-q)·G(x), q the share of zeros
+       among those reference totals
+    4. normal-quantile transform (A&S approximation), at every position
 
-    Returns an array aligned with the (rolled) series; positions without a
-    full window are NaN.
+    Edge contract (the xarray semantics the reference computes with):
+
+    - a NaN total gives NaN (NaN in, NaN out);
+    - no finite reference total, or a degenerate fit, gives NaN everywhere;
+    - reference totals that are all <= 0 give 0.0 at every finite total.
     """
     monthly = np.asarray(monthly, dtype=np.float64)
-    n = monthly.size
-    out = np.full(n, np.nan)
-    if n == 0 or np.all(np.isnan(monthly)):
-        return out
-    if spi_ts > 1:
-        if n < spi_ts:
-            return out
-        # trailing spi_ts-month totals, aligned to positions spi_ts-1..n-1
-        totals = np.convolve(np.nan_to_num(monthly), np.ones(spi_ts), mode="valid")
-        valid_from = spi_ts - 1
-    else:
-        totals = monthly.copy()
-        valid_from = 0
-
-    finite = totals[np.isfinite(totals)]
-    if finite.size == 0 or np.all(finite <= 0):
-        out[valid_from:] = 0.0
-        return out
-    shape, scale = thom_gamma_fit(finite)
+    totals = np.full(monthly.size, np.nan)
+    if monthly.size >= spi_ts:
+        totals[spi_ts - 1:] = np.convolve(monthly, np.ones(spi_ts), mode="valid")
+    fit = totals[np.asarray(ref, dtype=bool) & np.isfinite(totals)]
+    if fit.size and np.all(fit <= 0):
+        return np.where(np.isfinite(totals), 0.0, np.nan)
+    shape, scale = thom_gamma_fit(fit)
     if not np.isfinite(shape):
-        return out
-    q = float((finite == 0).sum()) / float(finite.size)
+        return np.full(monthly.size, np.nan)
+    q = float((fit == 0).sum()) / float(fit.size)
     g = gammainc_lower(shape, np.clip(totals, 0.0, None) / scale)
     h = np.clip(q + (1.0 - q) * g, 1e-12, 1.0 - 1e-12)
-    out[valid_from:] = normal_ppf_as(h)
-    return out
+    return normal_ppf_as(h)

@@ -69,8 +69,8 @@ not change.
 LIFETIME. Plans, artifacts and read schemas share ONE (applicationId,
 sf_dir) generation, checked by ``_enter``: entering a new one drops
 every plan and schema, releases every artifact and clears this
-session's cache (bench_scale walks sf0.01 -> sf0.1 -> sf1 -> sf3 in one
-session). Between service ticks ``finalize_job`` clears the cache and
+session's cache (one session may read sf0.01, then sf0.1, then sf1).
+Between service ticks ``finalize_job`` clears the cache and
 releases everything but the schemas, which hold no Spark state. A
 release frees the checkpoint blocks, drops the centroids and drops
 every plan, so a memoized plan never outlives the artifact it reads.
@@ -219,6 +219,11 @@ def table_schema(
     return hit
 
 
+class PlanGuardRejected(ValueError):
+    """``prepared_plan`` refused a plan over a checkpoint the artifact
+    registry does not own."""
+
+
 def prepared_plan(
     name: str,
     spark: SparkSession,
@@ -226,9 +231,10 @@ def prepared_plan(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """Return the memoized DataFrame for (name, session, corpus),
-    building it via ``build()`` on first use. Raises ValueError for a
-    plan over a checkpoint the registry does not own (see the module
-    docstring)."""
+    building it via ``build()`` on first use. Raises
+    ``PlanGuardRejected`` for a plan over a checkpoint the registry does
+    not own (see the module docstring); an error of ``build()`` itself
+    propagates as raised."""
     key = (name, spark.sparkContext.applicationId, sf_dir)
     hit = _PLANS.get(key)
     if hit is not None:
@@ -240,7 +246,7 @@ def prepared_plan(
         if (
             r.isLocallyCheckpointed() or r.isCheckpointed()
         ) and r.id() not in owned_rdd_ids():
-            raise ValueError(
+            raise PlanGuardRejected(
                 f"prepared_plan({name!r}): analyzed plan embeds a "
                 "checkpoint-backed LogicalRDD leaf the artifact registry "
                 "does not own — ineligible (it would dangle once its "

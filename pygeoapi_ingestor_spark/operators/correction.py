@@ -285,13 +285,11 @@ def parametric_gamma_map(
     NaN (the xr.where(isinf, nan) post_process at line 374).
 
     Scale shape: broadcast-join the stored params onto the fact rows,
-    then ONE ``mapInPandas`` pass — no shuffle at all. Within each Arrow
-    batch rows are regrouped by their (few) distinct parameter combos so
-    the scalar-shape kernels stay vectorized over x; cost is O(batch)
-    with at most |params| kernel calls per batch.
+    then ONE ``mapInPandas`` pass — no shuffle at all. Each Arrow batch
+    is one kernel call with per-row parameters (the kernels take the
+    shape elementwise).
     """
     import numpy as np
-    import pandas as pd
 
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
@@ -302,17 +300,10 @@ def parametric_gamma_map(
     # partitions and would serialize the whole vectorized kernel on one
     # worker; an already-wide production input keeps its partitioning
     joined = spread_if_narrow(fact.join(F.broadcast(params), key_cols, "inner"))
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in joined.schema.fields
-        if f.name not in ("fc_alpha", "fc_scale", "obs_alpha", "obs_scale")
-    )
-    schema = f"{out_fields}, {out_col} double"
-    keep = [
-        f.name
-        for f in joined.schema.fields
-        if f.name not in ("fc_alpha", "fc_scale", "obs_alpha", "obs_scale")
-    ]
+    pcols = ("fc_alpha", "fc_scale", "obs_alpha", "obs_scale")
+    kept = [f for f in joined.schema.fields if f.name not in pcols]
+    keep = [f.name for f in kept]
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in kept)
 
     def correct(batches):
         from pygeoapi_ingestor_spark.functions.numerics import (
@@ -320,27 +311,15 @@ def parametric_gamma_map(
             gammainc_ppf,
         )
 
-        pcols = ["fc_alpha", "fc_scale", "obs_alpha", "obs_scale"]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            fa, fs, oa, osc = (pdf[c].to_numpy(np.float64) for c in pcols)
             x = pdf[value_col].to_numpy(dtype=np.float64)
-            bc = np.full(len(pdf), np.nan)
-            # group rows by their (few, broadcast-joined) parameter
-            # combos in numpy: a pandas 4-column groupby per batch
-            # measured ~0.5 s/invocation at bench SF — 5x the actual
-            # gamma math (guide §4.2: keep the per-batch constant work
-            # out of the batch loop's hot path)
-            pk = np.stack([pdf[c].to_numpy(np.float64) for c in pcols], axis=1)
-            uniq, inv = np.unique(pk, axis=0, return_inverse=True)
-            for gi in range(uniq.shape[0]):
-                fa, fs, oa, osc = uniq[gi]
-                idx = np.nonzero(inv == gi)[0]
-                p = gammainc_lower(float(fa), np.clip(x[idx], 0.0, None) / float(fs))
-                bc[idx] = float(osc) * gammainc_ppf(float(oa), p)
+            bc = osc * gammainc_ppf(oa, gammainc_lower(fa, np.clip(x, 0.0, None) / fs))
             bc[np.isinf(bc)] = np.nan  # reference post_process: inf -> nan
             out = pdf[keep].copy()
             out[out_col] = bc
             yield out
 
-    return joined.mapInPandas(correct, schema=schema)
+    return joined.mapInPandas(correct, schema=f"{schema}, {out_col} double")

@@ -14,6 +14,7 @@ whole-stage codegen.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -182,74 +183,37 @@ def spi_fit_apply_gamma(
     is_ref_col: str,
     spi_ts: int = 1,
 ) -> DataFrame:
-    """Gamma-SPI with the fit/apply split: Thom gamma params and the
-    zero probability are fit on the REFERENCE rows of each series only
-    (``is_ref_col`` boolean), then the zero-corrected CDF + normal
-    quantile is applied to the FORECAST rows — the reference's
+    """Gamma-SPI with the fit/apply split: per series,
+    ``numerics.spi_from_series`` fits on the REFERENCE rows
+    (``is_ref_col`` boolean) of the concatenated reference + forecast
+    series and is kept on the FORECAST rows — the reference's
     fit-on-climate / apply-to-forecast composition
     (ingestor_cds_spi_forecast_process.py:240-270, per ensemble member
-    ``r``) with utils_spi.py:428-478 as the transform.
+    ``r``) with utils_spi.py:428-478 as the transform. Rolling totals,
+    fit, CDF, quantile and the edge contract are that function's.
 
     Same scale shape as ``spi``: one ``applyInPandas`` per series whose
     group is a bounded number of periods — the shuffle is keyed by
     series cardinality, never raw rows. Returns FORECAST rows only:
     (series..., bucket, monthly_value, spi).
     """
-    import numpy as np
-
-    from pygeoapi_ingestor_spark.functions.numerics import (
-        gammainc_lower,
-        normal_ppf_as,
-        thom_gamma_fit,
-    )
-
-    schema_fields = ", ".join(
-        f"{c} {monthly.schema[c].dataType.simpleString()}" for c in series_cols
-    )
-    out_schema = (
-        f"{schema_fields}, {bucket_col} timestamp, "
-        f"monthly_value double, spi double"
-    )
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(bucket_col)
-        all_vals = pdf[value_col].to_numpy(dtype=float)
-        # rolling spi_ts-period totals over the CONCATENATED ref+forecast
-        # series (the reference appends the forecast to the climate series
-        # before the transform), NaN where no full window exists — same
-        # alignment as numerics.spi_from_series
-        if spi_ts > 1:
-            totals = np.full(all_vals.size, np.nan)
-            if all_vals.size >= spi_ts:
-                totals[spi_ts - 1:] = np.convolve(
-                    np.nan_to_num(all_vals), np.ones(spi_ts), mode="valid"
-                )
-        else:
-            totals = all_vals
+        vals = pdf[value_col].to_numpy(dtype=float)
         is_ref = pdf[is_ref_col].to_numpy(dtype=bool)
-        ref = totals[is_ref]
-        fc = pdf.loc[~is_ref]
-        vals = totals[~is_ref]
-        out = fc[[*series_cols, bucket_col]].copy()
-        out["monthly_value"] = fc[value_col].to_numpy(dtype=float)
-        finite = ref[np.isfinite(ref)]
-        if finite.size == 0 or np.all(finite <= 0):
-            out["spi"] = 0.0
-            return out
-        shape, scale = thom_gamma_fit(finite)
-        if not np.isfinite(shape):
-            out["spi"] = np.nan
-            return out
-        q = float((finite == 0).sum()) / float(finite.size)
-        g = gammainc_lower(shape, np.clip(vals, 0.0, None) / scale)
-        h = np.clip(q + (1.0 - q) * g, 1e-12, 1.0 - 1e-12)
-        out["spi"] = normal_ppf_as(h)
+        spi_vals = spi_from_series(vals, is_ref, spi_ts=spi_ts)
+        out = pdf.loc[~is_ref, [*series_cols, bucket_col]].copy()
+        out["monthly_value"] = vals[~is_ref]
+        out["spi"] = spi_vals[~is_ref]
         return out
 
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(monthly.sparkSession)
-    return monthly.groupBy(*series_cols).applyInPandas(fit_group, schema=out_schema)
+    return monthly.groupBy(*series_cols).applyInPandas(
+        fit_group, schema=_spi_schema(monthly, series_cols, bucket_col)
+    )
 
 
 def spi(
@@ -259,22 +223,15 @@ def spi(
     value_col: str,
     spi_ts: int = 1,
 ) -> DataFrame:
-    """Full SPI per series: Thom gamma fit + zero-corrected CDF + A&S
-    normal quantile (see functions/numerics.py). Returns
+    """Full SPI per series: Thom gamma fit on every row + zero-corrected
+    CDF + A&S normal quantile (``numerics.spi_from_series``). Returns
     (series..., bucket, monthly_value, spi).
     """
-    schema_fields = ", ".join(
-        f"{c} {monthly.schema[c].dataType.simpleString()}" for c in series_cols
-    )
-    out_schema = (
-        f"{schema_fields}, {bucket_col} timestamp, "
-        f"monthly_value double, spi double"
-    )
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(bucket_col)
         vals = pdf[value_col].to_numpy(dtype=float)
-        spi_vals = spi_from_series(vals, spi_ts=spi_ts)
+        spi_vals = spi_from_series(vals, np.ones(vals.size, dtype=bool), spi_ts=spi_ts)
         out = pdf[[*series_cols, bucket_col]].copy()
         out["monthly_value"] = vals
         out["spi"] = spi_vals
@@ -283,4 +240,15 @@ def spi(
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(monthly.sparkSession)
-    return monthly.groupBy(*series_cols).applyInPandas(fit_group, schema=out_schema)
+    return monthly.groupBy(*series_cols).applyInPandas(
+        fit_group, schema=_spi_schema(monthly, series_cols, bucket_col)
+    )
+
+
+def _spi_schema(monthly: DataFrame, series_cols: list[str], bucket_col: str) -> str:
+    """Output schema of the SPI operators: (series..., bucket,
+    monthly_value, spi)."""
+    series = ", ".join(
+        f"{c} {monthly.schema[c].dataType.simpleString()}" for c in series_cols
+    )
+    return f"{series}, {bucket_col} timestamp, monthly_value double, spi double"

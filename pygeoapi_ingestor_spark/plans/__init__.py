@@ -314,12 +314,15 @@ _STAMP_ORDER = [
 
 
 def _as_prepared(name, fn):
-    from pygeoapi_ingestor_spark.functions.storage import prepared_plan
+    from pygeoapi_ingestor_spark.functions.storage import (
+        PlanGuardRejected,
+        prepared_plan,
+    )
 
     def wrapper(spark, sf_dir, _n=name, _f=fn):
         try:
             return prepared_plan(_n, spark, sf_dir, lambda: _f(spark, sf_dir))
-        except ValueError:
+        except PlanGuardRejected:
             # runtime guard: the plan embeds a checkpoint the artifact
             # registry does not own. Serve the per-call build — correct,
             # just unmemoized — and say so.

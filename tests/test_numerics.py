@@ -56,7 +56,7 @@ def test_thom_fit_recovers_gamma_params():
 def test_spi_distribution_properties():
     rng = np.random.default_rng(7)
     monthly = rng.gamma(shape=2.0, scale=30.0, size=360)
-    spi = numerics.spi_from_series(monthly, spi_ts=1)
+    spi = numerics.spi_from_series(monthly, np.ones(360, dtype=bool), spi_ts=1)
     # standardized index: ~N(0,1)
     assert abs(np.nanmean(spi)) < 0.1
     assert abs(np.nanstd(spi) - 1.0) < 0.15
@@ -67,7 +67,7 @@ def test_spi_distribution_properties():
 
 def test_spi_rolling_timescale():
     monthly = np.ones(24)
-    spi3 = numerics.spi_from_series(monthly, spi_ts=3)
+    spi3 = numerics.spi_from_series(monthly, np.ones(24, dtype=bool), spi_ts=3)
     assert np.all(np.isnan(spi3[:2]))  # incomplete windows
     # constant series => degenerate fit => NaN everywhere (reference
     # yields 0/NaN for degenerate inputs)
@@ -75,8 +75,52 @@ def test_spi_rolling_timescale():
 
 
 def test_spi_all_zero_series():
-    spi = numerics.spi_from_series(np.zeros(24), spi_ts=1)
+    spi = numerics.spi_from_series(np.zeros(24), np.ones(24, dtype=bool), spi_ts=1)
     assert np.all(spi == 0.0)
+
+
+def test_spi_nan_in_nan_out():
+    """A NaN month stays NaN, also when every reference total is 0 (the
+    all-zero branch used to overwrite it with 0.0)."""
+    all_ref = np.ones(3, dtype=bool)
+    got = numerics.spi_from_series(np.array([0.0, np.nan, 0.0]), all_ref)
+    np.testing.assert_array_equal(got, [0.0, np.nan, 0.0])
+    got = numerics.spi_from_series(np.array([5.0, np.nan, 7.0, 3.0, 9.0]), np.ones(5, dtype=bool))
+    assert np.isnan(got[1]) and np.all(np.isfinite(np.delete(got, 1)))
+
+
+def test_mixed_shape_call_matches_per_shape_calls_bitwise():
+    """One call with a shape per element equals the per-shape scalar
+    calls bit for bit: the reflection path (a < 0.5), a near 1 and a
+    large a, over x in {0, < 0, NaN, +inf, ...} and p within 1e-14 of
+    0 and 1 and p >= 1. A NaN matches any NaN: numpy's SIMD loops keep
+    whichever NaN operand their lane order meets, so the sign bit of a
+    NaN depends on where it sits in the array."""
+
+    def same_bits(got, want):
+        nan = np.isnan(want)
+        np.testing.assert_array_equal(np.isnan(got), nan)
+        np.testing.assert_array_equal(got[~nan].view(np.uint64), want[~nan].view(np.uint64))
+
+    shapes = np.array([0.05, 0.3, 0.49, 0.999, 1.0, 1.001, 2.5, 80.0])
+    x = np.concatenate(
+        [[0.0, -1.0, -0.0, np.nan, np.inf, 1e-300], np.geomspace(1e-6, 300.0, 90)]
+    )
+    p = np.concatenate(
+        [
+            [0.0, -0.5, 1.0, 1.5, np.nan, 1e-14, 5e-15, 1.0 - 1e-14, 1.0 - 5e-15],
+            np.linspace(0.001, 0.999, 60),
+            1.0 - np.geomspace(1e-16, 1e-3, 30),
+            np.geomspace(1e-16, 1e-3, 30),
+        ]
+    )
+    for kernel, arg in ((numerics.gammainc_lower, x), (numerics.gammainc_ppf, p)):
+        a = np.repeat(shapes, arg.size)
+        args = np.tile(arg, shapes.size)
+        want = np.concatenate([kernel(float(s), arg) for s in shapes])
+        same_bits(kernel(a, args), want)
+        perm = np.random.default_rng(1).permutation(a.size)
+        same_bits(kernel(a[perm], args[perm]), want[perm])
 
 
 def test_gammainc_ppf_round_trip():

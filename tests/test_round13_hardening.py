@@ -358,6 +358,31 @@ def test_guard_admits_only_registry_owned_checkpoints(spark, sf_dir):
     assert not storage._PLANS
 
 
+def test_prepared_wrapper_lets_build_errors_through_once(spark, sf_dir):
+    """Only the guard's own rejection makes a catalog key fall back to a
+    per-call build. A ValueError raised by the build itself (a regrid's
+    degenerate grid axis, a PySparkValueError) propagates from the one
+    build that raised it, with no "guard rejected" warning."""
+    import warnings
+
+    from pygeoapi_ingestor_spark.plans import _as_prepared
+
+    builds = []
+
+    def build(spark, sf_dir):
+        builds.append(1)
+        raise ValueError("grid must have at least 2 distinct finite x values")
+
+    wrapped = _as_prepared("t_build_error", build)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with pytest.raises(ValueError, match="at least 2 distinct"):
+            wrapped(spark, sf_dir)
+    assert builds == [1]
+    assert not [w for w in caught if "guard rejected" in str(w.message)]
+    assert not [k for k in storage._PLANS if k[0] == "t_build_error"]
+
+
 def test_simhash_arrow_kernel_matches_python_twin(spark):
     """The Arrow-kernel simhash must reproduce the r12 formulation's
     bits exactly: S_i = sum of occurrences whose md5-derived token hash

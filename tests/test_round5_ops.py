@@ -207,6 +207,35 @@ def test_spi_fit_apply_gamma_matches_numpy(spark):
         assert got[key] == pytest.approx(w, rel=1e-12, abs=1e-12), key
 
 
+@pytest.mark.parametrize(
+    "ref_values, spi_ts",
+    [([None, None, None], 1), ([12.5], 3)],
+    ids=["null-reference", "reference-shorter-than-window"],
+)
+def test_spi_fit_apply_gamma_no_finite_reference_is_null(spark, ref_values, spi_ts):
+    """A series with no finite reference total has no fit: its forecast
+    SPI is NULL, not 0.0."""
+    import datetime as dt
+
+    from pygeoapi_ingestor_spark.operators import indices
+
+    base = dt.datetime(2024, 1, 1)
+    vals = [*ref_values, 30.0, 45.5, 12.0, 60.25]
+    rows = [
+        (0, base + dt.timedelta(days=i), v, i < len(ref_values))
+        for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(
+        rows, "series int, bucket timestamp, v double, is_ref boolean"
+    )
+    out = indices.spi_fit_apply_gamma(
+        df, series_cols=["series"], bucket_col="bucket", value_col="v",
+        is_ref_col="is_ref", spi_ts=spi_ts,
+    ).collect()
+    assert len(out) == 4
+    assert all(r["spi"] is None or math.isnan(r["spi"]) for r in out), out
+
+
 def test_spi_empirical_apply_plotting_positions(spark):
     """In-sample targets land exactly on the Gringorten positions of
     their <=-count; out-of-range targets clamp to the edge positions."""

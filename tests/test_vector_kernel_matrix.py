@@ -308,9 +308,9 @@ COVERED = {
 }
 
 EXEMPT = {
-    "operators/correction.py::parametric_gamma_map": "scalar gamma kernel, no array column",
-    "operators/indices.py::spi_fit_apply_gamma": "scalar gamma fit per series, no array column",
-    "operators/indices.py::spi": "scalar SPI per series, no array column",
+    "operators/correction.py::parametric_gamma_map": "elementwise gamma kernel over per-row scalar params, no array column",
+    "operators/indices.py::spi_fit_apply_gamma": "one numerics.spi_from_series call per series, no array column",
+    "operators/indices.py::spi": "one numerics.spi_from_series call per series, no array column",
     "operators/temporal.py::chunked_ewma": "scalar EWMA recurrence per chunk, no array column",
     "streaming/stateful.py::alert_transitions": "scalar alert state machine, no array column",
     "operators/dedup.py::minhash_signatures": "hashes string shingles, no vector column",

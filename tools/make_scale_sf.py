@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Derive a 10x scale point ("sf1") from the largest driver-provided
-testdata SF (sf0.1) for the multi-SF scaling bench (tools/bench_scale.py).
+testdata SF (sf0.1) for scale measurements: run
+``SPARK_GRAFT_SF_DIR=<sf> python3 bench.py KEY ... --reps N`` once per
+corpus.
 
 The driver ships sf0.001/0.01/0.1; the 100 TB story needs at least one
 point where fixed JVM/codegen overheads stop dominating. sf1 here is a
