@@ -27,6 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench.tracing import Tracer  # noqa: E402
+from pygeoapi_ingestor_spark.functions.storage import finalize_job  # noqa: E402
 from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES  # noqa: E402
 from pygeoapi_ingestor_spark.session import TABLES, get_spark  # noqa: E402
 
@@ -172,9 +173,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         stream = spipe.read_event_stream(
             spark, src, fmt="parquet", max_files_per_trigger=2
         )
-        feed = spipe.danger_levels_stream(
-            stream, window="7 days", watermark="1 day"
-        )
+        feed = spipe.danger_levels_stream(stream)
         t0 = time.perf_counter()
         q = spipe.run_to_memory(feed, "bench_danger", mode="complete")
         wall = round(time.perf_counter() - t0, 3)
@@ -212,12 +211,10 @@ def bench_streaming(spark, sf_dir: str) -> dict:
         stream = spipe.read_event_stream(
             spark, src, fmt="parquet", max_files_per_trigger=2
         )
-        counts = spipe.trending_topk_stream(
-            stream, window="6 hours", watermark="1 hour"
-        )
+        counts = spipe.trending_topk_stream(stream)
 
         def _rank_sink(batch_df, batch_id):
-            spipe.rank_topk_batch(batch_df, k=3).count()
+            spipe.rank_topk_batch(batch_df).count()
 
         t0 = time.perf_counter()
         q = (
@@ -254,7 +251,6 @@ def bench_streaming(spark, sf_dir: str) -> dict:
             corr = spipe.correlate_streams(
                 stream.filter(F.col("event_type") == "purchase"),
                 stream.filter(F.col("event_type") == "click"),
-                max_lag="1 hour", watermark="2 hours",
             )
             t0 = time.perf_counter()
             q = spipe.run_to_sink(corr, f"{work}/corr_out", f"{work}/ck_corr")
@@ -453,9 +449,10 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
 def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
     """Measure ``keys`` in ``reps`` reps of three cells each:
 
-    - cold: after clearCache and release_corpus_artifacts, so the build
-      is a prepared-plan registry miss and every artifact is rebuilt
-      (read schemas are kept: they live as long as the corpus);
+    - cold: after ``finalize_job`` (cache cleared, corpus artifacts and
+      prepared plans released), so the build is a prepared-plan
+      registry miss and every artifact is rebuilt (read schemas are
+      kept: they live as long as the corpus);
     - warm: the prepared-plan hit, artifacts held;
     - noop: the prepared plan fully evaluated through the noop sink.
 
@@ -463,10 +460,6 @@ def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
     a fresh connection over the same files. Returns, per key and cell,
     the min and median wall time and every rep's record. Leaves no
     cache or artifact behind."""
-    from pygeoapi_ingestor_spark.functions.storage import (
-        release_corpus_artifacts,
-    )
-
     tracer = Tracer(spark, enabled=True)
 
     def count(df):
@@ -480,8 +473,7 @@ def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
     for key in keys:
         cells: dict[str, list] = {"cold": [], "warm": [], "noop": []}
         for rep in range(reps):
-            spark.catalog.clearCache()
-            release_corpus_artifacts()
+            finalize_job(spark)
             for cell, action in (("cold", count), ("warm", count), ("noop", noop)):
                 group = f"spot:{key}:{cell}:{rep}"
                 cells[cell].append(_spot_cell(tracer, group, key, sf_dir, action))
@@ -500,8 +492,7 @@ def spot(spark, sf_dir: str, keys: list[str], reps: int = 3) -> dict:
                 "median": round(statistics.median(walls), 3),
                 "all": recs,
             }
-    spark.catalog.clearCache()
-    release_corpus_artifacts()
+    finalize_job(spark)
     return {
         "reps": reps,
         "wall_s": round(time.perf_counter() - t_all, 3),
@@ -548,24 +539,16 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     # DUAL SERIES per query (round-4 verdict item 7): cold = first run
-    # after clearCache (parquet scan + any index build); warm = an
-    # immediate second run riding the blocks the cold run persisted
-    # (index tables, rank intermediates) — the steady-state service
-    # number. clearCache only BETWEEN keys, so each key's warm run sees
-    # exactly its own artifacts, never an earlier query's.
-    # Spark's ContextCleaner frees broadcast/shuffle state on DRIVER GC,
-    # and spark.cleaner.periodicGC.interval defaults to 30 min — longer
-    # than this whole run. Over ~400 actions the un-collected state
-    # piles up and random queries pay 2-3x in GC/eviction stalls
-    # (observed as warm-slower-than-cold inversions). Nudge a driver GC
-    # every few keys; a long-lived ingestor service needs the same
-    # (or a lower periodicGC interval) for steady-state latency.
-    def _periodic_gc(i: int, every: int = 10) -> None:
-        if i % every == every - 1:
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass  # Spark Connect: no JVM handle; cleaner still runs
+    # after finalize_job (parquet scan + any index or corpus-artifact
+    # build); warm = an immediate second run riding the blocks the cold
+    # run persisted (index tables, rank intermediates, the prepared
+    # plan) — the steady-state service number. Release only BETWEEN
+    # keys, so each key's warm run sees exactly its own artifacts, never
+    # an earlier query's. Release goes through finalize_job, never a
+    # bare clearCache: that would strip a memoized plan's cached
+    # relations and leave it running uncached. finalize_job also nudges
+    # a driver GC, so the ContextCleaner frees broadcast/shuffle state
+    # between keys.
 
     timings: dict[str, float] = {}
     warm_timings: dict[str, float] = {}
@@ -581,7 +564,7 @@ def main(argv: list[str] | None = None) -> None:
         errors[f"{key}:{phase}"] = f"{type(exc).__name__}: {exc}"[:300]
 
     t_total0 = time.perf_counter()
-    for i, key in enumerate(BENCH_KEYS):
+    for key in BENCH_KEYS:
         try:
             t0 = time.perf_counter()
             QUERIES[key](spark, sf_dir).count()
@@ -600,19 +583,11 @@ def main(argv: list[str] | None = None) -> None:
             warm2_timings[key] = round(time.perf_counter() - t2, 3)
         except Exception as exc:  # noqa: BLE001 — artifact survival
             _note_err(key, "cold_warm", exc)
-        # drop per-query persisted index tables so later queries aren't
-        # timed under the accumulated memory pressure of earlier ones.
-        # The verify-once dedup artifacts (plans/queries_llm) survive
-        # this by DESIGN: the catalog is benched as one pipeline run, so
-        # the first graph consumer (dedup_components in sorted order)
-        # pays the LSH->verify build and later consumers
-        # (dedup_lsh_verified, doc_graph_pagerank, dup_cluster_quality,
-        # dup_cluster_size_hist) read the shared artifact — their cold
-        # cells ARE artifact-read numbers. The headline_stable pass
-        # below releases the artifacts so the ratchet series stays
-        # genuinely cold.
-        spark.catalog.clearCache()
-        _periodic_gc(i)
+        # drop per-query persisted index tables, corpus artifacts and
+        # prepared plans so later queries aren't timed under the
+        # accumulated memory pressure of earlier ones: every artifact
+        # consumer's cold cell rebuilds its artifact
+        finalize_job(spark)
     total = round(sum(timings.values()), 3)
     warm_total = round(sum(warm_timings.values()), 3)
     warm_stable = {
@@ -631,15 +606,14 @@ def main(argv: list[str] | None = None) -> None:
     # the full-evaluation numbers.
     noop_timings: dict[str, float] = {}
     t_n0 = time.perf_counter()
-    for i, key in enumerate(BENCH_KEYS):
+    for key in BENCH_KEYS:
         try:
             t0 = time.perf_counter()
             QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
             noop_timings[key] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # noqa: BLE001 — artifact survival
             _note_err(key, "noop", exc)
-        spark.catalog.clearCache()
-        _periodic_gc(i)
+        finalize_job(spark)
     noop_total = round(time.perf_counter() - t_n0, 3)
 
     # DuckDB oracle wall-clock (r6 verdict item 6): run every oracle
@@ -693,11 +667,7 @@ def main(argv: list[str] | None = None) -> None:
     # number measures the catalog, not the session's garbage. Two reps:
     # the second rides warmed code paths — the steady-state
     # multi-tenant number — and damps single-rep phase noise.
-    spark.catalog.clearCache()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+    finalize_job(spark)
     conc_reps = []
     for _ in range(2):
         t_c0 = time.perf_counter()
@@ -710,7 +680,7 @@ def main(argv: list[str] | None = None) -> None:
 
             list(pool.map(_safe_count, BENCH_KEYS))
         conc_reps.append(round(time.perf_counter() - t_c0, 3))
-        spark.catalog.clearCache()
+        finalize_job(spark)
     concurrent_total = conc_reps[0]
     concurrent_warm = conc_reps[1]
 
@@ -722,11 +692,7 @@ def main(argv: list[str] | None = None) -> None:
     # not the batch phase's leftover state (the r12 run-3 streaming dip
     # sat exactly here: sustained 6.9k vs 11.4-12.6k in the two runs
     # before it, identical code).
-    spark.catalog.clearCache()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+    finalize_job(spark)
     try:
         streaming = bench_streaming(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001 — artifact survival
@@ -746,24 +712,15 @@ def main(argv: list[str] | None = None) -> None:
     # be adjudicated against, instead of hand-waving a manual caveat.
     headline_stable: dict[str, float] = {}
     # SELF-CONTAINED double-cold: the stable series takes the min of
-    # TWO fresh runs measured here, never reusing the main-loop cold —
-    # in catalog order that cold is artifact-READ for every verify-once
-    # consumer after the first (cluster_keep_best pays the build), so
-    # min(main_cold, rerun) would silently ratchet on the artifact
-    # path. The corpus artifacts survive clearCache by design
-    # (functions/storage localCheckpoints) — release them around every
-    # run so each stable cell is genuinely cold. The release also drops
-    # every prepared plan (functions/storage): the stable series is the
-    # catalog's cold ratchet, and a memoized plan would silently turn a
-    # key's "cold" cell into an execute-only cell, breaking
-    # round-over-round comparability. The warm series above keeps the
-    # prepared path — both shapes stay visible in the artifact.
-    from pygeoapi_ingestor_spark.functions.storage import (
-        release_corpus_artifacts,
-    )
-
-    release_corpus_artifacts()
-    for i, key in enumerate(HEADLINE_KEYS):
+    # TWO fresh runs measured here, each after finalize_job — which
+    # releases the corpus artifacts (functions/storage localCheckpoints)
+    # and drops every prepared plan, so each stable cell is genuinely
+    # cold: a memoized plan would silently turn a key's "cold" cell into
+    # an execute-only cell, breaking round-over-round comparability. The
+    # warm series above keeps the prepared path — both shapes stay
+    # visible in the artifact.
+    finalize_job(spark)
+    for key in HEADLINE_KEYS:
         if key not in timings:
             continue
         reps = []
@@ -774,11 +731,9 @@ def main(argv: list[str] | None = None) -> None:
                 reps.append(round(time.perf_counter() - t0, 3))
             except Exception as exc:  # noqa: BLE001 — artifact survival
                 _note_err(key, "headline_stable", exc)
-            spark.catalog.clearCache()
-            release_corpus_artifacts()
+            finalize_job(spark)
         if reps:
             headline_stable[key] = min(reps)
-        _periodic_gc(i)
     headline_prev: dict[str, float] = {}
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"

@@ -24,12 +24,17 @@ from numpy import errstate
 
 def gammainc_lower(a, x: np.ndarray) -> np.ndarray:
     """Regularized lower incomplete gamma P(a, x) for shape a > 0 (a
-    scalar or one per element of x) and array x >= 0."""
+    scalar or one per element of x) and array x >= 0. P is 0 at x <= 0
+    and 1 at x = +inf (the continued fraction would start from b = inf
+    there); NaN stays NaN."""
     a, x = _shape_like(a, x)
     out = np.empty_like(x)
     small = x < a + 1.0
+    top = np.isposinf(x)
+    big = ~small & ~top
     out[small] = _gser(a[small], x[small])
-    out[~small] = 1.0 - _gcf(a[~small], x[~small])
+    out[big] = 1.0 - _gcf(a[big], x[big])
+    out[top] = 1.0
     out[x <= 0.0] = 0.0
     return out
 

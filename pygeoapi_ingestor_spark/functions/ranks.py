@@ -18,7 +18,7 @@ value), so tie semantics are exactly those of rank(); with a unique
 tiebreak column the same construction yields exact row_number(), and
 ntile derives from row_number + the per-series count in closed form.
 The only full-data shuffle is the local-rank window, partitioned by
-(series, bucket) — parallelism scales with n_buckets, not key count.
+(series, bucket) — parallelism scales with N_BUCKETS, not key count.
 """
 
 from __future__ import annotations
@@ -27,6 +27,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pygeoapi_ingestor_spark.sources.readers import local_table
+
+# value-range buckets per series for the rank helpers (and hash salts for
+# grouped_topk); exact_percentiles drills down over finer buckets
+N_BUCKETS = 32
+PCT_BUCKETS = 256
 
 
 def _with_buckets(
@@ -77,13 +82,12 @@ def bucketed_rank(
     df: DataFrame,
     series_cols: list[str],
     value_col: str,
-    n_buckets: int = 32,
     out_col: str = "rank",
     count_col: str = "n",
 ) -> DataFrame:
     """Exact per-series rank() (ties share the min rank) + series count,
     with the sort partitioned by (series, bucket)."""
-    b = _with_offsets(_with_buckets(df, series_cols, value_col, n_buckets), series_cols)
+    b = _with_offsets(_with_buckets(df, series_cols, value_col, N_BUCKETS), series_cols)
     w_local = Window.partitionBy(*series_cols, "_bucket").orderBy(value_col)
     return (
         b.withColumn(out_col, F.col("_offset") + F.rank().over(w_local))
@@ -97,14 +101,13 @@ def bucketed_row_number(
     series_cols: list[str],
     value_col: str,
     tiebreak_cols: list[str],
-    n_buckets: int = 32,
     out_col: str = "rn",
     count_col: str = "n",
 ) -> DataFrame:
     """Exact per-series row_number() ordered by (value, tiebreaks) — the
     tiebreaks must make the composite order unique for the result to be
     deterministic (same contract as a plain window row_number)."""
-    b = _with_offsets(_with_buckets(df, series_cols, value_col, n_buckets), series_cols)
+    b = _with_offsets(_with_buckets(df, series_cols, value_col, N_BUCKETS), series_cols)
     w_local = Window.partitionBy(*series_cols, "_bucket").orderBy(
         value_col, *tiebreak_cols
     )
@@ -122,7 +125,6 @@ def grouped_topk(
     tiebreak_cols: list[str],
     k: int,
     out_col: str = "_rn",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """Exact top-k rows per series ordered by (value, tiebreaks)
     ascending, with their 1-based rank — WITHOUT ranking the whole
@@ -133,14 +135,14 @@ def grouped_topk(
     Two-phase selection (top-k is a monoid): a local row_number within
     (series, hash-salt bucket) keeps at most k candidates per salt —
     the series' true top-k is necessarily a subset of the union — then
-    one window over the <= salt_buckets*k survivors assigns the exact
+    one window over the <= N_BUCKETS*k survivors assigns the exact
     global rank. The only full-data shuffle is the salted local window;
     the per-series task in phase two touches a BOUNDED candidate set
-    (k * salt_buckets rows) at any scale. ``tiebreak_cols`` must make
+    (k * N_BUCKETS rows) at any scale. ``tiebreak_cols`` must make
     the composite order unique (same contract as row_number)."""
     b = df.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(*tiebreak_cols), F.lit(salt_buckets)).cast("int"),
+        F.pmod(F.xxhash64(*tiebreak_cols), F.lit(N_BUCKETS)).cast("int"),
     )
     w_local = Window.partitionBy(*series_cols, "_salt").orderBy(
         value_col, *tiebreak_cols
@@ -161,7 +163,6 @@ def bucketed_row_numbers_multi(
     series_cols: list[str],
     value_cols: dict[str, str],
     tiebreak_cols: list[str],
-    n_buckets: int = 32,
     count_col: str = "n",
 ) -> DataFrame:
     """Exact per-series row_number() for SEVERAL value columns at once
@@ -175,7 +176,7 @@ def bucketed_row_numbers_multi(
     1. one aggregate computes min/max per metric + the series count;
     2. one ``stack``-ed pass counts rows per (series, metric, bucket) —
        a single shuffle over metrics x rows narrow tuples;
-    3. the histogram (bounded: series x metrics x n_buckets) collects
+    3. the histogram (bounded: series x metrics x N_BUCKETS) collects
        to the driver, offsets prefix-sum in Python, and rejoin as one
        broadcast literal table;
     4. each metric's exact rn = offset + local row_number over its own
@@ -195,7 +196,7 @@ def bucketed_row_numbers_multi(
     )
     b = df.join(F.broadcast(stats), series_cols)
     for m in metrics:
-        width = (F.col(f"_mx_{m}") - F.col(f"_mn_{m}")) / F.lit(float(n_buckets))
+        width = (F.col(f"_mx_{m}") - F.col(f"_mn_{m}")) / F.lit(float(N_BUCKETS))
         b = b.withColumn(
             f"_bucket_{m}",
             F.when(F.col(m).isNull(), F.lit(-1))
@@ -203,7 +204,7 @@ def bucketed_row_numbers_multi(
             .otherwise(
                 F.least(
                     F.floor((F.col(m) - F.col(f"_mn_{m}")) / width),
-                    F.lit(n_buckets - 1),
+                    F.lit(N_BUCKETS - 1),
                 )
             )
             .cast("int"),
@@ -271,12 +272,10 @@ def exact_percentiles(
     value_col: str,
     ps: list[float],
     tiebreak_cols: list[str],
-    n_buckets: int = 256,
-    p_col: str = "p",
-    out_col: str = "pct",
 ) -> DataFrame:
     """Exact linear-interpolated percentiles (SQL ``percentile_cont`` /
-    numpy 'linear') per series, WITHOUT sorting the series.
+    numpy 'linear') per series, WITHOUT sorting the series. Returns
+    (series..., p, pct).
 
     Spark's exact ``percentile`` aggregate buffers every value of a group
     in one task — a scale-killer when the series key is low-cardinality
@@ -290,14 +289,14 @@ def exact_percentiles(
     3. the percentile positions lo/hi = floor/ceil((n-1)*p) are known
        from the counts alone, so only buckets whose [offset,
        offset+count) range covers a needed position are ranked at all —
-       the sort touches O(|ps| * n/n_buckets) rows, not n;
+       the sort touches O(|ps| * n/PCT_BUCKETS) rows, not n;
     4. join the two neighbour values and interpolate
        ``v_lo + (v_hi - v_lo) * frac``.
 
     Precondition: ``value_col`` non-null (same contract as the SQL
     aggregate, which skips nulls — callers filter first).
 
-    The bucket HISTOGRAM (series x n_buckets counts — bounded and tiny
+    The bucket HISTOGRAM (series x PCT_BUCKETS counts — bounded and tiny
     by the drill-down's own precondition of low-cardinality series) is
     collected to the driver and the needed positions / surviving
     buckets are computed in Python. The earlier all-in-plan version
@@ -306,7 +305,7 @@ def exact_percentiles(
     re-scan of the base per branch — a 5s constant factor at ANY scale
     (VERDICT r8 #4). This shape is 3 jobs (stats, histogram, final
     assembly) and exactly 3 base scans. Driver state is O(series x
-    n_buckets), the same bounded-summary-to-driver pattern as the IVF
+    PCT_BUCKETS), the same bounded-summary-to-driver pattern as the IVF
     centroid build; the fact table itself never moves.
 
     Position arithmetic (``target = (n-1)*p``, floor/ceil/frac) runs in
@@ -317,7 +316,7 @@ def exact_percentiles(
 
     from pyspark.sql import types as T
 
-    b = _with_buckets(df, series_cols, value_col, n_buckets)
+    b = _with_buckets(df, series_cols, value_col, PCT_BUCKETS)
 
     hist = (
         b.groupBy(*series_cols, "_bucket")
@@ -366,7 +365,7 @@ def exact_percentiles(
         T.StructType(
             [T.StructField(f"_k_{f.name}", f.dataType) for f in key_fields]
             + [
-                T.StructField(p_col, T.DoubleType()),
+                T.StructField("p", T.DoubleType()),
                 T.StructField("_lo", T.LongType()),
                 T.StructField("_hi", T.LongType()),
                 T.StructField("_frac", T.DoubleType()),
@@ -375,7 +374,7 @@ def exact_percentiles(
     )
 
     # only buckets covering a needed position are ranked at all — the
-    # sort touches O(|ps| * n/n_buckets) rows, not n
+    # sort touches O(|ps| * n/PCT_BUCKETS) rows, not n
     pruned = b.drop("_n").join(F.broadcast(keep_df), [*series_cols, "_bucket"])
     w_local = Window.partitionBy(*series_cols, "_bucket").orderBy(
         value_col, *tiebreak_cols
@@ -391,14 +390,14 @@ def exact_percentiles(
         ],
     )
     return (
-        hits.groupBy(*series_cols, p_col)
+        hits.groupBy(*series_cols, "p")
         .agg(
             F.min(F.when(F.col("_idx") == F.col("_lo"), F.col(value_col))).alias("_vlo"),
             F.min(F.when(F.col("_idx") == F.col("_hi"), F.col(value_col))).alias("_vhi"),
             F.first("_frac").alias("_frac"),
         )
         .withColumn(
-            out_col, F.col("_vlo") + (F.col("_vhi") - F.col("_vlo")) * F.col("_frac")
+            "pct", F.col("_vlo") + (F.col("_vhi") - F.col("_vlo")) * F.col("_frac")
         )
         .drop("_vlo", "_vhi", "_frac")
     )

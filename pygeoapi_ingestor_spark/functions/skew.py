@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 _ALGEBRAIC = {"sum", "count", "min", "max"}
 
 
-def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
     """Uniform salt from the row hash MIXED with a per-row ordinal
     (monotonically_increasing_id = partition id + in-partition offset).
     The ordinal matters: skew often comes from fully-duplicated rows,
@@ -30,7 +30,7 @@ def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame
     salt is stable for a fixed partition layout (task retries replay
     the same ids)."""
     return df.withColumn(
-        salt_col,
+        "_salt",
         F.pmod(
             F.xxhash64(*df.columns, F.monotonically_increasing_id()),
             F.lit(n_salts),
@@ -42,19 +42,18 @@ def salted_agg(
     df: DataFrame,
     key_cols: list[str],
     aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
     aggs: {out_name: (fn, col)} with fn in {sum, count, min, max};
     ``count`` is SQL ``count(col)`` (non-null rows of that column).
-    Phase 1 shuffles on (key, salt) — hot keys fan out over n_salts
+    Phase 1 shuffles on (key, salt) — hot keys fan out over 16
     reducers; phase 2 merges the tiny per-salt partials on key.
     """
     for out, (fn, _c) in aggs.items():
         if fn not in _ALGEBRAIC:
             raise ValueError(f"{out}: {fn} is not algebraic; use sum+count instead")
-    salted = with_salt(df, n_salts)
+    salted = with_salt(df, 16)
     phase1 = salted.groupBy(*key_cols, "_salt").agg(
         *[
             (F.count(c) if fn == "count" else getattr(F, fn)(c)).alias(out)
@@ -71,26 +70,15 @@ def salt_join(
     big: DataFrame,
     small: DataFrame,
     on: list[str],
-    n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    across all salt values, join on (keys + salt). The small side grows
-    n_salts x — use only when it can't be broadcast outright but fits
-    replicated.
-
-    Only big-side-preserving joins are allowed: under right/full the
-    replicated small side would emit its unmatched rows once PER SALT
-    (n_salts duplicate outer rows)."""
-    allowed = {"inner", "left", "left_outer", "left_semi", "left_anti", "semi", "anti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salt_join supports {sorted(allowed)} only; {how!r} would "
-            "duplicate unmatched small-side rows across salts"
-        )
-    big_s = with_salt(big, n_salts)
+    """Skew-safe inner equi-join: salt the big side, replicate the
+    small side across all 8 salt values, join on (keys + salt). The
+    small side grows 8x — use only when it can't be broadcast outright
+    but fits replicated. (An outer join on the small side would emit its
+    unmatched rows once PER SALT.)"""
+    big_s = with_salt(big, 8)
     small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     ).withColumn("_salt", F.col("_salt").cast("int"))
-    out = big_s.join(small_s, [*on, "_salt"], how)
+    out = big_s.join(small_s, [*on, "_salt"])
     return out.drop("_salt")

@@ -35,7 +35,6 @@ def apply_curve_table(
     x_col: str,
     y_col: str,
     value_col: str,
-    out_col: str = "value_adj",
 ) -> DataFrame:
     """Apply a PRECOMPUTED per-series transfer curve — the reference's
     production bias-correction mode (bias_correction_cds_process.py:
@@ -73,7 +72,7 @@ def apply_curve_table(
         .when(idx == n, last.getField("y") + (v - last.getField("x")))
         .otherwise(interp)
     )
-    return joined.withColumn(out_col, adj).drop("_curve")
+    return joined.withColumn("value_adj", adj).drop("_curve")
 
 
 def spline_transfer_sql(
@@ -149,8 +148,6 @@ def apply_spline_table(
     params: DataFrame,
     series_cols: list[str],
     value_col: str,
-    out_col: str = "value_adj",
-    k: int = 3,
 ) -> DataFrame:
     """Apply stored per-series B-spline transfer functions — the
     reference's production bias-correction evaluator
@@ -166,8 +163,8 @@ def apply_spline_table(
     stays JVM-side (no UDF). Rows whose series has no stored params
     keep NULL."""
     joined = fact.join(F.broadcast(params), series_cols, "left")
-    expr = spline_transfer_sql(value_col, "t", "c", k, "dmin", "dmax")
-    return joined.withColumn(out_col, F.expr(expr)).drop(
+    expr = spline_transfer_sql(value_col, "t", "c", 3, "dmin", "dmax")
+    return joined.withColumn("value_adj", F.expr(expr)).drop(
         "t", "c", "dmin", "dmax"
     )
 
@@ -177,11 +174,10 @@ def quantile_map(
     reference: DataFrame,
     series_cols: list[str],
     value_col: str,
-    out_col: str = "value_adj",
 ) -> DataFrame:
     """Map model values onto the reference distribution per series.
 
-    Returns the model rows plus ``out_col`` (step-function empirical
+    Returns the model rows plus ``value_adj`` (step-function empirical
     quantile mapping, exact and deterministic — oracle-able with an
     ASOF JOIN on percent_rank).
     """
@@ -216,8 +212,8 @@ def quantile_map(
     out_cols = [c for c in model.columns]
     return (
         matched.filter(F.col("_side") == 1)
-        .withColumn(out_col, F.col("_mapped"))
-        .select(*out_cols, out_col)
+        .withColumn("value_adj", F.col("_mapped"))
+        .select(*out_cols, "value_adj")
     )
 
 
@@ -226,7 +222,6 @@ def parametric_normal_map(
     params: DataFrame,
     key_cols: list[str],
     value_col: str,
-    out_col: str = "value_bc",
 ) -> DataFrame:
     """Parametric quantile mapping, NORMAL leg — the Georgia seasonal
     temperature correction (georgia_cds_bias_correction_process.py:
@@ -253,7 +248,7 @@ def parametric_normal_map(
     bc = F.col("obs_mean") + F.col("obs_std") * (
         (F.col(value_col) - F.col("fc_mean")) / F.col("fc_std")
     )
-    return joined.withColumn(out_col, bc).drop(
+    return joined.withColumn("value_bc", bc).drop(
         "fc_mean", "fc_std", "obs_mean", "obs_std"
     )
 
@@ -263,7 +258,6 @@ def parametric_gamma_map(
     params: DataFrame,
     key_cols: list[str],
     value_col: str,
-    out_col: str = "value_bc",
 ) -> DataFrame:
     """Parametric quantile mapping, GAMMA leg — the Georgia seasonal
     precipitation correction (georgia_cds_bias_correction_process.py:
@@ -319,7 +313,7 @@ def parametric_gamma_map(
             bc = osc * gammainc_ppf(oa, gammainc_lower(fa, np.clip(x, 0.0, None) / fs))
             bc[np.isinf(bc)] = np.nan  # reference post_process: inf -> nan
             out = pdf[keep].copy()
-            out[out_col] = bc
+            out["value_bc"] = bc
             yield out
 
-    return joined.mapInPandas(correct, schema=f"{schema}, {out_col} double")
+    return joined.mapInPandas(correct, schema=f"{schema}, value_bc double")

@@ -75,14 +75,14 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard similarity.
 
     Pairs only materialize for documents sharing >=1 shingle; Jaccard =
     |intersection| / (|A| + |B| - |intersection|).
     """
-    sh = shingles(df, id_col, text_col, n=n)
+    sh = shingles(df, id_col, text_col, n=3)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).cast("bigint").alias("n_shingles"))
 
     a = sh.alias("a")
@@ -113,7 +113,6 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     num_hashes: int = 32,
     shingle_hash: str = "xxhash64",
     shingles_df: DataFrame | None = None,
@@ -139,7 +138,7 @@ def minhash_signatures(
 
     ensure_package_on_executors(df.sparkSession)
     sh = shingles_df if shingles_df is not None else shingles(
-        df, id_col, text_col, n=n
+        df, id_col, text_col, n=3
     )
     if shingle_hash == "md5":
         hex_ = F.md5(F.col("shingle"))
@@ -215,14 +214,11 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     shingle_hash: str = "xxhash64",
     shingles_df: DataFrame | None = None,
     with_est: bool = True,
 ) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` rows, bucket by
+    """LSH banding: split the 32-hash signature into 8 bands, bucket by
     (band_id, band_hash), emit candidate pairs sharing any bucket.
 
     Returns distinct (doc_a, doc_b) candidates with their estimated
@@ -237,7 +233,7 @@ def minhash_lsh_pairs(
     ``with_est=True`` computes the estimate IN the join projection —
     BEFORE the distinct — so the dedup shuffle moves 24-byte
     (doc_a, doc_b, est) tuples instead of pair rows dragging both
-    2x``num_hashes``-bigint signature arrays (~536 B/row; at the
+    2x32-bigint signature arrays (~536 B/row; at the
     derived sf3's 23M pre-distinct candidates that array freight was
     the dominant shuffle). A pair caught by k bands re-evaluates the
     32-element zip_with k times — trivially cheaper JVM work than
@@ -245,10 +241,10 @@ def minhash_lsh_pairs(
     a pair, so dropDuplicates on (doc_a, doc_b) is unaffected.
     """
     sig = minhash_signatures(
-        df, id_col, text_col, n=n, num_hashes=num_hashes,
+        df, id_col, text_col, num_hashes=32,
         shingle_hash=shingle_hash, shingles_df=shingles_df,
     )
-    banded = _banded(sig, num_hashes, bands)
+    banded = _banded(sig, 32, 8)
     if not with_est:
         banded = banded.drop("signature")
     a = banded.alias("a")
@@ -269,7 +265,7 @@ def minhash_lsh_pairs(
             F.zip_with("a.signature", "b.signature", lambda x, y: x == y),
             lambda m: m,
         )
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(32.0)
     return joined.select(
         F.col("a.doc").alias("doc_a"),
         F.col("b.doc").alias("doc_b"),
@@ -417,9 +413,6 @@ def lsh_verified_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
 ) -> DataFrame:
     """The production dedup pipeline, end to end: MinHash+LSH candidate
@@ -447,12 +440,11 @@ def lsh_verified_pairs(
     # pipeline's costliest; unshared it ran twice). CACHE CONTRACT:
     # never unpersisted here — a long-lived service clears blocks
     # between jobs (bench.py's clearCache is the model).
-    sh = shingles(df, id_col, text_col, n=n).persist(
+    sh = shingles(df, id_col, text_col, n=3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     cand = minhash_lsh_pairs(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
-        shingles_df=sh, with_est=False,
+        df, id_col, text_col, shingles_df=sh, with_est=False,
     )
     # exact verify on candidates only, JVM-side array_intersect
     # intersection (see exact_jaccard_counts for the plan-shape note)
@@ -473,11 +465,6 @@ def minhash_lsh_incremental(
     batch: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.6,
-    shingle_hash: str = "md5",
 ) -> DataFrame:
     """Incremental corpus dedup: screen a NEW batch of documents against
     an EXISTING corpus without re-pairing the corpus against itself —
@@ -500,24 +487,24 @@ def minhash_lsh_incremental(
     # shared shingle passes: each side tokenizes once, feeding both its
     # signature build and the exact verify below (CACHE CONTRACT as in
     # lsh_verified_pairs)
-    sh_c = shingles(corpus, id_col, text_col, n=n).persist(
+    sh_c = shingles(corpus, id_col, text_col, n=3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sh_b = shingles(batch, id_col, text_col, n=n).persist(
+    sh_b = shingles(batch, id_col, text_col, n=3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sig_c = minhash_signatures(
-        corpus, id_col, text_col, n=n, num_hashes=num_hashes,
-        shingle_hash=shingle_hash, shingles_df=sh_c,
+        corpus, id_col, text_col, num_hashes=32,
+        shingle_hash="md5", shingles_df=sh_c,
     )
     sig_b = minhash_signatures(
-        batch, id_col, text_col, n=n, num_hashes=num_hashes,
-        shingle_hash=shingle_hash, shingles_df=sh_b,
+        batch, id_col, text_col, num_hashes=32,
+        shingle_hash="md5", shingles_df=sh_b,
     )
-    bd_c = _banded(sig_c, num_hashes, bands).select(
+    bd_c = _banded(sig_c, 32, 8).select(
         F.col("doc").alias("corpus_doc"), "band", "bucket"
     )
-    bd_b = _banded(sig_b, num_hashes, bands).select(
+    bd_b = _banded(sig_b, 32, 8).select(
         F.col("doc").alias("new_doc"), "band", "bucket"
     )
     cand = (
@@ -539,7 +526,7 @@ def minhash_lsh_incremental(
             F.col("n_common")
             / (F.col("size_new") + F.col("size_corpus") - F.col("n_common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.6)
     )
     per_new = verified.groupBy("new_doc").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_matches"),
@@ -841,8 +828,6 @@ def simhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bits: int = 64,
-    lane_bits: int = 16,
     token_hash: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash over word tokens: per bit, sign of the
@@ -852,7 +837,7 @@ def simhash(
     occurrence.
 
     Lane packing: instead of one conditional-sum aggregate per bit
-    (``bits`` aggregate expressions dominated the whole catalog's codegen
+    (64 aggregate expressions dominated the whole catalog's codegen
     cost), each row packs several bit-counters into one long and we sum
     the packed longs. With the identity sign-sum_i = 2*S_i - T
     (S_i = count of occurrences whose token has bit i set, T = total
@@ -860,14 +845,13 @@ def simhash(
     borrow. The TOP lane of each long is deliberately left unused: a
     counter occupying bits 48-63 would reach the sign bit at S_i >=
     2**15 and make the ANSI-mode sum overflow-throw, so we pack only
-    ``64 // lane_bits - 1`` counters per long and let carries spill into
-    the vacant top bits. Exact while every per-bit count S_i <
-    2**lane_bits (lane_bits=16 -> 65535 occurrences of any one token;
-    pass a larger lane_bits for pathological documents); the sum cannot
-    hit the sign bit below ~2**(62 - 2*lane_bits) total tokens.
+    ``64 // 16 - 1 = 3`` 16-bit counters per long (22 longs) and let
+    carries spill into the vacant top bits. Exact while every per-bit
+    count S_i < 2**16 (65535 occurrences of any one token); the sum
+    cannot hit the sign bit below ~2**30 total tokens.
     """
-    lanes_per_long = max(64 // lane_bits - 1, 1)
-    n_longs = -(-bits // lanes_per_long)
+    lanes_per_long, lane_bits = 3, 16
+    n_longs = -(-64 // lanes_per_long)
     lane_mask = (1 << lane_bits) - 1
     from pygeoapi_ingestor_spark.operators.text import norm_words
     from pygeoapi_ingestor_spark.session import (
@@ -907,7 +891,7 @@ def simhash(
         h = F.xxhash64("w")
     src = tok.select("doc", h.alias("_h"))
 
-    _bits, _lpl, _lb, _nl = bits, lanes_per_long, lane_bits, n_longs
+    _bits, _lpl, _lb, _nl = 64, lanes_per_long, lane_bits, n_longs
 
     def _pack_batches(batches):
         import numpy as np
@@ -985,17 +969,15 @@ def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int | None = 3,
     token_hash: str = "xxhash64",
     bucket_cap: int | None = 500,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash banding (Manku et al., WWW'07
     shape): candidates share any of the four 16-bit bands, then the full
-    64-bit hamming distance gates the output. The band construction is
-    EXACT for ``max_hamming <= 3``: a pair differing in <= 3 bits must
-    leave at least one of 4 bands untouched (pigeonhole), so every such
-    pair lands in a shared bucket. ``max_hamming=None`` returns all
-    band-collision candidates (the raw LSH recall set).
+    64-bit hamming distance gates the output at <= 3 bits. The band
+    construction is EXACT for that gate: a pair differing in <= 3 bits
+    must leave at least one of 4 bands untouched (pigeonhole), so every
+    such pair lands in a shared bucket.
 
     ``bucket_cap``: (band, chunk) buckets holding more than this many
     docs are DROPPED before the self-join. Degenerate documents (empty /
@@ -1059,20 +1041,17 @@ def simhash_near_pairs(
     out = pairs.withColumn("hamming", F.bit_count(xor).cast("int")).select(
         "doc_a", "doc_b", "hamming"
     )
-    if max_hamming is not None:
-        out = out.filter(F.col("hamming") <= max_hamming)
-    return out
+    return out.filter(F.col("hamming") <= 3)
 
 
 def span_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    span_words: int = 10,
 ) -> DataFrame:
     """Span-level dedup (the C4 'discard repeated spans' rule at a fixed
     word granularity): split every document into consecutive
-    ``span_words``-word chunks, keep each distinct chunk only at its
+    10-word chunks, keep each distinct chunk only at its
     FIRST corpus position (lowest (doc, chunk index)), and reassemble
     documents from their surviving chunks. A fully-duplicated document
     disappears — the document-level exact dedup is the degenerate case.
@@ -1080,7 +1059,7 @@ def span_dedup(
     One explode + one groupBy-min on the chunk text + one semi-join-like
     equality filter + one re-aggregation: every step shuffles on the
     chunk hash or the doc id, nothing is quadratic, and the chunk
-    explode multiplies rows by ~n_words/span_words, not n_words (the
+    explode multiplies rows by ~n_words/10, not n_words (the
     shingle explode's factor).
 
     Returns (id, n_spans, n_kept, dedup_digest) where dedup_digest is
@@ -1095,11 +1074,11 @@ def span_dedup(
     dedup_digest differ on such (out-of-contract) inputs.
     """
     words = F.split(F.trim(F.col(text_col)), r"\s+")
-    n_chunks = F.greatest(F.ceil(F.size(words) / F.lit(float(span_words))), F.lit(1))
+    n_chunks = F.greatest(F.ceil(F.size(words) / F.lit(10.0)), F.lit(1))
     chunks = F.transform(
         F.sequence(F.lit(0), (n_chunks - 1).cast("int")),
         lambda i: F.array_join(
-            F.slice(words, i * span_words + 1, span_words), " "
+            F.slice(words, i * 10 + 1, 10), " "
         ),
     )
     exploded = df.select(
@@ -1146,16 +1125,14 @@ def winnow_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 4,
-    window: int = 5,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
-    the MOSS algorithm): hash every word n-gram, then keep the minimum
-    hash of every ``window`` consecutive grams. Guarantees any shared
-    run of ``n + window - 1`` words between two documents shares at
-    least one selected fingerprint — the local-similarity detector that
-    whole-doc hashing misses and all-grams storage over-pays for
-    (density 2/(window+1) of all grams).
+    the MOSS algorithm): hash every word 4-gram, then keep the minimum
+    hash of every 5 consecutive grams. Guarantees any shared run of 8
+    words between two documents shares at least one selected
+    fingerprint — the local-similarity detector that whole-doc hashing
+    misses and all-grams storage over-pays for (density 1/3 of all
+    grams).
 
     Shuffle-free formulation (r14, guide §2.4 — the shingles()
     precedent): the positioned grams, the zero-padded sortable keys
@@ -1179,13 +1156,13 @@ def winnow_fingerprints(
     base = spread_if_narrow(
         df.select(F.col(id_col).alias("doc"), F.col(text_col))
     ).select("doc", words.alias("_ws"))
-    n_grams = F.size("_ws") - (n - 1)
+    n_grams = F.size("_ws") - 3
     grams = F.transform(
         F.when(n_grams > 0, F.sequence(F.lit(1), n_grams)).otherwise(
             F.array().cast("array<int>")
         ),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("_ws"), i + j) for j in range(n)]
+            " ", *[F.element_at(F.col("_ws"), i + j) for j in range(4)]
         ),
     )
     # one md5-15 per gram, shared by the hash and the sortable key. The
@@ -1209,13 +1186,13 @@ def winnow_fingerprints(
         ),
     )
     rowed = base.select("doc", entries.alias("_es"))
-    n_starts = F.size("_es") - (window - 1)
+    n_starts = F.size("_es") - 4
     winners = F.array_distinct(
         F.transform(
             F.when(n_starts > 0, F.sequence(F.lit(1), n_starts)).otherwise(
                 F.array().cast("array<int>")
             ),
-            lambda s: F.array_min(F.slice(F.col("_es"), s, window)),
+            lambda s: F.array_min(F.slice(F.col("_es"), s, 5)),
         )
     )
     return rowed.select("doc", F.explode(winners).alias("_e")).select(
@@ -1227,8 +1204,6 @@ def ppjoin_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.6,
-    n: int | None = 3,
 ) -> DataFrame:
     """Exact set-Jaccard similarity join with PPJoin-style prefix
     filtering (Xiao/Wang/Lin/Yu 2008): order every document's tokens by
@@ -1240,25 +1215,14 @@ def ppjoin_pairs(
     canonical exact set-similarity join at scale (candidates shuffle on
     rare tokens only; frequent tokens never generate pairs).
 
-    ``n`` picks the set universe: word n-gram shingles for n >= 2 (the
-    discriminative choice — single words collapse on small-vocabulary
-    corpora), bare words for n=None. Verification is the exact
+    The set universe is word 3-gram shingles (single words collapse on
+    small-vocabulary corpora), t = 0.6. Verification is the exact
     shared-token count over candidate pairs.
     Returns (doc_a, doc_b, n_common, size_a, size_b, jaccard).
     """
-    if n is not None and n >= 2:
-        toks = shingles(df, id_col, text_col, n=n).select(
-            "doc", F.col("shingle").alias("w")
-        )
-    else:
-        words = F.filter(
-            F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^A-Za-z0-9\s]", " ")), r"\s+"),
-            lambda w: w != "",
-        )
-        toks = (
-            df.select(F.col(id_col).alias("doc"), F.explode(words).alias("w"))
-            .distinct()
-        )
+    toks = shingles(df, id_col, text_col, n=3).select(
+        "doc", F.col("shingle").alias("w")
+    )
     # the token table feeds the df counts and the rarity join:
     # materialize the tokenization once
     from pyspark import StorageLevel
@@ -1280,7 +1244,7 @@ def ppjoin_pairs(
         F.count(F.lit(1)).cast("bigint").alias("size"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     prefix_len = (
-        F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1
+        F.col("size") - F.ceil(F.lit(0.6) * F.col("size")) + 1
     ).cast("int")
     prefixes = per_doc.select(
         "doc",
@@ -1297,9 +1261,9 @@ def ppjoin_pairs(
     # min(|A|,|B|) >= t*max(|A|,|B|), so size-incompatible pairs are
     # dropped before the candidate distinct ever shuffles them
     length_ok = (
-        F.col("b.size").cast("double") >= F.lit(threshold) * F.col("a.size")
+        F.col("b.size").cast("double") >= F.lit(0.6) * F.col("a.size")
     ) & (
-        F.col("a.size").cast("double") >= F.lit(threshold) * F.col("b.size")
+        F.col("a.size").cast("double") >= F.lit(0.6) * F.col("b.size")
     )
     cand = (
         a.join(
@@ -1349,7 +1313,7 @@ def ppjoin_pairs(
     )
     return (
         inter.withColumn("jaccard", j)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.6)
         .select(
             "doc_a", "doc_b", "n_common", "size_a", "size_b",
             F.round("jaccard", 6).alias("jaccard"),

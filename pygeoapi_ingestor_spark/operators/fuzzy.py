@@ -24,35 +24,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def qgrams(names: DataFrame, name_col: str = "name", q: int = 2) -> DataFrame:
-    """Distinct positional-collapsed q-grams per name: (name, gram)."""
+def qgrams(names: DataFrame) -> DataFrame:
+    """Distinct positional-collapsed 2-grams per name: (name, gram)."""
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.length(name_col) - (q - 1)),
-            lambda i: F.col(name_col).substr(i, F.lit(q)),
+            F.sequence(F.lit(1), F.length("name") - 1),
+            lambda i: F.col("name").substr(i, F.lit(2)),
         )
     )
-    # guard: for names shorter than q, sequence(1, len-q+1) would DESCEND
-    # ([1, 0]) and emit bogus truncated grams — such names have no q-grams
-    grams = F.when(F.length(name_col) >= q, grams).otherwise(
+    # guard: for names shorter than 2, sequence(1, len-1) would DESCEND
+    # ([1, 0]) and emit bogus truncated grams — such names have no 2-grams
+    grams = F.when(F.length("name") >= 2, grams).otherwise(
         F.array().cast("array<string>")
     )
-    # two projections: referencing name_col next to its own re-alias in
-    # ONE select trips Spark 4's lateral-column-alias check inside the
-    # transform lambda (INTERNAL_ERROR LateralColumnAliasReference)
+    # the transform lambda gets its own projection: next to an aliased
+    # column in ONE select it trips Spark 4's lateral-column-alias check
+    # (INTERNAL_ERROR LateralColumnAliasReference)
     return (
         names.withColumn("_grams", grams)
-        .select(F.col(name_col).alias("name"), F.explode("_grams").alias("gram"))
+        .select("name", F.explode("_grams").alias("gram"))
     )
 
 
 def fuzzy_name_pairs(
     df: DataFrame,
     name_col: str,
-    q: int = 2,
-    max_dist: int = 2,
 ) -> DataFrame:
-    """All pairs of DISTINCT names within ``max_dist`` edit operations.
+    """All pairs of DISTINCT names within max_dist = 2 edit operations
+(q = 2-gram prefixes).
 
     Pipeline: distinct name domain -> distinct q-grams -> global gram
     frequencies (one small agg) -> per-name prefix = the q*max_dist+1
@@ -66,13 +65,13 @@ def fuzzy_name_pairs(
     elements per side; two prefix sets of size q*d+1 drawn from the
     same global order then cannot be disjoint.
     """
-    prefix_size = q * max_dist + 1
+    prefix_size = 5  # q * max_dist + 1 for q = 2, max_dist = 2
     names = (
         df.select(F.col(name_col).alias("name"))
-        .filter(F.col("name").isNotNull() & (F.length("name") >= q))
+        .filter(F.col("name").isNotNull() & (F.length("name") >= 2))
         .distinct()
     )
-    grams = qgrams(names, "name", q=q)
+    grams = qgrams(names)
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("_freq"))
     w = Window.partitionBy("name").orderBy(F.col("_freq").asc(), F.col("gram").asc())
     prefix = (
@@ -89,11 +88,11 @@ def fuzzy_name_pairs(
         .select("name_a", "name_b")
         .dropDuplicates(["name_a", "name_b"])
         .filter(
-            F.abs(F.length("name_a") - F.length("name_b")) <= max_dist
+            F.abs(F.length("name_a") - F.length("name_b")) <= 2
         )
     )
     return (
         cand.withColumn("dist", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= 2)
         .select("name_a", "name_b", F.col("dist").cast("int").alias("dist"))
     )

@@ -81,7 +81,6 @@ def anomaly(
     series_cols: list[str],
     bucket_col: str,
     value_col: str,
-    out_col: str = "zscore",
     cycle: str = "month",
 ) -> DataFrame:
     """Standardized anomaly (x - clim_mean) / clim_std — the z-score SPI
@@ -93,7 +92,7 @@ def anomaly(
         "cycle_key", cycle_fn(bucket_col).cast("int")
     ).join(F.broadcast(clim), [*series_cols, "cycle_key"], "left")
     return joined.withColumn(
-        out_col,
+        "zscore",
         F.when(
             F.col("clim_std") > 0,
             (F.col(value_col) - F.col("clim_mean")) / F.col("clim_std"),
@@ -119,7 +118,6 @@ def spi_empirical(
     series_cols: list[str],
     bucket_col: str,
     value_col: str,
-    out_col: str = "spi_emp",
 ) -> DataFrame:
     """Nonparametric SPI: Gringorten plotting-position probability
     H = (rank - 0.44) / (n + 0.12) per series, then the A&S normal
@@ -135,7 +133,7 @@ def spi_empirical(
         monthly, series_cols, value_col, out_col="_rank", count_col="_n"
     )
     h = (F.col("_rank").cast("double") - 0.44) / (F.col("_n").cast("double") + 0.12)
-    return ranked.withColumn(out_col, normal_ppf_expr(h)).drop("_rank", "_n")
+    return ranked.withColumn("spi_emp", normal_ppf_expr(h)).drop("_rank", "_n")
 
 
 def spi_empirical_apply(
@@ -143,7 +141,6 @@ def spi_empirical_apply(
     target: DataFrame,
     series_cols: list[str],
     value_col: str,
-    out_col: str = "spi_emp",
 ) -> DataFrame:
     """FIT-ON-REFERENCE / APPLY-TO-TARGET empirical SPI: the Gringorten
     plotting position of each target value within the REFERENCE sample
@@ -172,7 +169,7 @@ def spi_empirical_apply(
     cnt_le = F.size(F.filter(F.col("_ref"), lambda e: e <= x))
     r = F.least(F.greatest(cnt_le, F.lit(1)), F.col("_nref")).cast("double")
     h = (r - 0.44) / (F.col("_nref").cast("double") + 0.12)
-    return joined.withColumn(out_col, normal_ppf_expr(h)).drop("_ref", "_nref")
+    return joined.withColumn("spi_emp", normal_ppf_expr(h)).drop("_ref", "_nref")
 
 
 def spi_fit_apply_gamma(

@@ -38,7 +38,6 @@ def power_iteration_int8(
     vec_col: str,
     dim: int,
     iters: int = 3,
-    scale: int = PCA_SCALE,
 ) -> tuple[list[int], int, int, int]:
     """Top principal direction of an int8-quantized embedding corpus via
     power iteration on the (uncentered) Gram matrix A^T A — fully
@@ -52,7 +51,7 @@ def power_iteration_int8(
     ``w = G v`` — identical integers to re-scanning per iteration,
     because ``Aᵀ(Av) = (AᵀA)v`` distributes over exact sums. The
     iterate rescale is exact big-int truncating division:
-    ``v' = trunc(w * scale / max|w|)``.
+    ``v' = trunc(w * PCA_SCALE / max|w|)``.
 
     Returns ``(v_final, rayleigh_num, rayleigh_den, n_rows)`` where the
     Rayleigh quotient num/den estimates the top eigenvalue of A^T A in
@@ -120,7 +119,7 @@ def power_iteration_int8(
             for j in range(dim):
                 row_g[j] += int(flat[base + j])
 
-    v = [scale // 10] * dim  # deterministic start: all-ones direction
+    v = [PCA_SCALE // 10] * dim  # deterministic start: all-ones direction
     num = den = 0
     for it in range(iters):
         w = [sum(G[i][j] * v[j] for j in range(dim)) for i in range(dim)]
@@ -128,7 +127,7 @@ def power_iteration_int8(
         # Rayleigh quotient of the direction that PRODUCED w (v), exact
         num = sum(vi * wi for vi, wi in zip(v, w))
         den = sum(vi * vi for vi in v)
-        v = [_trunc_div(wi * scale, m) for wi in w]
+        v = [_trunc_div(wi * PCA_SCALE, m) for wi in w]
     return v, num, den, n_rows
 
 

@@ -11,6 +11,7 @@ stages. Two decode paths coexist:
   pixel access (``decode_image_pixels``). Formats needing heavy
   codec libraries (JPEG/PNG/MP4) raise ``ValueError`` — wire PIL/libav
   into the same hook on a cluster that has them.
+  ``synthesize_decode_roundtrip`` runs it distributed.
 - ``decode_stub`` — a deterministic fake (dimensions from the payload
   hash) kept for the catalog's oracle-gated queries, whose payloads are
   manufactured from text columns and must stay reproducible in an
@@ -257,18 +258,17 @@ def decode_stub(payload: bytes, media_type: str) -> dict:
     return {"width": int(w), "height": int(h), "n_frames": int(frames)}
 
 
-def extract_metadata(df: DataFrame, use_stub: bool = True) -> DataFrame:
+def extract_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched decode pass: fills width/height/n_frames from the
-    payload. ``mapInPandas`` keeps the binary column inside Arrow batches
-    — no per-row Python round-trips."""
+    payload through ``decode_stub``. ``mapInPandas`` keeps the binary
+    column inside Arrow batches — no per-row Python round-trips."""
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(df.sparkSession)
-    decoder = decode_stub if use_stub else real_decode
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            meta = [decoder(p, t) for p, t in zip(pdf["payload"], pdf["media_type"])]
+            meta = [decode_stub(p, t) for p, t in zip(pdf["payload"], pdf["media_type"])]
             pdf = pdf.copy()
             pdf["width"] = [m["width"] for m in meta]
             pdf["height"] = [m["height"] for m in meta]
@@ -291,10 +291,10 @@ def resize_stub(payload: bytes, width: int, height: int, target: int) -> tuple[i
     return max(1, round(width * scale)), max(1, round(height * scale))
 
 
-def resize_media(df: DataFrame, target: int = 128) -> DataFrame:
+def resize_media(df: DataFrame) -> DataFrame:
     """Arrow-batched resize pass over decoded media (expects
-    ``extract_metadata`` output). Geometry is real; pixel work is where
-    the codec library plugs in."""
+    ``extract_metadata`` output) to a 128-pixel long side. Geometry is
+    real; pixel work is where the codec library plugs in."""
     from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(df.sparkSession)
@@ -302,7 +302,7 @@ def resize_media(df: DataFrame, target: int = 128) -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             dims = [
-                resize_stub(p, w, h, target)
+                resize_stub(p, w, h, 128)
                 for p, w, h in zip(pdf["payload"], pdf["width"], pdf["height"])
             ]
             pdf = pdf.copy()
@@ -313,8 +313,8 @@ def resize_media(df: DataFrame, target: int = 128) -> DataFrame:
     return df.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
-def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame sampling for video rows: one output row per sampled frame
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: one output row per 10th frame
     index with a deterministic per-frame fingerprint (real extraction
     swaps the fingerprint for decoded frame bytes). Non-video rows pass
     through with frame 0.
@@ -337,7 +337,7 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
                 # NaN in pandas, and NaN is truthy — `int(NaN or 1)`
                 # would raise instead of defaulting
                 nf = 1 if pd.isna(n_frames) else (int(n_frames) or 1)
-                idxs = range(0, nf, every_n) if mtype == "video" else [0]
+                idxs = range(0, nf, 10) if mtype == "video" else [0]
                 for i in idxs:
                     digest = hashlib.sha256(f"{sha_hex}:{i}".encode()).hexdigest()
                     rows.append(

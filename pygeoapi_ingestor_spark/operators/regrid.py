@@ -54,9 +54,6 @@ def bilinear_regrid(
     targets: DataFrame,
     value_col: str = "tp",
     time_col: str = "time",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    out_col: str = "value_interp",
 ) -> DataFrame:
     """Interpolate ``grid[value_col]`` at each target (time, lat, lon).
 
@@ -66,13 +63,13 @@ def bilinear_regrid(
     the reserved internal names.
     """
     spark = grid.sparkSession
-    passthrough = [c for c in targets.columns if c not in (time_col, lat_col, lon_col)]
-    clash = (_INTERNAL_COLS | {out_col}) & set(passthrough)
+    passthrough = [c for c in targets.columns if c not in (time_col, "lat", "lon")]
+    clash = (_INTERNAL_COLS | {"value_interp"}) & set(passthrough)
     if clash:
         raise ValueError(f"target columns collide with internal names: {sorted(clash)}")
 
-    lats = _clean_axis((r[0] for r in grid.select(lat_col).distinct().collect()), "lat")
-    lons = _clean_axis((r[0] for r in grid.select(lon_col).distinct().collect()), "lon")
+    lats = _clean_axis((r[0] for r in grid.select("lat").distinct().collect()), "lat")
+    lons = _clean_axis((r[0] for r in grid.select("lon").distinct().collect()), "lon")
 
     lat_cells = F.broadcast(_interval_table(spark, lats, "_lat_lo", "_lat_hi"))
     lon_cells = F.broadcast(
@@ -85,8 +82,8 @@ def bilinear_regrid(
     t = targets.select(
         F.monotonically_increasing_id().alias("_tid"),
         F.col(time_col).alias("t_time"),
-        F.col(lat_col).alias("t_lat"),
-        F.col(lon_col).alias("t_lon"),
+        F.col("lat").alias("t_lat"),
+        F.col("lon").alias("t_lon"),
         *passthrough,
     )
     in_lat = (t_lat >= F.col("_lat_lo")) & (
@@ -126,8 +123,8 @@ def bilinear_regrid(
 
     g = grid.select(
         F.col(time_col).alias("t_time"),
-        F.col(lat_col).alias("c_lat"),
-        F.col(lon_col).alias("c_lon"),
+        F.col("lat").alias("c_lat"),
+        F.col("lon").alias("c_lon"),
         F.col(value_col).alias("_gv"),
     )
     joined = t_exp.join(g, ["t_time", "c_lat", "c_lon"], "left")
@@ -153,10 +150,10 @@ def bilinear_regrid(
         + F.col("_vhihi") * wy * wx
     )
     in_bounds = F.col("_lat_lo").isNotNull() & F.col("_lon_lo").isNotNull()
-    return pivot.withColumn(out_col, F.when(in_bounds, interp)).select(
+    return pivot.withColumn("value_interp", F.when(in_bounds, interp)).select(
         F.col("t_time").alias(time_col),
-        F.col("t_lat").alias(lat_col),
-        F.col("t_lon").alias(lon_col),
+        F.col("t_lat").alias("lat"),
+        F.col("t_lon").alias("lon"),
         *passthrough,
-        out_col,
+        "value_interp",
     )

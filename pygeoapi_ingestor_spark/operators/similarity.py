@@ -413,7 +413,7 @@ def quantize_int8_np(vm):
 
 
 def quantize_int8(
-    df: DataFrame, vec_col: str, out_prefix: str = "q"
+    df: DataFrame, vec_col: str
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization — the storage-compression
     stage of an embedding corpus (4x smaller at-rest than float32, 8x
@@ -425,8 +425,8 @@ def quantize_int8(
     mx = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = F.when(mx > 0, mx).otherwise(F.lit(1.0))
     q = F.transform(v, lambda x: F.round(x * F.lit(127.0) / scale, 0).cast("int"))
-    return df.withColumn(f"{out_prefix}_scale", scale).withColumn(
-        f"{out_prefix}_vec", q
+    return df.withColumn("q_scale", scale).withColumn(
+        "q_vec", q
     )
 
 
@@ -454,8 +454,6 @@ def with_md5_sig_arrow(
     vec_col: str,
     dim: int,
     n_planes: int,
-    seed: int = 7,
-    out_col: str = "_sig",
 ) -> DataFrame:
     """Append the md5-plane sign-bit signature as ONE Arrow-batched
     numpy pass — the vectorized twin of ``md5_signature`` (whose
@@ -473,11 +471,11 @@ def with_md5_sig_arrow(
 
     spark = df.sparkSession
     ensure_package_on_executors(spark)
-    w_np = np.array(md5_plane_weights(dim, n_planes, seed), dtype=np.float64)
+    w_np = np.array(md5_plane_weights(dim, n_planes, 7), dtype=np.float64)
     bc = spark.sparkContext.broadcast(w_np)
     cols = list(df.columns)
     schema = ", ".join(
-        [f"`{c}` {t}" for c, t in df.dtypes] + [f"{out_col} bigint"]
+        [f"`{c}` {t}" for c, t in df.dtypes] + ["_sig bigint"]
     )
 
     def add_sig(batches):
@@ -490,10 +488,10 @@ def with_md5_sig_arrow(
             for p in range(w_.shape[0]):
                 sig[ok] |= sign_bits(seq_dot_row(vm, w_[p])) << p
             pdf = pdf.copy()
-            pdf[out_col] = sig
+            pdf["_sig"] = sig
             yield pdf
 
-    return df.mapInPandas(add_sig, schema=schema).select(*cols, out_col)
+    return df.mapInPandas(add_sig, schema=schema).select(*cols, "_sig")
 
 
 def md5_signature(vec_col: Column, dim: int, n_planes: int, seed: int = 7) -> Column:
@@ -516,13 +514,13 @@ def md5_signature(vec_col: Column, dim: int, n_planes: int, seed: int = 7) -> Co
     return sig
 
 
-def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16, seed: int = 7) -> Column:
+def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 16) -> Column:
     """Sign-bit signature: bit p = 1 iff sum_d w[p,d]*v[d] > 0, with
     w[p,d] a deterministic +/-1 pseudo-random weight from xxhash64."""
     def _plane_term(p):
         # +/-1 pseudo-random weight per (plane, dim) from xxhash64
         return lambda v, d: v * F.when(
-            F.xxhash64(d, F.lit(p), F.lit(seed)).bitwiseAND(F.lit(1)) == 1, 1.0
+            F.xxhash64(d, F.lit(p), F.lit(7)).bitwiseAND(F.lit(1)) == 1, 1.0
         ).otherwise(-1.0)
 
     bits = []
@@ -587,16 +585,15 @@ def ivf_topk(
     query_id_col: str,
     query_vec_col: str,
     k: int = 5,
-    n_clusters: int = 16,
     n_probe: int = 4,
 ) -> DataFrame:
     """IVF-style approximate top-k: partition vectors into inverted lists
     by nearest centroid, search only the ``n_probe`` lists closest to
     each query.
 
-    Centroids are the ``n_clusters`` lowest-id vectors — a deterministic
+    Centroids are the 16 lowest-id vectors — a deterministic
     sampling build (no iterative training), collected once to the driver
-    (n_clusters x dim doubles). The query set is small by contract
+    (16 x dim doubles). The query set is small by contract
     (broadcast material): its probe lists compute driver-side against
     the same centroid matrix. Search is then ONE Arrow-batched
     ``mapInPandas`` pass over the corpus — each batch assigns home
@@ -617,7 +614,7 @@ def ivf_topk(
 
     from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    c_ids, c_mat, dim = lowest_id_centroids(embeddings, id_col, vec_col, n_clusters)
+    c_ids, c_mat, dim = lowest_id_centroids(embeddings, id_col, vec_col, 16)
     qids, qm = collect_query_vectors(queries, query_id_col, query_vec_col, dim)
     if not len(c_ids) or not qids:
         return _empty_topk(embeddings, queries, id_col, query_id_col)
@@ -1074,10 +1071,9 @@ def with_best_centroid(
     df: DataFrame,
     vec_col: str,
     cents,
-    out_col: str = "_best",
     inline_max: int | None = None,
 ) -> DataFrame:
-    """Add ``out_col`` = struct(d, cid) of the nearest centroid (exact
+    """Add ``_best`` = struct(d, cid) of the nearest centroid (exact
     integer squared distance, ties to the lowest cid).
 
     Small centroid sets inline as literal SQL (single projection, no
@@ -1087,11 +1083,11 @@ def with_best_centroid(
     ``inline_max`` overrides the threshold (tests force both paths)."""
     cap = CENTROID_INLINE_MAX if inline_max is None else inline_max
     if len(cents) <= cap:
-        return df.withColumn(out_col, F.expr(_argmin_centroid_sql(vec_col, cents)))
+        return df.withColumn("_best", F.expr(_argmin_centroid_sql(vec_col, cents)))
     ctab = _cents_table(df.sparkSession, cents)
     return (
         df.crossJoin(F.broadcast(ctab))
-        .withColumn(out_col, F.array_min(_dist_structs_col(vec_col)))
+        .withColumn("_best", F.array_min(_dist_structs_col(vec_col)))
         .drop("_cents")
     )
 
@@ -1260,8 +1256,6 @@ def ivf_topk_trained(
     k: int = 5,
     n_clusters: int = 8,
     iters: int = 3,
-    n_probe: int = 3,
-    dim: int = 64,
     cents=None,
 ) -> DataFrame:
     """IVF search over TRAINED centroids: ``kmeans_fit_int8`` builds the
@@ -1269,12 +1263,14 @@ def ivf_topk_trained(
     on the quantized vectors (deterministic — no float-compare ties),
     scoring is exact double cosine on the original vectors within the
     probed lists only. The full production ANN path (train -> index ->
-    probe -> score) with every stage reproducible in SQL.
+    probe -> score) with every stage reproducible in SQL. Vectors are
+    64-dim; each query probes its 3 nearest lists.
 
     Pass ``cents`` to reuse an already-trained centroid list (the
     train-once contract) — it must come from the same deterministic
     ``kmeans_fit_int8`` run the SQL twin replays.
     """
+    dim = 64
     if cents is None:
         cents, _ = kmeans_fit_int8(
             embeddings, id_col, vec_col, k=n_clusters, iters=iters, dim=dim
@@ -1307,7 +1303,7 @@ def ivf_topk_trained(
     ).select("query_id", F.col("_v").alias("_qv"), F.col("q_vec").alias("_qq"))
     probes = (
         with_centroid_dists(qq, "_qq", cents, "_dists")
-        .withColumn("_p", F.explode(F.slice(F.array_sort(F.col("_dists")), 1, n_probe)))
+        .withColumn("_p", F.explode(F.slice(F.array_sort(F.col("_dists")), 1, 3)))
         .select("query_id", "_qv", F.col("_p").getField("cid").alias("cluster"))
     )
 
@@ -1355,17 +1351,13 @@ def pq_adc_topk(
     query_id_col: str,
     query_vec_col: str,
     k: int = 5,
-    m_subs: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    inline_max: int | None = None,
 ):
     """Product-quantization ADC search (Jegou et al., "Product
     Quantization for Nearest Neighbor Search"): split each int8-quantized
-    vector into ``m_subs`` subvectors, encode every subvector as the id
-    of its nearest codebook entry, and answer queries by Asymmetric
-    Distance Computation — per query precompute the ``m_subs x n_codes``
-    exact-integer distance table, then score each corpus vector as the
+    64-dim vector into ``m_subs`` = 8 subvectors, encode every subvector
+    as the id of its nearest entry in an ``n_codes`` = 16 codebook, and
+    answer queries by Asymmetric Distance Computation — per query
+    precompute the ``m_subs x n_codes`` exact-integer distance table, then score each corpus vector as the
     sum of 8 table lookups over its stored codes.
 
     The compressed index stores ``m_subs`` small ints per vector
@@ -1377,13 +1369,13 @@ def pq_adc_topk(
     deterministic integer arithmetic and the SQL twin reproduces
     encode -> table -> scan -> top-k bit-for-bit.
 
-    ``inline_max`` is retained for API compatibility but ignored since
-    r13: encode and table build run as ONE Arrow numpy kernel each (the
+    Encode and table build run as ONE Arrow numpy kernel each (the
     former inline-literal and broadcast-table expression paths were
     m_subs x n_codes interpreted folds per row either way).
 
     Returns (query_id, neighbor_id, adc_dist, rank).
     """
+    m_subs, n_codes, dim = 8, 16, 64
     sub_dim = dim // m_subs
     eq = quantize_int8(
         embeddings.select(

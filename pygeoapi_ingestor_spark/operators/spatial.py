@@ -38,15 +38,15 @@ def bbox_filter(
     return df.filter(lon_ok & lat_ok)
 
 
-def bbox_agg_exprs(lon_col: str = "lon", lat_col: str = "lat") -> list[Column]:
+def bbox_agg_exprs() -> list[Column]:
     """The four OGC-order bbox aggregate expressions (W, S, E, N) for a
     collection's spatial extent registration (utils_spi.py:481-562
     registers [min_x, min_y, max_x, max_y] the same way)."""
     return [
-        F.min(lon_col).alias("bbox_w"),
-        F.min(lat_col).alias("bbox_s"),
-        F.max(lon_col).alias("bbox_e"),
-        F.max(lat_col).alias("bbox_n"),
+        F.min("lon").alias("bbox_w"),
+        F.min("lat").alias("bbox_s"),
+        F.max("lon").alias("bbox_e"),
+        F.max("lat").alias("bbox_n"),
     ]
 
 
@@ -59,8 +59,6 @@ def _interleave_bits(v: Column, n_bits: int, offset: int) -> Column:
 
 
 def morton_cell(
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     bits_per_axis: int = 12,
 ) -> Column:
     """Z-order cell id over the global lon/lat envelope.
@@ -72,8 +70,8 @@ def morton_cell(
     scale = (1 << bits_per_axis) - 1
     # clamp to the valid envelope first: out-of-range coordinates would
     # otherwise overflow the bit budget and alias into distant cells
-    lon = F.greatest(F.lit(-180.0), F.least(F.lit(180.0), F.col(lon_col)))
-    lat = F.greatest(F.lit(-90.0), F.least(F.lit(90.0), F.col(lat_col)))
+    lon = F.greatest(F.lit(-180.0), F.least(F.lit(180.0), F.col("lon")))
+    lat = F.greatest(F.lit(-90.0), F.least(F.lit(90.0), F.col("lat")))
     x = F.round((lon + 180.0) / 360.0 * scale, 0).cast("long")
     y = F.round((lat + 90.0) / 180.0 * scale, 0).cast("long")
     return _interleave_bits(x, bits_per_axis, 0).bitwiseOR(
@@ -123,9 +121,6 @@ def polygon_membership(
     points: DataFrame,
     edges: DataFrame,
     key_cols: list[str],
-    zone_col: str = "zone",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
     """Point-in-polygon zone assignment via broadcast edge table +
     ray-casting crossing parity — the spatial predicate behind the
@@ -145,10 +140,10 @@ def polygon_membership(
     Returns ``(key_cols..., zone)`` with one row per (point, containing
     zone); points outside every polygon produce no row.
     """
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("lat"), F.col("lon")
     j = points.crossJoin(F.broadcast(edges))
     return (
-        j.groupBy(*key_cols, zone_col)
+        j.groupBy(*key_cols, "zone")
         .agg(F.sum(crossing_expr(lon, lat)).alias("_crossings"))
         .filter(F.col("_crossings") % 2 == 1)
         .drop("_crossings")
@@ -175,7 +170,6 @@ def dissolve_regions(
     y_col: str,
     band_col: str,
     width: int,
-    max_iter: int | None = None,
     driver_threshold: int = 1 << 20,
 ) -> DataFrame:
     """Dissolve same-band 4-adjacent grid cells into region labels —
@@ -296,16 +290,15 @@ def dissolve_regions(
         # distributed min-label fixpoint for rasters too large to
         # summarize driver-side. steps_per_round=2 measured best on
         # the run graph (sf0.1: 10.8s at 1 hop/round, 7.0s at 2,
-        # plan-depth regression past 4). The hop budget defaults to
+        # plan-depth regression past 4). The hop budget is
         # the worst POSSIBLE path on this grid (a serpentine region
         # has ~width² runs): the loop exits at the fixpoint, so real
         # rasters still converge in a few rounds — the bound only
         # prevents a legitimate long thin region from spuriously
         # raising, never adds work
-        if max_iter is None:
-            max_iter = max(96, (width * width + 1) // 2)
         comp = connected_components(
-            run_edges, a_col="run_a", b_col="run_b", max_iter=max_iter,
+            run_edges, a_col="run_a", b_col="run_b",
+            max_iter=max(96, (width * width + 1) // 2),
             steps_per_round=2,
         )
     labeled = runs.join(

@@ -175,11 +175,10 @@ def rolling_agg(
     order_col: str,
     value_col: str,
     window: int,
-    fn: str = "sum",
     out_col: str = "rolling_value",
-    full_windows_only: bool = True,
 ) -> DataFrame:
-    """Per-series trailing window over `window` rows (SPI timescale sums).
+    """Per-series trailing sum over `window` rows (SPI timescale sums);
+    rows before the first full window are dropped.
 
     Window partitioned by series: each series' rows land on one partition —
     fine because series count >> series length in our data model.
@@ -189,11 +188,11 @@ def rolling_agg(
         .orderBy(order_col)
         .rowsBetween(-(window - 1), 0)
     )
-    out = df.withColumn(out_col, getattr(F, fn)(value_col).over(w))
-    if full_windows_only:
-        cnt = F.count(F.lit(1)).over(w)
-        out = out.withColumn("_wn", cnt).filter(F.col("_wn") == window).drop("_wn")
-    return out
+    cnt = F.count(F.lit(1)).over(w)
+    return (
+        df.withColumn(out_col, F.sum(value_col).over(w))
+        .withColumn("_wn", cnt).filter(F.col("_wn") == window).drop("_wn")
+    )
 
 
 def rolling_agg_range(
@@ -202,10 +201,9 @@ def rolling_agg_range(
     ts_col: str,
     value_col: str,
     window_seconds: int,
-    fn: str = "sum",
     out_col: str = "rolling_value",
 ) -> DataFrame:
-    """Time-RANGE trailing window: aggregates everything within
+    """Time-RANGE trailing window: sums everything within
     ``window_seconds`` of each row's timestamp — gap-correct where the
     row-count window (``rolling_agg``) silently widens over missing
     periods."""
@@ -216,7 +214,7 @@ def rolling_agg_range(
         .orderBy(axis_seconds(df, ts_col))
         .rangeBetween(-window_seconds, 0)
     )
-    return df.withColumn(out_col, getattr(F, fn)(value_col).over(w))
+    return df.withColumn(out_col, F.sum(value_col).over(w))
 
 
 def linear_interp_gaps(
@@ -350,7 +348,6 @@ def chunked_linear_interp(
     ts_col: str,
     value_col: str,
     chunk_col,
-    out_col: str = "v_interp",
 ) -> DataFrame:
     """``linear_interp_gaps`` re-keyed to (series, chunk) with boundary
     exchange in BOTH directions: per chunk the local prev/next valid
@@ -403,7 +400,7 @@ def chunked_linear_interp(
     frac = F.when(next_t > prev_t, (t - prev_t) / (next_t - prev_t)).otherwise(0.0)
     interp = prev_v + (next_v - prev_v) * frac
     return out.withColumn(
-        out_col, F.when(v.isNotNull(), v).otherwise(interp)
+        "v_interp", F.when(v.isNotNull(), v).otherwise(interp)
     ).drop("_chunk", "_cin", "_cout")
 
 
@@ -602,7 +599,6 @@ def chunked_ewma(
     value_col: str,
     alpha: float,
     chunk_col,
-    out_col: str = "ewma",
 ) -> DataFrame:
     """Exact recursive EWMA (pandas ``ewm(alpha, adjust=False)``:
     y_0 = x_0, y_t = (1-a)·y_{t-1} + a·x_t) without a per-series sort —
@@ -683,7 +679,7 @@ def chunked_ewma(
     carries = summary.groupBy(*series_cols).applyInPandas(_resolve, schema=carry_schema)
     out = with_ld.join(F.broadcast(carries), [*series_cols, "_chunk"])
     return out.withColumn(
-        out_col, F.col("_L") + F.col("_D") * F.col("_carry_in")
+        "ewma", F.col("_L") + F.col("_D") * F.col("_carry_in")
     ).drop("_chunk", "_L", "_D", "_carry_in")
 
 
@@ -777,7 +773,6 @@ def time_weighted_avg(
     ts_col: str,
     value_col: str,
     id_col: str,
-    value_decimal: str = "decimal(14,2)",
 ) -> DataFrame:
     """Per-(series, day) time-weighted average of an irregular series:
     each observation holds until the next one (step interpolation), the
@@ -800,7 +795,7 @@ def time_weighted_avg(
         day.alias("_day"),
         F.col(ts_col).alias("_ts"),
         F.col(id_col).alias("_id"),
-        F.col(value_col).cast(value_decimal).alias("_v"),
+        F.col(value_col).cast("decimal(14,2)").alias("_v"),
     )
     w = Window.partitionBy(*series_cols, "_day").orderBy("_ts", "_id")
     day_end = F.col("_day") + F.expr("INTERVAL 1 DAY")
@@ -827,15 +822,13 @@ def apply_changes(
     changes: DataFrame,
     key_cols: list[str],
     order_cols: list[str],
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """MERGE INTO semantics as a batch operator: apply a change batch
     (upserts + deletes) onto a keyed base snapshot — the idempotent
     re-ingest of utils_spi.py:205-358 generalized to CDC shape.
 
     Only the LATEST change per key (by ``order_cols``) applies; a
-    delete_op change removes the key, any other op replaces the base
+    change with op "D" removes the key, any other op replaces the base
     row, keys untouched by the batch keep their base row. Two shuffles
     (latest-change window on the key, one full-outer equi-join), both on
     the high-cardinality key — the standard scale shape; no driver
@@ -857,12 +850,12 @@ def apply_changes(
     )
     c = lc.select(
         *key_cols,
-        F.col(op_col).alias("_op"),
+        F.col("op").alias("_op"),
         F.struct(*data_cols).alias("_c"),
     )
     joined = b.join(c, key_cols, "full_outer")
     keep = joined.filter(
-        F.col("_op").isNull() | (F.col("_op") != delete_op)
+        F.col("_op").isNull() | (F.col("_op") != "D")
     )
     src = F.when(F.col("_op").isNotNull(), F.lit("change")).otherwise(
         F.lit("base")

@@ -27,7 +27,7 @@ def _word_hits(text_col: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.regexp_extract_all(F.lower(text_col), F.lit(pattern), F.lit(0)))
 
 
-def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
+def lang_id(df: DataFrame, text_col: str) -> DataFrame:
     """Heuristic language ID: argmax of per-language stopword hit counts;
     'und' (undetermined) when nothing matches."""
     text = F.col(text_col)
@@ -42,7 +42,7 @@ def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFra
         pred = F.when(
             (F.col(f"_hits_{lang}") == best) & (best > 0), F.lit(lang)
         ).otherwise(pred)
-    return out.withColumn(out_col, pred).drop(
+    return out.withColumn("lang_pred", pred).drop(
         *[f"_hits_{lang}" for lang in LANG_STOPWORDS]
     )
 
@@ -138,8 +138,6 @@ def scrub(
     df: DataFrame,
     text_col: str,
     patterns: dict[str, str] | None = None,
-    replacement: str = "[REDACTED]",
-    out_col: str = "scrubbed",
 ) -> DataFrame:
     """Redact every pattern match and count hits per pattern — the PII /
     blocklist scrub stage. Patterns apply in dict order (order matters:
@@ -154,8 +152,8 @@ def scrub(
             f"n_{name}",
             F.size(F.regexp_extract_all(text, F.lit(pat), F.lit(0))).cast("bigint"),
         )
-        scrubbed = F.regexp_replace(scrubbed, pat, replacement)
-    return out.withColumn(out_col, scrubbed)
+        scrubbed = F.regexp_replace(scrubbed, pat, "[REDACTED]")
+    return out.withColumn("scrubbed", scrubbed)
 
 
 def repetition_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -221,12 +219,10 @@ def chunk_documents(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    size: int = 40,
-    stride: int = 30,
 ) -> DataFrame:
     """Sliding-window token chunking: split each document into
-    ``size``-token chunks starting every ``stride`` tokens (overlap =
-    size - stride) — the context-window preparation step of a training
+    40-token chunks starting every 30 tokens (overlap = 10) — the
+    context-window preparation step of a training
     or retrieval pipeline (chunk + overlap so no boundary sentence is
     lost to truncation).
 
@@ -234,7 +230,7 @@ def chunk_documents(
     text). Pure generate: sequence -> explode -> slice -> array_join,
     no shuffle at all — chunking parallelizes per input row, so the
     operator is embarrassingly parallel at any corpus size. The trailing
-    chunk may be shorter than ``size``; every token index <= n starts a
+    chunk may be shorter than 40 tokens; every token index <= n starts a
     chunk, so short tails are emitted (standard sliding-window
     semantics).
 
@@ -250,13 +246,13 @@ def chunk_documents(
         )
         .filter(F.col("_n") > 0)
     )
-    starts = F.sequence(F.lit(1), F.col("_n"), F.lit(stride))
-    chunk = F.slice(F.col("_toks"), F.col("_start"), size)
+    starts = F.sequence(F.lit(1), F.col("_n"), F.lit(30))
+    chunk = F.slice(F.col("_toks"), F.col("_start"), 40)
     return (
         base.select("doc", "_toks", F.explode(starts).alias("_start"))
         .select(
             "doc",
-            ((F.col("_start") - 1) / stride).cast("int").alias("chunk_index"),
+            ((F.col("_start") - 1) / 30).cast("int").alias("chunk_index"),
             F.col("_start").cast("bigint").alias("start_token"),
             F.size(chunk).cast("bigint").alias("n_tokens"),
             F.md5(F.array_join(chunk, " ")).alias("chunk_fp"),
@@ -268,10 +264,8 @@ def top_ngrams(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 2,
-    k: int = 20,
 ) -> DataFrame:
-    """Global top-k word n-grams by total occurrence count — the
+    """Global top-20 word bigrams by total occurrence count — the
     vocabulary/boilerplate-mining pass of a corpus pipeline (frequent
     n-grams expose templates and junk worth filtering).
 
@@ -288,12 +282,12 @@ def top_ngrams(
         lambda w: w != "",
     )
     base = df.select(F.col(id_col).alias("doc"), words.alias("_w")).filter(
-        F.size("_w") >= n  # guard: sequence(1, 0) would DESCEND in Spark
+        F.size("_w") >= 2  # guard: sequence(1, 0) would DESCEND in Spark
     )
     grams = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - (n - 1)),
+        F.sequence(F.lit(1), F.size("_w") - 1),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("_w"), i + j) for j in range(n)]
+            " ", *[F.element_at(F.col("_w"), i + j) for j in range(2)]
         ),
     )
     tok = base.select("doc", F.explode(grams).alias("ngram"))
@@ -301,16 +295,15 @@ def top_ngrams(
         F.count(F.lit(1)).cast("bigint").alias("total_count"),
         F.countDistinct("doc").cast("bigint").alias("doc_freq"),
     )
-    return counts.orderBy(F.col("total_count").desc(), F.col("ngram").asc()).limit(k)
+    return counts.orderBy(F.col("total_count").desc(), F.col("ngram").asc()).limit(20)
 
 
 def tfidf_top_terms(
     df: DataFrame,
     group_col: str,
     text_col: str,
-    k: int = 5,
 ) -> DataFrame:
-    """Top-k TF-IDF terms per group (source/domain) — the
+    """Top-5 TF-IDF terms per group (source/domain) — the
     characteristic-vocabulary pass of corpus curation (what makes this
     domain's text distinctive; flat-IDF terms are boilerplate).
 
@@ -361,7 +354,7 @@ def tfidf_top_terms(
     )
     ranked = ranks.grouped_topk(
         scored, series_cols=["grp"], value_col="_neg",
-        tiebreak_cols=["w"], k=k, out_col="_rn",
+        tiebreak_cols=["w"], k=5, out_col="_rn",
     )
     return ranked.select(
         F.col("grp").alias(group_col),
@@ -414,9 +407,8 @@ def char_entropy(
 def bigram_merge_counts(
     df: DataFrame,
     text_col: str,
-    k: int = 20,
 ) -> DataFrame:
-    """Top-k intra-word character-pair frequencies — the first merge
+    """Top-20 intra-word character-pair frequencies — the first merge
     step of BPE vocabulary induction (which adjacent symbol pair is most
     frequent across the corpus). Pure explode + one gram shuffle with
     map-side combine; top-k plans as TakeOrdered. Ties break on the pair
@@ -449,4 +441,4 @@ def bigram_merge_counts(
     )
     return counts.orderBy(
         F.col("pair_count").desc(), F.col("pair").asc()
-    ).limit(k)
+    ).limit(20)

@@ -22,18 +22,16 @@ DANGER_LEVELS = (
 DANGER_FALLBACK = "darkred"
 
 
-def categorize(value_col, levels=DANGER_LEVELS, fallback: str = DANGER_FALLBACK) -> Column:
+def categorize(value_col) -> Column:
     """value → class label by ascending breakpoints (first match wins)."""
-    if not levels:
-        raise ValueError("categorize needs at least one (bound, label) level")
     col = F.col(value_col) if isinstance(value_col, str) else value_col
     # NULL values stay NULL: every `col < bound` comparison is NULL for a
     # NULL input, so without this branch the chain would fall through to
     # the fallback and label missing data as the most severe class
     expr = F.when(col.isNull(), F.lit(None).cast("string"))
-    for bound, label in levels:
+    for bound, label in DANGER_LEVELS:
         expr = expr.when(col < F.lit(bound), label)
-    return expr.otherwise(fallback)
+    return expr.otherwise(DANGER_FALLBACK)
 
 
 def categorize_by_table(
@@ -41,8 +39,6 @@ def categorize_by_table(
     levels: DataFrame,
     station_col: str,
     value_col: str,
-    out_col: str = "danger_level",
-    fallback: str = DANGER_FALLBACK,
 ) -> DataFrame:
     """Per-station threshold categorization (reference
     ll_nl_danger_levels.py:107-121: each station carries its own danger
@@ -53,7 +49,7 @@ def categorize_by_table(
     is labeled in a single projection after one broadcast hash join —
     no per-row shuffle, no row-multiplying join, no re-aggregation. The
     label is the first ladder entry with value < bound (ascending
-    bounds), else ``fallback``. Stations absent from the table and NULL
+    bounds), else ``DANGER_FALLBACK``. Stations absent from the table and NULL
     values get NULL (surface them, don't silently default)."""
     ladders = levels.groupBy(F.col(station_col).alias("_station")).agg(
         F.array_sort(
@@ -72,17 +68,17 @@ def categorize_by_table(
         F.col("_ladder").isNull() | v.isNull(), F.lit(None).cast("string")
     ).otherwise(
         # F.get is null-on-out-of-bounds (ANSI-safe where element_at throws)
-        F.coalesce(F.get(hit, 0).getField("lbl"), F.lit(fallback))
+        F.coalesce(F.get(hit, 0).getField("lbl"), F.lit(DANGER_FALLBACK))
     )
-    return joined.withColumn(out_col, label).drop("_ladder")
+    return joined.withColumn("danger_level", label).drop("_ladder")
 
 
 def categorize_counts(
-    df: DataFrame, group_cols: list[str], value_col: str, out_col: str = "danger_level"
+    df: DataFrame, group_cols: list[str], value_col: str
 ) -> DataFrame:
     """Label every row, then count per (group, label)."""
-    labeled = df.withColumn(out_col, categorize(value_col))
-    return labeled.groupBy(*group_cols, out_col).agg(
+    labeled = df.withColumn("danger_level", categorize(value_col))
+    return labeled.groupBy(*group_cols, "danger_level").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.avg(value_col).alias("avg_value"),
     )

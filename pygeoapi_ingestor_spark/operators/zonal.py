@@ -83,7 +83,6 @@ def zonal_stats_hist(
     zone_col: str,
     bucket_col,
     value_col: str,
-    percentiles: tuple[float, ...] = (0.05, 0.5, 0.95),
 ) -> DataFrame:
     """``zonal_stats`` for QUANTIZED measurement values — one
     value-compressed histogram pipeline instead of the 3-scan bucket
@@ -147,7 +146,7 @@ def zonal_stats_hist(
     # codegen on every fresh plan (the r10 constant factor was
     # planning cost, not data cost).
     proj_cols, p_specs = [], []
-    for p in percentiles:
+    for p in (0.05, 0.5, 0.95):
         nm = f"p{int(round(p * 100)):02d}"
         t = (F.col("_n") - 1).cast("double") * F.lit(float(p))
         proj_cols.append(F.floor(t).cast("bigint").alias(f"_lo_{nm}"))

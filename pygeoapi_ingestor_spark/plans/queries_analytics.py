@@ -581,7 +581,7 @@ def q_fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pygeoapi_ingestor_spark.sources.readers import read_table
 
     part = read_table(spark, sf_dir, "part")
-    return fuzzy.fuzzy_name_pairs(part, name_col="p_name", q=2, max_dist=2)
+    return fuzzy.fuzzy_name_pairs(part, name_col="p_name")
 
 
 ANALYTICS_QUERIES = {

@@ -532,7 +532,7 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = similarity.ivf_topk(
             e, q, id_col="vec_id", vec_col="embedding",
             query_id_col="vec_id", query_vec_col="embedding",
-            k=TOPK, n_clusters=16, n_probe=p,
+            k=TOPK, n_probe=p,
         )
         hits = gt.join(
             cand.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),

@@ -199,7 +199,6 @@ def q_rolling_sum_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_col="bucket",
         value_col="daily_total",
         window=7,
-        fn="sum",
         out_col="rolling_7d",
     )
     return rolled.select(
@@ -252,7 +251,6 @@ def q_linear_interp_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = temporal.chunked_linear_interp(
         with_gaps, series_cols=["event_type"], ts_col="ts",
         value_col="v_gappy", chunk_col=temporal.wall_trunc("week", F.col("ts")),
-        out_col="v_interp",
     )
     return out.select(
         "event_id", "event_type", F.round("v_interp", 6).alias("v_interp")
@@ -282,7 +280,7 @@ def q_anomaly_vs_climatology(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anom = indices.anomaly(
         ev, clim, series_cols=["event_type"], bucket_col="ts",
-        value_col="value", out_col="zscore", cycle="hour",
+        value_col="value", cycle="hour",
     )
     return anom.select(
         "event_id", "event_type", F.round("zscore", 6).alias("zscore")
@@ -347,7 +345,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         zone_col="zone",
         bucket_col=temporal.wall_trunc("week", F.col("ts")).alias("bucket"),
         value_col="value",
-        percentiles=(0.05, 0.5, 0.95),
     )
     return out.select(
         "zone",
@@ -437,7 +434,7 @@ def q_bias_correction_qmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", F.hour("ts").cast("int").alias("lead_hour")
     )
     mapped = correction.quantile_map(
-        model, ref, series_cols=["lead_hour"], value_col="value", out_col="value_adj"
+        model, ref, series_cols=["lead_hour"], value_col="value"
     )
     return mapped.select(
         "event_id", "lead_hour", "value", F.round("value_adj", 6).alias("value_adj")
@@ -458,7 +455,7 @@ def q_rating_curve_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_threshold_categorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     out = thresholds.categorize_counts(
-        ev, group_cols=["event_type"], value_col="value", out_col="danger_level"
+        ev, group_cols=["event_type"], value_col="value"
     )
     return out.select(
         "event_type", "danger_level", "n", F.round("avg_value", 6).alias("avg_value")
@@ -489,7 +486,7 @@ def q_threshold_per_station(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     labeled = thresholds.categorize_by_table(
-        ev, levels, station_col="user_id", value_col="value", out_col="danger_level"
+        ev, levels, station_col="user_id", value_col="value"
     )
     return labeled.groupBy("user_id", "danger_level").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -514,7 +511,7 @@ def q_bias_correction_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = correction.apply_curve_table(
         model, curve, series_cols=["lead_hour"], x_col="x", y_col="y",
-        value_col="value", out_col="value_adj",
+        value_col="value",
     )
     return out.select(
         "event_id", "lead_hour", "value", F.round("value_adj", 6).alias("value_adj")
@@ -585,7 +582,7 @@ def q_collection_healthcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.round(F.min("value"), 6).alias("v_min"),
         F.round(F.max("value"), 6).alias("v_max"),
-        *spatial.bbox_agg_exprs("lon", "lat"),
+        *spatial.bbox_agg_exprs(),
     )
 
 
@@ -634,7 +631,7 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .hint("shuffle_hash")
     )
-    joined = skew.salt_join(ev, cust, on=["user_id"], n_salts=8)
+    joined = skew.salt_join(ev, cust, on=["user_id"])
     return joined.groupBy("nationkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.round(F.sum(F.col("value").cast(VALUE_DEC)), 2)
@@ -654,7 +651,7 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = temporal.chunked_ewma(
         ev, series_cols=["event_type"], order_cols=["ts", "event_id"],
         value_col="value", alpha=0.3,
-        chunk_col=temporal.wall_trunc("week", F.col("ts")), out_col="ewma",
+        chunk_col=temporal.wall_trunc("week", F.col("ts")),
     )
     return out.select(
         "event_id", "event_type", F.round("ewma", 6).alias("ewma")
@@ -1205,7 +1202,6 @@ def q_regrid_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, targets = _interp_grid_and_targets(spark, sf_dir)
     out = regrid.bilinear_regrid(
         grid, targets, value_col="gval", time_col="day",
-        lat_col="lat", lon_col="lon", out_col="value_interp",
     )
     return out.select(
         "event_id", "day",
@@ -1229,7 +1225,7 @@ def q_morton_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("user_id") % 2880) / F.lit(16.0) - F.lit(90.0)).alias("lat"),
         F.col("value"),
     )
-    cell = spatial.morton_cell("lon", "lat", bits_per_axis=8).alias("cell_id")
+    cell = spatial.morton_cell(bits_per_axis=8).alias("cell_id")
     return pts.groupBy(cell).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(
@@ -1367,7 +1363,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = temporal.apply_changes(
         base, changes, key_cols=["user_id", "event_type"],
-        order_cols=["ts", "event_id"], op_col="op",
+        order_cols=["ts", "event_id"],
     )
     return out.select(
         "user_id", "event_type", "ts", "event_id",
@@ -1422,7 +1418,7 @@ def q_bias_correction_spline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lead_hour int, t array<double>, c array<double>, dmin double, dmax double",
     )
     out = correction.apply_spline_table(
-        model, params, series_cols=["lead_hour"], value_col="value", k=3
+        model, params, series_cols=["lead_hour"], value_col="value"
     )
     return out.select(
         "event_id", "lead_hour", "value", F.round("value_adj", 6).alias("value_adj")
@@ -1498,7 +1494,7 @@ def q_spi_forecast_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
     fc = d.filter(F.col("bucket") >= cut)
     spi = indices.spi_empirical_apply(
         ref, fc, series_cols=["event_type", "member"],
-        value_col="daily_total", out_col="spi_emp",
+        value_col="daily_total",
     )
     out = zonal.ensemble_stats(
         spi, bucket_cols=["event_type", "bucket"], value_col="spi_emp",
@@ -1667,7 +1663,6 @@ def q_zonal_stats_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         zone_col="zone",
         bucket_col=temporal.wall_trunc("week", F.col("ts")).alias("bucket"),
         value_col="value",
-        percentiles=(0.05, 0.5, 0.95),
     )
     return out.select(
         "zone",
@@ -2677,7 +2672,7 @@ def q_cell_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
     )
     base = pts.withColumn(
-        "cell8", spatial.morton_cell("lon", "lat", bits_per_axis=8)
+        "cell8", spatial.morton_cell(bits_per_axis=8)
     )
     leveled = base.select(
         "value",
@@ -5214,7 +5209,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_value": ("min", "value"),
             "max_value": ("max", "value"),
         },
-        n_salts=16,
     )
     return out.select(
         "event_type",

@@ -43,7 +43,7 @@ def shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.lsh_verified_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        n=3, num_hashes=32, bands=8, threshold=0.6,
+        threshold=0.6,
     ).localCheckpoint()  # eager: one build, blocks pinned
 
 
@@ -130,7 +130,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 500)
     pairs = dedup.ngram_jaccard_pairs(
         docs, id_col="doc_id", text_col="text",
-        n=3, threshold=JACCARD_THRESHOLD,
+        threshold=JACCARD_THRESHOLD,
     )
     return pairs.select(
         "doc_a", "doc_b", "n_common", "size_a", "size_b",
@@ -145,7 +145,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the check is a value-hash gate, not rows-only."""
     pairs = dedup.minhash_lsh_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        n=3, num_hashes=32, bands=8, shingle_hash="md5",
+        shingle_hash="md5",
     )
     return pairs.select("doc_a", "doc_b", F.round("est_jaccard", 6).alias("est_jaccard"))
 
@@ -233,7 +233,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         e, q, id_col="vec_id", vec_col="embedding",
         query_id_col="vec_id", query_vec_col="embedding",
-        k=TOPK, n_clusters=16, n_probe=4,
+        k=TOPK, n_probe=4,
     )
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
@@ -449,7 +449,7 @@ def q_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.attach_payload(_docs(spark, sf_dir), id_col="doc_id", text_col="text")
-    decoded = multimodal.extract_metadata(media, use_stub=True)
+    decoded = multimodal.extract_metadata(media)
     return decoded.select("media_id", "media_type", "width", "height", "n_frames", "sha256")
 
 
@@ -551,8 +551,8 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     video. The per-frame fingerprint is text-derived, so even this
     two-UDF-stage pipeline keeps a full value-hash oracle."""
     media = multimodal.attach_payload(_docs(spark, sf_dir), id_col="doc_id", text_col="text")
-    decoded = multimodal.extract_metadata(media, use_stub=True)
-    frames = multimodal.sample_frames(decoded, every_n=10)
+    decoded = multimodal.extract_metadata(media)
+    frames = multimodal.sample_frames(decoded)
     return frames.select("media_id", "frame_idx", "frame_sha256")
 
 
@@ -607,7 +607,7 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks (fully-duplicated docs vanish). The digest column value-gates
     the rebuilt text itself."""
     return dedup.span_dedup(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text", span_words=10
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text"
     )
 
 
@@ -624,7 +624,7 @@ def q_sim_search_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, q, id_col="vec_id", vec_col="embedding",
         query_id_col="vec_id", query_vec_col="embedding",
         k=TOPK, n_clusters=KMEANS_PARAMS["k"], iters=KMEANS_PARAMS["iters"],
-        n_probe=3, cents=shared_kmeans_cents(spark, sf_dir),
+        cents=shared_kmeans_cents(spark, sf_dir),
     )
     return out.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
@@ -833,7 +833,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure generate — no shuffle; the chunk fingerprint is the join key
     downstream span-dedup/decontamination stages use."""
     out = text.chunk_documents(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text", size=40, stride=30
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text"
     )
     return out.select(
         F.col("doc").alias("doc_id"), "chunk_index", "start_token",
@@ -847,7 +847,7 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. One gram shuffle; top-k plans as TakeOrdered, no global
     sort."""
     return text.top_ngrams(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text", n=2, k=20
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text"
     )
 
 
@@ -864,7 +864,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus=docs.filter(F.col("doc_id") % 5 != 4),
         batch=docs.filter(F.col("doc_id") % 5 == 4),
         id_col="doc_id", text_col="text",
-        n=3, num_hashes=32, bands=8, threshold=0.6, shingle_hash="md5",
     )
     return out.select(
         "doc_id", "is_dup", "n_matches", "dup_of",
@@ -1754,7 +1753,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IDF 'document'): the domain-profiling pass of corpus curation.
     Ranking runs through the bucketed distributed row_number."""
     return text.tfidf_top_terms(
-        _docs(spark, sf_dir), group_col="source", text_col="text", k=5
+        _docs(spark, sf_dir), group_col="source", text_col="text"
     )
 
 
@@ -1768,7 +1767,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bigram_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top BPE merge candidates (most frequent intra-word char pairs)."""
     return text.bigram_merge_counts(
-        _docs(spark, sf_dir), text_col="text", k=20
+        _docs(spark, sf_dir), text_col="text"
     )
 
 
@@ -1963,7 +1962,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     local-similarity detector between whole-doc hashing (misses partial
     overlap) and all-grams storage (overpays ~(w+1)/2 x)."""
     return dedup.winnow_fingerprints(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text", n=4, window=5
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text"
     )
 
 
@@ -2016,7 +2015,7 @@ def q_sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_adc_topk(
         e, q, id_col="vec_id", vec_col="embedding",
         query_id_col="vec_id", query_vec_col="embedding",
-        k=TOPK, m_subs=8, n_codes=16, dim=64,
+        k=TOPK,
     )
 
 
@@ -2101,7 +2100,7 @@ def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.pq_adc_topk(
         e, q, id_col="vec_id", vec_col="embedding",
         query_id_col="vec_id", query_vec_col="embedding",
-        k=TOPK, m_subs=8, n_codes=16, dim=64,
+        k=TOPK,
     )
     hits = gt.select("query_id", "neighbor_id").join(
         cand.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
@@ -2149,7 +2148,7 @@ def q_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.ivf_topk(
         e, q, id_col="vec_id", vec_col="embedding",
         query_id_col="vec_id", query_vec_col="embedding",
-        k=TOPK, n_clusters=16, n_probe=4,
+        k=TOPK, n_probe=4,
     )
     hits = gt.select("query_id", "neighbor_id").join(
         cand.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1)),
@@ -2192,7 +2191,6 @@ def q_dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     of results is precisely the PPJoin losslessness guarantee."""
     return dedup.ppjoin_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        threshold=0.6, n=3,
     )
 
 
@@ -3278,7 +3276,7 @@ def q_minhash_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.shingles(_docs(spark, sf_dir), id_col="doc_id", text_col="text", n=3)
     cand = dedup.minhash_lsh_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        n=3, num_hashes=32, bands=8, shingle_hash="md5", shingles_df=sh,
+        shingle_hash="md5", shingles_df=sh,
     )
     from pyspark import StorageLevel
 
@@ -4935,8 +4933,8 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.attach_payload(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text"
     )
-    decoded = multimodal.extract_metadata(media, use_stub=True)
-    resized = multimodal.resize_media(decoded, target=128)
+    decoded = multimodal.extract_metadata(media)
+    resized = multimodal.resize_media(decoded)
     return resized.select(
         "media_id", "media_type", "width", "height",
         "resized_width", "resized_height",

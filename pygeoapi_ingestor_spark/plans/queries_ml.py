@@ -613,7 +613,7 @@ def q_source_overlap_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = dedup.minhash_signatures(
         docs, "doc_id", "text",
-        n=3, num_hashes=_OVL_HASHES, shingle_hash="md5", shingles_df=src_sh,
+        num_hashes=_OVL_HASHES, shingle_hash="md5", shingles_df=src_sh,
     ).select(F.col("doc").alias("source"), "signature")
     a = sig.select(
         F.col("source").alias("src_a"), F.col("signature").alias("_sa")

@@ -5,8 +5,6 @@ from pygeoapi_ingestor_spark.sinks.collections import (
     compute_extents,
     export,
     export_geojsonl,
-    feature_collection,
-    write_bucketed,
     write_collection,
 )
 
@@ -15,7 +13,5 @@ __all__ = [
     "compute_extents",
     "export",
     "export_geojsonl",
-    "feature_collection",
-    "write_bucketed",
     "write_collection",
 ]

@@ -37,10 +37,9 @@ def write_collection(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write a dataset as a partitioned parquet collection."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -64,61 +63,24 @@ def parquet_read_schema(dt: DataType) -> DataType:
     return dt
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed (and optionally sorted) managed table.
-
-    Bucketing pre-shuffles the data on the join/agg key at write time:
-    two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle, and per-bucket sorting turns the join into a merge
-    — the at-rest co-location strategy for repeated fact-fact joins at
-    100 TB. (Bucketed output requires ``saveAsTable``; plain
-    ``parquet(path)`` cannot carry bucket metadata.)
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table_name)
-
-
 def compute_extents(
     df: DataFrame,
     ts_col: str | None = None,
     value_cols: list[str] | None = None,
-    lon_col: str | None = None,
-    lat_col: str | None = None,
 ) -> dict[str, Any]:
     """One-pass extents aggregate (the reference reads coord min/max from
     the opened dataset; we aggregate — no data pulled to the driver
-    beyond one row). With lon/lat columns the result carries the OGC
-    ``bbox`` [W, S, E, N] the reference registers in the collection
-    config (utils_spi.py:481-562)."""
+    beyond one row)."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if ts_col:
         aggs += [F.min(ts_col).alias("ts_begin"), F.max(ts_col).alias("ts_end")]
     for c in value_cols or []:
         aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
-    if lon_col and lat_col:
-        from pygeoapi_ingestor_spark.operators.spatial import bbox_agg_exprs
-
-        aggs += bbox_agg_exprs(lon_col, lat_col)
     row = df.agg(*aggs).collect()[0].asDict()
-    out = {
+    return {
         k: (v.isoformat() if isinstance(v, (datetime.datetime, datetime.date)) else v)
         for k, v in row.items()
     }
-    if lon_col and lat_col:
-        out["bbox"] = [
-            out.pop("bbox_w"), out.pop("bbox_s"),
-            out.pop("bbox_e"), out.pop("bbox_n"),
-        ]
-    return out
 
 
 EXPORT_FORMATS = ("parquet", "json", "csv", "orc")
@@ -177,31 +139,6 @@ def export_geojsonl(
     ).write.mode(mode).text(path)
 
 
-def feature_collection(
-    df: DataFrame,
-    lon_col: str,
-    lat_col: str,
-    props_cols: list[str],
-    limit: int = 10000,
-) -> dict[str, Any]:
-    """A single in-memory GeoJSON FeatureCollection (the reference's
-    one-file vector output shape). Driver-side BY DESIGN and bounded:
-    refuses more than ``limit`` features — for unbounded data use
-    ``export_geojsonl``."""
-    rows = df.select(
-        geojson_feature_expr(lon_col, lat_col, props_cols).alias("f")
-    ).limit(limit + 1).collect()
-    if len(rows) > limit:
-        raise ValueError(
-            f"feature_collection is driver-side and capped at {limit} features; "
-            "use export_geojsonl for distributed output"
-        )
-    return {
-        "type": "FeatureCollection",
-        "features": [json.loads(r["f"]) for r in rows],
-    }
-
-
 class CollectionCatalog:
     """JSON-file catalog of registered collections (the pygeoapi
     ``resources`` config analog). Methods mirror the reference flow:
@@ -246,8 +183,6 @@ class CollectionCatalog:
         collection_id: str,
         data_path: str,
         extents: dict[str, Any],
-        provider: str = "parquet",
-        description: str = "",
         schema: StructType | None = None,
     ) -> dict:
         """Register (or replace) a collection entry. ``schema`` is the
@@ -256,9 +191,9 @@ class CollectionCatalog:
         entry = {
             "type": "collection",
             "title": collection_id,
-            "description": description,
+            "description": "",
             "extents": extents,
-            "providers": [{"type": "feature", "name": provider, "data": data_path}],
+            "providers": [{"type": "feature", "name": "parquet", "data": data_path}],
         }
         if schema is not None:
             entry["schema"] = schema.jsonValue()

@@ -35,16 +35,16 @@ def _det_rand(seed: int):
     return nxt
 
 
-def fetch_ftp_csv(staging_dir: str, n_rows: int = 100, seed: int = 42) -> str:
+def fetch_ftp_csv(staging_dir: str) -> str:
     """FTP analog: land a station-observation CSV (SMHI hydro shape:
     station, timestamp, level, flow)."""
     os.makedirs(staging_dir, exist_ok=True)
     path = os.path.join(staging_dir, "ftp_observations.csv")
-    rnd = _det_rand(seed)
+    rnd = _det_rand(42)
     with open(path, "w", newline="") as f:
         w = csv.writer(f, delimiter=";")
         w.writerow(["station_id", "obs_time", "level_m", "flow_m3s"])
-        for i in range(n_rows):
+        for i in range(100):
             w.writerow(
                 [
                     f"ST{i % 7:03d}",
@@ -67,16 +67,16 @@ def load_ftp_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def fetch_cds_gridded(staging_dir: str, nx: int = 8, ny: int = 6, nt: int = 5, seed: int = 7) -> str:
+def fetch_cds_gridded(staging_dir: str) -> str:
     """CDS analog: land a gridded product as newline-JSON records
     (time, lat, lon, value) — the tabular twin of a GRIB/NetCDF field."""
     os.makedirs(staging_dir, exist_ok=True)
     path = os.path.join(staging_dir, "cds_grid.jsonl")
-    rnd = _det_rand(seed)
+    rnd = _det_rand(7)
     with open(path, "w") as f:
-        for t in range(nt):
-            for iy in range(ny):
-                for ix in range(nx):
+        for t in range(5):
+            for iy in range(6):
+                for ix in range(8):
                     rec = {
                         "time": f"2024-01-{t + 1:02d}T00:00:00",
                         "lat": 40.0 + iy * 0.5,
@@ -93,15 +93,15 @@ def load_cds_gridded(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def fetch_stac_items(staging_dir: str, n_items: int = 12, seed: int = 3) -> str:
+def fetch_stac_items(staging_dir: str) -> str:
     """STAC analog: land an item collection (id, datetime, bbox, asset
     href) as JSON — assets stay opaque hrefs, as in the reference's
     Planetary Computer flow."""
     os.makedirs(staging_dir, exist_ok=True)
     path = os.path.join(staging_dir, "stac_items.json")
-    rnd = _det_rand(seed)
+    rnd = _det_rand(3)
     items = []
-    for i in range(n_items):
+    for i in range(12):
         x0 = 44.0 + rnd() * 3.0
         y0 = 40.0 + rnd() * 2.0
         items.append(

@@ -122,11 +122,13 @@ def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "documents")
 
 
-def as_double_vec(df: DataFrame, col: str = "embedding") -> DataFrame:
+def as_double_vec(df: DataFrame) -> DataFrame:
     """Widen an array<float> vector column to array<double> (exact) — the
     element type every embedding kernel and its SQL twin
     (``CAST(v AS DOUBLE[])``) compute in."""
-    return df.withColumn(col, F.transform(col, lambda x: x.cast("double")))
+    return df.withColumn(
+        "embedding", F.transform("embedding", lambda x: x.cast("double"))
+    )
 
 
 def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,6 +35,11 @@ EVENT_SCHEMA = StructType(
     ]
 )
 
+# PSI drift bins over ``value``: PSI_BINS equal-width bins (the last
+# open-ended); a window drifts when its PSI exceeds 0.1
+PSI_BINS = 10
+PSI_BIN_WIDTH = 50.0
+
 
 def read_event_stream(
     spark: SparkSession, path: str, fmt: str = "json", max_files_per_trigger: int = 10
@@ -52,7 +57,6 @@ def read_event_stream(
 def windowed_agg(
     stream: DataFrame,
     window_duration: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Event-time tumbling-window aggregation with late-data watermark.
 
@@ -70,7 +74,7 @@ def windowed_agg(
     vs 0.53s at 4 on the same feed). Same rule as correlate_streams.
     """
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", window_duration).alias("win"), F.col("event_type"))
         .agg(
             F.sum("value").alias("total_value"),
@@ -91,11 +95,9 @@ def windowed_agg(
 def correlate_streams(
     purchases: DataFrame,
     clicks: DataFrame,
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream interval join: each purchase paired with the same
-    user's clicks in the preceding ``max_lag`` window.
+    user's clicks in the preceding hour (2-hour watermarks).
 
     Both sides are watermarked so the join state (buffered unmatched
     rows) is bounded by the interval + watermark horizon — the condition
@@ -118,17 +120,17 @@ def correlate_streams(
         F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
         F.col("value").alias("p_value"),
-    ).withWatermark("p_ts", watermark)
+    ).withWatermark("p_ts", "2 hours")
     c = clicks.select(
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
         F.col("value").alias("c_value"),
-    ).withWatermark("c_ts", watermark)
+    ).withWatermark("c_ts", "2 hours")
     return p.join(
         c,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {max_lag}")),
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 hour")),
     ).select("p_id", "p_user", "p_ts", "p_value", "c_ts", "c_value")
 
 
@@ -136,24 +138,22 @@ def run_to_sink(
     result: DataFrame,
     out_path: str,
     checkpoint: str,
-    mode: str = "append",
-    await_all: bool = True,
 ):
-    """Materialize a streaming result into a parquet collection.
+    """Materialize a streaming result into a parquet collection
+    (append mode) and wait for it.
 
     ``availableNow`` processes the backlog then stops — the streaming
     equivalent of one scheduler tick, and what the tests use.
     """
     q = (
         result.writeStream.format("parquet")
-        .outputMode(mode)
+        .outputMode("append")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    if await_all:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 
@@ -164,7 +164,6 @@ def run_to_collection(
     checkpoint: str,
     catalog,
     ts_col: str | None = None,
-    mode: str = "append",
 ):
     """Streaming twin of the ingest-process store+register arc: each
     micro-batch lands in the collection via ``foreachBatch``; the
@@ -194,7 +193,7 @@ def run_to_collection(
 
     q = (
         result.writeStream.foreachBatch(write_batch)
-        .outputMode(mode)
+        .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -230,30 +229,25 @@ def run_to_memory(result: DataFrame, name: str, mode: str = "append"):
     return q
 
 
-def psi_baseline(df: DataFrame, value_col: str = "value", bins: int = 10,
-                 bin_width: float = 50.0) -> dict[int, int]:
+def psi_baseline(df: DataFrame) -> dict[int, int]:
     """Bin counts of the reference window — the static baseline a
     drift monitor compares every incoming window against. Computed once
     batch-side (one tiny aggregate), then carried into the stream as
     literals."""
     b = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor(F.col(value_col) / bin_width)),
+        F.lit(PSI_BINS - 1),
+        F.greatest(F.lit(0), F.floor(F.col("value") / PSI_BIN_WIDTH)),
     ).cast("int")
     rows = df.groupBy(b.alias("bin")).count().collect()
     counts = {int(r["bin"]): int(r["count"]) for r in rows}
-    return {i: counts.get(i, 0) for i in range(bins)}
+    return {i: counts.get(i, 0) for i in range(PSI_BINS)}
 
 
 def drift_monitor_stream(
     stream: DataFrame,
     baseline: dict[int, int],
-    ts_col: str = "ts",
-    value_col: str = "value",
     window: str = "10 minutes",
     watermark: str = "2 minutes",
-    bin_width: float = 50.0,
-    alert_threshold: float = 0.1,
 ) -> DataFrame:
     """Continuous PSI drift monitoring: per event-time window, the
     Population Stability Index of the incoming value distribution vs the
@@ -268,7 +262,7 @@ def drift_monitor_stream(
     nb = sum(baseline.values())
     bcol = F.least(
         F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor(F.col(value_col) / bin_width)),
+        F.greatest(F.lit(0), F.floor(F.col("value") / PSI_BIN_WIDTH)),
     ).cast("int")
     aggs = [
         F.sum((F.col("_bin") == b).cast("long")).alias(f"_c{b}")
@@ -276,8 +270,8 @@ def drift_monitor_stream(
     ] + [F.count(F.lit(1)).alias("_n")]
     agg = (
         stream.withColumn("_bin", bcol)
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"))
+        .withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), window).alias("win"))
         .agg(*aggs)
     )
     psi = None
@@ -290,7 +284,7 @@ def drift_monitor_stream(
         F.col("win.start").alias("window_start"),
         F.col("_n").cast("bigint").alias("n"),
         F.round(psi, 6).alias("psi"),
-        (psi > alert_threshold).alias("drifted"),
+        (psi > 0.1).alias("drifted"),
     )
 
 
@@ -319,8 +313,6 @@ def cdc_upsert_stream(
     checkpoint: str,
     key_cols: list[str],
     order_cols: list[str],
-    op_col: str = "op",
-    delete_op: str = "D",
 ):
     """Streaming MERGE INTO: a CDC change feed (upserts + deletes)
     continuously maintained as a keyed snapshot collection — the
@@ -349,10 +341,9 @@ def cdc_upsert_stream(
         if fs.exists(hadoop_path):
             base = spark.read.parquet(snapshot_path).drop("src")
         else:
-            base = batch_df.drop(op_col).filter(F.lit(False))
+            base = batch_df.drop("op").filter(F.lit(False))
         merged = apply_changes(
-            base, batch_df, key_cols, order_cols, op_col=op_col,
-            delete_op=delete_op,
+            base, batch_df, key_cols, order_cols
         ).drop("src")
         tmp = snapshot_path.rstrip("/") + "._merge_tmp"
         bak = snapshot_path.rstrip("/") + "._merge_bak"
@@ -372,8 +363,6 @@ def cdc_upsert_stream(
 
 def trending_topk_stream(
     events: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "1 hour",
 ):
     """Continuous trending-items feed: per event-time window counts of
     event types — the "what is spiking right now" panel over the live
@@ -381,15 +370,15 @@ def trending_topk_stream(
     per-group top-k).
 
     Structured Streaming cannot rank inside an aggregation, so the
-    windowed counts stream in UPDATE mode and the rank (with its ``k``)
-    applies per-sink-batch via ``rank_topk_batch`` in foreachBatch —
+    6-hour windowed counts (1-hour watermark) stream in UPDATE mode and
+    the top-3 rank applies per-sink-batch via ``rank_topk_batch`` in foreachBatch —
     counts stay incremental state, the rank only ever touches one
     batch's updated windows. Returns the counts DataFrame ready for
     ``rank_topk_batch``-driven sinks.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -400,8 +389,8 @@ def trending_topk_stream(
     )
 
 
-def rank_topk_batch(batch_df: DataFrame, k: int = 3) -> DataFrame:
-    """The per-batch ranking half of trending_topk_stream: top-k types
+def rank_topk_batch(batch_df: DataFrame) -> DataFrame:
+    """The per-batch ranking half of trending_topk_stream: top-3 types
     per window with deterministic ties (count desc, type asc)."""
     from pyspark.sql import Window
 
@@ -410,16 +399,12 @@ def rank_topk_batch(batch_df: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         batch_df.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
     )
 
 
 def danger_levels_stream(
     events: DataFrame,
-    levels: list[float] | None = None,
-    colors: list[str] | None = None,
-    window: str = "7 days",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """The danger-level feed as a CONTINUOUS query — the streaming twin
     of plans.danger_levels_weekly (reference:
@@ -427,8 +412,8 @@ def danger_levels_stream(
     deficit on a schedule; here the windowed max maintains itself
     incrementally as observations land).
 
-    Event-time tumbling window + max aggregate (incremental state, late
-    data bounded by the watermark); the categorize() color ladder is a
+    Event-time 7-day tumbling window + max aggregate (incremental state,
+    late data bounded by a 1-day watermark); the categorize() color ladder is a
     pure projection applied on the aggregate output, so batch and
     stream share the exact classification expression
     (spatial.band_classify)."""
@@ -438,15 +423,13 @@ def danger_levels_stream(
         ISO_LEVELS,
     )
 
-    levels = ISO_LEVELS if levels is None else levels
-    colors = DANGER_COLORS if colors is None else colors
     agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "7 days").alias("w"), "event_type")
         .agg(F.max("value").alias("window_max"))
     )
-    band = spatial.band_classify(F.col("window_max"), levels)
-    color_arr = F.array(*[F.lit(c) for c in colors])
+    band = spatial.band_classify(F.col("window_max"), ISO_LEVELS)
+    color_arr = F.array(*[F.lit(c) for c in DANGER_COLORS])
     return agg.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),

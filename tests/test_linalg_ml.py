@@ -174,7 +174,7 @@ def test_pagerank_matches_python_replay(spark, sf_dir):
 
     pairs = dedup.lsh_verified_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        n=3, num_hashes=32, bands=8, threshold=0.6,
+        threshold=0.6,
     ).collect()
     edges = []
     for r in pairs:

@@ -10,7 +10,7 @@ from pygeoapi_ingestor_spark.operators import multimodal
 def media(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     raw = multimodal.attach_payload(docs, id_col="doc_id", text_col="text")
-    return multimodal.extract_metadata(raw, use_stub=True)
+    return multimodal.extract_metadata(raw)
 
 
 def test_decode_fills_metadata(media):
@@ -126,36 +126,28 @@ def test_real_decode_pixel_roundtrip():
 
 
 def test_real_decode_distributed(spark):
-    """The real codec runs where it will in production — inside the
-    Arrow-batched mapInPandas stage (use_stub=False), over a mixed-format
-    media table."""
-    payloads = [
-        (1, "image", _ppm(8, 5)),
-        (2, "image", _bmp24(7, 3, bytes(range(7 * 3 * 3)))),
-        (3, "audio", _wav_pcm16(250)),
-        (4, "video", _ppmv(4, 4, 12)),
-    ]
-    df = spark.createDataFrame(
-        [
-            (mid, mtype, bytearray(p), None, None, None, "")
-            for mid, mtype, p in payloads
-        ],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
+    """The real codec runs where it will in production — inside an
+    Arrow-batched mapInPandas stage: ``synthesize_decode_roundtrip``
+    decodes P6 images (even ids) and PPMV videos (odd ids) back to the
+    geometry, frame count and colour they were written with."""
+    ids = spark.range(12).withColumnRenamed("id", "media_id")
     got = {
-        r["media_id"]: (r["width"], r["height"], r["n_frames"])
-        for r in multimodal.extract_metadata(df, use_stub=False).collect()
+        r["media_id"]: (r["media_kind"], r["width"], r["height"], r["n_frames"], r["mean_r"])
+        for r in multimodal.synthesize_decode_roundtrip(ids, "media_id").collect()
     }
     assert got == {
-        1: (8, 5, 1),
-        2: (7, 3, 1),
-        3: (None, None, 250),
-        4: (4, 4, 12),
+        i: (
+            "image" if i % 2 == 0 else "video",
+            4 + i % 13, 3 + i % 7,
+            1 if i % 2 == 0 else 1 + i % 5,
+            float(i % 256),
+        )
+        for i in range(12)
     }
 
 
 def test_resize_preserves_aspect(media):
-    out = multimodal.resize_media(media, target=128).collect()
+    out = multimodal.resize_media(media).collect()
     for r in out:
         assert max(r["resized_width"], r["resized_height"]) == 128
         ar_in = r["width"] / r["height"]
@@ -164,7 +156,7 @@ def test_resize_preserves_aspect(media):
 
 
 def test_frame_sampling(media, spark):
-    frames = multimodal.sample_frames(media, every_n=10)
+    frames = multimodal.sample_frames(media)
     joined = frames.join(media.select("media_id", "media_type", "n_frames"), "media_id")
     per_video = (
         joined.filter(F.col("media_type") == "video")
@@ -182,5 +174,5 @@ def test_frame_sampling(media, spark):
     assert others.filter(F.col("frame_idx") != 0).count() == 0
     # fingerprints deterministic across runs
     a = sorted(map(tuple, frames.collect()))
-    b = sorted(map(tuple, multimodal.sample_frames(media, every_n=10).collect()))
+    b = sorted(map(tuple, multimodal.sample_frames(media).collect()))
     assert a == b

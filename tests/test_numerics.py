@@ -28,6 +28,21 @@ def test_gammainc_known_values():
     assert numerics.gammainc_lower(2.3, np.array([0.0]))[0] == 0.0
 
 
+def test_gammainc_at_infinity_is_one():
+    """P(a, +inf) = 1 for every shape (the gamma CDF's upper limit),
+    without numpy warnings, whether a is a scalar or per element."""
+    import warnings
+
+    x = np.array([0.0, 1.0, 50.0, np.inf])
+    for a in (0.05, 0.3, 0.49, 0.999, 1.0, 1.001, 79.5, 80.0, 80.5):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            got = numerics.gammainc_lower(a, x)
+            per_element = numerics.gammainc_lower(np.full(x.size, a), x)
+        assert got[-1] == 1.0 and per_element[-1] == 1.0, a
+        assert got[0] == 0.0 and np.all(np.diff(got) >= 0), a
+
+
 @settings(max_examples=50, deadline=None)
 @given(st.floats(0.2, 20.0), st.floats(0.01, 50.0))
 def test_gammainc_monotone_in_x(a, x):

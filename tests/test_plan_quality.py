@@ -295,7 +295,7 @@ def test_exact_percentiles_prunes_sorted_rows(spark, sf_dir):
     ev = read_events(spark, sf_dir)
     n_total = ev.count()
     out = ranks.exact_percentiles(
-        ev, ["event_type"], "value", [0.5], ["event_id"], n_buckets=256
+        ev, ["event_type"], "value", [0.5], ["event_id"]
     )
     # the bucket prune is a join feeding the ranking sort — the raw scan
     # must not reach the sort directly

@@ -174,16 +174,10 @@ def test_salt_spreads_duplicate_rows(spark):
     salting exists for)."""
     from pyspark.sql import functions as F
 
-    from pygeoapi_ingestor_spark.functions.skew import salt_join, with_salt
+    from pygeoapi_ingestor_spark.functions.skew import with_salt
 
     dup = spark.range(2000).select(
         F.lit("hot").alias("k"), F.lit(1.0).alias("v")
     ).repartition(8)
     n_salts = with_salt(dup, 16).select("_salt").distinct().count()
     assert n_salts >= 8
-
-    import pytest
-
-    small = spark.range(3).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError):
-        salt_join(dup, small, on=["k"], how="full")

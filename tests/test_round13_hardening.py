@@ -441,7 +441,7 @@ def test_minhash_kernel_matches_python_twin(spark):
     got = {
         r["doc"]: list(r["signature"])
         for r in dedup.minhash_signatures(
-            df, "doc_id", "text", n=3, num_hashes=32, shingle_hash="md5"
+            df, "doc_id", "text", num_hashes=32, shingle_hash="md5"
         ).collect()
     }
 

@@ -138,7 +138,7 @@ def test_winnow_array_formulation_matches_r13_shape(spark, sf_dir):
     n, window = 4, 5
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    new = dedup.winnow_fingerprints(df, "doc_id", "text", n=n, window=window)
+    new = dedup.winnow_fingerprints(df, "doc_id", "text")
 
     words = norm_words("text")
     tok = df.select(

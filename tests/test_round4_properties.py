@@ -30,9 +30,8 @@ def _text(idxs):
         min_size=2,
         max_size=8,
     ),
-    threshold=st.sampled_from([0.4, 0.6, 0.8]),
 )
-def test_ppjoin_equals_bruteforce(spark, docs, threshold):
+def test_ppjoin_equals_bruteforce(spark, docs):
     df = spark.createDataFrame(
         [(i, _text(d)) for i, d in enumerate(docs)], "doc_id long, text string"
     )
@@ -40,7 +39,7 @@ def test_ppjoin_equals_bruteforce(spark, docs, threshold):
         map(
             tuple,
             dedup.ppjoin_pairs(
-                df, "doc_id", "text", threshold=threshold, n=3
+                df, "doc_id", "text"
             ).select("doc_a", "doc_b", "n_common").collect(),
         )
     )
@@ -48,7 +47,7 @@ def test_ppjoin_equals_bruteforce(spark, docs, threshold):
         map(
             tuple,
             dedup.ngram_jaccard_pairs(
-                df, "doc_id", "text", n=3, threshold=threshold
+                df, "doc_id", "text", threshold=0.6
             ).select("doc_a", "doc_b", "n_common").collect(),
         )
     )
@@ -68,7 +67,7 @@ def test_winnow_shared_run_shares_fingerprint(spark, shared, pre_a, post_b):
         "doc_id long, text string",
     )
     fps = dedup.winnow_fingerprints(
-        df, "doc_id", "text", n=4, window=5
+        df, "doc_id", "text"
     ).collect()
     a = {r["gram_hash"] for r in fps if r["doc"] == 0}
     b = {r["gram_hash"] for r in fps if r["doc"] == 1}
@@ -112,7 +111,7 @@ def test_apply_changes_matches_dict_merge(spark, base, changes):
     got = {
         r["k"]: (r["v"], r["src"])
         for r in temporal.apply_changes(
-            bdf, cdf, key_cols=["k"], order_cols=["seq", "v"], op_col="op"
+            bdf, cdf, key_cols=["k"], order_cols=["seq", "v"]
         ).collect()
     }
 

@@ -108,7 +108,7 @@ def test_geojson_export_roundtrip(spark, sf_dir, tmp_path):
     reading it back preserves geometry and properties."""
     from pyspark.sql import functions as F
 
-    from pygeoapi_ingestor_spark.sinks import export_geojsonl, feature_collection
+    from pygeoapi_ingestor_spark.sinks import export_geojsonl
     from pygeoapi_ingestor_spark.sources.readers import read_events
 
     ev = (
@@ -127,33 +127,6 @@ def test_geojson_export_roundtrip(spark, sf_dir, tmp_path):
     assert row["geometry"]["type"] == "Point"
     assert len(row["geometry"]["coordinates"]) == 2
     assert row["properties"]["event_type"] is not None
-
-    fc = feature_collection(ev.limit(5), "lon", "lat", ["event_id"])
-    assert fc["type"] == "FeatureCollection" and len(fc["features"]) == 5
-    assert fc["features"][0]["geometry"]["type"] == "Point"
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        feature_collection(ev, "lon", "lat", ["event_id"], limit=10)
-
-
-def test_compute_extents_bbox(spark, sf_dir):
-    """Extents with lon/lat carry the OGC bbox [W, S, E, N]."""
-    from pyspark.sql import functions as F
-
-    from pygeoapi_ingestor_spark.sources.readers import read_events
-
-    ev = (
-        read_events(spark, sf_dir)
-        .withColumn("lon", F.lit(-10.0) + (F.col("user_id") % 10) * F.lit(2.5))
-        .withColumn("lat", F.lit(35.0) + F.expr("(user_id div 10) % 10") * F.lit(1.5))
-    )
-    ext = compute_extents(ev, ts_col="ts", value_cols=["value"], lon_col="lon", lat_col="lat")
-    w, s, e, n = ext["bbox"]
-    assert w <= e and s <= n
-    assert w >= -10.0 and e <= 12.5 and s >= 35.0 and n <= 48.5
-    assert ext["n_rows"] > 0 and "ts_begin" in ext
 
 
 def test_geojsonl_reader_roundtrip(spark, sf_dir, tmp_path):

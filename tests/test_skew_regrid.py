@@ -21,7 +21,6 @@ def test_salted_agg_matches_plain(spark, sf_dir):
         (r["event_type"],): (r["n"], round(r["total"], 4))
         for r in skew.salted_agg(
             ev, ["event_type"], {"n": ("count", "value"), "total": ("sum", "value")},
-            n_salts=8,
         ).collect()
     }
     assert salted == plain
@@ -39,7 +38,7 @@ def test_salt_join_matches_plain_join(spark, sf_dir):
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     plain = ev.join(dim, ["user_id"]).count()
-    salted = skew.salt_join(ev, dim, on=["user_id"], n_salts=4).count()
+    salted = skew.salt_join(ev, dim, on=["user_id"]).count()
     assert salted == plain
 
 

@@ -25,7 +25,7 @@ def test_windowed_agg_matches_batch(spark, sf_dir, tmp_path):
     ev = _stage_events_json(spark, sf_dir, src)
 
     stream = pipeline.read_event_stream(spark, src, fmt="json")
-    result = pipeline.windowed_agg(stream, window_duration="1 hour", watermark="2 hours")
+    result = pipeline.windowed_agg(stream, window_duration="1 hour")
     pipeline.run_to_sink(result, out, ckpt)
 
     got = spark.read.parquet(out)
@@ -65,7 +65,7 @@ def test_correlate_streams_matches_batch(spark, sf_dir, tmp_path):
     purchases = stream.filter(F.col("event_type") == "purchase")
     clicks = stream.filter(F.col("event_type") == "click")
     result = pipeline.correlate_streams(
-        purchases, clicks, max_lag="1 hour", watermark="2 hours"
+        purchases, clicks
     )
     pipeline.run_to_sink(result, out, ckpt)
 
@@ -249,12 +249,11 @@ def test_trending_topk_stream_matches_batch(spark, sf_dir, tmp_path):
     src = str(tmp_path / "trend_src")
     ev = _stage_events_json(spark, sf_dir, src)
     stream = pipeline.read_event_stream(spark, src, fmt="json")
-    counts = pipeline.trending_topk_stream(stream, window="6 hours",
-                                           watermark="1 hour")
+    counts = pipeline.trending_topk_stream(stream)
     got_batches = []
 
     def sink(batch_df, batch_id):
-        got_batches.append(pipeline.rank_topk_batch(batch_df, k=3).collect())
+        got_batches.append(pipeline.rank_topk_batch(batch_df).collect())
 
     q = (
         counts.writeStream.foreachBatch(sink)
@@ -279,7 +278,7 @@ def test_trending_topk_stream_matches_batch(spark, sf_dir, tmp_path):
     )
     exp = {}
     for r in pipeline.rank_topk_batch(
-        exp_counts.withColumn("window_end", F.col("window_start")), k=3
+        exp_counts.withColumn("window_end", F.col("window_start"))
     ).collect():
         exp.setdefault(r["window_start"], []).append(r)
     assert set(final) == set(exp)
@@ -297,8 +296,7 @@ def test_danger_levels_stream_matches_batch(spark, sf_dir, tmp_path):
     src = str(tmp_path / "danger_src")
     ev = _stage_events_json(spark, sf_dir, src)
     stream = pipeline.read_event_stream(spark, src, fmt="json")
-    feed = pipeline.danger_levels_stream(stream, window="7 days",
-                                         watermark="1 day")
+    feed = pipeline.danger_levels_stream(stream)
     pipeline.run_to_memory(feed, "danger_feed", mode="complete")
     got = {
         (str(r["window_start"]), r["event_type"]): (r["window_max"], r["color"])

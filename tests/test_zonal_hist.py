@@ -51,7 +51,6 @@ def test_hist_matches_drilldown(spark, fixture_data):
     kwargs = dict(
         join_key="k", zone_col="zone",
         bucket_col=F.col("bucket").alias("bkt"), value_col="value",
-        percentiles=(0.05, 0.25, 0.5, 0.95),
     )
     hist = zonal.zonal_stats_hist(fact, zones, **kwargs)
     drill = zonal.zonal_stats(fact, zones, **kwargs)
@@ -64,7 +63,6 @@ def test_all_null_group_surfaces_with_null_stats(spark, fixture_data):
     out = zonal.zonal_stats_hist(
         fact, zones, join_key="k", zone_col="zone",
         bucket_col=F.col("bucket").alias("bkt"), value_col="value",
-        percentiles=(0.5,),
     )
     row = [r for r in out.collect() if r["zone"] == "z2" and r["bkt"] == 1]
     assert len(row) == 1
@@ -79,7 +77,6 @@ def test_single_value_group(spark):
     out = zonal.zonal_stats_hist(
         fact, zones, join_key="k", zone_col="zone",
         bucket_col=F.col("bucket").alias("bkt"), value_col="value",
-        percentiles=(0.05, 0.95),
     ).collect()
     assert len(out) == 1
     r = out[0]
