@@ -418,6 +418,9 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
     stopped."""
     with tracer.harvesting():
         gc0, _ = tracer.driver_gc()
+        jit = tracer.spark._jvm.java.lang.management.ManagementFactory \
+            .getCompilationMXBean()
+        jit0 = jit.getTotalCompilationTime()
     try:
         tracer.set_group(f"{group}|build")
         with _py4j_calls(tracer.spark) as calls:
@@ -434,6 +437,7 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
         # the status store is fed asynchronously by the listener bus
         tracer.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         gc1, _ = tracer.driver_gc()
+        jit1 = jit.getTotalCompilationTime()
         b = tracer.group_stats(f"{group}|build")
         a = tracer.group_stats(group)
     return {
@@ -443,6 +447,7 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
         "build_py4j": calls[0],
         **{f: round(b[f] + a[f], 3) for f in SPOT_LAYERS},
         "driver_gc_ms": gc1 - gc0,
+        "jit_ms": jit1 - jit0,
     }
 
 

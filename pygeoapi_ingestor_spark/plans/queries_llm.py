@@ -374,7 +374,7 @@ def q_corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.withColumn(
             "rate",
-            F.coalesce(weight_map.getItem(F.col("source")), F.lit(MIX_DEFAULT)),
+            F.coalesce(weight_map[F.col("source")], F.lit(MIX_DEFAULT)),
         )
         .withColumn("u", u)
         .filter(F.col("u") < F.col("rate"))

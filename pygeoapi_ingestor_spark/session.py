@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_JVM_PINS = "-Xss32m -XX:+ExplicitGCInvokesConcurrent"
+
 
 def get_spark(
     app_name: str = "pygeoapi_ingestor_spark",
@@ -31,6 +33,9 @@ def get_spark(
         # one-ish partition per core locally; on a real cluster this is
         # overridden to ~2-3x total executor cores.
         shuffle_partitions = max(cpus, 4)
+    # every task of a local master runs inside the driver JVM and forks
+    # its Python workers from this host's interpreter
+    local = master.split("[")[0] == "local"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -81,14 +86,26 @@ def get_spark(
         # without this flag trades broadcast-state hygiene for
         # multi-second full pauses at exactly the heap sizes where both
         # matter.
+        #
+        # -XX:CICompilerCount=2, local masters only (HotSpot's tiered
+        # minimum: one C1 and one C2 compiler thread): in local mode
+        # every task runs inside this driver JVM, on all of its cores,
+        # yet HotSpot sizes its compiler pool as if those cores were
+        # idle (3 threads on 4 CPUs, 15 on 32). A fresh session's first
+        # pass makes Janino, ANTLR, Java-serialization and Catalyst code
+        # hot, and C2 stays busy for the whole pass: sampled per-thread
+        # CPU on 4 cores put the compiler threads at 20-23 of the 40-45
+        # CPU-s of a perfbench ingest_publish round and 18-19 of the
+        # 29-31 of an api_sequential round. With the minimum pool they
+        # took 13 and 11-12 CPU-s, the rest of the round did not grow,
+        # round wall time held, and warm bench.py spot cells did not
+        # slow. A cluster driver runs no tasks, and executors keep JVM
+        # ergonomics.
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xss32m -XX:+ExplicitGCInvokesConcurrent",
+            f"{_JVM_PINS} -XX:CICompilerCount=2" if local else _JVM_PINS,
         )
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-Xss32m -XX:+ExplicitGCInvokesConcurrent",
-        )
+        .config("spark.executor.extraJavaOptions", _JVM_PINS)
         # The app-status store keeps the last 1000 SQL executions WITH
         # their full plan graphs even when the UI is off; this catalog's
         # analyzed plans are large (dedup fixpoints, composed curation
@@ -114,15 +131,30 @@ def get_spark(
         # per query. Known upstream pathology (SPARK-19846 family).
         .config("spark.sql.constraintPropagation.enabled", "false")
     )
+    if local:
+        # forked Python workers share the daemon's pre-imported Arrow
+        # stack (see worker_daemon); the package's parent directory on
+        # the workers' path lets the daemon import it from any cwd
+        builder = builder.config(
+            "spark.python.daemon.module", "pygeoapi_ingestor_spark.worker_daemon"
+        ).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     for k, v in (extra_conf or {}).items():
-        # the -Xss32m pin (r11 canonicalization StackOverflow fix) and
-        # the concurrent-explicit-GC pin (r14 full-pause fix) are both
-        # load-bearing: a caller adding its own JVM flags must not
-        # silently REPLACE them (ADVICE r12) — merge, keeping the
-        # caller's flags after ours so they still win any same-flag
-        # conflict (-XX:-ExplicitGCInvokesConcurrent counts as the
-        # caller providing the flag).
+        # the -Xss32m pin (r11 canonicalization StackOverflow fix), the
+        # concurrent-explicit-GC pin (r14 full-pause fix) and, on a
+        # local driver, the compiler-pool pin are load-bearing: a
+        # caller adding its own JVM flags must not silently REPLACE
+        # them (ADVICE r12) — merge, keeping the caller's flags after
+        # ours so they still win any same-flag conflict
+        # (-XX:-ExplicitGCInvokesConcurrent counts as the caller
+        # providing the flag).
         if k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+            if local and k == "spark.driver.extraJavaOptions" and (
+                "CICompilerCount" not in v
+            ):
+                v = f"-XX:CICompilerCount=2 {v}"
             if "ExplicitGCInvokesConcurrent" not in v:
                 v = f"-XX:+ExplicitGCInvokesConcurrent {v}"
             if "-Xss" not in v:

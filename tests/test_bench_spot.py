@@ -1,8 +1,8 @@
 """bench.py's spot mode: a cold cell is a prepared-plan registry miss, a
 warm cell is a hit, builds count their py4j calls and, once each table's
-schema is known, start no Spark job; oracle keys carry DuckDB times and
-the run leaves nothing persisted; unknown keys fail before any Spark
-session starts.
+schema is known, start no Spark job; every cell carries the driver's JIT
+compile time; oracle keys carry DuckDB times and the run leaves nothing
+persisted; unknown keys fail before any Spark session starts.
 
 Importing ``bench`` here, under pytest's own argv, also checks that the
 module parses no arguments at import time."""
@@ -34,6 +34,8 @@ def test_spot_cold_builds_warm_hits_and_nothing_is_left(spark, sf_dir):
         reps = zip(cells["cold"]["all"], cells["warm"]["all"])
         for rep, (cold, warm) in enumerate(reps):
             assert set(bench.SPOT_LAYERS) <= set(cold)
+            # driver JIT compile time across the cell (CompilationMXBean)
+            assert cold["jit_ms"] >= 0 and warm["jit_ms"] >= 0, (key, cold, warm)
             if rep:  # the first rep's reads may infer a schema
                 assert cold["build_jobs"] == 0, (key, cold)
             assert cold["jobs"] > cold["build_jobs"], (key, cold)

@@ -26,6 +26,7 @@ import os
 import shutil
 import struct
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -107,12 +108,14 @@ def _job_ids(spark, group: str, fn):
 
 
 def _daemons() -> set[str]:
-    """Pids of the running ``pyspark.daemon`` Python worker daemons."""
+    """Pids of the running Python worker daemons: pyspark's own, or the
+    package's ``worker_daemon`` that local sessions start."""
     pids = set()
     for pid in filter(str.isdigit, os.listdir("/proc")):
         try:
             with open(f"/proc/{pid}/cmdline", "rb") as f:
-                if b"pyspark.daemon" in f.read():
+                cmd = f.read()
+                if b"pyspark.daemon" in cmd or b".worker_daemon" in cmd:
                     pids.add(pid)
         except OSError:
             continue
@@ -271,13 +274,21 @@ def test_rating_curve_expr_is_one_call_and_bit_identical(spark, table, clamp):
 
     points = getattr(queries_etl, table)
     client = spark.sparkContext._gateway._gateway_client
-    send, calls = client.send_command, []
-    # py4j releases a collected JavaObject through send_command too: free
+    send, calls, me = client.send_command, [], threading.get_ident()
+    # py4j releases a collected JavaObject through send_command too, from
+    # its finalizer thread (a backlog of earlier tests' releases drained
+    # there read as 20+ calls): count this thread's commands only, free
     # earlier tests' cyclic garbage first and hold the collector off, so
     # only the build's own calls are counted
     gc.collect()
     gc.disable()
-    client.send_command = lambda *a, **k: calls.append(1) or send(*a, **k)
+
+    def counted(*a, **k):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*a, **k)
+
+    client.send_command = counted
     try:
         new = interpolate_points_expr(points, "h", clamp_edges=clamp)
     finally:

@@ -176,9 +176,11 @@ def test_low_cardinality_windows_are_chunked(spark, sf_dir):
         )
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_corpus_mix_is_pure_projection(spark, sf_dir):
     """Literal-map weights: the sampling query must be scan -> filter ->
-    project with no join and no shuffle at all."""
+    project with no join and no shuffle at all, and its map lookup uses
+    no deprecated Column key (``getItem(col)`` warns in pyspark 4.1)."""
     plan = _simple(QUERIES["corpus_mix_sample"](spark, sf_dir))
     assert "Join" not in plan and "Exchange" not in plan
 

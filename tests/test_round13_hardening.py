@@ -12,7 +12,9 @@
    run the K·n ground-truth pass twice and leak the loser's
    localCheckpoint blocks).
 3. get_spark merges caller-supplied extraJavaOptions with the
-   load-bearing -Xss32m pin instead of letting extra_conf replace it.
+   load-bearing -Xss32m pin instead of letting extra_conf replace it;
+   the same merge keeps a local driver's minimum JIT compiler pool,
+   which non-local masters and executor JVMs never get.
 4. (spatial.py) the bounded-summary union-find collects the run-edge
    list via Arrow — two int64 columns, not ~width² Row objects —
    covered by test_spatial's label-parity tests running through the
@@ -21,6 +23,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 
@@ -146,11 +149,11 @@ def test_kmeans_cents_concurrent_build_runs_once(spark, sf_dir, monkeypatch):
     release_corpus_artifacts()
 
 
-def test_extra_java_options_merge_keeps_xss_pin():
-    """extra_conf supplying its own extraJavaOptions must not replace
-    the -Xss32m canonicalization-StackOverflow pin (ADVICE r12). The
-    merge happens at builder time; assert on the builder's conf map
-    (a live getOrCreate would no-op against the running session)."""
+def _builder_conf(**kwargs) -> dict:
+    """The conf map ``get_spark(**kwargs)`` hands the session builder.
+    The merge happens at builder time; a live getOrCreate would no-op
+    against the running session, so a fake builder captures it and no
+    session starts."""
     from pyspark.sql import SparkSession
 
     from pygeoapi_ingestor_spark import session as sess
@@ -177,44 +180,103 @@ def test_extra_java_options_merge_keeps_xss_pin():
     orig = SparkSession.__dict__["builder"]
     try:
         SparkSession.builder = FakeBuilder()
-        sess.get_spark(
-            extra_conf={"spark.driver.extraJavaOptions": "-Dfoo=bar"}
-        )
+        sess.get_spark(**kwargs)
     finally:
         SparkSession.builder = orig
-    v = captured["spark.driver.extraJavaOptions"]
+    return captured
+
+
+def _driver_opts(opts: str) -> str:
+    conf = _builder_conf(extra_conf={"spark.driver.extraJavaOptions": opts})
+    return conf["spark.driver.extraJavaOptions"]
+
+
+def test_extra_java_options_merge_keeps_xss_pin():
+    """extra_conf supplying its own extraJavaOptions must not replace
+    the -Xss32m canonicalization-StackOverflow pin (ADVICE r12)."""
+    v = _driver_opts("-Dfoo=bar")
     assert "-Xss32m" in v and "-Dfoo=bar" in v
     # r14: the concurrent-explicit-GC pin must survive the merge too
     assert "-XX:+ExplicitGCInvokesConcurrent" in v
     # a caller explicitly choosing its own stack size wins; the GC pin
     # is still prepended (the caller did not mention the flag)
-    captured.clear()
-    try:
-        SparkSession.builder = FakeBuilder()
-        sess.get_spark(
-            extra_conf={"spark.driver.extraJavaOptions": "-Xss64m"}
-        )
-    finally:
-        SparkSession.builder = orig
-    v = captured["spark.driver.extraJavaOptions"]
+    v = _driver_opts("-Xss64m")
     assert v.endswith("-Xss64m") and "-Xss32m" not in v
     assert "-XX:+ExplicitGCInvokesConcurrent" in v
     # a caller explicitly DISABLING concurrent explicit GC wins — the
     # merge must not re-add the + form
-    captured.clear()
-    try:
-        SparkSession.builder = FakeBuilder()
-        sess.get_spark(
-            extra_conf={
-                "spark.driver.extraJavaOptions":
-                    "-XX:-ExplicitGCInvokesConcurrent"
-            }
-        )
-    finally:
-        SparkSession.builder = orig
-    v = captured["spark.driver.extraJavaOptions"]
+    v = _driver_opts("-XX:-ExplicitGCInvokesConcurrent")
     assert "-XX:+ExplicitGCInvokesConcurrent" not in v
     assert "-Xss32m" in v
+
+
+DAEMON = "pygeoapi_ingestor_spark.worker_daemon"
+
+
+@pytest.mark.parametrize("extra", [None, "-Dfoo=bar"])
+def test_local_driver_gets_minimum_compiler_pool(extra):
+    """A local master runs every task in the driver JVM: its options
+    carry HotSpot's tiered minimum compiler pool exactly once, with or
+    without caller flags, and its Python workers fork from the
+    package's daemon, importable from any cwd."""
+    conf = _builder_conf(
+        master="local[4]",
+        extra_conf={"spark.driver.extraJavaOptions": extra} if extra else None,
+    )
+    v = conf["spark.driver.extraJavaOptions"]
+    assert v.split().count("-XX:CICompilerCount=2") == 1
+    assert v.count("CICompilerCount") == 1
+    assert conf["spark.python.daemon.module"] == DAEMON
+    import pygeoapi_ingestor_spark
+
+    parent = os.path.dirname(os.path.dirname(pygeoapi_ingestor_spark.__file__))
+    assert conf["spark.executorEnv.PYTHONPATH"] == parent
+
+
+def test_caller_compiler_count_wins():
+    """A caller's own CICompilerCount is kept and ours is not added;
+    both load-bearing pins stay, and the Python-side local rule is not
+    switched off by the caller's JVM flag."""
+    conf = _builder_conf(
+        master="local[4]",
+        extra_conf={"spark.driver.extraJavaOptions": "-XX:CICompilerCount=4"},
+    )
+    v = conf["spark.driver.extraJavaOptions"]
+    assert v.split() == [
+        "-Xss32m", "-XX:+ExplicitGCInvokesConcurrent", "-XX:CICompilerCount=4",
+    ]
+    assert conf["spark.python.daemon.module"] == DAEMON
+
+
+@pytest.mark.parametrize("master", ["spark://h:7077", "local-cluster[2,1,1024]"])
+def test_non_local_master_keeps_jvm_ergonomics(master):
+    """A driver that runs no tasks keeps HotSpot's compiler pool and
+    pyspark's own daemon; the rules follow the master, not the host."""
+    local = _builder_conf(master="local[2]")
+    assert "CICompilerCount" in local["spark.driver.extraJavaOptions"]
+    assert local["spark.python.daemon.module"] == DAEMON
+    conf = _builder_conf(
+        master=master,
+        extra_conf={"spark.driver.extraJavaOptions": "-Dfoo=bar"},
+    )
+    assert "CICompilerCount" not in conf["spark.driver.extraJavaOptions"]
+    assert "spark.python.daemon.module" not in conf
+    assert "spark.executorEnv.PYTHONPATH" not in conf
+
+
+@pytest.mark.parametrize("extra", [None, "-Dfoo=bar"])
+def test_executor_options_never_cap_the_compiler_pool(extra):
+    """Executor JVMs keep ergonomics: only the local driver's options
+    carry the compiler pin, also when the caller merges its own
+    executor flags."""
+    conf = _builder_conf(
+        master="local[4]",
+        extra_conf={"spark.executor.extraJavaOptions": extra} if extra else None,
+    )
+    assert "CICompilerCount" in conf["spark.driver.extraJavaOptions"]
+    e = conf["spark.executor.extraJavaOptions"]
+    assert "CICompilerCount" not in e
+    assert "-Xss32m" in e and "-XX:+ExplicitGCInvokesConcurrent" in e
 
 
 # ---------------------------------------------------------------------------
