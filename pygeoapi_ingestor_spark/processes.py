@@ -18,14 +18,19 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import uuid
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from pygeoapi_ingestor_spark.sinks.collections import (
+# ``compute_extents`` is unused here but stays importable:
+# perfbench's traced mode wraps ``processes.compute_extents`` by name
+from pygeoapi_ingestor_spark.sinks.collections import (  # noqa: F401
     CollectionCatalog,
     compute_extents,
+    extent_aggs,
+    extents_dict,
     parquet_read_schema,
     write_collection,
 )
@@ -112,21 +117,23 @@ class IngestProcess:
         try:
             raw = self.fetch(spark)
             result = self.transform(raw)
-            write_collection(result, self.out_path, partition_by=self.partition_by)
-            # aggregate the WRITTEN data: avoids re-running the whole
-            # fetch+transform lineage and guarantees the registered
-            # extents describe exactly what landed on disk. Its schema
-            # is known without an inference job, except for partition
-            # columns, whose types a read infers from directory names.
-            reader = spark.read
-            if not self.partition_by:
-                reader = reader.schema(parquet_read_schema(result.schema))
-            written = reader.parquet(self.out_path)
-            extents = compute_extents(
-                written, ts_col=self.ts_col, value_cols=self.value_cols
-            )
+            # the extents ride on the write: the observed aggregates
+            # describe exactly the rows that landed, and no read-back
+            # query runs. The name is unique per call, so concurrent
+            # ingests never read each other's metrics.
+            obs = Observation(f"extents_{uuid.uuid4().hex}")
+            observed = result.observe(obs, *extent_aggs(self.ts_col, self.value_cols))
+            write_collection(observed, self.out_path, partition_by=self.partition_by)
+            extents = extents_dict(obs.get)
+            # the written schema is known without a job, except for
+            # partition columns, whose types a read infers from
+            # directory names
+            if self.partition_by:
+                schema = spark.read.parquet(self.out_path).schema
+            else:
+                schema = parquet_read_schema(result.schema)
             self.catalog.register(
-                self.collection_id, self.out_path, extents, schema=written.schema
+                self.collection_id, self.out_path, extents, schema=schema
             )
             return ProcessResult(OK, self.collection_id, "ingested", extents)
         except ProcessorExecuteError:

@@ -13,6 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 _JVM_PINS = "-Xss32m -XX:+ExplicitGCInvokesConcurrent"
+# set once the executors' Python workers can import this package
+_SHIPPED = "spark.pygeoapi_ingestor_spark.shipped"
 
 
 def get_spark(
@@ -134,12 +136,34 @@ def get_spark(
     if local:
         # forked Python workers share the daemon's pre-imported Arrow
         # stack (see worker_daemon); the package's parent directory on
-        # the workers' path lets the daemon import it from any cwd
-        builder = builder.config(
-            "spark.python.daemon.module", "pygeoapi_ingestor_spark.worker_daemon"
-        ).config(
-            "spark.executorEnv.PYTHONPATH",
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        # the workers' path lets the daemon import it from any cwd, so
+        # the package needs no zip shipped by addPyFile (the marker
+        # tells ensure_package_on_executors it is already there).
+        #
+        # Stream checkpoints rename every file they write (offsets,
+        # commits, state-store deltas). Spark's default manager renames
+        # through Hadoop's FileContext, which on the local filesystem
+        # without Hadoop's native library forks a `readlink` per
+        # rename: about 280 forks per perfbench ingest_publish round,
+        # whose reaped-children CPU was 1.06-1.47 s per round on 4
+        # cores. The FileSystem-based manager renames with one
+        # rename(2). Spark picks the FileContext one only for its
+        # atomic rename on filesystems where FileSystem.rename is not
+        # atomic; a local master's checkpoints are on local disk.
+        builder = (
+            builder.config(
+                "spark.python.daemon.module", "pygeoapi_ingestor_spark.worker_daemon"
+            )
+            .config(
+                "spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            )
+            .config(_SHIPPED, "true")
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
         )
     for k, v in (extra_conf or {}).items():
         # the -Xss32m pin (r11 canonicalization StackOverflow fix), the
@@ -237,11 +261,12 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     Required by the pandas-UDF operators (SPI, multimodal decode): their
     closures reference this package by module name, and executor workers
     don't share the driver's sys.path (e.g. when the driver process runs
-    from a different cwd). Idempotent per session.
+    from a different cwd). Idempotent per session. A local ``get_spark``
+    session sets the marker up front: its workers' ``PYTHONPATH`` already
+    holds the package, so only sessions built elsewhere ship the zip.
     """
-    marker = "spark.pygeoapi_ingestor_spark.shipped"
     try:
-        if spark.conf.get(marker, None) == "true":
+        if spark.conf.get(_SHIPPED, None) == "true":
             return
     except Exception:
         pass
@@ -257,7 +282,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         zip_base, "zip", root_dir=parent, base_dir="pygeoapi_ingestor_spark"
     )
     spark.sparkContext.addPyFile(zip_path)
-    spark.conf.set(marker, "true")
+    spark.conf.set(_SHIPPED, "true")
 
 
 TABLES = (

@@ -8,14 +8,20 @@ collection_healthcheck.py).
 
 Spark-first: the collection store is partitioned parquet (columnar,
 predicate-pushdown-friendly — the tabular analog of chunked ZARR), and
-the catalog is a JSON registry whose extents are computed with one
-aggregate over the data. At 100 TB the partition columns (e.g.
-date(ts)) give partition pruning on every time-sliced query.
+the catalog is a JSON registry of each collection's extents. At 100 TB
+the partition columns (e.g. date(ts)) give partition pruning on every
+time-sliced query.
+
+``IngestProcess.execute`` takes the extents from the write pass itself:
+the written DataFrame carries an ``Observation`` of ``extent_aggs``, so
+the write job reports them and no read-back query runs. A stream's
+``run_to_collection`` aggregates what its batches wrote with
+``compute_extents``.
 
 A catalog entry also stores the schema the collection was written
-with, and readers of a published collection (``ProcessAPI.items``, the
-ingest's own extents read) pass it to ``.schema()``: a parquet read
-without one runs a schema-inference job first.
+with, and readers of a published collection (``ProcessAPI.items``)
+pass it to ``.schema()``: a parquet read without one runs a
+schema-inference job first.
 """
 
 from __future__ import annotations
@@ -63,24 +69,31 @@ def parquet_read_schema(dt: DataType) -> DataType:
     return dt
 
 
-def compute_extents(
-    df: DataFrame,
-    ts_col: str | None = None,
-    value_cols: list[str] | None = None,
-) -> dict[str, Any]:
-    """One-pass extents aggregate (the reference reads coord min/max from
-    the opened dataset; we aggregate — no data pulled to the driver
-    beyond one row)."""
+def extent_aggs(ts_col: str | None, value_cols: list[str] | None) -> list:
+    """The extents aggregates: a row count, the time span of ``ts_col``
+    and the range of each value column. ``compute_extents`` runs them as
+    a query; ``IngestProcess.execute`` observes them on its write."""
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if ts_col:
         aggs += [F.min(ts_col).alias("ts_begin"), F.max(ts_col).alias("ts_end")]
     for c in value_cols or []:
         aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
-    row = df.agg(*aggs).collect()[0].asDict()
+    return aggs
+
+
+def extents_dict(row: dict[str, Any]) -> dict[str, Any]:
+    """An extents row as catalog JSON: dates and times in ISO form."""
     return {
         k: (v.isoformat() if isinstance(v, (datetime.datetime, datetime.date)) else v)
         for k, v in row.items()
     }
+
+
+def compute_extents(df: DataFrame, ts_col: str | None = None) -> dict[str, Any]:
+    """One-pass extents aggregate (the reference reads coord min/max from
+    the opened dataset; we aggregate — no data pulled to the driver
+    beyond one row)."""
+    return extents_dict(df.agg(*extent_aggs(ts_col, None)).collect()[0].asDict())
 
 
 EXPORT_FORMATS = ("parquet", "json", "csv", "orc")

@@ -13,7 +13,8 @@
 - ``spread_if_narrow`` decides without a job, the same way as the
   executed partition count.
 - ``read_table`` infers a schema once per generation; a published
-  collection carries its schema to its readers.
+  collection carries its schema to its readers, and a non-partitioned
+  ingest starts no job after its write.
 """
 
 from __future__ import annotations
@@ -459,6 +460,19 @@ def test_published_schema_reaches_items_without_inference(spark, tmp_path, parti
     want, jobs_copy = _job_ids(spark, "items:copy", page(copy))
     assert got == want and got["numberReturned"] == 4
     assert len(jobs_pub) < len(jobs_copy), (jobs_pub, jobs_copy)
+
+
+def test_non_partitioned_ingest_starts_only_the_write_jobs(spark, tmp_path):
+    """The extents ride on the write and the schema needs no read: a
+    non-partitioned ingest starts as many jobs as writing the same
+    DataFrame does."""
+    from pygeoapi_ingestor_spark.sinks.collections import write_collection
+
+    proc, ingest = _job_ids(spark, "census:ingest",
+                            lambda: _ingest(spark, tmp_path, "census"))
+    _, plain = _job_ids(spark, "census:write", lambda: write_collection(
+        proc.fetch(spark), str(tmp_path / "plain")))
+    assert plain and len(ingest) == len(plain), (ingest, plain)
 
 
 def test_entry_without_schema_falls_back_to_inference(spark, tmp_path):

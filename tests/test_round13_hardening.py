@@ -264,6 +264,31 @@ def test_non_local_master_keeps_jvm_ergonomics(master):
     assert "spark.executorEnv.PYTHONPATH" not in conf
 
 
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+@pytest.mark.parametrize("master", [None, "local", "local[2]", "local[*]"])
+def test_local_master_renames_checkpoints_without_filecontext(master):
+    """A local master's stream checkpoints go through the FileSystem-based
+    manager (one rename(2) per file, no forked readlink), and its session
+    is marked as shipping the package through the workers' path."""
+    conf = _builder_conf(master=master)
+    assert conf[CKPT_MANAGER] == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert conf["spark.pygeoapi_ingestor_spark.shipped"] == "true"
+
+
+@pytest.mark.parametrize("master", ["spark://h:7077", "local-cluster[2,1,1024]"])
+def test_non_local_master_keeps_spark_checkpoint_manager(master):
+    """Spark's default manager (FileContext, atomic rename) and the
+    addPyFile shipping stay on masters whose executors are elsewhere."""
+    conf = _builder_conf(master=master)
+    assert CKPT_MANAGER not in conf
+    assert "spark.pygeoapi_ingestor_spark.shipped" not in conf
+
+
 @pytest.mark.parametrize("extra", [None, "-Dfoo=bar"])
 def test_executor_options_never_cap_the_compiler_pool(extra):
     """Executor JVMs keep ergonomics: only the local driver's options

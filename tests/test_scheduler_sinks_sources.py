@@ -67,7 +67,7 @@ def test_collection_roundtrip(spark, sf_dir, tmp_path):
     path = str(tmp_path / "events_collection")
     write_collection(daily, path, partition_by=["day"])
 
-    extents = compute_extents(ev, ts_col="ts", value_cols=["value"])
+    extents = compute_extents(ev, ts_col="ts")
     assert extents["n_rows"] == ev.count()
     assert extents["ts_begin"] < extents["ts_end"]
 

@@ -1,8 +1,11 @@
 """The local-mode Python worker daemon (``worker_daemon``): importing it
 starts no Python thread and no daemon; a session from ``get_spark``
 started in a working directory outside the checkout forks its workers
-from the package's daemon, and the Arrow kernels they run give the same
-rows as in the test session."""
+from the package's daemon, which imports pyspark and py4j from the
+installed packages rather than SPARK_HOME's source zips, ships no
+package zip, and the Arrow kernels its workers run give the same rows
+as in the test session. A session built outside ``get_spark`` ships the
+zip and gives the same rows too."""
 
 from __future__ import annotations
 
@@ -10,6 +13,10 @@ import json
 import os
 import subprocess
 import sys
+import zipfile
+from importlib import metadata
+
+import pytest
 
 from pygeoapi_ingestor_spark.plans import QUERIES
 
@@ -21,34 +28,89 @@ sys.path.insert(0, sys.argv[1])
 from pygeoapi_ingestor_spark.plans import QUERIES
 from pygeoapi_ingestor_spark.session import get_spark
 
-spark = get_spark(master="local[2]")
+if sys.argv[3] == "get_spark":
+    spark = get_spark(master="local[2]")
+else:
+    from pyspark.sql import SparkSession
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.driver.memory", "1g").getOrCreate())
 
-def parent_cmd(batches):
+def worker(batches):
     import pandas as pd
+    import py4j
+    import pyspark
     with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
         cmd = f.read().replace(b"\\0", b" ").decode()
     for _ in batches:
-        yield pd.DataFrame({"cmd": [cmd]})
+        yield pd.DataFrame({"cmd": [cmd], "pyspark": [pyspark.__file__],
+                            "py4j": [py4j.__file__]})
 
-cmd = spark.range(1, numPartitions=1).mapInPandas(parent_cmd, "cmd string").first()[0]
+w = spark.range(1, numPartitions=1).mapInPandas(
+    worker, "cmd string, pyspark string, py4j string").first()
 rows = [repr(tuple(r)) for r in QUERIES["spi_gamma"](spark, sys.argv[2]).collect()]
-print(json.dumps({"cmd": cmd, "rows": sorted(rows)}))
+print(json.dumps({**w.asDict(), "rows": sorted(rows),
+                  "files": list(spark.sparkContext.listFiles)}))
 spark.stop()
 """
 
 
-def test_spi_gamma_from_outside_the_checkout_matches(spark, sf_dir, tmp_path):
+def _outside(tmp_path, sf_dir, session):
+    """Run SCRIPT with a ``session`` in a fresh interpreter whose cwd is
+    outside the checkout and whose PYTHONPATH is unset."""
     env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
     env.pop("PYTHONPATH", None)
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT, REPO, sf_dir],
+        [sys.executable, "-c", SCRIPT, REPO, sf_dir, session],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    got = json.loads(out.stdout.strip().splitlines()[-1])
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_spi_gamma_from_outside_the_checkout_matches(spark, sf_dir, tmp_path):
+    got = _outside(tmp_path, sf_dir, "get_spark")
     assert "pygeoapi_ingestor_spark.worker_daemon" in got["cmd"]
+    # the workers import compiled modules, not SPARK_HOME's source zips
+    for mod in ("pyspark", "py4j"):
+        assert ".zip" not in got[mod] and got[mod].endswith(".py"), got[mod]
+    # the workers' PYTHONPATH holds the package: nothing is shipped
+    assert got["files"] == []
     here = sorted(repr(tuple(r)) for r in QUERIES["spi_gamma"](spark, sf_dir).collect())
     assert here and got["rows"] == here
+
+
+def test_session_outside_get_spark_ships_the_package(spark, sf_dir, tmp_path):
+    got = _outside(tmp_path, sf_dir, "vanilla")
+    assert "pyspark.daemon" in got["cmd"]
+    assert [os.path.basename(f).startswith("pygeoapi_ingestor_spark_")
+            and f.endswith(".zip") for f in got["files"]] == [True]
+    here = sorted(repr(tuple(r)) for r in QUERIES["spi_gamma"](spark, sf_dir).collect())
+    assert got["rows"] == here
+
+
+def _zips(tmp_path, pyspark_version: str, py4j_version: str) -> list[str]:
+    """A ``pyspark.zip`` whose version.py reports ``pyspark_version``
+    and an (empty) ``py4j-<py4j_version>-src.zip``."""
+    ps = tmp_path / "lib" / "pyspark.zip"
+    ps.parent.mkdir(exist_ok=True)
+    with zipfile.ZipFile(ps, "w") as z:
+        z.writestr("pyspark/version.py", f"__version__: str = '{pyspark_version}'\n")
+    p4 = tmp_path / "lib" / f"py4j-{py4j_version}-src.zip"
+    zipfile.ZipFile(p4, "w").close()
+    return [str(ps), str(p4)]
+
+
+@pytest.mark.parametrize("which", ["pyspark", "py4j"])
+def test_source_zips_of_another_version_stay_on_the_path(tmp_path, which):
+    from pygeoapi_ingestor_spark.worker_daemon import without_source_zips
+
+    versions = {m: metadata.version(m) for m in ("pyspark", "py4j")}
+    path = ["/somewhere", *_zips(tmp_path, versions["pyspark"], versions["py4j"]), REPO]
+    assert without_source_zips(path) == ["/somewhere", REPO]
+    versions[which] = "0.0.1"
+    path = ["/somewhere", *_zips(tmp_path, versions["pyspark"], versions["py4j"]), REPO]
+    assert without_source_zips(path) == path
 
 
 def test_import_starts_no_thread(tmp_path):
