@@ -551,9 +551,10 @@ def main(argv: list[str] | None = None) -> None:
     # keys, so each key's warm run sees exactly its own artifacts, never
     # an earlier query's. Release goes through finalize_job, never a
     # bare clearCache: that would strip a memoized plan's cached
-    # relations and leave it running uncached. finalize_job also nudges
-    # a driver GC, so the ContextCleaner frees broadcast/shuffle state
-    # between keys.
+    # relations and leave it running uncached. finalize_job starts no
+    # GC: the ContextCleaner frees broadcast/shuffle state after its own
+    # periodic GC (spark.cleaner.periodicGC.interval), which may land
+    # inside a timed cell.
 
     timings: dict[str, float] = {}
     warm_timings: dict[str, float] = {}

@@ -74,6 +74,9 @@ Between service ticks ``finalize_job`` clears the cache and
 releases everything but the schemas, which hold no Spark state. A
 release frees the checkpoint blocks, drops the centroids and drops
 every plan, so a memoized plan never outlives the artifact it reads.
+No release starts a GC: the ContextCleaner's periodic GC
+(``spark.cleaner.periodicGC.interval``) is the one trigger for the
+broadcast and shuffle state it frees, on its own thread.
 
 IN FLIGHT. ``ProcessAPI.execute`` holds ``in_flight()`` around its
 work and calls ``finalize_job`` after; ``finalize_job`` returns without
@@ -304,11 +307,17 @@ def finalize_job(spark) -> None:
     done. A long-lived service MUST release between jobs or
     MEMORY_AND_DISK blocks accumulate for the session lifetime. The
     corpus artifacts survive ``clearCache`` by design and are released
-    here too, together with every prepared plan. Also nudges a driver
-    GC: Spark's ContextCleaner frees broadcast/shuffle state on driver
-    GC, and the default periodicGC interval outlives many scheduler
-    ticks (the session factory lowers it, but an externally-built
-    session may not).
+    here too, together with every prepared plan.
+
+    It starts no GC. Spark's ContextCleaner frees broadcast/shuffle
+    state once a driver GC has collected its references, and the
+    cleaner's own periodic GC (``spark.cleaner.periodicGC.interval``,
+    which the session factory sets to 2 min) is the one trigger: it runs
+    on the cleaner's thread, not on a request. A ``System.gc()`` here
+    would block the request for a whole concurrent G1 cycle (under
+    ``+ExplicitGCInvokesConcurrent`` the call returns when the cycle
+    ends). The drain below needs no GC: an unpersist removes its blocks
+    directly.
 
     "Storage is free when finalize returns" is the scheduler contract,
     so the released blocks are drained with a bounded wait instead of
@@ -325,7 +334,6 @@ def finalize_job(spark) -> None:
         before = {info.id() for info in jsc.getRDDStorageInfo()}
         spark.catalog.clearCache()
         targets = before | set(release_corpus_artifacts())
-        sc._jvm.System.gc()
         deadline = time.monotonic() + 15.0
         while time.monotonic() < deadline:
             stored = {info.id() for info in jsc.getRDDStorageInfo()} & targets

@@ -99,47 +99,71 @@ def spline_transfer_sql(
     table), never literals, so plan size does not grow with the stored
     parameter set.
 
+    This form inlines the span index ``spline_span_sql`` into every knot
+    and coefficient access (50 copies for a cubic): the DuckDB oracle's
+    text. ``apply_spline_table`` computes the span once per row as a
+    column and passes its name to ``spline_deboor_sql`` instead.
+    """
+    j_sql = f"({spline_span_sql(x_sql, t_sql, k, dialect)})"
+    return spline_deboor_sql(x_sql, t_sql, c_sql, j_sql, k, dmin_sql, dmax_sql, dialect)
+
+
+# (element access, size, filter) function names per dialect
+_ARRAY_FUNCTIONS = {
+    "spark": ("element_at", "size", "filter"),
+    "duckdb": ("list_extract", "len", "list_filter"),
+}
+
+
+def spline_span_sql(x_sql: str, t_sql: str, k: int, dialect: str) -> str:
+    """The knot-span index ``j`` (0-based) of ``x``: the last knot
+    ``t[j] <= x``, clamped to [k, n-k-2] so every array index of the de
+    Boor recurrence stays in bounds (ANSI-safe)."""
+    _, size, filt = _ARRAY_FUNCTIONS[dialect]
+    jraw = f"({size}({filt}({t_sql}, e -> e <= ({x_sql}))) - 1)"
+    return f"least(greatest({jraw}, {k}), {size}({t_sql}) - {k + 2})"
+
+
+def spline_deboor_sql(
+    x_sql: str,
+    t_sql: str,
+    c_sql: str,
+    j_sql: str,
+    k: int,
+    dmin_sql: str,
+    dmax_sql: str,
+    dialect: str,
+) -> str:
+    """The tail-adjusted de Boor expression with the span index given as
+    the SQL text ``j_sql`` (a column name, or the parenthesized
+    ``spline_span_sql``).
+
     De Boor's algorithm (the standard recurrence): with x in
     [t[j], t[j+1]), d0_i = c[j-k+i], then for r=1..k, i=k..r:
     d_i <- (1-a)*d_{i-1} + a*d_i with a = (x - t[i+j-k]) /
-    (t[i+1+j-r] - t[i+j-k]); S(x) = d_k. ``j`` is clamped to
-    [k, n-k-2] so every array index stays in bounds (ANSI-safe).
+    (t[i+1+j-r] - t[i+j-k]); S(x) = d_k.
     """
-    if dialect == "spark":
-        elem, size, filt = "element_at", "size", "filter"
-    elif dialect == "duckdb":
-        elem, size, filt = "list_extract", "len", "list_filter"
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"unknown dialect {dialect!r}")
+    elem, size, _ = _ARRAY_FUNCTIONS[dialect]
 
     def T(off: int) -> str:
         # knot t[j + off] (0-based) -> 1-based element access
-        return f"{elem}({t_sql}, __J__ + {off + 1})"
+        return f"{elem}({t_sql}, {j_sql} + {off + 1})"
 
     n = f"{size}({t_sql})"
-    jraw = f"({size}({filt}({t_sql}, e -> e <= ({x_sql}))) - 1)"
-    j_def = f"least(greatest({jraw}, {k}), {n} - {k + 2})"
-
-    # build d-terms with j as the placeholder token __J__, substituted at
-    # the end (a distinctive token so it can never collide with the
-    # caller's column names)
-    d = {
-        i: f"{elem}({c_sql}, __J__ + {i - k + 1})" for i in range(k + 1)
-    }
+    d = {i: f"{elem}({c_sql}, {j_sql} + {i - k + 1})" for i in range(k + 1)}
     for r in range(1, k + 1):
         for i in range(k, r - 1, -1):
             lo = T(i - k)
             hi = T(i + 1 - r)
             alpha = f"((({x_sql}) - {lo}) / ({hi} - {lo}))"
             d[i] = f"((1.0 - {alpha}) * ({d[i - 1]}) + {alpha} * ({d[i]}))"
-    deboor = d[k].replace("__J__", f"({j_def})")
 
     tmin = f"{elem}({t_sql}, {k + 1})"          # t[k] 0-based
     tmax = f"{elem}({t_sql}, {n} - {k - 1})"    # t[-k] 0-based = 1-based n-k+1
     return (
         f"CASE WHEN ({x_sql}) < {tmin} THEN ({x_sql}) + ({dmin_sql}) "
         f"WHEN ({x_sql}) > {tmax} THEN ({x_sql}) + ({dmax_sql}) "
-        f"ELSE {deboor} END"
+        f"ELSE {d[k]} END"
     )
 
 
@@ -161,11 +185,24 @@ def apply_spline_table(
     whole correction is a single projection after one broadcast hash
     join: zero shuffles on the fact side, and the de Boor expression
     stays JVM-side (no UDF). Rows whose series has no stored params
-    keep NULL."""
+    keep NULL.
+
+    The span index is ONE column per row (one ``filter`` over the
+    knots), which the de Boor expression references. Inlined, it is 50
+    span searches per row, and the whole expression runs interpreted (a
+    higher-order function has no codegen); as a column, only the span's
+    own projection does. CollapseProject keeps the column, since it does
+    not inline a non-cheap expression its consumer references more than
+    once. The arithmetic text is ``spline_transfer_sql``'s, so the
+    values are bit-identical to the inlined form and to the DuckDB
+    oracle."""
     joined = fact.join(F.broadcast(params), series_cols, "left")
-    expr = spline_transfer_sql(value_col, "t", "c", 3, "dmin", "dmax")
-    return joined.withColumn("value_adj", F.expr(expr)).drop(
-        "t", "c", "dmin", "dmax"
+    span = spline_span_sql(value_col, "t", 3, "spark")
+    expr = spline_deboor_sql(value_col, "t", "c", "_spline_j", 3, "dmin", "dmax", "spark")
+    return (
+        joined.withColumn("_spline_j", F.expr(span))
+        .withColumn("value_adj", F.expr(expr))
+        .drop("t", "c", "dmin", "dmax", "_spline_j")
     )
 
 

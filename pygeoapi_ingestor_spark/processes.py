@@ -23,6 +23,7 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 # ``compute_extents`` is unused here but stays importable:
 # perfbench's traced mode wraps ``processes.compute_extents`` by name
@@ -127,11 +128,17 @@ class IngestProcess:
             extents = extents_dict(obs.get)
             # the written schema is known without a job, except for
             # partition columns, whose types a read infers from
-            # directory names
-            if self.partition_by:
+            # directory names. An empty write lands no directory to
+            # infer from (the read would fail): its partition columns
+            # keep their own types, last, where a read puts them.
+            schema = parquet_read_schema(result.schema)
+            if self.partition_by and extents["n_rows"]:
                 schema = spark.read.parquet(self.out_path).schema
-            else:
-                schema = parquet_read_schema(result.schema)
+            elif self.partition_by:
+                schema = StructType(
+                    [f for f in schema.fields if f.name not in self.partition_by]
+                    + [schema[c] for c in self.partition_by]
+                )
             self.catalog.register(
                 self.collection_id, self.out_path, extents, schema=schema
             )

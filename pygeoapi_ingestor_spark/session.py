@@ -53,7 +53,9 @@ def get_spark(
         # default periodicGC outlives a whole catalog pass (or a
         # scheduler tick), letting dead state pile up — observed as
         # random 2-3x latency outliers. 2 min keeps a long-lived
-        # ingestor service at steady-state latency.
+        # ingestor service at steady-state latency. This is the one GC
+        # trigger: it runs on the cleaner's own thread, and
+        # finalize_job starts none, so no request waits for a cycle.
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

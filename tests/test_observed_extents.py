@@ -5,7 +5,9 @@ writes, so the registered extents must equal ``compute_extents`` and
 each value column's range over the written files: with time and value
 columns, with NaN and NULL
 values, for an empty fetch, for a partitioned collection, and for two
-ingests of one collection running at once through ``JobManager``.
+ingests of one collection running at once through ``JobManager``. An
+empty partitioned ingest registers a schema without a read, and its
+collection pages empty.
 """
 
 from __future__ import annotations
@@ -131,3 +133,36 @@ def test_concurrent_ingests_of_one_collection(spark, tmp_path):
     with open(procs[0].catalog.catalog_path) as f:
         entry = json.load(f)["resources"]["twin"]
     assert any(_same(entry["extents"], w) for w in wants)
+
+
+
+def _empty_partitioned(spark, tmp_path):
+    """An empty fetch ingested with ``partition_by``: the write lands no
+    partition directory for a read to infer a schema from."""
+    proc = _process(tmp_path, "empty_partitioned",
+                    lambda s: _rows(s, 0, 40).where("id < 0"),
+                    ts_col="ts", value_cols=["value"], partition_by=["station"])
+    return proc, proc.execute(spark, {"token": "t"}, force=True)
+
+
+def test_empty_partitioned_ingest_registers_its_schema(spark, tmp_path):
+    """The ingest registers the DataFrame's own schema, nullable, with
+    the partition columns last as a read orders them."""
+    from pygeoapi_ingestor_spark.sinks.collections import published_schema
+
+    proc, res = _empty_partitioned(spark, tmp_path)
+    assert res.status == OK, res.message
+    assert res.extents["n_rows"] == 0 and res.extents["ts_begin"] is None
+    schema = published_schema(proc.out_path)
+    assert schema.fieldNames() == ["id", "ts", "value", "level", "station"]
+    assert all(f.nullable for f in schema.fields)
+
+
+def test_empty_partitioned_collection_pages_empty(spark, tmp_path):
+    from pygeoapi_ingestor_spark.api import ProcessAPI
+
+    proc, res = _empty_partitioned(spark, tmp_path)
+    assert res.status == OK, res.message
+    page = ProcessAPI().items(spark, proc.out_path, sort_col="id", count_matched=True)
+    assert page["numberReturned"] == 0 and page["features"] == []
+    assert page["numberMatched"] == 0
