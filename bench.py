@@ -418,9 +418,12 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
     stopped."""
     with tracer.harvesting():
         gc0, _ = tracer.driver_gc()
-        jit = tracer.spark._jvm.java.lang.management.ManagementFactory \
-            .getCompilationMXBean()
+        jvm = tracer.spark._jvm
+        jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
         jit0 = jit.getTotalCompilationTime()
+        janino = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME()
+        janino0 = janino.getCount()
     try:
         tracer.set_group(f"{group}|build")
         with _py4j_calls(tracer.spark) as calls:
@@ -438,6 +441,7 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
         tracer.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         gc1, _ = tracer.driver_gc()
         jit1 = jit.getTotalCompilationTime()
+        janino1 = janino.getCount()
         b = tracer.group_stats(f"{group}|build")
         a = tracer.group_stats(group)
     return {
@@ -448,6 +452,7 @@ def _spot_cell(tracer: Tracer, group: str, key: str, sf_dir: str, action) -> dic
         **{f: round(b[f] + a[f], 3) for f in SPOT_LAYERS},
         "driver_gc_ms": gc1 - gc0,
         "jit_ms": jit1 - jit0,
+        "janino_compiles": janino1 - janino0,
     }
 
 

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 _JVM_PINS = "-Xss32m -XX:+ExplicitGCInvokesConcurrent"
+# a local-master driver's compile policy, one -XX flag per name (see
+# the factory's comment): the minimum tiered compiler pool, and the C2
+# (tier-4) thresholds at 10x HotSpot's defaults (5000/600/15000/40000)
+_LOCAL_DRIVER_PINS = {
+    "CICompilerCount": 2,
+    "Tier4InvocationThreshold": 50000,
+    "Tier4MinInvocationThreshold": 6000,
+    "Tier4CompileThreshold": 150000,
+    "Tier4BackEdgeThreshold": 400000,
+}
 # set once the executors' Python workers can import this package
 _SHIPPED = "spark.pygeoapi_ingestor_spark.shipped"
 
@@ -26,9 +36,10 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local core count so the bench driver
-    controls parallelism.
+    controls parallelism; unset, the core count is the CPUs this process
+    may run on.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -91,23 +102,37 @@ def get_spark(
         # multi-second full pauses at exactly the heap sizes where both
         # matter.
         #
-        # -XX:CICompilerCount=2, local masters only (HotSpot's tiered
-        # minimum: one C1 and one C2 compiler thread): in local mode
-        # every task runs inside this driver JVM, on all of its cores,
-        # yet HotSpot sizes its compiler pool as if those cores were
-        # idle (3 threads on 4 CPUs, 15 on 32). A fresh session's first
-        # pass makes Janino, ANTLR, Java-serialization and Catalyst code
-        # hot, and C2 stays busy for the whole pass: sampled per-thread
-        # CPU on 4 cores put the compiler threads at 20-23 of the 40-45
-        # CPU-s of a perfbench ingest_publish round and 18-19 of the
-        # 29-31 of an api_sequential round. With the minimum pool they
-        # took 13 and 11-12 CPU-s, the rest of the round did not grow,
-        # round wall time held, and warm bench.py spot cells did not
-        # slow. A cluster driver runs no tasks, and executors keep JVM
-        # ergonomics.
+        # The compile policy of a local master's driver
+        # (_LOCAL_DRIVER_PINS). -XX:CICompilerCount=2 is HotSpot's tiered
+        # minimum, one C1 and one C2 compiler thread: in local mode every
+        # task runs inside this driver JVM, on all of its cores, yet
+        # HotSpot sizes its compiler pool as if those cores were idle (3
+        # threads on 4 CPUs, 15 on 32). A fresh session's first pass
+        # makes Janino, ANTLR, Java-serialization and Catalyst code hot;
+        # with the default pool the compiler threads took 20-23 of the
+        # 40-45 CPU-s of a cold perfbench ingest_publish round on 4
+        # cores, with the minimum pool 13, and warm bench.py spot cells
+        # did not slow. That one C2 thread still stayed busy for the
+        # whole cold round, so the four tier-4 thresholds sit at 10x
+        # HotSpot's defaults: C2 compiles only code that stays hot, and
+        # the rest runs as profiled C1 code for longer. Measured on 4
+        # cores in alternating perfbench pairs of one cold round each,
+        # per run (medians over a driver JVM's life, sampled per thread
+        # from /proc): the C2 thread fell 8.4 -> 3.7 CPU-s on
+        # ingest_publish and 7.0 -> 3.0 on api_sequential, C1 held, and
+        # the task and py4j threads grew 0.1-0.4 CPU-s. run_cpu_s fell
+        # 11.63 -> 9.85 s (12 of 12 pairs) and 7.88 -> 6.79 s (11 of 12);
+        # setup_s rose 0.228 -> 0.243 and 0.212 -> 0.227 s (session-start
+        # code stays at tier 3 longer) and round wall time 3-8%, so a
+        # cold round spends less CPU but no less time. Warm and noop
+        # bench.py spot medians at sf0.1 (five keys, 4 runs per side)
+        # stayed within the parent's run-to-run spread. 5x did not cut
+        # run_cpu_s by more than the parent's spread; 20x cut more but
+        # put three warm or noop spot medians above it. A cluster
+        # driver runs no tasks, and executors keep JVM ergonomics.
         .config(
             "spark.driver.extraJavaOptions",
-            f"{_JVM_PINS} -XX:CICompilerCount=2" if local else _JVM_PINS,
+            _with_driver_pins(_JVM_PINS) if local else _JVM_PINS,
         )
         .config("spark.executor.extraJavaOptions", _JVM_PINS)
         # The app-status store keeps the last 1000 SQL executions WITH
@@ -170,23 +195,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         # the -Xss32m pin (r11 canonicalization StackOverflow fix), the
         # concurrent-explicit-GC pin (r14 full-pause fix) and, on a
-        # local driver, the compiler-pool pin are load-bearing: a
+        # local driver, the compile-policy pins are load-bearing: a
         # caller adding its own JVM flags must not silently REPLACE
         # them (ADVICE r12) — merge, keeping the caller's flags after
         # ours so they still win any same-flag conflict
         # (-XX:-ExplicitGCInvokesConcurrent counts as the caller
-        # providing the flag).
+        # providing the flag; a policy pin is dropped only when the
+        # caller sets that same -XX:Name=).
         if k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
-            if local and k == "spark.driver.extraJavaOptions" and (
-                "CICompilerCount" not in v
-            ):
-                v = f"-XX:CICompilerCount=2 {v}"
+            if local and k == "spark.driver.extraJavaOptions":
+                v = _with_driver_pins(v)
             if "ExplicitGCInvokesConcurrent" not in v:
                 v = f"-XX:+ExplicitGCInvokesConcurrent {v}"
             if "-Xss" not in v:
                 v = f"-Xss32m {v}"
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _with_driver_pins(opts: str) -> str:
+    """``opts`` with every local-driver pin whose flag name it does not
+    set put before it."""
+    pins = [
+        f"-XX:{name}={value}" for name, value in _LOCAL_DRIVER_PINS.items()
+        if f"-XX:{name}=" not in opts
+    ]
+    return " ".join([*pins, opts])
 
 
 def spread_if_narrow(df):

@@ -13,8 +13,10 @@
    localCheckpoint blocks).
 3. get_spark merges caller-supplied extraJavaOptions with the
    load-bearing -Xss32m pin instead of letting extra_conf replace it;
-   the same merge keeps a local driver's minimum JIT compiler pool,
-   which non-local masters and executor JVMs never get.
+   the same merge keeps a local driver's compile policy (the minimum
+   JIT compiler pool and raised C2 thresholds) flag by flag, which
+   non-local masters and executor JVMs never get, and the pytest
+   session's live driver JVM runs with it.
 4. (spatial.py) the bounded-summary union-find collects the run-edge
    list via Arrow — two int64 columns, not ~width² Row objects —
    covered by test_spatial's label-parity tests running through the
@@ -149,6 +151,10 @@ def test_kmeans_cents_concurrent_build_runs_once(spark, sf_dir, monkeypatch):
     release_corpus_artifacts()
 
 
+# where _builder_conf records the master it was given
+MASTER = "<master>"
+
+
 def _builder_conf(**kwargs) -> dict:
     """The conf map ``get_spark(**kwargs)`` hands the session builder.
     The merge happens at builder time; a live getOrCreate would no-op
@@ -164,7 +170,8 @@ def _builder_conf(**kwargs) -> dict:
         def appName(self, *_):
             return self
 
-        def master(self, *_):
+        def master(self, m):
+            captured[MASTER] = m
             return self
 
         def config(self, k, v):
@@ -211,21 +218,39 @@ def test_extra_java_options_merge_keeps_xss_pin():
 
 
 DAEMON = "pygeoapi_ingestor_spark.worker_daemon"
+# a local driver's compile policy: the minimum tiered compiler pool and
+# C2 (tier-4) thresholds at 10x HotSpot's defaults
+POLICY = {
+    "CICompilerCount": "2",
+    "Tier4InvocationThreshold": "50000",
+    "Tier4MinInvocationThreshold": "6000",
+    "Tier4CompileThreshold": "150000",
+    "Tier4BackEdgeThreshold": "400000",
+}
+
+
+def _flags(opts: str) -> list[str]:
+    """The -XX flag names ``opts`` sets, one entry per setting."""
+    return [
+        t[len("-XX:"):].split("=")[0] for t in opts.split()
+        if t.startswith("-XX:") and "=" in t
+    ]
 
 
 @pytest.mark.parametrize("extra", [None, "-Dfoo=bar"])
 def test_local_driver_gets_minimum_compiler_pool(extra):
     """A local master runs every task in the driver JVM: its options
-    carry HotSpot's tiered minimum compiler pool exactly once, with or
-    without caller flags, and its Python workers fork from the
-    package's daemon, importable from any cwd."""
+    carry each flag of the compile policy exactly once, at the policy's
+    value, with or without caller flags, and its Python workers fork
+    from the package's daemon, importable from any cwd."""
     conf = _builder_conf(
         master="local[4]",
         extra_conf={"spark.driver.extraJavaOptions": extra} if extra else None,
     )
     v = conf["spark.driver.extraJavaOptions"]
-    assert v.split().count("-XX:CICompilerCount=2") == 1
-    assert v.count("CICompilerCount") == 1
+    for name, value in POLICY.items():
+        assert v.split().count(f"-XX:{name}={value}") == 1, (name, v)
+        assert v.count(f"{name}=") == 1, (name, v)
     assert conf["spark.python.daemon.module"] == DAEMON
     import pygeoapi_ingestor_spark
 
@@ -243,9 +268,46 @@ def test_caller_compiler_count_wins():
     )
     v = conf["spark.driver.extraJavaOptions"]
     assert v.split() == [
-        "-Xss32m", "-XX:+ExplicitGCInvokesConcurrent", "-XX:CICompilerCount=4",
+        "-Xss32m", "-XX:+ExplicitGCInvokesConcurrent",
+        *(f"-XX:{n}={x}" for n, x in POLICY.items() if n != "CICompilerCount"),
+        "-XX:CICompilerCount=4",
     ]
     assert conf["spark.python.daemon.module"] == DAEMON
+
+
+def test_caller_tier4_threshold_wins_and_other_pins_stay():
+    """The merge is per flag: a caller's own Tier4InvocationThreshold is
+    kept and ours is not added, and every other pin still is."""
+    v = _driver_opts("-XX:Tier4InvocationThreshold=7000")
+    assert v.split()[-1] == "-XX:Tier4InvocationThreshold=7000"
+    assert sorted(_flags(v)) == sorted(POLICY)
+    for name, value in POLICY.items():
+        if name != "Tier4InvocationThreshold":
+            assert f"-XX:{name}={value}" in v.split(), (name, v)
+    assert "-Xss32m" in v and "-XX:+ExplicitGCInvokesConcurrent" in v
+
+
+def test_live_driver_jvm_runs_the_compile_policy(spark):
+    """HotSpot itself reports the policy in the pytest session's driver
+    JVM (a local master started by get_spark): the builder's conf alone
+    cannot show that the flags reached the JVM."""
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    live = {name: bean.getVMOption(name).getValue() for name in POLICY}
+    assert live == POLICY
+
+
+def test_default_core_count_follows_cpu_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS a local session gets one task thread per
+    CPU this process may run on, not per CPU of the host."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2})
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    conf = _builder_conf()
+    assert conf[MASTER] == "local[2]"
+    assert conf["spark.sql.shuffle.partitions"] == "4"
 
 
 @pytest.mark.parametrize("master", ["spark://h:7077", "local-cluster[2,1,1024]"])
@@ -253,13 +315,14 @@ def test_non_local_master_keeps_jvm_ergonomics(master):
     """A driver that runs no tasks keeps HotSpot's compiler pool and
     pyspark's own daemon; the rules follow the master, not the host."""
     local = _builder_conf(master="local[2]")
-    assert "CICompilerCount" in local["spark.driver.extraJavaOptions"]
+    assert set(_flags(local["spark.driver.extraJavaOptions"])) >= set(POLICY)
     assert local["spark.python.daemon.module"] == DAEMON
     conf = _builder_conf(
         master=master,
         extra_conf={"spark.driver.extraJavaOptions": "-Dfoo=bar"},
     )
-    assert "CICompilerCount" not in conf["spark.driver.extraJavaOptions"]
+    assert not set(_flags(conf["spark.driver.extraJavaOptions"])) & set(POLICY)
+    assert not set(_flags(conf["spark.executor.extraJavaOptions"])) & set(POLICY)
     assert "spark.python.daemon.module" not in conf
     assert "spark.executorEnv.PYTHONPATH" not in conf
 
@@ -292,15 +355,15 @@ def test_non_local_master_keeps_spark_checkpoint_manager(master):
 @pytest.mark.parametrize("extra", [None, "-Dfoo=bar"])
 def test_executor_options_never_cap_the_compiler_pool(extra):
     """Executor JVMs keep ergonomics: only the local driver's options
-    carry the compiler pin, also when the caller merges its own
+    carry the compile policy, also when the caller merges its own
     executor flags."""
     conf = _builder_conf(
         master="local[4]",
         extra_conf={"spark.executor.extraJavaOptions": extra} if extra else None,
     )
-    assert "CICompilerCount" in conf["spark.driver.extraJavaOptions"]
+    assert set(_flags(conf["spark.driver.extraJavaOptions"])) >= set(POLICY)
     e = conf["spark.executor.extraJavaOptions"]
-    assert "CICompilerCount" not in e
+    assert not set(_flags(e)) & set(POLICY)
     assert "-Xss32m" in e and "-XX:+ExplicitGCInvokesConcurrent" in e
 
 
