@@ -20,9 +20,10 @@ shape: an artifact is built once per (kind, session, corpus) and served
 to every consumer. Checkpoint artifacts (verified pairs, dup
 components, ANN ground truth, the isoband labeled raster, the
 tokenized words) are ``localCheckpoint``s — RDD-level blocks with
-severed lineage that survive ``catalog.clearCache()`` (the between-keys
-clear of bench.py and the test harness). At 100 TB each would be a
-parquet table the curation job writes (sinks/collections);
+severed lineage that survive ``catalog.clearCache()``, so they are
+released here: by ``finalize_job``, which bench.py and the test
+harness call between keys, or on a corpus switch. At 100 TB each
+would be a parquet table the curation job writes (sinks/collections);
 localCheckpoint is the in-session equivalent. Trained centroids are
 driver-side Python lists — bounded, nothing to persist.
 

@@ -322,9 +322,6 @@ def parametric_gamma_map(
     """
     import numpy as np
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(fact.sparkSession)
     from pygeoapi_ingestor_spark.session import spread_if_narrow
 
     # spread the Python stage: a local single-file input arrives as 1-2

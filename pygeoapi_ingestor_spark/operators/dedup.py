@@ -134,9 +134,6 @@ def minhash_signatures(
     (e.g. the exact-verify stage) pass a persisted one in, so the
     costliest stage of the pipeline — tokenize + lead-window + distinct
     over every token occurrence — runs once, not per consumer."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
     sh = shingles_df if shingles_df is not None else shingles(
         df, id_col, text_col, n=3
     )
@@ -174,7 +171,6 @@ def minhash_signatures(
         rs = [(7 * i + 1) % _w for i in range(_nh)]
         for pdf in batches:
             if not len(pdf):
-                yield pd.DataFrame(columns=cols)
                 continue
             h1v = pdf["_h1"].to_numpy(dtype=np.int64).view(np.uint64)
             h2v = pdf["_h2"].to_numpy(dtype=np.int64).view(np.uint64)
@@ -438,8 +434,8 @@ def lsh_verified_pairs(
     # ONE shingle pass feeds both the signature build and the exact
     # verify (the tokenize + lead-window + distinct stage is the
     # pipeline's costliest; unshared it ran twice). CACHE CONTRACT:
-    # never unpersisted here — a long-lived service clears blocks
-    # between jobs (bench.py's clearCache is the model).
+    # never unpersisted here — a long-lived service releases blocks
+    # between jobs through functions.storage.finalize_job.
     sh = shingles(df, id_col, text_col, n=3).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -669,17 +665,13 @@ def embedding_cosine_pairs_bucketed(
 
     from pygeoapi_ingestor_spark.operators.similarity import (
         cosine_scores,
-        empty_batch,
         md5_plane_weights,
         seq_dot_row,
         seq_norm,
         sign_bits,
         stack_vectors,
     )
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
     spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
     rows_per_band = n_planes // bands
     w_np = np.array(md5_plane_weights(dim, n_planes, seed), dtype=np.float64)
     bc_w = spark.sparkContext.broadcast(w_np)
@@ -709,7 +701,6 @@ def embedding_cosine_pairs_bucketed(
         for pdf in batches:
             ok, vm = stack_vectors(pdf["vec"], dim)
             if not len(vm):
-                yield empty_batch(sig_schema)
                 continue
             out = {"doc": pdf["doc"].to_numpy()[ok]}
             bits = [sign_bits(seq_dot_row(vm, w_[p])) for p in range(n_planes)]
@@ -730,7 +721,7 @@ def embedding_cosine_pairs_bucketed(
     # (measured: warm 2.8 -> 4.1 s) — but it now materializes 9 longs
     # per doc instead of (vec, nrm, keys). CACHE CONTRACT: operators
     # never unpersist their returned lineage — a long-lived service
-    # clears blocks between jobs (bench.py's clearCache is the model).
+    # releases blocks between jobs through functions.storage.finalize_job.
     from pyspark import StorageLevel
 
     base = embeddings.select(
@@ -801,7 +792,6 @@ def embedding_cosine_pairs_bucketed(
             ok = oka & okb  # all rows: both sides passed the sig kernel
             am, bm = am[ok[oka]], bm[ok[okb]]
             if not len(am):
-                yield empty_batch(cos_schema)
                 continue
             acc = am[:, 0] * bm[:, 0]
             for d in range(1, am.shape[1]):
@@ -854,12 +844,8 @@ def simhash(
     n_longs = -(-64 // lanes_per_long)
     lane_mask = (1 << lane_bits) - 1
     from pygeoapi_ingestor_spark.operators.text import norm_words
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    ensure_package_on_executors(df.sparkSession)
     id_t = dict(df.dtypes)[id_col]
 
     # r13: per OCCURRENCE, no (doc, w) pre-aggregation — S_i is linear
@@ -900,7 +886,6 @@ def simhash(
         cols = ["doc"] + [f"p{j}" for j in range(_nl)] + ["_tot"]
         for pdf in batches:
             if not len(pdf):
-                yield pd.DataFrame(columns=cols)
                 continue
             hv = pdf["_h"].to_numpy(dtype=np.int64).view(np.uint64)
             data = {"doc": pdf["doc"].to_numpy()}
@@ -943,7 +928,6 @@ def simhash(
         cols = ["doc", "simhash"]
         for pdf in batches:
             if not len(pdf):
-                yield pd.DataFrame(columns=cols)
                 continue
             tot = pdf["_tot"].to_numpy(dtype=np.int64)
             ps = [

@@ -205,9 +205,6 @@ def spi_fit_apply_gamma(
         out["spi"] = spi_vals[~is_ref]
         return out
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(monthly.sparkSession)
     return monthly.groupBy(*series_cols).applyInPandas(
         fit_group, schema=_spi_schema(monthly, series_cols, bucket_col)
     )
@@ -234,9 +231,6 @@ def spi(
         out["spi"] = spi_vals
         return out
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(monthly.sparkSession)
     return monthly.groupBy(*series_cols).applyInPandas(
         fit_group, schema=_spi_schema(monthly, series_cols, bucket_col)
     )

@@ -262,9 +262,6 @@ def extract_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched decode pass: fills width/height/n_frames from the
     payload through ``decode_stub``. ``mapInPandas`` keeps the binary
     column inside Arrow batches — no per-row Python round-trips."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -295,9 +292,6 @@ def resize_media(df: DataFrame) -> DataFrame:
     """Arrow-batched resize pass over decoded media (expects
     ``extract_metadata`` output) to a 128-pixel long side. Geometry is
     real; pixel work is where the codec library plugs in."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -323,9 +317,6 @@ def sample_frames(df: DataFrame) -> DataFrame:
     rather than raw payload bytes, so an external SQL oracle can replay
     the whole mapInPandas stage symbolically — the multimodal pipeline
     stays value-hash-gated end to end."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -366,9 +357,6 @@ def synthesize_decode_roundtrip(df: DataFrame, id_col: str) -> DataFrame:
     the codec analog of the text-derived fingerprint trick
     ``sample_frames`` uses. One Arrow-batched mapInPandas stage; the
     payload never leaves the executor."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
     ids = df.select(F.col(id_col).cast("bigint").alias("media_id"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -100,32 +100,6 @@ def as_vector(vec_col: str, dim: int) -> Column:
     return F.when(F.size(v) == dim, v).alias("_v")
 
 
-_PANDAS_DTYPES = {
-    "bigint": "int64", "int": "int32", "double": "float64",
-    "boolean": "bool",
-}
-
-
-def empty_batch(schema: str):
-    """Zero-row pandas frame typed by a kernel's DDL output ``schema``
-    (the string it passes to mapInPandas / applyInPandas), so an
-    empty-batch answer can never drift from the declared columns."""
-    import pandas as pd
-
-    fields, depth, cur = [], 0, ""
-    for ch in schema + ",":
-        depth += (ch in "<(") - (ch in ">)")
-        if ch == "," and not depth:
-            name, typ = cur.strip().split(None, 1)
-            fields.append((name.strip("`"), typ.strip().lower()))
-            cur = ""
-        else:
-            cur += ch
-    return pd.DataFrame(
-        {n: pd.Series([], dtype=_PANDAS_DTYPES.get(t, object)) for n, t in fields}
-    )
-
-
 def cosine_scores(dots, denom):
     """(cos, keep): cosine per row and the rows that have one. A
     zero-norm side has no cosine — the fold's ``_safe_denom`` makes it
@@ -259,10 +233,7 @@ def cosine_topk_scan(src: DataFrame, dim: int, k: int, qids, qm, qid_type: str,
     dots/norms accumulate SEQUENTIALLY (seq_dot_row/seq_norm), so
     rankings cannot diverge at the last ulp. Self-matches (equal ids)
     are excluded; edge rows follow ``stack_vectors`` / ``cosine_scores``."""
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
     spark = src.sparkSession
-    ensure_package_on_executors(spark)
     qn = seq_norm(qm) if len(qids) else None
     bc = spark.sparkContext.broadcast((qids, qm, qn))
     id_t = dict(src.dtypes)["neighbor_id"]
@@ -277,7 +248,6 @@ def cosine_topk_scan(src: DataFrame, dim: int, k: int, qids, qm, qid_type: str,
         for pdf in batches:
             ok, vm = stack_vectors(pdf["_vec"], dim)
             if not len(qids_) or not len(vm):
-                yield empty_batch(schema)
                 continue
             pdf = pdf[ok]
             ids = pdf["neighbor_id"].to_numpy()
@@ -467,10 +437,7 @@ def with_md5_sig_arrow(
     NaN projection sets its bit (``sign_bits``)."""
     import numpy as np
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
     spark = df.sparkSession
-    ensure_package_on_executors(spark)
     w_np = np.array(md5_plane_weights(dim, n_planes, 7), dtype=np.float64)
     bc = spark.sparkContext.broadcast(w_np)
     cols = list(df.columns)
@@ -697,13 +664,9 @@ def ivf_knn_outliers(
     stay full, so a sampled acceptance run pays sample x n/√n instead
     of n^1.5. ``top_n`` then ranks within the scored subset.
     """
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
     spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
     # centroid matrix broadcast to the Arrow stages; float32 widens
     # exactly to float64, same values the literal-array variant carried
     c_ids, c_mat, _ = lowest_id_centroids(embeddings, id_col, vec_col, n_clusters, dim)
@@ -732,7 +695,6 @@ def ivf_knn_outliers(
         for pdf in batches:
             ok, vm = stack_vectors(pdf["_vec"], dim)
             if not len(vm) or not len(cids_):
-                yield empty_batch(assign_schema)
                 continue
             pdf = pdf[ok]
             idx = np.argsort(_seq_sq_dists(vm, cm_), axis=1, kind="stable")
@@ -787,7 +749,7 @@ def ivf_knn_outliers(
         okb, vm = stack_vectors(lpdf["_bv"], dim)
         oka, am = stack_vectors(ppdf["_av"], dim)
         if not len(vm) or not len(am):
-            return empty_batch(pair_schema)
+            return pd.DataFrame()
         ids_b, nb = lpdf["ib"].to_numpy()[okb], lpdf["nb"].to_numpy()[okb]
         ids_a, na = ppdf["ia"].to_numpy()[oka], ppdf["na"].to_numpy()[oka]
         out_a, out_b, out_d = [], [], []
@@ -964,10 +926,7 @@ def cosine_topk_int8(
 
     import numpy as np
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
     spark = embeddings.sparkSession
-    ensure_package_on_executors(spark)
     qids, qm = collect_query_vectors(queries, query_id_col, query_vec_col, dim)
     qm, _ = quantize_int8_np(qm)
     qn = np.sqrt((qm * qm).sum(axis=1).astype(np.float64))
@@ -988,7 +947,6 @@ def cosine_topk_int8(
         for pdf in batches:
             ok, vm = stack_vectors(pdf["_vec"], dim)
             if not len(qids_) or not len(vm):
-                yield empty_batch(out_schema)
                 continue
             ids = pdf["neighbor_id"].to_numpy()[ok]
             qb, _ = quantize_int8_np(vm)
@@ -1413,9 +1371,6 @@ def pq_adc_topk(
     # malformed query gets NULL tables, so its NULL ADC rows drop.
     import numpy as np
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(eq.sparkSession)
     seed_ok, seed_mat = stack_vectors([r["_q"] for r in seeds], dim, np.int64)
     # cb[m][j] = j-th code's subvector for subspace m (a malformed seed's
     # row stays zero and its distances are masked to the maximum)

@@ -619,8 +619,6 @@ def chunked_ewma(
     """
     import pandas as pd
 
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
     chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
     d = df.withColumn("_chunk", chunk)
     a = float(alpha)
@@ -645,7 +643,6 @@ def chunked_ewma(
         pdf["_D"] = D
         return pdf
 
-    ensure_package_on_executors(d.sparkSession)
     with_ld = d.groupBy(*series_cols, "_chunk").applyInPandas(_local, schema=ld_schema)
 
     first_by_order = F.min(

@@ -311,6 +311,12 @@ _STAMP_ORDER = [
 # ground truth, the isoband raster, the words checkpoint) are prepared
 # too: their checkpoints are registry-owned (functions/storage), and
 # every artifact release drops the plans.
+#
+# The wrapper is also the one place that ships this package to the
+# executors' Python workers: every catalog key's Arrow kernels (and the
+# artifact builds that run kernels while a key builds) import it by
+# module name there. A local ``get_spark`` session already has it on the
+# workers' path, so the call returns at once.
 
 
 def _as_prepared(name, fn):
@@ -318,8 +324,10 @@ def _as_prepared(name, fn):
         PlanGuardRejected,
         prepared_plan,
     )
+    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
 
     def wrapper(spark, sf_dir, _n=name, _f=fn):
+        ensure_package_on_executors(spark)
         try:
             return prepared_plan(_n, spark, sf_dir, lambda: _f(spark, sf_dir))
         except PlanGuardRejected:

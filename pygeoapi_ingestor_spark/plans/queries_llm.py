@@ -477,9 +477,6 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_int8_np,
         stack_vectors,
     )
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     # no spread_if_narrow: the kernel is memory-bandwidth-bound
     # (~µs/row), so fanning a narrow local input out to core-count
     # partitions costs more in Python-worker round trips than the whole
@@ -2535,12 +2532,8 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_norm,
         stack_vectors,
     )
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    ensure_package_on_executors(spark)
     e = _emb(spark, sf_dir)
     cent_rows = (
         e.select("vec_id", "embedding").orderBy("vec_id").limit(SEMDEDUP_K).collect()
@@ -3043,9 +3036,6 @@ def _rp_proj_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_int8_np,
         stack_vectors,
     )
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     w_np = np.array(
         similarity.md5_plane_weights(EMB_DIM, RP_PLANES, seed=11),
         dtype=np.int64,
@@ -3883,15 +3873,11 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pygeoapi_ingestor_spark.operators.similarity import (
         cosine_scores,
-        empty_batch,
         seq_dot_row,
         seq_norm,
         stack_vectors,
         topk_order,
     )
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     e = _emb(spark, sf_dir)
     arows = (
         e.filter(F.col("vec_id") < TRIPLET_ANCHORS)
@@ -3917,7 +3903,6 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             ok, vm = stack_vectors(pdf["c_vec"], EMB_DIM)
             if not len(aids_) or not len(vm):
-                yield empty_batch(schema)
                 continue
             ids = pdf["cand_id"].to_numpy()[ok]
             lbl = pdf["c_label"].to_numpy()[ok]
@@ -4273,18 +4258,13 @@ def q_embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pygeoapi_ingestor_spark.operators.similarity import (
         cosine_scores,
-        empty_batch,
         seq_dot_pair,
         seq_norm,
         stack_vectors,
         topk_order,
     )
-    from pygeoapi_ingestor_spark.session import (
-        ensure_package_on_executors,
-        spread_if_narrow,
-    )
+    from pygeoapi_ingestor_spark.session import spread_if_narrow
 
-    ensure_package_on_executors(spark)
     e = _emb(spark, sf_dir)
     rows = e.select("vec_id", "embedding").collect()
     ok, all_vm = stack_vectors([r[1] for r in rows], EMB_DIM)
@@ -4303,7 +4283,6 @@ def q_embedding_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             ok, am = stack_vectors(pdf["embedding"], EMB_DIM)
             if not len(am) or not len(ids_):
-                yield empty_batch(schema)
                 continue
             a_ids = pdf["vec_id"].to_numpy()[ok]
             an = seq_norm(am)

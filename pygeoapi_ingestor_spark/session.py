@@ -12,16 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-_JVM_PINS = "-Xss32m -XX:+ExplicitGCInvokesConcurrent"
-# a local-master driver's compile policy, one -XX flag per name (see
-# the factory's comment): the minimum tiered compiler pool, and the C2
-# (tier-4) thresholds at 10x HotSpot's defaults (5000/600/15000/40000)
-_LOCAL_DRIVER_PINS = {
-    "CICompilerCount": 2,
-    "Tier4InvocationThreshold": 50000,
-    "Tier4MinInvocationThreshold": 6000,
-    "Tier4CompileThreshold": 150000,
-    "Tier4BackEdgeThreshold": 400000,
+# Every JVM flag get_spark pins (see the factory's comments), in the
+# order they lead the options, keyed by the text that marks a caller's
+# own setting of the flag: a pin whose key the caller's options contain
+# is dropped. The value is (flag, local driver only). The local-driver
+# pins are a local master's compile policy: the minimum tiered compiler
+# pool, and the C2 (tier-4) thresholds at 10x HotSpot's defaults
+# (5000/600/15000/40000).
+_JVM_PINS = {
+    "-Xss": ("-Xss32m", False),
+    "ExplicitGCInvokesConcurrent": ("-XX:+ExplicitGCInvokesConcurrent", False),
+    "-XX:CICompilerCount=": ("-XX:CICompilerCount=2", True),
+    "-XX:Tier4InvocationThreshold=": ("-XX:Tier4InvocationThreshold=50000", True),
+    "-XX:Tier4MinInvocationThreshold=": ("-XX:Tier4MinInvocationThreshold=6000", True),
+    "-XX:Tier4CompileThreshold=": ("-XX:Tier4CompileThreshold=150000", True),
+    "-XX:Tier4BackEdgeThreshold=": ("-XX:Tier4BackEdgeThreshold=400000", True),
 }
 # set once the executors' Python workers can import this package
 _SHIPPED = "spark.pygeoapi_ingestor_spark.shipped"
@@ -102,18 +107,19 @@ def get_spark(
         # multi-second full pauses at exactly the heap sizes where both
         # matter.
         #
-        # The compile policy of a local master's driver
-        # (_LOCAL_DRIVER_PINS). -XX:CICompilerCount=2 is HotSpot's tiered
-        # minimum, one C1 and one C2 compiler thread: in local mode every
-        # task runs inside this driver JVM, on all of its cores, yet
-        # HotSpot sizes its compiler pool as if those cores were idle (3
-        # threads on 4 CPUs, 15 on 32). A fresh session's first pass
-        # makes Janino, ANTLR, Java-serialization and Catalyst code hot;
-        # with the default pool the compiler threads took 20-23 of the
-        # 40-45 CPU-s of a cold perfbench ingest_publish round on 4
-        # cores, with the minimum pool 13, and warm bench.py spot cells
-        # did not slow. That one C2 thread still stayed busy for the
-        # whole cold round, so the four tier-4 thresholds sit at 10x
+        # The compile policy of a local master's driver (the
+        # local-driver pins of _JVM_PINS). -XX:CICompilerCount=2 is
+        # HotSpot's tiered minimum, one C1 and one C2 compiler thread:
+        # in local mode every task runs inside this driver JVM, on all
+        # of its cores, yet HotSpot sizes its compiler pool as if those
+        # cores were idle (3 threads on 4 CPUs, 15 on 32). A fresh
+        # session's first pass makes Janino, ANTLR, Java-serialization
+        # and Catalyst code hot; with the default pool the compiler
+        # threads took 20-23 of the 40-45 CPU-s of a cold perfbench
+        # ingest_publish round on 4 cores, with the minimum pool 13, and
+        # warm bench.py spot cells did not slow. That one C2 thread
+        # still stayed busy for the whole cold round, so the four
+        # tier-4 thresholds sit at 10x
         # HotSpot's defaults: C2 compiles only code that stays hot, and
         # the rest runs as profiled C1 code for longer. Measured on 4
         # cores in alternating perfbench pairs of one cold round each,
@@ -130,11 +136,8 @@ def get_spark(
         # run_cpu_s by more than the parent's spread; 20x cut more but
         # put three warm or noop spot medians above it. A cluster
         # driver runs no tasks, and executors keep JVM ergonomics.
-        .config(
-            "spark.driver.extraJavaOptions",
-            _with_driver_pins(_JVM_PINS) if local else _JVM_PINS,
-        )
-        .config("spark.executor.extraJavaOptions", _JVM_PINS)
+        .config("spark.driver.extraJavaOptions", _with_pins("", local))
+        .config("spark.executor.extraJavaOptions", _with_pins("", False))
         # The app-status store keeps the last 1000 SQL executions WITH
         # their full plan graphs even when the UI is off; this catalog's
         # analyzed plans are large (dedup fixpoints, composed curation
@@ -193,34 +196,27 @@ def get_spark(
             )
         )
     for k, v in (extra_conf or {}).items():
-        # the -Xss32m pin (r11 canonicalization StackOverflow fix), the
-        # concurrent-explicit-GC pin (r14 full-pause fix) and, on a
-        # local driver, the compile-policy pins are load-bearing: a
-        # caller adding its own JVM flags must not silently REPLACE
-        # them (ADVICE r12) — merge, keeping the caller's flags after
-        # ours so they still win any same-flag conflict
-        # (-XX:-ExplicitGCInvokesConcurrent counts as the caller
-        # providing the flag; a policy pin is dropped only when the
-        # caller sets that same -XX:Name=).
-        if k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
-            if local and k == "spark.driver.extraJavaOptions":
-                v = _with_driver_pins(v)
-            if "ExplicitGCInvokesConcurrent" not in v:
-                v = f"-XX:+ExplicitGCInvokesConcurrent {v}"
-            if "-Xss" not in v:
-                v = f"-Xss32m {v}"
+        # the pins are load-bearing: a caller adding its own JVM flags
+        # must not silently REPLACE them (ADVICE r12) — merge, keeping
+        # the caller's flags after ours so they still win any same-flag
+        # conflict
+        if k == "spark.driver.extraJavaOptions":
+            v = _with_pins(v, local)
+        elif k == "spark.executor.extraJavaOptions":
+            v = _with_pins(v, False)
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
-def _with_driver_pins(opts: str) -> str:
-    """``opts`` with every local-driver pin whose flag name it does not
-    set put before it."""
+def _with_pins(opts: str, local_driver: bool) -> str:
+    """``opts`` after every pin of ``_JVM_PINS`` whose key it does not
+    contain (-XX:-ExplicitGCInvokesConcurrent counts as the caller's
+    own setting); the local-driver pins only for a local driver."""
     pins = [
-        f"-XX:{name}={value}" for name, value in _LOCAL_DRIVER_PINS.items()
-        if f"-XX:{name}=" not in opts
+        flag for key, (flag, local_only) in _JVM_PINS.items()
+        if key not in opts and (local_driver or not local_only)
     ]
-    return " ".join([*pins, opts])
+    return " ".join([*pins, opts]).strip()
 
 
 def spread_if_narrow(df):
@@ -294,12 +290,14 @@ def _narrow_partitions(plan) -> int | None:
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
-    Required by the pandas-UDF operators (SPI, multimodal decode): their
-    closures reference this package by module name, and executor workers
-    don't share the driver's sys.path (e.g. when the driver process runs
-    from a different cwd). Idempotent per session. A local ``get_spark``
-    session sets the marker up front: its workers' ``PYTHONPATH`` already
-    holds the package, so only sessions built elsewhere ship the zip.
+    The Arrow kernels' closures reference this package by module name,
+    and executor workers don't share the driver's sys.path (e.g. when
+    the driver process runs from a different cwd). It has one caller,
+    the catalog wrapper in ``plans/__init__.py``, which every key goes
+    through before it builds; operators never call it. Idempotent per
+    session. A local ``get_spark`` session sets the marker up front: its
+    workers' ``PYTHONPATH`` already holds the package, so only sessions
+    built elsewhere ship the zip.
     """
     try:
         if spark.conf.get(_SHIPPED, None) == "true":

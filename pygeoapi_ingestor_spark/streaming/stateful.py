@@ -47,9 +47,6 @@ def alert_transitions(
     strict event-time replay, buffer rows in state until the watermark
     passes them — at the cost of state growth and emission latency.
     """
-    from pygeoapi_ingestor_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(events.sparkSession)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

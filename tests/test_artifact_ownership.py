@@ -8,7 +8,10 @@ with a reason.
 
 ``test_cache_clear_census`` pins ``functions/storage.py`` as the only
 module that calls ``catalog.clearCache()``: session lifetime has one
-owner.
+owner. ``test_package_shipping_census`` pins the catalog wrapper in
+``plans/__init__.py`` as the one caller of
+``session.ensure_package_on_executors``: operators never ship the
+package themselves.
 
 ``test_artifact_key_serve_finalize_serve`` drives the catalog keys that
 read corpus artifacts through a service tick: serve, ``finalize_job``,
@@ -111,6 +114,18 @@ def test_cache_clear_census():
     assert callers == {"functions/storage.py"}, (
         "only functions/storage may clear the session cache: release "
         "through finalize_job or release_corpus_artifacts", sorted(callers),
+    )
+
+
+def test_package_shipping_census():
+    calls = {
+        rel: len(_calls(tree, "ensure_package_on_executors"))
+        for rel, tree in _modules()
+    }
+    callers = {rel: n for rel, n in calls.items() if n}
+    assert callers == {"plans/__init__.py": 1}, (
+        "only the catalog wrapper ships the package to the executors: "
+        "serve kernels through a catalog key", callers,
     )
 
 

@@ -11,6 +11,7 @@ import math
 import duckdb
 import pytest
 
+from pygeoapi_ingestor_spark.functions.storage import finalize_job
 from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES
 from pygeoapi_ingestor_spark.session import TABLES
 
@@ -46,12 +47,14 @@ def _normalize(rows, colnames):
 
 @pytest.fixture(autouse=True)
 def _clear_cache(spark):
-    """CACHE CONTRACT (operators/dedup.py): queries persist index
-    artifacts and never unpersist returned lineage — the harness clears
-    blocks between keys so the 209-key session doesn't accumulate every
-    key's cached partitions."""
+    """CACHE CONTRACT (functions/storage.finalize_job): queries persist
+    index artifacts and never unpersist returned lineage — the harness
+    releases between keys, as the service does, so the catalog-wide
+    session doesn't accumulate every key's cached partitions. A bare
+    ``clearCache()`` would leave prepared plans running uncached
+    (storage's PERSISTED INTERMEDIATES)."""
     yield
-    spark.catalog.clearCache()
+    finalize_job(spark)
 
 
 @pytest.mark.slow  # full-catalog sweep: run with -m slow (see pytest.ini)

@@ -18,11 +18,18 @@ Edge contract (the JVM fold's semantics, which every kernel twins):
   Where DuckDB rejects the NULL list outright (``list_inner_product``
   raises on NULL arguments in some plans), a NULL vector contributing
   only NULL scores is the same as the row being absent, and the
-  reference runs without it.
+  reference runs without it;
+- an empty answer is no batch: a map kernel with nothing to emit for a
+  batch ``continue``s instead of yielding a zero-row frame, and a
+  grouped or cogrouped kernel returns ``pd.DataFrame()`` (pyspark
+  accepts a frame with no columns and no rows). Spark types the output
+  from the declared schema, so an empty batch, an empty partition or an
+  empty input gives 0 rows of that schema.
 
 ``test_kernel_site_census`` keeps the matrix complete: every
 mapInPandas / applyInPandas site in the package is either exercised here
-or exempted with a reason.
+or exempted with a reason. ``test_map_site_empty_input`` runs the
+exempt map sites on an empty input.
 """
 
 from __future__ import annotations
@@ -37,7 +44,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from pygeoapi_ingestor_spark.operators import similarity
+from pygeoapi_ingestor_spark.operators import correction, dedup, multimodal, similarity
 from pygeoapi_ingestor_spark.plans import ORACLES, QUERIES
 from pygeoapi_ingestor_spark.sources.readers import read_embeddings
 from pygeoapi_ingestor_spark.streaming.scheduler import finalize_job
@@ -351,3 +358,62 @@ def test_kernel_site_census():
     assert not (set(COVERED) | set(EXEMPT)) - sites, "stale census entries"
     for site, matrix_sites in COVERED.items():
         assert set(matrix_sites) <= set(SITES), site
+
+
+# --- exempt map sites: an empty input is an empty answer ----------------
+
+def _docs(spark, n):
+    """``n`` text rows over two partitions; ``n=0`` gives two empty ones,
+    so each kernel runs and receives no batch."""
+    return spark.range(n, numPartitions=2).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("aa bb cc dd"), F.col("id").cast("string"))
+        .alias("text"),
+    )
+
+
+def _media(docs):
+    return multimodal.extract_metadata(
+        multimodal.attach_payload(docs, id_col="doc_id", text_col="text")
+    )
+
+
+def _gamma_map(docs):
+    spark = docs.sparkSession
+    fact = docs.select(
+        F.lit(0).alias("leadtime"), F.lit(0).alias("station"),
+        (F.col("doc_id") + 1).cast("double").alias("x"),
+    )
+    params = spark.createDataFrame(
+        [(0, 0, 1.4, 55.0, 1.4, 55.0)],
+        "leadtime int, station int, fc_alpha double, fc_scale double, "
+        "obs_alpha double, obs_scale double",
+    )
+    return correction.parametric_gamma_map(fact, params, ["leadtime", "station"], "x")
+
+
+EMPTY_INPUT = {
+    # EXEMPT site: the site's output over a text-rows input
+    "operators/dedup.py::minhash_signatures": lambda d: dedup.minhash_signatures(
+        d, "doc_id", "text"
+    ),
+    "operators/dedup.py::simhash": lambda d: dedup.simhash(d, "doc_id", "text"),
+    "operators/correction.py::parametric_gamma_map": _gamma_map,
+    "operators/multimodal.py::extract_metadata": _media,
+    "operators/multimodal.py::resize_media": lambda d: multimodal.resize_media(_media(d)),
+    "operators/multimodal.py::sample_frames": lambda d: multimodal.sample_frames(_media(d)),
+    "operators/multimodal.py::synthesize_decode_roundtrip": (
+        lambda d: multimodal.synthesize_decode_roundtrip(d, "doc_id")
+    ),
+}
+
+
+@pytest.mark.parametrize("site", sorted(EMPTY_INPUT))
+def test_map_site_empty_input(spark, site):
+    assert site in EXEMPT
+    build = EMPTY_INPUT[site]
+    full = build(_docs(spark, 4))
+    empty = build(_docs(spark, 0))
+    assert full.count() > 0
+    assert empty.schema == full.schema
+    assert empty.collect() == []

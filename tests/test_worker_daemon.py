@@ -5,7 +5,8 @@ from the package's daemon, which imports pyspark and py4j from the
 installed packages rather than SPARK_HOME's source zips, ships no
 package zip, and the Arrow kernels its workers run give the same rows
 as in the test session. A session built outside ``get_spark`` ships the
-zip and gives the same rows too."""
+zip and gives the same rows too, also when it is served through the
+driver contract (``__spark_entry__.queries()``)."""
 
 from __future__ import annotations
 
@@ -87,6 +88,45 @@ def test_session_outside_get_spark_ships_the_package(spark, sf_dir, tmp_path):
             and f.endswith(".zip") for f in got["files"]] == [True]
     here = sorted(repr(tuple(r)) for r in QUERIES["spi_gamma"](spark, sf_dir).collect())
     assert got["rows"] == here
+
+
+ENTRY_SCRIPT = """
+import importlib.util, json, os, sys
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
+sys.path.insert(0, sys.argv[1])
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__", os.path.join(sys.argv[1], "__spark_entry__.py"))
+entry = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(entry)
+qs = entry.queries()
+print(json.dumps({k: sorted(repr(tuple(r)) for r in qs[k](spark, sys.argv[2]).collect())
+                  for k in sys.argv[3:]}))
+spark.stop()
+"""
+
+
+def test_driver_contract_serves_kernel_keys_on_a_vanilla_session(spark, sf_dir, tmp_path):
+    """The driver's own check: a plain SparkSession (not ``get_spark``)
+    in a cwd outside the checkout serves a mapInPandas key
+    (``multimodal_meta``) and an applyInPandas key (``spi_gamma``)
+    through ``__spark_entry__.queries()``. The catalog wrapper is what
+    ships the package to those workers."""
+    keys = ["multimodal_meta", "spi_gamma"]
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run(
+        [sys.executable, "-c", ENTRY_SCRIPT, REPO, sf_dir, *keys],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    for key in keys:
+        here = sorted(repr(tuple(r)) for r in QUERIES[key](spark, sf_dir).collect())
+        assert got[key] and got[key] == here, key
 
 
 def _zips(tmp_path, pyspark_version: str, py4j_version: str) -> list[str]:
