@@ -1,29 +1,41 @@
-"""Distributed ranking: exact rank / row_number / ntile without a
+"""The distributed window family: exact rank / row_number / ntile and
+chunked scans (lag, forward fill, running sum, interpolation) without a
 single-partition sort per series.
 
 ``Window.partitionBy(series)`` puts every row of a series in ONE task —
 fine when series cardinality is high (the data-model assumption of the
 temporal operators), a scale-killer when the catalog binds a window to a
-handful of keys (the events table has 5 event types). These helpers use
-the classic two-phase range-ranking construction instead:
+handful of keys (the events table has 5 event types). The family uses
+one construction instead, the boundary exchange:
 
-1. bucket each row by value range (equal-width over the per-series
-   min/max — one tiny aggregate, broadcast back);
-2. count rows per (series, bucket) and turn the counts into exclusive
-   cumulative OFFSETS (window over the series x buckets summary — tiny);
-3. rank locally within (series, bucket) and add the bucket's offset.
+1. attach a chunk to every row: a value-range bucket ``_bucket``
+   (equal-width over the per-series min/max — one tiny aggregate,
+   broadcast back) for the ranks, or the caller's time chunk ``_chunk``
+   (a day, a block of ids) for the scans;
+2. aggregate a per-(series, chunk) summary: the row count for a rank,
+   the last value, last valid value, total or first valid value for a
+   scan;
+3. work out each chunk's carry on that tiny (series x chunks) table over
+   the series' strictly earlier chunks — or its strictly later ones, for
+   interpolation's next neighbour — and broadcast-join it back;
+4. finish locally within (series, chunk): the local rank plus the
+   carried offset, or the local scan with the carry filling in where
+   the chunk holds nothing yet.
 
 Equal values always land in the same bucket (bucket is a function of the
 value), so tie semantics are exactly those of rank(); with a unique
 tiebreak column the same construction yields exact row_number(), and
 ntile derives from row_number + the per-series count in closed form.
-The only full-data shuffle is the local-rank window, partitioned by
-(series, bucket) — parallelism scales with N_BUCKETS, not key count.
+The only full-data shuffle is the local window, partitioned by
+(series, chunk) — parallelism scales with the chunk count, not the key
+count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from pygeoapi_ingestor_spark.sources.readers import local_table
@@ -32,6 +44,27 @@ from pygeoapi_ingestor_spark.sources.readers import local_table
 # grouped_topk); exact_percentiles drills down over finer buckets
 N_BUCKETS = 32
 PCT_BUCKETS = 256
+
+
+def _with_chunk(df: DataFrame, chunk) -> DataFrame:
+    """Attach ``_chunk``: a chunk column, or the name of one."""
+    return df.withColumn("_chunk", F.col(chunk) if isinstance(chunk, str) else chunk)
+
+
+def _bucket(value_col: str, mn: str, mx: str, n_buckets: int) -> Column:
+    """The value-range bucket of ``value_col``: ``n_buckets`` equal-width
+    buckets over [``mn``, ``mx``]. NULL values get the dedicated bucket
+    -1 so they sort before every real bucket — matching a plain window's
+    default nulls-first order — instead of dropping out of the
+    (series, chunk) equi-joins."""
+    v, lo, hi = F.col(value_col), F.col(mn), F.col(mx)
+    width = (hi - lo) / F.lit(float(n_buckets))
+    return (
+        F.when(v.isNull(), F.lit(-1))
+        .when(hi == lo, F.lit(0))
+        .otherwise(F.least(F.floor((v - lo) / width), F.lit(n_buckets - 1)))
+        .cast("int")
+    )
 
 
 def _with_buckets(
@@ -44,38 +77,39 @@ def _with_buckets(
         F.count(F.lit(1)).alias("_n"),
     )
     joined = df.join(F.broadcast(stats), series_cols)
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(float(n_buckets))
-    # NULL values get the dedicated bucket -1 so they sort before every
-    # real bucket — matching a plain window's default nulls-first order —
-    # instead of dropping out of the (series, _bucket) equi-joins.
-    bucket = (
-        F.when(F.col(value_col).isNull(), F.lit(-1))
-        .when(F.col("_mx") == F.col("_mn"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.floor((F.col(value_col) - F.col("_mn")) / width),
-                F.lit(n_buckets - 1),
-            )
-        )
-        .cast("int")
-    )
+    bucket = _bucket(value_col, "_mn", "_mx", n_buckets)
     return joined.withColumn("_bucket", bucket).drop("_mn", "_mx")
 
 
-def _with_offsets(df: DataFrame, series_cols: list[str]) -> DataFrame:
-    """Attach _offset = rows in strictly lower buckets of the series."""
-    counts = df.groupBy(*series_cols, "_bucket").agg(
-        F.count(F.lit(1)).alias("_bcnt")
-    )
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_offset", F.coalesce(F.sum("_bcnt").over(w), F.lit(0))
-    ).drop("_bcnt")
-    return df.join(F.broadcast(offsets), [*series_cols, "_bucket"])
+_Carry = Callable[[WindowSpec, WindowSpec], list[Column]]
+
+
+def _carries(summary: DataFrame, keys: list[str], carry: _Carry) -> DataFrame:
+    """Each summary row's carry columns. ``keys`` are the series columns
+    and, last, the chunk column; ``carry`` builds the carries from two
+    frames over the series' chunks, the strictly earlier ones and the
+    strictly later ones (nearest last in both)."""
+    *series, chunk = keys
+    by = Window.partitionBy(*series)
+    earlier = by.orderBy(chunk).rowsBetween(Window.unboundedPreceding, -1)
+    later = by.orderBy(F.col(chunk).desc()).rowsBetween(Window.unboundedPreceding, -1)
+    return summary.select(*keys, *carry(earlier, later))
+
+
+def _with_carry(
+    d: DataFrame, keys: list[str], aggs: list[Column], carry: _Carry
+) -> DataFrame:
+    """The boundary exchange over ``d``: summarize each (series, chunk)
+    (``keys``, as for ``_carries``) with ``aggs``, work out the carries
+    on that summary and broadcast-join them back."""
+    carries = _carries(d.groupBy(*keys).agg(*aggs), keys, carry)
+    return d.join(F.broadcast(carries), keys)
+
+
+def _offset(earlier: WindowSpec, later: WindowSpec) -> list[Column]:
+    """The rank carry: ``_offset`` = rows (``_cnt``) in strictly lower
+    buckets of the series."""
+    return [F.coalesce(F.sum("_cnt").over(earlier), F.lit(0)).alias("_offset")]
 
 
 def bucketed_rank(
@@ -87,7 +121,10 @@ def bucketed_rank(
 ) -> DataFrame:
     """Exact per-series rank() (ties share the min rank) + series count,
     with the sort partitioned by (series, bucket)."""
-    b = _with_offsets(_with_buckets(df, series_cols, value_col, N_BUCKETS), series_cols)
+    b = _with_carry(
+        _with_buckets(df, series_cols, value_col, N_BUCKETS),
+        [*series_cols, "_bucket"], [F.count(F.lit(1)).alias("_cnt")], _offset,
+    )
     w_local = Window.partitionBy(*series_cols, "_bucket").orderBy(value_col)
     return (
         b.withColumn(out_col, F.col("_offset") + F.rank().over(w_local))
@@ -106,15 +143,10 @@ def bucketed_row_number(
 ) -> DataFrame:
     """Exact per-series row_number() ordered by (value, tiebreaks) — the
     tiebreaks must make the composite order unique for the result to be
-    deterministic (same contract as a plain window row_number)."""
-    b = _with_offsets(_with_buckets(df, series_cols, value_col, N_BUCKETS), series_cols)
-    w_local = Window.partitionBy(*series_cols, "_bucket").orderBy(
-        value_col, *tiebreak_cols
-    )
-    return (
-        b.withColumn(out_col, F.col("_offset") + F.row_number().over(w_local))
-        .withColumnRenamed("_n", count_col)
-        .drop("_bucket", "_offset")
+    deterministic (same contract as a plain window row_number). The
+    one-metric case of ``bucketed_row_numbers_multi``."""
+    return bucketed_row_numbers_multi(
+        df, series_cols, {value_col: out_col}, tiebreak_cols, count_col
     )
 
 
@@ -169,25 +201,24 @@ def bucketed_row_numbers_multi(
     (``value_cols`` maps value col -> output rn col), sharing one stats
     pass and ONE stacked histogram pass across all metrics.
 
-    The sequential alternative — one ``bucketed_row_number`` per metric
-    with a persist+count barrier between passes (the r8 rfm_segments
-    shape) — pays ~4 Spark jobs per metric at ANY scale. Here:
+    The sequential alternative — one ranking per metric with a
+    persist+count barrier between passes (the r8 rfm_segments shape) —
+    pays ~4 Spark jobs per metric at ANY scale. Here:
 
     1. one aggregate computes min/max per metric + the series count;
     2. one ``stack``-ed pass counts rows per (series, metric, bucket) —
        a single shuffle over metrics x rows narrow tuples;
-    3. the histogram (bounded: series x metrics x N_BUCKETS) collects
-       to the driver, offsets prefix-sum in Python, and rejoin as one
-       broadcast literal table;
+    3. the boundary exchange's rank carry turns that histogram into
+       per-(series, metric, bucket) offsets in the plan, broadcast back
+       in one join as one map per series;
     4. each metric's exact rn = offset + local row_number over its own
        (series, bucket) window — independent window stages inside ONE
        final job.
 
-    Ties broken by ``tiebreak_cols`` (must make each composite order
-    unique). Returns df + one rn column per metric + ``count_col``.
+    Building it starts no Spark job. Ties broken by ``tiebreak_cols``
+    (must make each composite order unique). Returns df + one rn column
+    per metric + ``count_col``.
     """
-    from pyspark.sql import types as T
-
     metrics = list(value_cols)
     stats = df.groupBy(*series_cols).agg(
         F.count(F.lit(1)).alias("_n"),
@@ -196,73 +227,42 @@ def bucketed_row_numbers_multi(
     )
     b = df.join(F.broadcast(stats), series_cols)
     for m in metrics:
-        width = (F.col(f"_mx_{m}") - F.col(f"_mn_{m}")) / F.lit(float(N_BUCKETS))
-        b = b.withColumn(
-            f"_bucket_{m}",
-            F.when(F.col(m).isNull(), F.lit(-1))
-            .when(F.col(f"_mx_{m}") == F.col(f"_mn_{m}"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.floor((F.col(m) - F.col(f"_mn_{m}")) / width),
-                    F.lit(N_BUCKETS - 1),
-                )
-            )
-            .cast("int"),
-        )
+        b = b.withColumn(f"_bucket_{m}", _bucket(m, f"_mn_{m}", f"_mx_{m}", N_BUCKETS))
     b = b.drop(*[f"_mn_{m}" for m in metrics], *[f"_mx_{m}" for m in metrics])
 
-    stack_expr = "stack({}, {}) as (_metric, _bucket)".format(
+    # the stacked histogram orders each series' chunks metric by metric
+    # (metric i's buckets -1..N_BUCKETS-1 shifted by i * span), and every
+    # metric's histogram holds all _n rows of the series: metric i's
+    # offset is the carry over the earlier chunks less the i * _n rows of
+    # the earlier metrics. One carry window per series, one broadcast
+    # bucket -> offset map per series, one join for every metric.
+    span = N_BUCKETS + 1
+    stack_expr = "stack({}, {}) as (_bucket)".format(
         len(metrics),
-        ", ".join(f"'{m}', _bucket_{m}" for m in metrics),
+        ", ".join(f"_bucket_{m} + {i * span}" for i, m in enumerate(metrics)),
     )
     hist = (
         b.select(*series_cols, F.expr(stack_expr))
-        .groupBy(*series_cols, "_metric", "_bucket")
-        .agg(F.count(F.lit(1)).alias("_bcnt"))
-        .collect()
+        .groupBy(*series_cols, "_bucket")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
     )
-    per = {}
-    for r in hist:
-        key = tuple(r[c] for c in series_cols)
-        per.setdefault(key, {}).setdefault(r["_metric"], []).append(
-            (r["_bucket"], r["_bcnt"])
-        )
-    off_rows = []
-    for key, by_metric in per.items():
-        for m, lst in by_metric.items():
-            lst.sort()
-            off = 0
-            for bkt, cnt in lst:
-                off_rows.append((*key, m, bkt, off))
-                off += cnt
-    key_fields = [df.schema[c] for c in series_cols]
-    off_schema = T.StructType(
-        key_fields
-        + [
-            T.StructField("_metric", T.StringType()),
-            T.StructField("_bucket", T.IntegerType()),
-            T.StructField("_offset", T.LongType()),
-        ]
+    carries = _carries(hist, [*series_cols, "_bucket"], _offset)
+    offsets = carries.groupBy(*series_cols).agg(
+        F.map_from_entries(F.collect_list(F.struct("_bucket", "_offset"))).alias("_offs")
     )
-    spark = df.sparkSession
+    # the local windows go first, so their shuffles run while the
+    # histogram's stages work out the offsets they are joined with
     out = b
     for m in metrics:
-        om = local_table(
-            spark,
-            [r for r in off_rows if r[len(series_cols)] == m],
-            off_schema,
-        ).select(
-            *series_cols,
-            F.col("_bucket").alias(f"_bucket_{m}"),
-            F.col("_offset").alias(f"_off_{m}"),
-        )
-        out = out.join(F.broadcast(om), [*series_cols, f"_bucket_{m}"])
         w_local = Window.partitionBy(*series_cols, f"_bucket_{m}").orderBy(
             m, *tiebreak_cols
         )
-        out = out.withColumn(
-            value_cols[m], F.col(f"_off_{m}") + F.row_number().over(w_local)
-        ).drop(f"_bucket_{m}", f"_off_{m}")
+        out = out.withColumn(value_cols[m], F.row_number().over(w_local))
+    out = out.join(F.broadcast(offsets), series_cols)
+    for i, m in enumerate(metrics):
+        offset = F.element_at("_offs", F.col(f"_bucket_{m}") + i * span) - i * F.col("_n")
+        out = out.withColumn(value_cols[m], offset + F.col(value_cols[m]))
+    out = out.drop("_offs", *[f"_bucket_{m}" for m in metrics])
     return out.withColumnRenamed("_n", count_col)
 
 
@@ -282,8 +282,9 @@ def exact_percentiles(
     (5 event types x 100 TB = 20 TB per task). This uses bucket
     drill-down instead:
 
-    1. range-bucket every row (`_with_buckets` — one tiny stats agg,
-       broadcast back, no shuffle of the fact table);
+    1. range-bucket every row (`_with_buckets`, the family's bucket
+       rule — one tiny stats agg, broadcast back, no shuffle of the fact
+       table);
     2. count rows per (series, bucket) and prefix-sum the counts into
        exclusive offsets (tiny);
     3. the percentile positions lo/hi = floor/ceil((n-1)*p) are known

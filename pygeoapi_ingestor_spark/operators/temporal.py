@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pygeoapi_ingestor_spark.functions import ranks
+
 
 def ts_seconds(col) -> "F.Column":
     """Wall-clock seconds since 1970-01-01 as double (µs precision).
@@ -271,31 +273,19 @@ def chunked_lag(
     out_col: str = "lag_value",
 ) -> DataFrame:
     """Exact per-series lag(1) with the sort partitioned by
-    (series, chunk) instead of the bare series key — the classic
-    chunked-scan + boundary-exchange construction for low-cardinality
-    series over big facts.
-
-    Per chunk: an ordinary local lag. Chunk boundaries: a per-chunk
-    summary (last row's value by order) is lagged across chunks on the
-    TINY (series x chunks) summary table and broadcast back, filling the
-    first row of each chunk. Identical output to
-    ``lag(value) OVER (PARTITION BY series ORDER BY order_cols)``;
-    parallelism scales with the chunk count (e.g. weeks), not with the
-    series cardinality.
-    """
-    chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
-    d = df.withColumn("_chunk", chunk)
+    (series, chunk) — the boundary exchange of ``functions/ranks.py``.
+    Per chunk an ordinary local lag; the chunk's first row takes the
+    carry, the previous chunk's last value by order. Identical output to
+    ``lag(value) OVER (PARTITION BY series ORDER BY order_cols)``."""
+    d = ranks._with_chunk(df, chunk_col)
     w_local = Window.partitionBy(*series_cols, "_chunk").orderBy(*order_cols)
     last_by_order = F.max(
         F.struct(*[F.col(c) for c in order_cols], F.col(value_col).alias("_v"))
     )
-    summary = d.groupBy(*series_cols, "_chunk").agg(last_by_order.alias("_last"))
-    w_sum = Window.partitionBy(*series_cols).orderBy("_chunk")
-    carry = summary.select(
-        *series_cols, "_chunk",
-        F.lag(F.col("_last").getField("_v")).over(w_sum).alias("_carry"),
+    out = ranks._with_carry(
+        d, [*series_cols, "_chunk"], [last_by_order.getField("_v").alias("_last")],
+        lambda earlier, _: [F.last("_last").over(earlier).alias("_carry")],
     )
-    out = d.join(F.broadcast(carry), [*series_cols, "_chunk"])
     res = F.when(
         F.row_number().over(w_local) == 1, F.col("_carry")
     ).otherwise(F.lag(value_col).over(w_local))
@@ -311,13 +301,12 @@ def chunked_forward_fill(
     out_col: str | None = None,
 ) -> DataFrame:
     """Carry the last non-null observation forward per series (the gap
-    treatment for missing sensor readings before resampling), keyed to
-    (series, chunk) with boundary exchange: rows before a chunk's first
-    valid value take the carry-in (the last valid value of any earlier
-    chunk, computed on the tiny summary). Identical output to a
-    ``last(ignorenulls)`` window over the whole series."""
-    chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
-    d = df.withColumn("_chunk", chunk)
+    treatment for missing sensor readings before resampling) through
+    the boundary exchange of ``functions/ranks.py``: rows before a
+    chunk's first valid value take the carry, the last valid value of
+    any earlier chunk. Identical output to a ``last(ignorenulls)``
+    window over the whole series."""
+    d = ranks._with_chunk(df, chunk_col)
     v = F.col(value_col)
     w_local = (
         Window.partitionBy(*series_cols, "_chunk")
@@ -327,19 +316,12 @@ def chunked_forward_fill(
     last_valid = F.max(
         F.when(v.isNotNull(), F.struct(*[F.col(c) for c in order_cols], v.alias("_v")))
     )
-    summary = d.groupBy(*series_cols, "_chunk").agg(last_valid.alias("_lv"))
-    w_sum = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    out = ranks._with_carry(
+        d, [*series_cols, "_chunk"], [last_valid.getField("_v").alias("_lv")],
+        lambda earlier, _: [F.last("_lv", ignorenulls=True).over(earlier).alias("_carry")],
     )
-    carry = summary.select(
-        *series_cols, "_chunk",
-        F.last(F.col("_lv").getField("_v"), ignorenulls=True).over(w_sum).alias("_carry_in"),
-    )
-    out = d.join(F.broadcast(carry), [*series_cols, "_chunk"])
-    filled = F.coalesce(F.last(v, ignorenulls=True).over(w_local), F.col("_carry_in"))
-    return out.withColumn(out_col or value_col, filled).drop("_chunk", "_carry_in")
+    filled = F.coalesce(F.last(v, ignorenulls=True).over(w_local), F.col("_carry"))
+    return out.withColumn(out_col or value_col, filled).drop("_chunk", "_carry")
 
 
 def chunked_linear_interp(
@@ -349,13 +331,13 @@ def chunked_linear_interp(
     value_col: str,
     chunk_col,
 ) -> DataFrame:
-    """``linear_interp_gaps`` re-keyed to (series, chunk) with boundary
-    exchange in BOTH directions: per chunk the local prev/next valid
-    neighbors, with the cross-chunk neighbors (last valid of earlier
-    chunks, first valid of later chunks) carried via the tiny summary.
-    Identical output to the single-partition-per-series variant."""
-    chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
-    d = df.withColumn("_chunk", chunk)
+    """``linear_interp_gaps`` through the boundary exchange of
+    ``functions/ranks.py``, carried in BOTH directions: per chunk the
+    local prev/next valid neighbors, with the cross-chunk neighbors
+    (last valid of earlier chunks, first valid of later chunks) as the
+    carries. Identical output to the single-partition-per-series
+    variant."""
+    d = ranks._with_chunk(df, chunk_col)
     v = F.col(value_col)
     t = axis_seconds(df, ts_col)
     valid = F.when(v.isNotNull(), F.struct(t.alias("_t"), v.alias("_v")))
@@ -373,25 +355,14 @@ def chunked_linear_interp(
         .orderBy(F.col(ts_col).desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    summary = d.groupBy(*series_cols, "_chunk").agg(
-        F.max(valid).alias("_lastv"), F.min(valid).alias("_firstv")
+    out = ranks._with_carry(
+        d, [*series_cols, "_chunk"],
+        [F.max(valid).alias("_lastv"), F.min(valid).alias("_firstv")],
+        lambda earlier, later: [
+            F.last("_lastv", ignorenulls=True).over(earlier).alias("_cin"),
+            F.last("_firstv", ignorenulls=True).over(later).alias("_cout"),
+        ],
     )
-    w_in = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_out_rev = (
-        Window.partitionBy(*series_cols)
-        .orderBy(F.col("_chunk").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = summary.select(
-        *series_cols, "_chunk",
-        F.last("_lastv", ignorenulls=True).over(w_in).alias("_cin"),
-        F.last("_firstv", ignorenulls=True).over(w_out_rev).alias("_cout"),
-    )
-    out = d.join(F.broadcast(carry), [*series_cols, "_chunk"])
 
     prev = F.coalesce(F.last(valid, ignorenulls=True).over(w_prev), F.col("_cin"))
     nxt = F.coalesce(F.last(valid, ignorenulls=True).over(w_next_rev), F.col("_cout"))
@@ -412,31 +383,20 @@ def chunked_cumulative_sum(
     chunk_col,
     out_col: str = "cum_value",
 ) -> DataFrame:
-    """``cumulative_sum`` re-keyed to (series, chunk) with boundary
-    exchange: local running totals within each chunk, plus the summed
-    carry of all earlier chunks (computed on the tiny per-chunk summary
-    and broadcast back). Identical output to the per-series window;
-    parallelism scales with the chunk count."""
-    chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
-    d = df.withColumn("_chunk", chunk)
+    """``cumulative_sum`` through the boundary exchange of
+    ``functions/ranks.py``: local running totals within each chunk, plus
+    the carry, the summed totals of all earlier chunks. Identical output
+    to the per-series window."""
+    d = ranks._with_chunk(df, chunk_col)
     w_local = (
         Window.partitionBy(*series_cols, "_chunk")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    summary = d.groupBy(*series_cols, "_chunk").agg(
-        F.sum(value_col).alias("_chunk_total")
+    out = ranks._with_carry(
+        d, [*series_cols, "_chunk"], [F.sum(value_col).alias("_total")],
+        lambda earlier, _: [F.sum("_total").over(earlier).alias("_carry")],
     )
-    w_sum = (
-        Window.partitionBy(*series_cols)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = summary.select(
-        *series_cols, "_chunk",
-        F.sum("_chunk_total").over(w_sum).alias("_carry"),
-    )
-    out = d.join(F.broadcast(carry), [*series_cols, "_chunk"])
     local = F.sum(value_col).over(w_local)
     # SQL sum null semantics: the running total is NULL only while NO
     # non-null value has appeared anywhere in the frame — an all-null
@@ -615,12 +575,13 @@ def chunked_ewma(
     ``y = L + D·c``. The first chunk's carry is its own first value
     (x_0 solves (1-a)·c + a·x_0 = x_0), which makes every chunk
     uniform. Parallelism scales with chunk count, never with series
-    cardinality; per-task memory is one chunk.
+    cardinality; per-task memory is one chunk. It shares the chunk
+    attach of the boundary exchange in ``functions/ranks.py``; its
+    affine carry chain resolves sequentially, not over a frame.
     """
     import pandas as pd
 
-    chunk = chunk_col if not isinstance(chunk_col, str) else F.col(chunk_col)
-    d = df.withColumn("_chunk", chunk)
+    d = ranks._with_chunk(df, chunk_col)
     a = float(alpha)
 
     ld_schema = ", ".join(

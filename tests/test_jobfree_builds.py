@@ -5,6 +5,9 @@
   package against the list path it replaced (``createDataFrame`` of a
   Python list): same rows, same StructType with nullability. An AST
   census keeps ``createDataFrame(`` inside the helper.
+- The distributed window family computes its carries in the plan, not
+  on the driver: an AST census keeps the carry frame and the
+  value-range bucket rule in ``functions/ranks.py``.
 - Once each table's schema is known, the perfbench keys build with no
   Spark job, no new Python worker and no LogicalRDD leaf the artifact
   registry does not own.
@@ -61,10 +64,10 @@ SITE_KEYS = [
 
 class _Calls(ast.NodeVisitor):
     """(line, enclosing function) of every call to ``name``, plain or
-    as an attribute."""
+    as an attribute, that ``match`` accepts."""
 
-    def __init__(self, name: str):
-        self.name, self.stack, self.found = name, ["<module>"], []
+    def __init__(self, name: str, match=lambda node: True):
+        self.name, self.match, self.stack, self.found = name, match, ["<module>"], []
 
     def visit_FunctionDef(self, node):
         self.stack.append(node.name)
@@ -76,15 +79,15 @@ class _Calls(ast.NodeVisitor):
     def visit_Call(self, node):
         f = node.func
         callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        if callee == self.name:
+        if callee == self.name and self.match(node):
             self.found.append((node.lineno, self.stack[-1]))
         self.generic_visit(node)
 
 
-def _call_sites(name: str) -> set[tuple[str, int, str]]:
+def _call_sites(name: str, match=lambda node: True) -> set[tuple[str, int, str]]:
     out = set()
     for path in sorted(PKG.rglob("*.py")):
-        v = _Calls(name)
+        v = _Calls(name, match)
         v.visit(ast.parse(path.read_text(), str(path)))
         rel = str(path.relative_to(PKG.parent))
         out |= {(rel, line, fn) for line, fn in v.found}
@@ -132,6 +135,45 @@ def test_create_dataframe_only_inside_local_table():
     assert sites and {(p, fn) for p, _, fn in sites} == {
         ("pygeoapi_ingestor_spark/sources/readers.py", "local_table")
     }, sites
+
+
+def _is_carry_frame(node) -> bool:
+    """``rowsBetween(Window.unboundedPreceding, -1)``: the frame over a
+    series' strictly earlier (or later) chunks."""
+    if len(node.args) != 2:
+        return False
+    lo, hi = node.args
+    return (
+        isinstance(lo, ast.Attribute) and lo.attr == "unboundedPreceding"
+        and ast.unparse(hi).replace(" ", "") == "-1"
+    )
+
+
+def _is_bucket_case(node) -> bool:
+    """``least(floor((v - lo) / width), ...)``: the value-range bucket."""
+    if not node.args or not isinstance(node.args[0], ast.Call):
+        return False
+    inner = node.args[0]
+    name = getattr(inner.func, "attr", getattr(inner.func, "id", None))
+    return (
+        name == "floor" and len(inner.args) == 1
+        and isinstance(inner.args[0], ast.BinOp)
+        and isinstance(inner.args[0].op, ast.Div)
+        and isinstance(inner.args[0].left, ast.BinOp)
+        and isinstance(inner.args[0].left.op, ast.Sub)
+    )
+
+
+def test_boundary_exchange_is_built_once():
+    """The distributed window family shares one boundary exchange: its
+    carry frame and its value-range bucket rule are built only in
+    ``functions/ranks.py``, and the bucket rule in one place."""
+    ranks_py = "pygeoapi_ingestor_spark/functions/ranks.py"
+    frames = _call_sites("rowsBetween", _is_carry_frame)
+    assert {(p, fn) for p, _, fn in frames} == {(ranks_py, "_carries")}, frames
+    buckets = _call_sites("least", _is_bucket_case)
+    assert {(p, fn) for p, _, fn in buckets} == {(ranks_py, "_bucket")}, buckets
+    assert len(buckets) == 1, buckets
 
 
 def _typed_keys(spark):
@@ -206,7 +248,7 @@ def test_local_table_twins_the_list_path_at_every_site(spark, sf_dir, monkeypatc
     similarity._cents_table(spark, [(0, [1, -2, 3]), (7, [0, 0, 127])])
 
     sites = {(p, line) for p, line, _ in _call_sites("local_table")}
-    assert len(sites) == 21, sites
+    assert len(sites) == 20, sites
     assert hit == sites, (sites - hit, hit - sites)
     assert not mismatches, mismatches
 
@@ -218,7 +260,8 @@ def test_local_table_twins_the_list_path_at_every_site(spark, sf_dir, monkeypatc
 def test_perfbench_builds_start_no_job_no_worker_and_embed_no_rdd(spark, sf_dir):
     for t in session.TABLES:
         readers.read_table(spark, sf_dir, t)
-    for key in PERFBENCH_KEYS:
+    # rfm_segments: its multi-metric ranks carry their offsets in the plan
+    for key in [*PERFBENCH_KEYS, "rfm_segments"]:
         storage.release_corpus_artifacts()
         before = _daemons()
         df, jobs = _job_ids(spark, f"census:{key}", lambda: QUERIES[key](spark, sf_dir))

@@ -280,59 +280,77 @@ def test_scrub_pii_patterns(spark):
     assert out[3]["n_email"] == 0 and out[3]["scrubbed"] == rows[3][1]
 
 
+def _canon(df, *cols):
+    """Sorted rows of ``cols``, NaN equal to NaN (each value by repr)."""
+    return sorted(tuple(map(repr, r)) for r in df.select(*cols).collect())
+
+
 def test_chunked_and_rank_edge_cases(spark):
     """Adversarial shapes: all-null series, single-row series, every
-    value tied, chunks with no valid rows — chunked ops and bucketed
-    ranks must still equal their single-partition window twins."""
+    value tied around a NULL, chunks with no valid rows, NaN and both
+    infinities — chunked ops and bucketed ranks must still equal their
+    single-partition window twins."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pygeoapi_ingestor_spark.functions import ranks
     from pygeoapi_ingestor_spark.operators import temporal
 
+    nan, inf = float("nan"), float("inf")
     rows = []
     # series A: all nulls          series B: one row
     rows += [("A", i, None) for i in range(6)]
     rows += [("B", 0, 5.0)]
-    # series C: every value tied
-    rows += [("C", i, 7.0) for i in range(9)]
+    # series C: every value tied, with a NULL inside
+    rows += [("C", i, None if i == 4 else 7.0) for i in range(9)]
     # series D: nulls interleaved so some chunks are entirely null
     rows += [("D", i, (None if (i // 3) % 2 == 0 else float(i))) for i in range(12)]
+    # series E: NaN and both infinities among finite values and a NULL
+    e = [1.0, nan, 2.0, inf, None, -inf, 3.0, nan, 5.0, None, -inf, 4.0]
+    rows += [("E", i, x) for i, x in enumerate(e)]
+    # series F: finite values and +inf (no NaN), G: -inf and finite
+    rows += [("F", i, x) for i, x in enumerate([2.0, inf, 1.0, 2.0, 8.0, inf])]
+    rows += [("G", i, x) for i, x in enumerate([-inf, 3.0, -inf, 0.5, 9.0])]
     df = spark.createDataFrame(rows, "s string, i int, v double").repartition(4)
     chunk = F.col("i") - F.col("i") % 3
 
     w = Window.partitionBy("s").orderBy("i")
-    plain_lag = sorted(map(tuple, df.select("s", "i", F.lag("v").over(w).alias("x")).collect()))
-    got_lag = sorted(map(tuple, temporal.chunked_lag(
-        df, ["s"], ["i"], "v", chunk, out_col="x").select("s", "i", "x").collect()))
+    plain_lag = _canon(df.withColumn("x", F.lag("v").over(w)), "s", "i", "x")
+    got_lag = _canon(temporal.chunked_lag(
+        df, ["s"], ["i"], "v", chunk, out_col="x"), "s", "i", "x")
     assert plain_lag == got_lag
 
     wf = w.rowsBetween(Window.unboundedPreceding, 0)
-    plain_ff = sorted(map(tuple, df.select(
-        "s", "i", F.last("v", ignorenulls=True).over(wf).alias("x")).collect()))
-    got_ff = sorted(map(tuple, temporal.chunked_forward_fill(
-        df, ["s"], ["i"], "v", chunk, out_col="x").select("s", "i", "x").collect()))
+    plain_ff = _canon(df.withColumn(
+        "x", F.last("v", ignorenulls=True).over(wf)), "s", "i", "x")
+    got_ff = _canon(temporal.chunked_forward_fill(
+        df, ["s"], ["i"], "v", chunk, out_col="x"), "s", "i", "x")
     assert plain_ff == got_ff
 
-    plain_cs = sorted(map(tuple, df.select(
-        "s", "i", F.sum("v").over(wf).alias("x")).collect()))
-    got_cs = sorted(map(tuple, temporal.chunked_cumulative_sum(
-        df, ["s"], ["i"], "v", chunk, out_col="x").select("s", "i", "x").collect()))
+    plain_cs = _canon(df.withColumn("x", F.sum("v").over(wf)), "s", "i", "x")
+    got_cs = _canon(temporal.chunked_cumulative_sum(
+        df, ["s"], ["i"], "v", chunk, out_col="x"), "s", "i", "x")
     assert plain_cs == got_cs
 
-    plain_li = sorted(map(tuple, temporal.linear_interp_gaps(
-        df, ["s"], "i", "v", out_col="x").select("s", "i", "x").collect()))
-    got_li = sorted(map(tuple, temporal.chunked_linear_interp(
-        df, ["s"], "i", "v", chunk).select("s", "i", "v_interp").collect()))
+    plain_li = _canon(temporal.linear_interp_gaps(
+        df, ["s"], "i", "v", out_col="x"), "s", "i", "x")
+    got_li = _canon(temporal.chunked_linear_interp(
+        df, ["s"], "i", "v", chunk), "s", "i", "v_interp")
     assert plain_li == got_li
 
-    nn = df.filter(F.col("v").isNotNull())
     wv = Window.partitionBy("s").orderBy("v")
-    plain_rank = sorted(map(tuple, nn.select(
-        "s", "i", F.rank().over(wv).alias("r")).collect()))
-    got_rank = sorted(map(tuple, ranks.bucketed_rank(
-        nn, ["s"], "v", out_col="r").select("s", "i", "r").collect()))
+    plain_rank = _canon(df.withColumn("r", F.rank().over(wv)), "s", "i", "r")
+    got_rank = _canon(ranks.bucketed_rank(
+        df, ["s"], "v", out_col="r"), "s", "i", "r")
     assert plain_rank == got_rank
+
+    wn = Window.partitionBy("s")
+    plain_rn = _canon(df.withColumn(
+        "r", F.row_number().over(Window.partitionBy("s").orderBy("v", "i"))
+    ).withColumn("n", F.count(F.lit(1)).over(wn)), "s", "i", "r", "n")
+    got_rn = _canon(ranks.bucketed_row_number(
+        df, ["s"], "v", ["i"], out_col="r"), "s", "i", "r", "n")
+    assert plain_rn == got_rn
 
 
 def test_exact_percentiles_matches_percentile_agg(spark, sf_dir):

@@ -38,7 +38,9 @@ def test_guard_rejects_checkpoint_backed_plan(spark, sf_dir):
 def test_guard_allows_driver_local_logicalrdd(spark, sf_dir):
     """createDataFrame-from-driver-rows plans carry LogicalRDD leaves
     whose data is serialized closure state, not releasable storage —
-    they must stay eligible (rfm_segments' ntile tables are this)."""
+    they must stay eligible. The package builds its literal tables as
+    LocalRelations (``sources.readers.local_table``), so such a leaf
+    comes from a plan the caller brings."""
     storage.release_corpus_artifacts()
     rows_df = spark.createDataFrame(
         spark.sparkContext.parallelize([(1, "a"), (2, "b")]), "k int, v string"

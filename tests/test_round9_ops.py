@@ -41,18 +41,25 @@ def test_grouped_topk_equals_window_topk(toy):
 
 
 def test_bucketed_row_numbers_multi_equals_windows(toy):
-    df = toy.withColumn("v2", -F.col("v") + F.col("id") % 5)
-    out = ranks.bucketed_row_numbers_multi(
-        df, ["grp"], {"v": "rn_v", "v2": "rn_v2"}, ["id"]
+    # v3 holds NaN, which orders above every number (and its max makes
+    # the bucket width NaN)
+    df = toy.withColumn("v2", -F.col("v") + F.col("id") % 5).withColumn(
+        "v3", F.when(F.col("id") % 7 == 0, F.lit(float("nan"))).otherwise(F.col("v"))
     )
-    got = {r["id"]: (r["rn_v"], r["rn_v2"], r["n"]) for r in out.collect()}
+    out = ranks.bucketed_row_numbers_multi(
+        df, ["grp"], {"v": "rn_v", "v2": "rn_v2", "v3": "rn_v3"}, ["id"]
+    )
+    cols = ("rn_v", "rn_v2", "rn_v3", "n")
+    got = {r["id"]: tuple(r[c] for c in cols) for r in out.collect()}
     wv = Window.partitionBy("grp").orderBy("v", "id")
     wv2 = Window.partitionBy("grp").orderBy("v2", "id")
+    wv3 = Window.partitionBy("grp").orderBy("v3", "id")
     wn = Window.partitionBy("grp")
     want = {
-        r["id"]: (r["rn_v"], r["rn_v2"], r["n"])
+        r["id"]: tuple(r[c] for c in cols)
         for r in df.withColumn("rn_v", F.row_number().over(wv))
         .withColumn("rn_v2", F.row_number().over(wv2))
+        .withColumn("rn_v3", F.row_number().over(wv3))
         .withColumn("n", F.count(F.lit(1)).over(wn))
         .collect()
     }
